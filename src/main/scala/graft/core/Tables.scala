@@ -133,9 +133,10 @@ object Tables {
     * below ~32 map partitions — so embeddings keep a floor small
     * enough to reproduce the old full fan-out at bench scale.
     * `spark.graft.spread.minBytesPerTask` overrides both (probe
-    * knob / denser deployments). */
-  private val spreadMinBytesPerTask =
-    Map("documents" -> 262144L, "embeddings" -> 16384L)
+    * knob / denser deployments). One entry per spread table: its
+    * unique id column (the hash-spread key) and its floor. */
+  private val spreadSpec =
+    Map("documents" -> ("doc_id", 262144L), "embeddings" -> ("vec_id", 16384L))
 
   private def spread(df: DataFrame, idCol: String, minBytesPerTask: Long): DataFrame = {
     val spark = df.sparkSession
@@ -148,15 +149,13 @@ object Tables {
     if (df.rdd.getNumPartitions < target) df.repartition(target, col(idCol)) else df
   }
 
-  private val spreadIdCol = Map("documents" -> "doc_id", "embeddings" -> "vec_id")
-
-  private def spreadTable(spark: SparkSession, dir: String, name: String): DataFrame =
+  private def spreadTable(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val (idCol, minBytesPerTask) = spreadSpec.getOrElse(name,
+      sys.error(s"no spread id column registered for table '$name' — " +
+        "add it to Tables.spreadSpec"))
     cached(spark, dir, s"$name#spread")(
-      spread(spark.read.parquet(s"$dir/$name.parquet"),
-        spreadIdCol.getOrElse(name,
-          sys.error(s"no spread id column registered for table '$name' — " +
-            "add it to Tables.spreadIdCol")),
-        spreadMinBytesPerTask(name)))
+      spread(spark.read.parquet(s"$dir/$name.parquet"), idCol, minBytesPerTask))
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

@@ -73,10 +73,8 @@ object Dedup {
 
   /** @param actions how many CONSUMING actions the cache survives —
     *        1 (default) for operators whose single output plan holds
-    *        every reference; 2 for the component operators, whose
-    *        signature table is read first by the eager edge
-    *        materialization inside `connectedComponents` and again by
-    *        the caller's action on the returned frame. */
+    *        every reference; the component operators derive theirs in
+    *        [[componentActions]]. */
   private[graft] def registerCache(df: DataFrame, actions: Int = 1): DataFrame = {
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     scopedCaches.add((df, new java.util.concurrent.atomic.AtomicInteger(actions)))
@@ -203,6 +201,74 @@ object Dedup {
       .agg(coalesce(sum(col("c")), lit(0L))).head().getLong(0)
     if (predicted > maxCandidates)
       throw new CandidateBudgetExceededException(predicted, maxCandidates, family)
+  }
+
+  /** How many consuming actions a component operator's scoped caches
+    * live for: the eager edge materialization inside
+    * `connectedComponents`, the caller's action on the returned frame,
+    * and — when guarded — the guard's count. Every frame such an
+    * operator caches is read by exactly these actions. */
+  private def componentActions(maxCandidates: Option[Long]): Int =
+    if (maxCandidates.isDefined) 3 else 2
+
+  /** `df` with one row per (row, band): every input column passes
+    * through, plus `band` (the band index) and `bkey` (that band's
+    * bucket key from `bandKeys`). Carrying the payload here, BEFORE
+    * the quadratic band expansion, costs a constant per row; fetching
+    * it onto the collision stream afterwards would cost it per
+    * collision. */
+  private[text] def withBands(df: DataFrame, bandKeys: Seq[Column]): DataFrame =
+    df.select(df.columns.toSeq.map(col) :+ posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")): _*)
+
+  /** The component operators' shared skeleton: (id, component) where
+    * `component` is the smallest rep_id reachable through the
+    * confirmed near-dup graph over the collapsed reps.
+    *
+    *  - `members` is exactly (id, key): every item and its collapse key.
+    *  - `reps` is (key, rep_id, payload…): one row per distinct key,
+    *    rep_id = min id of the key's members. rep_id is therefore
+    *    unique per key (the members of two keys are disjoint), so a
+    *    rep pair names a key pair and `x.rep_id < y.rep_id` orders it.
+    *  - `band` adds (band, bkey) rows to the reps ([[withBands]]).
+    *  - `confirm` is the edge predicate over the `x.*`/`y.*` sides of
+    *    the (band, bkey) self-join.
+    *
+    * The guard counts over the same banded frame the join reads, so it
+    * predicts exactly the rows the confirm evaluates. The join
+    * strategy is the family's: a band function may pin one with a
+    * hint on the banded frame. A pair colliding in several bands is
+    * confirmed once per band and merged after the filter, when
+    * survivors are few. */
+  private[text] def bandedComponents(members: DataFrame, reps: DataFrame,
+                                     band: DataFrame => DataFrame, confirm: Column,
+                                     maxCandidates: Option[Long], family: String): DataFrame =
+    repComponents(members, reps, maxCandidates) {
+      val banded = band(reps)
+      maxCandidates.foreach(guardCandidates(banded.select(col("band"), col("bkey")),
+        Seq("band", "bkey"), _, family))
+      banded.as("x").join(banded.as("y"), Seq("band", "bkey"))
+        .filter(col("x.rep_id") < col("y.rep_id") && confirm)
+        .select(col("x.rep_id").as("rep_a"), col("y.rep_id").as("rep_b"))
+        .distinct()
+    }
+
+  /** The second half of [[bandedComponents]], shared with the jaccard
+    * plans that build their rep pairs their own way. Scope-caches
+    * `reps` for [[componentActions]] actions, then evaluates
+    * `repPairs` — (rep_a, rep_b) edges over rep ids — so an eager
+    * guard inside it reads the cache it fills. The component search
+    * runs on the rep graph only; members join their rep's component
+    * back through `componentJoinSide` (broadcast when the local solve
+    * ran, shuffled-hash over the distributed closure). A rep with no
+    * edge is its own component. */
+  private def repComponents(members: DataFrame, reps: DataFrame,
+                            maxCandidates: Option[Long])(repPairs: => DataFrame): DataFrame = {
+    val Array(idCol, keyCol) = members.columns
+    registerCache(reps, componentActions(maxCandidates))
+    val comp = graft.core.Graph.connectedComponents(repPairs, "rep_a", "rep_b")
+    members.join(reps.select(col(keyCol), col("rep_id")).hint("shuffle_hash"), keyCol)
+      .join(graft.core.Graph.componentJoinSide(comp), col("rep_id") === col("node"), "left")
+      .select(col(idCol), coalesce(col("comp"), col("rep_id")).as("component"))
   }
 
   /** Exact dedup via content hash: one shuffle on md5(text).
@@ -356,7 +422,7 @@ object Dedup {
     * identical-signature docs collapse per band — in one
     * hash-aggregable shuffle of narrow rows. */
   private def sigBandPairs(full: DataFrame, rowsPerBand: Int): DataFrame = {
-    val sigBands = bandedSigs(full, rowsPerBand)
+    val sigBands = sigBandKeys(full, rowsPerBand)
     sigBands.as("x").join(sigBands.as("y"), Seq("band", "bkey"))
       .filter(col("x.sig_key") < col("y.sig_key"))
       .select(col("x.sig_key").as("sig_a"), col("y.sig_key").as("sig_b"))
@@ -379,32 +445,17 @@ object Dedup {
     }
   }
 
+  /** A signature frame's rows with their (band, bkey) band keys, input
+    * columns passed through ([[withBands]]). */
+  private def bandedSigs(sigs: DataFrame, rowsPerBand: Int): DataFrame =
+    withBands(sigs, bandKeyCols(rowsPerBand))
+
   /** Distinct (sig_key, band, bkey) band keys of a signature frame —
     * the probe/build primitive shared by the full self-join and the
     * incremental (fresh-probes-corpus) banding. */
-  private def bandedSigs(sigs: DataFrame, rowsPerBand: Int): DataFrame =
-    sigs.select(col("sig_key"), posexplode(array(bandKeyCols(rowsPerBand): _*)))
-      .select(col("sig_key"), col("pos").as("band"), col("col").as("bkey"))
-      .distinct()
-
-  /** Banded rows CARRYING the signature: (sig_key, mhs, rep_id, band,
-    * bkey), one row per (sig, band), for the confirm-inline component
-    * path. Input must be ONE row per distinct signature (the `sigs`
-    * collapse, which also carries the cluster's min-doc rep_id), so
-    * no distinct is needed — and the fixed 16-int signature rides
-    * each band row. That direction is scale-safe BY CONSTRUCTION: the
-    * payload attached before the quadratic band expansion is a
-    * constant 4×64 B (+8 B rep) per signature, whereas fetching
-    * signatures onto the collision stream afterwards ships 2×64 B per
-    * COLLISION row — unbounded exactly when the corpus is
-    * duplicate-heavy (contrast the jaccard token sets, where the
-    * carried payload would be O(|S|) per prefix row and the fetch
-    * plan is the one that cannot blow up; see SCALING.md r11). */
-  private def bandedSigsCarrying(sigs: DataFrame, rowsPerBand: Int): DataFrame =
-    sigs.select(col("sig_key"), col("mhs"), col("rep_id"),
-        posexplode(array(bandKeyCols(rowsPerBand): _*)))
-      .select(col("sig_key"), col("mhs"), col("rep_id"),
-        col("pos").as("band"), col("col").as("bkey"))
+  private def sigBandKeys(sigs: DataFrame, rowsPerBand: Int): DataFrame =
+    bandedSigs(sigs.select(col("sig_key"), col("mhs")), rowsPerBand)
+      .select(col("sig_key"), col("band"), col("bkey")).distinct()
 
   /** Incremental near-dup screen: LSH candidate pairs with at least
     * one side in the `fresh` batch — the ingest-time shape of dedup.
@@ -459,7 +510,7 @@ object Dedup {
     bandStoreOfSigs(signatureClusters(documents), rowsPerBand)
 
   private[graft] def bandStoreOfSigs(sig: DataFrame, rowsPerBand: Int): DataFrame =
-    bandedSigs(sig.select(col("sig_key"), col("mhs")).distinct(), rowsPerBand)
+    sigBandKeys(sig.select(col("sig_key"), col("mhs")).distinct(), rowsPerBand)
 
   /** The persistable corpus side of incremental dedup, part 2: the
     * (doc_id, sig_key) membership map the candidate expansion joins
@@ -548,7 +599,7 @@ object Dedup {
       spark: SparkSession, bandStore: DataFrame, corpusMembers: DataFrame,
       fSig: DataFrame, rowsPerBand: Int = 4,
       mode: PairMode = PairMode.Full): DataFrame = releasingOnBudgetError {
-    val freshBanded = bandedSigs(fSig.select(col("sig_key"), col("mhs")).distinct(), rowsPerBand)
+    val freshBanded = sigBandKeys(fSig.select(col("sig_key"), col("mhs")).distinct(), rowsPerBand)
     // fresh-vs-corpus probe: NO hint — when the store side is
     // bucketed on (band, bkey) the planner proves its distribution
     // from the layout and only the (small) fresh side exchanges
@@ -791,11 +842,11 @@ object Dedup {
     * default 12 ≈ Ĵ ≥ 0.75), computed with one zip_with fold on the
     * already-joined DISTINCT signature pairs — no token re-scan.
     *
-    * Scale shape mirrors the Jaccard path: identical signatures
-    * collapse to a rep before the graph exists, candidates come from
-    * the banded self-join of distinct signatures only, the component
-    * search runs on the rep graph, and members rejoin via a streamed
-    * hash join. */
+    * Scale shape: [[bandedComponents]] over the distinct signatures —
+    * identical signatures collapse to their min-doc rep before the
+    * graph exists, the 16-int signature rides each band row so the
+    * agreement confirm evaluates in the join output, and members
+    * rejoin their rep's component. */
   /** @param maxCandidates optional budget on the internal banded
     *        candidate join (Σ_bucket n·(n−1)/2 over distinct
     *        signatures — see [[guardCandidates]]); breach throws
@@ -808,66 +859,23 @@ object Dedup {
       releasingOnBudgetError {
     require(minAgree >= 1 && minAgree <= MinhashFuncs,
       s"need minAgree in [1, $MinhashFuncs], got $minAgree")
-    // cached (actions = 2: edge materialization inside
-    // connectedComponents + the caller's action; +1 when guarded —
-    // the guard's narrow count action reads the signature table
-    // too): the references span multiple actions, which no
-    // plan-level branch sharing can bridge — without the cache every
-    // reference repeats the tokenize+16-hash corpus pass. Clean
-    // sf0.1 A/B: 2.62 s → 2.55 s locally, and at 100 TB the saved
-    // corpus passes dominate the narrow cache write.
-    val full = registerCache(signatureClusters(documents),
-      actions = if (maxCandidates.isDefined) 3 else 2)
-    val members = full.select(col("doc_id"), col("sig_key"))
-    val reps = members.groupBy(col("sig_key")).agg(min(col("doc_id")).as("rep_id"))
-    // the sigs collapse carries the cluster's rep alongside the
-    // distinct signature: grouping KEYS may contain the array (an
-    // UnsafeRow key hash-aggregates fine — it is array-valued
-    // aggregation BUFFERS that fall to SortAggregate, the sigBandPairs
-    // rationale), and the min(doc_id) buffer is one primitive long.
-    // The confirm stream below then emits rep pairs directly instead
-    // of joining the reps aggregate onto it twice (r15 — two
-    // corpus-distinct-sized exchanges + two aggregate re-runs gone).
-    val sigs = full.groupBy(col("sig_key"), col("mhs"))
-      .agg(min(col("doc_id")).as("rep_id"))
-    // bandedSigs' (band, bkey) histogram is bandedSigsCarrying's
-    // exactly (same rows minus the carried signature payload), so
-    // the prediction counts precisely the pairs the agreement
-    // confirm below will evaluate
-    maxCandidates.foreach(guardCandidates(bandedSigs(sigs, rowsPerBand),
-      Seq("band", "bkey"), _, "minhashComponents"))
-    // Confirm INLINE in the band join: the fixed 16-int signatures
-    // ride the banded rows (bandedSigsCarrying — constant 4×64 B per
-    // signature, attached BEFORE the quadratic expansion), so the
-    // agreement fold evaluates in the join output and the two
-    // signature fetch joins the collision stream used to pay for are
-    // gone. A pair colliding in k ≤ 4 bands is folded k times and
-    // deduped after the filter — the r10 raw-verify rule (survivors
-    // are few; a pre-filter distinct exchanges the whole stream).
-    // shuffled-hash pin: many-to-many on deliberately hot band keys
-    // (a duplicate-heavy cluster IS one key); a sort-merge would
-    // buffer each matched group.
+    // the signature fold feeds both the rep collapse and the member
+    // side, in actions no plan-level branch sharing can bridge —
+    // uncached, each would repeat the tokenize+16-hash corpus pass
+    val full = registerCache(signatureClusters(documents), componentActions(maxCandidates))
     val agree = aggregate(
       zip_with(col("x.mhs"), col("y.mhs"), (a, b) => when(a === b, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v)
-    val banded = bandedSigsCarrying(sigs, rowsPerBand)
-    // rep pairs straight off the confirm stream: rep_id is unique per
-    // sig_key (per-signature doc sets are disjoint, so min doc_ids
-    // differ), hence distinct over the rep pair ≡ distinct over the
-    // sig pair, and the two rep-mapping joins are gone (r15)
-    val repPairs = banded.as("x")
-      .join(banded.as("y").hint("shuffle_hash"), Seq("band", "bkey"))
-      .filter(col("x.sig_key") < col("y.sig_key") && agree >= minAgree)
-      .select(least(col("x.rep_id"), col("y.rep_id")).as("rep_a"),
-              greatest(col("x.rep_id"), col("y.rep_id")).as("rep_b"))
-      .distinct()
-    val comp = graft.core.Graph.connectedComponents(repPairs, "rep_a", "rep_b")
-    // regime-sensitive comp side (componentJoinSide): broadcast the
-    // gate-bounded local solve, shuffled-hash pin the stat-less
-    // distributed closure
-    members.join(reps.hint("shuffle_hash"), "sig_key")
-      .join(graft.core.Graph.componentJoinSide(comp), col("rep_id") === col("node"), "left")
-      .select(col("doc_id"), coalesce(col("comp"), col("rep_id")).as("component"))
+    // grouping KEYS may hold the array (an UnsafeRow key
+    // hash-aggregates; only array-valued aggregation BUFFERS fall to
+    // SortAggregate), and the min(doc_id) buffer is one primitive long.
+    // The band join pins shuffled-hash: it is many-to-many on
+    // deliberately hot band keys (a duplicate-heavy cluster IS one
+    // key), and a sort-merge would buffer each matched group.
+    bandedComponents(full.select(col("doc_id"), col("sig_key")),
+      full.groupBy(col("sig_key"), col("mhs")).agg(min(col("doc_id")).as("rep_id")),
+      bandedSigs(_, rowsPerBand).hint("shuffle_hash"), agree >= minAgree, maxCandidates,
+      "minhashComponents")
   }
 
   /** Contamination screen: which corpus documents share word n-grams
@@ -1143,48 +1151,29 @@ object Dedup {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"band recall guarantee holds for maxHamming in [0, 3], got $maxHamming")
 
-  /** (simhash, band, bkey) band rows of a DISTINCT-fingerprint frame
-    * — 4 byte-slice bands per fingerprint, one row per (fp, band).
-    * The ONE banding of the simhash family: the candidate self-join
-    * and the `maxCandidates` guard count over the same frame, so the
-    * prediction cannot drift from the join. */
+  /** 4 byte-slice bands per fingerprint, one row per (fp, band), input
+    * columns passed through ([[withBands]]). The ONE banding of the
+    * simhash family: the candidate self-join and the `maxCandidates`
+    * guard count over the same frame, so the prediction cannot drift
+    * from the join. */
   private def simhashBanded(fps: DataFrame): DataFrame =
-    fps.select(col("simhash"), posexplode(array((0 until 4).map(b =>
-        shiftright(col("simhash"), b * 8).bitwiseAND(lit(255L))): _*)))
-      .select(col("simhash"), col("pos").as("band"), col("col").as("bkey"))
-
-  /** [[simhashBanded]] over the rep table, carrying each distinct
-    * fingerprint's min-doc rep_id (+8 B per band row) — the
-    * component path's confirm join emits rep pairs directly instead
-    * of joining the reps aggregate onto the fingerprint-pair stream
-    * twice (r15, the bandedSigsCarrying rationale). */
-  private def simhashBandedCarrying(reps: DataFrame): DataFrame =
-    reps.select(col("simhash"), col("rep_id"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("simhash"), b * 8).bitwiseAND(lit(255L))): _*)))
-      .select(col("simhash"), col("rep_id"),
-        col("pos").as("band"), col("col").as("bkey"))
+    withBands(fps, (0 until 4).map(b => shiftright(col("simhash"), b * 8).bitwiseAND(lit(255L))))
 
   private def simhashFpPairs(sh: DataFrame, maxHamming: Int): DataFrame = {
     requireMaxHamming(maxHamming)
     val banded = simhashBanded(sh.select(col("simhash")).distinct())
-    // hamming confirm BEFORE the pair-dedup distinct (r12 A/B):
-    // bit_count(xor) is one codegen'd instruction pair, and filtering
-    // first commutes exactly with distinct while shrinking the
-    // distinct's map-side hash state from ALL banded collisions
-    // (1.38M rows at sf0.1) to only the confirmed edges (2,375).
-    // Measured a wash at sf0.1 (0.50 vs 0.53 s — partial aggregation
-    // already collapses the old order's exchange), but at cluster
-    // scale the per-task dedup hash table over the raw collision
-    // stream is the memory hazard; this order strictly dominates.
+    // hamming confirm BEFORE the pair-dedup distinct: bit_count(xor)
+    // is one codegen'd instruction pair, and filtering first commutes
+    // exactly with distinct while shrinking the distinct's map-side
+    // hash state from ALL banded collisions to the confirmed edges —
+    // at cluster scale that per-task hash table is the memory hazard
     banded.as("x").join(banded.as("y"), Seq("band", "bkey"))
       .filter(col("x.simhash") < col("y.simhash"))
       .select(col("x.simhash").as("fp_a"), col("y.simhash").as("fp_b"))
       .filter(bit_count(col("fp_a").bitwiseXOR(col("fp_b"))) <= maxHamming)
       .distinct()
-      // hamming recomputed on the distinct survivors only (2,375 rows
-      // here vs 1.38M collisions) — keeping it OUT of the distinct
-      // keeps the dedup key at the 16-byte pair
+      // hamming recomputed on the distinct survivors only — keeping it
+      // OUT of the distinct keeps the dedup key at the 16-byte pair
       .withColumn("hamming",
         bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast(LongType))
   }
@@ -1202,13 +1191,10 @@ object Dedup {
     * positives): the Hamming bound IS the confirm, applied to every
     * edge before it exists.
     *
-    * Scale shape: identical fingerprints collapse to their min-doc
-    * rep before the graph is built (a colossal exact-dup cluster is
-    * ONE vertex), the component search runs on the distinct-
-    * fingerprint graph via [[graft.core.Graph.connectedComponents]]
-    * (min-label propagation + pointer jumping, O(log diameter)
-    * rounds), and members join their rep's component back with a
-    * streamed hash join. */
+    * Scale shape: [[bandedComponents]] over the distinct fingerprints
+    * — a colossal exact-dup cluster is ONE vertex, the component
+    * search runs on the distinct-fingerprint graph, and members join
+    * their rep's component back. */
   /** @param maxCandidates optional budget on the internal banded
     *        candidate join (Σ_bucket n·(n−1)/2 over distinct
     *        fingerprints — [[guardCandidates]]); breach throws
@@ -1218,37 +1204,13 @@ object Dedup {
                         maxHamming: Int = 1,
                         maxCandidates: Option[Long] = None): DataFrame =
       releasingOnBudgetError {
-    requireMaxHamming(maxHamming) // before registerCache, as in
-    // simhashNearDupPairs — fail fast with nothing persisted
-    // actions = 2: the edge list is consumed eagerly inside
-    // connectedComponents; the member join runs under the caller's
-    // action on the returned frame (+1 when guarded: the guard's
-    // narrow count reads the fingerprint table too)
-    val sh = registerCache(simhash(spark, documents),
-      actions = if (maxCandidates.isDefined) 3 else 2)
-    maxCandidates.foreach(guardCandidates(
-      simhashBanded(sh.select(col("simhash")).distinct()),
-      Seq("band", "bkey"), _, "simhashComponents"))
-    val reps = sh.groupBy(col("simhash")).agg(min(col("doc_id")).as("rep_id"))
-    // the reps aggregate IS the distinct-fingerprint collapse the
-    // banding wants, so band it directly with the rep riding along:
-    // rep_id is unique per fingerprint (per-fp doc sets are disjoint,
-    // so min doc_ids differ), hence distinct over rep pairs ≡ distinct
-    // over fp pairs and the two rep-mapping joins are gone (r15).
-    // Same predicates/order as simhashFpPairs: hamming confirm before
-    // the pair-dedup distinct (the r12 A/B rationale).
-    val banded = simhashBandedCarrying(reps)
-    val repEdges = banded.as("x").join(banded.as("y"), Seq("band", "bkey"))
-      .filter(col("x.simhash") < col("y.simhash"))
-      .filter(bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))) <= maxHamming)
-      .select(least(col("x.rep_id"), col("y.rep_id")).as("rep_a"),
-              greatest(col("x.rep_id"), col("y.rep_id")).as("rep_b"))
-      .distinct()
-    val comp = graft.core.Graph.connectedComponents(repEdges, "rep_a", "rep_b")
-    // regime-sensitive comp side, as in jaccardComponents
-    sh.join(reps.hint("shuffle_hash"), "simhash")
-      .join(graft.core.Graph.componentJoinSide(comp), col("rep_id") === col("node"), "left")
-      .select(col("doc_id"), coalesce(col("comp"), col("rep_id")).as("component"))
+    requireMaxHamming(maxHamming) // before registerCache: fail fast with nothing persisted
+    // the fingerprint fold feeds both the rep collapse and the member
+    // side, across actions — cached so the md5-per-token fold runs once
+    val sh = registerCache(simhash(spark, documents), componentActions(maxCandidates))
+    bandedComponents(sh, sh.groupBy(col("simhash")).agg(min(col("doc_id")).as("rep_id")),
+      simhashBanded, bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))) <= maxHamming,
+      maxCandidates, "simhashComponents")
   }
 
   /** Blocked n-gram Jaccard near-dup pairs: block on
@@ -1353,51 +1315,46 @@ object Dedup {
 
   /** Near-dup pairs between DISTINCT token sets: (set_a, set_b,
     * jaccard) over the `set_key`-collapsed sets of `withKey` — the
-    * quadratic core both the pair expansion and the component
-    * builder share. */
-  private def setPairs(withKey: DataFrame, threshold: Double,
-                       actions: Int = 1,
-                       maxCandidates: Option[Long] = None,
-                       withReps: Boolean = false): DataFrame = {
-    // guard on the shared core so EVERY entry point (pairs,
-    // components) fails fast: threshold 0 would edge-connect all
-    // token-sharing docs — catastrophic over-dedup, silently
+    * quadratic core of the pair expansion. Two exact plans, picked by
+    * threshold. The prefix filter's candidate bound is
+    * ⌊(1−t)·|S|⌋+1 tokens per side — a 5× cut at t=0.8 but only 30%
+    * at t=0.3, where its extra machinery (the candidate distinct, two
+    * array-fetch joins) costs more than the co-count rows it saves.
+    * 0.5 is the crossover's conservative side: at t=0.5 the prefix is
+    * still half the tokens → candidate join a quarter of the
+    * co-count's df² term. */
+  private def setPairs(withKey: DataFrame, threshold: Double): DataFrame =
+    if (usesPrefixPlan(threshold)) prefixSetPairs(withKey, threshold)
+    else coCountSetPairs(withKey, threshold)
+
+  /** Shared by the jaccard entry points, before anything is cached:
+    * threshold 0 would edge-connect all token-sharing docs —
+    * catastrophic over-dedup, silently. */
+  private def requireThreshold(threshold: Double): Unit = {
     require(threshold > 0.0, "the jaccard set join requires a positive threshold")
     require(threshold <= 1.0, "jaccard threshold above 1 excludes everything")
-    // Two exact plans, picked by threshold. The prefix filter's
-    // candidate bound is ⌊(1−t)·|S|⌋+1 tokens per side — a 5× cut at
-    // t=0.8 but only 30% at t=0.3, where its extra machinery (the
-    // candidate distinct, two array-fetch joins) costs more than the
-    // co-count rows it saves (measured at sf0.1: t=0.8 family −20%,
-    // t=0.3 shingle +25%). 0.5 is the crossover's conservative side:
-    // at t=0.5 the prefix is still half the tokens → candidate join
-    // a quarter of the co-count's df² term.
-    if (usesPrefixPlan(threshold))
-      prefixSetPairs(withKey, threshold, actions, maxCandidates, withReps)
-    else coCountSetPairs(withKey, threshold, maxCandidates)
   }
 
   /** Which [[setPairs]] plan a threshold selects — exposed to the
     * entry points because the CACHING choice follows the plan: the
     * prefix plan reads the keyed corpus under four heterogeneous
     * exchange keys (cache wins), the co-count plan's references share
-    * exchanges that ReuseExchange dedupes (cache measured ~20% SLOWER
-    * — the array round-trip costs more than the recompute). */
+    * exchanges that ReuseExchange dedupes (the array round-trip of a
+    * cache costs more than the recompute). */
   private def usesPrefixPlan(threshold: Double): Boolean = threshold >= 0.5
-  private def requirePrefixPlan(threshold: Double): Unit =
-    require(usesPrefixPlan(threshold),
-      s"prefix plan requires threshold >= 0.5, got $threshold")
-  private[text] def keyedTokenSets(documents: DataFrame, ngram: Int,
-                             threshold: Double, actions: Int): DataFrame = {
-    val base = tokenSets(documents, ngram).withColumn("set_key", setKey)
-    if (usesPrefixPlan(threshold)) registerCache(base, actions) else base
-  }
+
+  /** (doc_id, lang, bkt, toks, set_key): [[tokenSets]] keyed by
+    * [[setKey]] — uncached; the entry points scope-cache it to their
+    * own action shape. */
+  private[text] def keyedTokenSets(documents: DataFrame, ngram: Int): DataFrame =
+    tokenSets(documents, ngram).withColumn("set_key", setKey)
 
   /** Token co-count plan — the low-threshold side of [[setPairs]]:
     * |A∩B| falls out of ONE (block, token) equi-join + count, and
     * |A∪B| = |A| + |B| − |A∩B|. Intermediate is Σ_token df(token)²
     * within each block — acceptable when the prefix filter cannot
-    * shrink it much anyway. */
+    * shrink it much anyway. `withKey` may also be its collapsed sets
+    * (one row per set_key), as on the components path. */
   private[text] def coCountSetPairs(withKey: DataFrame, threshold: Double,
                                     maxCandidates: Option[Long] = None): DataFrame = {
     // distinct-set token table WITHOUT a first(toks) collapse: an
@@ -1414,8 +1371,8 @@ object Dedup {
     // guard's count and the co-count join (2 actions) — the guard's
     // materialized frame IS the join input, so acceptance costs one
     // cache round-trip, not a second tokenize+explode+distinct pass.
-    // Unguarded keeps the historical uncached plan (cache measured
-    // ~20% slower in the one-action shape — shared exchanges).
+    // Unguarded keeps the uncached plan, whose references share
+    // exchanges.
     val tok = if (maxCandidates.isDefined) registerCache(tok0, actions = 2) else tok0
     maxCandidates.foreach(guardCandidates(tok, Seq("lang", "bkt", "tok"), _,
       "jaccardComponents (co-count plan)"))
@@ -1436,23 +1393,31 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Prefix-filtered plan — the high-threshold side of [[setPairs]].
-    * `actions` = how many consuming actions the caller will run on
-    * the RETURNED frame: the internal collapsed-sets cache is scoped
-    * to that count (see the entry points' scaladoc). */
-  /** `extraSetsActions` / `setsOut` (r16): a components caller can
-    * read the collapsed-sets cache AGAIN under its own action(s) —
-    * `sets` carries rep_id when `withReps`, so the member join's
-    * (set_key, rep_id) side is a cache projection instead of a
-    * second corpus-wide min-aggregate. `extraSetsActions` widens the
-    * cache scope by those reads; `setsOut` hands the registered
-    * frame out. Default 0 / no-op keeps the historical scope. */
-  private[text] def prefixSetPairs(withKey: DataFrame, threshold: Double,
-                                   actions: Int = 1,
-                                   maxCandidates: Option[Long] = None,
-                                   withReps: Boolean = false,
-                                   extraSetsActions: Int = 0,
-                                   setsOut: DataFrame => Unit = _ => ()): DataFrame = {
+  /** Prefix-filtered plan — the high-threshold side of [[setPairs]] —
+    * over one representative row per distinct set, WITHOUT a
+    * first(toks) aggregation buffer (arrays force SortAggregate):
+    * dropDuplicates on the 8-byte hash key is partial-aggregable, and
+    * every row of a set_key group carries the identical toks array by
+    * construction, so the surviving row is canonical whichever one it
+    * is. Scope-cached: the prefix join and both verification joins
+    * read it under DIFFERENT exchange keys (band key vs set_a vs
+    * set_b), so ReuseExchange cannot dedupe them — uncached, each
+    * would re-run the tokenize map over the whole corpus. */
+  private[text] def prefixSetPairs(withKey: DataFrame, threshold: Double): DataFrame = {
+    require(usesPrefixPlan(threshold), s"prefix plan requires threshold >= 0.5, got $threshold")
+    prefixPairsOfSets(registerCache(withKey
+      .select(col("set_key"), col("lang"), col("bkt"), col("toks"), size(col("toks")).as("sz"))
+      .dropDuplicates("set_key")), threshold)
+  }
+
+  /** The prefix plan over collapsed `sets` — (set_key, lang, bkt, toks,
+    * sz), one row per set; callers dispatch on [[usesPrefixPlan]]. When
+    * `sets` also carries rep_id (the components path), rep_a/rep_b ride
+    * the verified pair stream out: they are functionally dependent on
+    * (set_a, set_b), so the pair dedup key is unchanged and the caller
+    * needs no rep-mapping joins. */
+  private def prefixPairsOfSets(sets: DataFrame, threshold: Double,
+                                maxCandidates: Option[Long] = None): DataFrame = {
     // Prefix filtering (the PPJoin family's candidate bound): under
     // ANY fixed total order of the token universe, two sets with
     // |A∩B| ≥ α must share a token among the first |S|−α+1 of each
@@ -1460,56 +1425,16 @@ object Dedup {
     // it). J(A,B) ≥ t implies |A∩B| ≥ t·|A∪B| ≥ t·|S| for both
     // sides, so joining only the ⌊(1−t)·|S|⌋+1 smallest tokens of
     // each set is exact on recall while shrinking the quadratic term
-    // from Σ_tok df(tok)² to the same sum over PREFIX tokens only —
-    // measured 11.6M → 1.2M join rows at sf0.1/t=0.8. `toks` is
-    // already sorted-distinct, so the lexicographic order is free
-    // (no global df pass; df-ascending ordering measured <10% better
-    // candidates here and costs an aggregate + per-set window).
-    requirePrefixPlan(threshold) // the recall bound below assumes it
+    // from Σ_tok df(tok)² to the same sum over PREFIX tokens only.
+    // `toks` is already sorted-distinct, so the lexicographic order is
+    // free (a df-ascending order costs an aggregate + per-set window).
     // t is backed off by 1e-6 because the output filter is on
     // round(j, 6) ≥ t: a pair whose true j sits within half an ulp-
     // of-the-6th-decimal BELOW t still passes the rounded filter, so
     // the recall bound must be computed against that slightly laxer
     // effective threshold (over-inclusion only costs candidates).
     val tEff = threshold - 1e-6
-    // one representative row per distinct set, WITHOUT a first(toks)
-    // aggregation buffer (arrays force SortAggregate): dropDuplicates
-    // on the 8-byte hash key — partial-aggregable, and every row of a
-    // set_key group carries the identical toks array by construction,
-    // so the surviving row is canonical whichever one it is
-    // scope-cached: the prefix join and both verification joins read
-    // this under DIFFERENT exchange keys (band key vs set_a vs
-    // set_b), so ReuseExchange cannot dedupe them — uncached, each
-    // would re-run the tokenize map over the whole corpus (measured
-    // +60% on the family at sf0.1). Post-collapse it is |distinct
-    // sets| rows, the narrow-expensive shape the registry exists for.
-    // +1 action when guarded: the guard's narrow count reads the
-    // collapsed sets (through the prefix explode) before the
-    // candidate join and the verification joins do.
-    // withReps (the components path): rep_id = min(doc_id) per set
-    // rides the SAME aggregate the dropDuplicates collapse plans (one
-    // more partial-aggregable function, 8 B/row in the cache), and
-    // the verified pair stream carries rep_a/rep_b out — the caller
-    // skips the two rep-mapping joins that each re-ran and
-    // re-shuffled the reps aggregate (r15: two corpus-sized exchanges
-    // + two aggregate re-runs removed from the eager edge job). The
-    // pairs entry points keep the historical rep-free collapse
-    // bit-identically.
-    val collapsed =
-      if (withReps) withKey
-        .select(col("set_key"), col("doc_id"), col("lang"), col("bkt"), col("toks"),
-          size(col("toks")).as("sz"))
-        .groupBy(col("set_key"))
-        .agg(min(col("doc_id")).as("rep_id"), first(col("lang")).as("lang"),
-          first(col("bkt")).as("bkt"), first(col("toks")).as("toks"),
-          first(col("sz")).as("sz"))
-      else withKey
-        .select(col("set_key"), col("lang"), col("bkt"), col("toks"),
-          size(col("toks")).as("sz"))
-        .dropDuplicates("set_key")
-    val sets = registerCache(collapsed,
-      (if (maxCandidates.isDefined) actions + 1 else actions) + extraSetsActions)
-    setsOut(sets)
+    val withReps = sets.columns.contains("rep_id")
     // posexplode: `pos` is the 0-based index of the prefix token in
     // the FULL sorted array (the slice starts at 1), feeding the
     // positional bound below
@@ -1531,10 +1456,8 @@ object Dedup {
     // |A∩B| ≤ min(|A|−i, |B|−j). J ≥ t forces |A∩B| ≥
     // t/(1+t)·(|A|+|B|), so the first-common-token collision row of
     // every true pair satisfies the bound — infeasible collisions are
-    // dropped at the join (measured at sf0.1/t=0.8: raw collision
-    // rows 1.11M → 0.55M, i.e. the bound halves the verify stream;
-    // distinct PAIRS barely move because most pairs also collide
-    // early, so the win is stream width, not pair count). The 1e-9
+    // dropped at the join — it narrows the verify stream, not the
+    // distinct pair count (most pairs also collide early). The 1e-9
     // slack keeps a double-rounding of the exact rational bound from
     // ever rejecting an equality case (over-inclusion only costs
     // candidate rows).
@@ -1555,31 +1478,26 @@ object Dedup {
       .select(col("x.set_key").as("set_a"), col("y.set_key").as("set_b"))
     // exact verification: |A∩B| as ONE allocation-free sorted-merge
     // per candidate ([[graft.functions.SetExpressions]] — the arrays
-    // are sorted by construction; array_intersect's per-pair hash set
-    // was the measured bottleneck here) — no df² co-count blowup, and
+    // are sorted by construction; no per-pair hash set like
+    // array_intersect's) — no df² co-count blowup, and
     // the arrays ride two narrow hash joins keyed on the 8-byte
     // set_key. Candidates are verified RAW, without a pre-verify
     // distinct: a pair colliding on several prefix tokens is merged
     // only AFTER the threshold filter, when survivors are few — the
-    // full-candidate-stream distinct exchange cost more than the
-    // duplicate merges it saved (A/B at sf0.1 t=0.8, min of 3:
-    // 1.87 s → 1.40 s), and the positional bound caps the repeat
+    // full-candidate-stream distinct exchange costs more than the
+    // duplicate merges it saves, and the positional bound caps the repeat
     // factor at the effective prefix length. Duplicate rows carry
     // identical jaccard by construction, so the post-filter
     // dropDuplicates is a pure dedup, never a choice.
-    val aCols = Seq(col("set_key").as("set_a"), col("toks").as("toks_a"),
-      col("sz").as("sz_a")) ++ (if (withReps) Seq(col("rep_id").as("rep_a")) else Nil)
-    val bCols = Seq(col("set_key").as("set_b"), col("toks").as("toks_b"),
-      col("sz").as("sz_b")) ++ (if (withReps) Seq(col("rep_id").as("rep_b")) else Nil)
+    def side(x: String): Seq[Column] =
+      Seq(col("set_key").as(s"set_$x"), col("toks").as(s"toks_$x"), col("sz").as(s"sz_$x")) ++
+        (if (withReps) Seq(col("rep_id").as(s"rep_$x")) else Nil)
     val scored = cand
-      .join(sets.select(aCols: _*).hint("shuffle_hash"), "set_a")
-      .join(sets.select(bCols: _*).hint("shuffle_hash"), "set_b")
+      .join(sets.select(side("a"): _*).hint("shuffle_hash"), "set_a")
+      .join(sets.select(side("b"): _*).hint("shuffle_hash"), "set_b")
       .withColumn("c", graft.functions.SetExpressions
         .sorted_intersect_count(col("toks_a"), col("toks_b")))
     val j = col("c").cast(DoubleType) / (col("sz_a") + col("sz_b") - col("c"))
-    // rep_a/rep_b are functionally dependent on (set_a, set_b), so the
-    // pair dedup key is unchanged and the extra columns are a pure
-    // carry for the components caller
     val outCols = Seq(col("set_a"), col("set_b"), round(j, 6).as("jaccard")) ++
       (if (withReps) Seq(col("rep_a"), col("rep_b")) else Nil)
     scored.select(outCols: _*)
@@ -1587,20 +1505,10 @@ object Dedup {
       .dropDuplicates("set_a", "set_b")
   }
 
-  /** Near-duplicate document pairs above a Jaccard threshold.
-    *
-    * CACHE SCOPE: when the prefix plan is selected (t ≥ 0.5) the
-    * expensive tokenize/collapse intermediates are scope-cached for
-    * `actions` CONSUMING actions on the returned frame (default 1 —
-    * the one-action query shape the bench and Verify run). A caller
-    * that will, say, `count()` then `collect()` should pass
-    * `actions = 2`; extra actions beyond the hint recompute the
-    * tokenize map — correct but silently slower. */
+  /** Near-duplicate document pairs above a Jaccard threshold. */
   def jaccardNearDupPairs(documents: DataFrame, threshold: Double, ngram: Int = 1,
-                          actions: Int = 1,
                           mode: PairMode = PairMode.Full): DataFrame = releasingOnBudgetError {
-    require(threshold > 0.0, "the jaccard set join requires a positive threshold")
-    require(threshold <= 1.0, "jaccard threshold above 1 excludes everything")
+    requireThreshold(threshold)
     // collapse identical token sets (same trick as the LSH path):
     // J(identical sets) = 1.0 with no arithmetic, and the quadratic
     // verification stage only sees DISTINCT sets per block; 8-byte
@@ -1611,20 +1519,19 @@ object Dedup {
     // cached cluster-pair frame then serves the caller's action, so
     // the internal sets scope must NOT widen or it lingers
     // unconsumed), and makes the keyed frame cache-worthy on the
-    // co-count plan too (two actions — the jaccardComponents
-    // cross-action rationale; single-action co-count stays uncached
-    // per the measured r2/r9 trade).
+    // co-count plan too (two actions; single-action co-count stays
+    // uncached).
     val isBounded = mode match {
       case PairMode.Bounded(_) => true
       case _ => false
     }
-    val effActions = if (isBounded) actions + 1 else actions
-    val withKey0 = keyedTokenSets(documents, ngram, threshold, effActions)
+    val keyed = keyedTokenSets(documents, ngram)
     val withKey =
-      if (isBounded && !usesPrefixPlan(threshold)) registerCache(withKey0, effActions)
-      else withKey0
+      if (isBounded) registerCache(keyed, actions = 2)
+      else if (usesPrefixPlan(threshold)) registerCache(keyed)
+      else keyed
     val members = withKey.select(col("doc_id"), col("set_key").as("ckey"))
-    val repPairs = setPairs(withKey, threshold, if (isBounded) 1 else actions)
+    val repPairs = setPairs(withKey, threshold)
       .select(col("set_a").as("ck_a"), col("set_b").as("ck_b"), col("jaccard"))
     // expand rep pairs to doc pairs; intra-cluster pairs are exact
     // duplicates (J = 1.0)
@@ -1786,13 +1693,11 @@ object Dedup {
     * Scale shape: identical token sets collapse to their min-doc rep
     * BEFORE the graph is built, so a colossal exact-duplicate cluster
     * contributes ONE vertex to the component search instead of a
-    * quadratic pair clique; [[graft.core.Graph.connectedComponents]]
-    * then runs min-label propagation with pointer jumping (O(log
-    * diameter) rounds) over the rep graph only, and members join
-    * their rep's component back with a streamed hash join. */
-  /** CACHE SCOPE: `actions` = consuming actions the CALLER will run
-    * on the returned frame (default 1; see [[jaccardNearDupPairs]]) —
-    * the internal edge materialization adds its own. */
+    * quadratic pair clique; [[repComponents]] then runs the component
+    * search over the rep graph only. The prefix plan fetches the token
+    * arrays onto the candidate stream AFTER the candidate join (the
+    * carried payload would be O(|S|) per prefix row), so this family
+    * shares only that second half of [[bandedComponents]]. */
   /** @param maxCandidates optional budget on the internal candidate
     *        join's matched-pair volume ([[guardCandidates]]: prefix
     *        plan — equi-matched prefix-token pairs; co-count plan —
@@ -1801,78 +1706,33 @@ object Dedup {
     *        join launches. None (default) = historical unguarded
     *        path, bit-identical. */
   def jaccardComponents(documents: DataFrame, threshold: Double, ngram: Int = 1,
-                        actions: Int = 1,
                         maxCandidates: Option[Long] = None): DataFrame =
       releasingOnBudgetError {
-    // keyedTokenSets actions = 1 + caller's (+1 when guarded: the
-    // guard's count reads the token map too): the edge list is
-    // consumed eagerly inside connectedComponents; the member join
-    // runs under the caller's action(s) on the returned frame.
-    // setPairs' internal sets cache is only read under the eager
-    // edge pass, so IT stays at 1 (its own +1 under the guard lives
-    // in prefixSetPairs). Caching follows the plan choice
-    // (see usesPrefixPlan): the prefix plan reads this under
-    // heterogeneous exchange keys, the co-count plan's shared
-    // exchanges measured faster uncached.
-    val baseActions = 1 + actions + (if (maxCandidates.isDefined) 1 else 0)
-    val withKey = {
-      val base = keyedTokenSets(documents, ngram, threshold, actions = baseActions)
-      // the co-count plan skips the cache on the SINGLE-action pairs
-      // path (measured slower there: shared exchanges + array
-      // round-trip) — but components span TWO actions (the eager edge
-      // materialization inside connectedComponents, then the caller's
-      // member join), and exchange reuse never crosses actions: the
-      // uncached token map would recompute per action. The
-      // minhashComponents cross-action rationale applies to BOTH plans
-      // here.
-      if (usesPrefixPlan(threshold)) base
-      else registerCache(base, actions = baseActions)
+    requireThreshold(threshold)
+    // the token map feeds the sets collapse and the member side, in
+    // actions exchange reuse never crosses — cached on BOTH plans
+    val withKey = registerCache(keyedTokenSets(documents, ngram), componentActions(maxCandidates))
+    // one row per set with its rep: rep_id = min(doc_id) rides the
+    // collapse aggregate (one more partial-aggregable function)
+    val sets = withKey
+      .select(col("set_key"), col("doc_id"), col("lang"), col("bkt"), col("toks"),
+        size(col("toks")).as("sz"))
+      .groupBy(col("set_key"))
+      .agg(min(col("doc_id")).as("rep_id"), first(col("lang")).as("lang"),
+        first(col("bkt")).as("bkt"), first(col("toks")).as("toks"), first(col("sz")).as("sz"))
+    repComponents(withKey.select(col("doc_id"), col("set_key")), sets, maxCandidates) {
+      val pairs =
+        if (usesPrefixPlan(threshold)) prefixPairsOfSets(sets, threshold, maxCandidates)
+        else {
+          // the co-count join groups by set pair; map each side to its rep
+          val reps = sets.select(col("set_key"), col("rep_id"))
+          coCountSetPairs(sets, threshold, maxCandidates)
+            .join(reps.toDF("set_a", "rep_a"), "set_a")
+            .join(reps.toDF("set_b", "rep_b"), "set_b")
+        }
+      pairs.select(least(col("rep_a"), col("rep_b")).as("rep_a"),
+                   greatest(col("rep_a"), col("rep_b")).as("rep_b"))
     }
-    val members = withKey.select(col("doc_id"), col("set_key"))
-    // (set_key, rep_id) for the member join: on the prefix plan it is
-    // a PROJECTION of the collapsed-sets cache (whose withReps
-    // aggregate already computed min(doc_id) per set — r16, VERDICT
-    // #3: one fewer corpus-wide aggregate + distinct-sized exchange
-    // in the caller's action); the cache scope widens by the caller's
-    // actions to cover the reads. The co-count plan has no collapsed
-    // frame and keeps the explicit aggregate.
-    var setsRef: Option[DataFrame] = None
-    val usePrefix = usesPrefixPlan(threshold)
-    val pairs =
-      if (usePrefix)
-        prefixSetPairs(withKey, threshold, actions = 1,
-          maxCandidates = maxCandidates, withReps = true,
-          extraSetsActions = actions, setsOut = df => setsRef = Some(df))
-      else setPairs(withKey, threshold, actions = 1,
-        maxCandidates = maxCandidates, withReps = false)
-    val reps =
-      if (usePrefix) setsRef.get.select(col("set_key"), col("rep_id"))
-      else members.groupBy(col("set_key")).agg(min(col("doc_id")).as("rep_id"))
-    // prefix plan: rep_a/rep_b ride the verified pair stream (the
-    // sets collapse aggregates min(doc_id) alongside the canonical
-    // row — see prefixSetPairs), so the edge job skips the two
-    // rep-mapping joins that each re-ran and re-shuffled the reps
-    // aggregate (r15). The co-count plan has no collapsed-sets frame
-    // to carry a rep on; it keeps the historical join mapping. Both
-    // compute the identical rep = min(doc_id) over the set_key group.
-    val repPairs =
-      if (usesPrefixPlan(threshold))
-        pairs.select(least(col("rep_a"), col("rep_b")).as("rep_a"),
-                     greatest(col("rep_a"), col("rep_b")).as("rep_b"))
-      else
-        pairs
-          .join(reps.as("ra"), col("set_a") === col("ra.set_key"))
-          .join(reps.as("rb"), col("set_b") === col("rb.set_key"))
-          .select(least(col("ra.rep_id"), col("rb.rep_id")).as("rep_a"),
-                  greatest(col("ra.rep_id"), col("rb.rep_id")).as("rep_b"))
-    val comp = graft.core.Graph.connectedComponents(repPairs, "rep_a", "rep_b")
-    // comp side follows the regime CC decided (componentJoinSide):
-    // the local solve broadcasts (exchange-free member join), the
-    // distributed closure is stat-less — shuffled-hash so the outer
-    // join never falls back to a sort-merge (no sort, streamed probe)
-    members.join(reps.hint("shuffle_hash"), "set_key")
-      .join(graft.core.Graph.componentJoinSide(comp), col("rep_id") === col("node"), "left")
-      .select(col("doc_id"), coalesce(col("comp"), col("rep_id")).as("component"))
   }
 
   /** Quality-priority dedup collapse: one row per near-dup cluster,
@@ -1899,15 +1759,12 @@ object Dedup {
     * same way. Quality is the shared `TextOps.qualityScore` blend,
     * identical on both engine and oracle. */
   def keepBestPerCluster(documents: DataFrame, threshold: Double,
-                         ngram: Int = 1, actions: Int = 1,
+                         ngram: Int = 1,
                          maxCandidates: Option[Long] = None): DataFrame = {
-    // `actions` (caller's consuming-action count on the returned
-    // frame, default 1) rides through to the cluster search's cache
-    // scope — see jaccardNearDupPairs' CACHE SCOPE note.
     // `maxCandidates` guards the cluster search's candidate join
     // (jaccardComponents' scaladoc) — the selection aggregate below
     // adds no quadratic term of its own.
-    val comp = jaccardComponents(documents, threshold, ngram, actions, maxCandidates)
+    val comp = jaccardComponents(documents, threshold, ngram, maxCandidates)
     val quality = TextOps.qualityScore(documents).select(col("doc_id"), col("quality"))
     comp.join(quality, "doc_id")
       .groupBy(col("component"))

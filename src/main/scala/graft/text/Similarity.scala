@@ -27,6 +27,11 @@ object Similarity {
   // which is also what DuckDB's x/0 yields, so the oracle agrees —
   // and every downstream threshold/top-k predicate drops it.
 
+  /** Cosine of two float-array columns given their squared norms,
+    * rounded to 6 decimals — the score every similarity site ranks
+    * and thresholds on, with the nullif guard above. */
+  private def cosine(a: Column, b: Column, nrmA: Column, nrmB: Column): Column =
+    round(dot(a, b) / nullif(sqrt(nrmA * nrmB), lit(0.0)), 6)
 
   /** Dot product of two float-array columns accumulated in double.
     * Backed by the native codegen'd Catalyst expression
@@ -88,7 +93,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"), col("nrm").as("q_nrm"))
     val scored = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", round(dot(col("embedding"), col("q_vec")) / nullif(sqrt(col("nrm") * col("q_nrm")), lit(0.0)), 6))
+      .withColumn("sim", cosine(col("embedding"), col("q_vec"), col("nrm"), col("q_nrm")))
     topK(scored, k)
   }
 
@@ -237,8 +242,7 @@ object Similarity {
         bestCellExpr(col("embedding"), col("nrm")).as("cell"))
     val earlier = assigned.select(col("cell"), col("vec_id").as("id_b"),
       col("embedding").as("vec_b"), col("nrm").as("nrm_b"))
-    val pairSim = round(dot(col("embedding"), col("vec_b"))
-      / nullif(sqrt(col("nrm") * col("nrm_b")), lit(0.0)), 6)
+    val pairSim = cosine(col("embedding"), col("vec_b"), col("nrm"), col("nrm_b"))
     val dupReps = assigned.join(earlier.hint("shuffle_hash"), Seq("cell"))
       .filter(col("id_b") < col("vec_id"))
       .filter(simDefined(pairSim) && pairSim >= threshold)
@@ -281,12 +285,7 @@ object Similarity {
                             nPlanes: Int = 4, nBands: Int = 4,
                             mode: PairMode = PairMode.Full): DataFrame =
       Dedup.releasingOnBudgetError {
-    require(nBands >= 1, s"nBands must be >= 1 (0 bands silently emits no pairs), got $nBands")
-    // cosine ≤ 1: a threshold above 1 excludes everything (the
-    // jaccard family's same guard) — and it is what makes the
-    // non-Full intra expansion exact: every defined identical-vector
-    // pair scores exactly 1.0 ≥ threshold
-    require(threshold <= 1.0, s"cosine threshold above 1 excludes everything, got $threshold")
+    requireBanding(threshold, nBands)
     mode match {
       case PairMode.Full => bandedCosinePairs(embeddings, threshold, nPlanes, nBands)
       case _ =>
@@ -336,6 +335,15 @@ object Similarity {
     }
   }
 
+  /** Shared by the banded cosine operators. cosine ≤ 1: a threshold
+    * above 1 excludes everything (the jaccard family's same guard) —
+    * and it is what makes the non-Full intra expansion exact: every
+    * defined identical-vector pair scores exactly 1.0 ≥ threshold. */
+  private def requireBanding(threshold: Double, nBands: Int): Unit = {
+    require(nBands >= 1, s"nBands must be >= 1 (0 bands silently emits no pairs), got $nBands")
+    require(threshold <= 1.0, s"cosine threshold above 1 excludes everything, got $threshold")
+  }
+
   /** The Full pair search ([[embeddingNearDupPairs]]'s historical
     * body, bit-compatible): banded sign-LSH candidates, exact-cosine
     * confirm, output-bounded distinct. */
@@ -352,7 +360,7 @@ object Similarity {
     val b = e.select(col("band"), col("bkt"), col("vec_id").as("id_b"),
       col("embedding").as("vec_b"), col("nrm").as("nrm_b"))
     a.join(b, Seq("band", "bkt")).filter(col("id_a") < col("id_b"))
-      .withColumn("sim", round(dot(col("vec_a"), col("vec_b")) / nullif(sqrt(col("nrm_a") * col("nrm_b")), lit(0.0)), 6))
+      .withColumn("sim", cosine(col("vec_a"), col("vec_b"), col("nrm_a"), col("nrm_b")))
       .filter(simDefined(col("sim")) && col("sim") >= threshold)
       .select("id_a", "id_b", "sim")
       .dropDuplicates("id_a", "id_b")
@@ -589,15 +597,15 @@ object Similarity {
     * chain itself is the semantics (A≈B≈C groups A,C even when
     * cos(A,C) < threshold), same contract as the lexical components.
     *
-    * Scale shape: bit-identical vectors collapse to their min-id rep
+    * Scale shape: [[Dedup.bandedComponents]] over the distinct
+    * vectors — bit-identical vectors collapse to their min-id rep
     * BEFORE the pair search (a colossal exact-dup cluster is one
     * vertex of the band join, not a quadratic clique — at 100 TB
     * you'd key this collapse on a 128-bit content fingerprint of the
     * vector bytes rather than shuffling the arrays themselves; the
     * array key keeps the declared form exactly oracle-mirrorable),
-    * the component search runs on the rep graph via
-    * [[graft.core.Graph.connectedComponents]], and members rejoin
-    * through a streamed hash join. */
+    * each rep's vector and norm ride its band rows to the exact-cosine
+    * confirm, and members rejoin their rep's component. */
   /** @param maxCandidates optional budget on the internal banded
     *        candidate join (Σ_(band,bkt) n·(n−1)/2 over rep vectors
     *        — [[Dedup.guardCandidates]]); breach throws
@@ -607,45 +615,20 @@ object Similarity {
                           nPlanes: Int = 4, nBands: Int = 4,
                           maxCandidates: Option[Long] = None): DataFrame =
       Dedup.releasingOnBudgetError {
+    requireBanding(threshold, nBands)
     // NULL embeddings are excluded EXPLICITLY (family convention:
-    // tokenless docs drop) — before r12 they vanished by accident of
-    // the non-null-safe membership rejoin, which is the same outcome
-    // with the wrong author; a null-safe join would instead merge all
+    // tokenless docs drop) — a null-safe join would instead merge all
     // null rows into one bogus "cluster" of unmeasurable vectors
     val keyed = embeddings.filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
-    // scoped cache (the family's standard pattern — minhash/simhash
-    // components do the same for their signature tables): the rep
-    // table is read by BOTH sides of the LSH band join, by the final
-    // membership join, and across connectedComponents' eager edge
-    // materialization — uncached, the rep-collapse shuffle recomputed
-    // once per reference. actions = 2: consumed by the edge
-    // materialization inside connectedComponents, then by the
-    // caller's terminal action on the returned frame (+1 when
-    // guarded: the guard's narrow bucket count reads it too).
-    val reps = graft.text.Dedup.registerCache(
+    // zero-norm reps are banded too (their sims drop at the confirm),
+    // so the guard counts every pair the join evaluates
+    val sim = cosine(col("x.embedding"), col("y.embedding"), col("x.nrm"), col("y.nrm"))
+    Dedup.bandedComponents(keyed,
       keyed.groupBy(col("embedding")).agg(min(col("vec_id")).as("rep_id")),
-      actions = if (maxCandidates.isDefined) 3 else 2)
-    val repVecs = reps.select(col("rep_id").as("vec_id"), col("embedding"))
-    // same band/bucket derivation as bandedCosinePairs below (shared
-    // lshBandBucket primitive), minus the carried vector payload —
-    // the histogram counts exactly the `<`-ordered pairs its
-    // (band, bkt) self-join will evaluate. Zero-norm reps ride along
-    // deliberately: the join buckets them too (their sims drop at
-    // the confirm), so excluding them would under-predict.
-    maxCandidates.foreach { budget =>
-      val banded = repVecs.select(explode(array((0 until nBands).map(b =>
-          struct(lit(b).as("band"),
-            lshBandBucket(col("embedding"), b, nPlanes).as("bkt"))): _*)).as("bb"))
-        .select(col("bb.band").as("band"), col("bb.bkt").as("bkt"))
-      Dedup.guardCandidates(banded, Seq("band", "bkt"), budget, "embeddingComponents")
-    }
-    val edges = embeddingNearDupPairs(repVecs, threshold, nPlanes, nBands)
-      .select(col("id_a"), col("id_b"))
-    val comp = graft.core.Graph.connectedComponents(edges, "id_a", "id_b")
-    keyed.join(reps.hint("shuffle_hash"), "embedding")
-      .join(graft.core.Graph.componentJoinSide(comp), col("rep_id") === col("node"), "left")
-      .select(col("vec_id"), coalesce(col("comp"), col("rep_id")).as("component"))
+      reps => Dedup.withBands(reps.withColumn("nrm", norm2(col("embedding"))),
+        (0 until nBands).map(b => lshBandBucket(col("embedding"), b, nPlanes))),
+      simDefined(sim) && sim >= threshold, maxCandidates, "embeddingComponents")
   }
 
   /** IVF (inverted-file) top-k: coarse-quantize the corpus into
@@ -695,7 +678,7 @@ object Similarity {
     val qCells = probeCells(e.filter(col("vec_id") < nQueries), cent, nProbe)
     val scored = assigned.join(broadcast(qCells), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", round(dot(col("embedding"), col("q_vec")) / nullif(sqrt(col("nrm") * col("q_nrm")), lit(0.0)), 6))
+      .withColumn("sim", cosine(col("embedding"), col("q_vec"), col("nrm"), col("q_nrm")))
     topK(scored, k)
   }
 
@@ -707,7 +690,7 @@ object Similarity {
       col("cents"),
       struct(lit(-2.0).as("best_sim"), lit(-1L).as("cell")),
       (acc, c) => {
-        val sim = round(dot(vec, c.getField("c_vec")) / nullif(sqrt(nrm * c.getField("c_nrm")), lit(0.0)), 6)
+        val sim = cosine(vec, c.getField("c_vec"), nrm, c.getField("c_nrm"))
         // simDefined, not bare > (r13 review): Spark evaluates
         // NaN > x as TRUE, so a NaN-component vector would win EVERY
         // fold step and land in the LAST centroid's cell instead of
@@ -736,8 +719,7 @@ object Similarity {
   private def probeCells(q: DataFrame, cent: DataFrame, nProbe: Int): DataFrame =
     q.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("embedding"), col("nrm"), explode(col("cents")).as("c"))
-      .withColumn("c_sim", round(dot(col("embedding"), col("c.c_vec"))
-        / nullif(sqrt(col("nrm") * col("c.c_nrm")), lit(0.0)), 6))
+      .withColumn("c_sim", cosine(col("embedding"), col("c.c_vec"), col("nrm"), col("c.c_nrm")))
       .withColumn("c_rk", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("c_sim").desc, col("c.cell"))))
       .filter(col("c_rk") <= nProbe)
@@ -904,8 +886,7 @@ object Similarity {
     val index = spark.read.parquet(s"$dir/index")
     val scored = index.join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", round(dot(col("embedding"), col("q_vec"))
-        / nullif(sqrt(col("nrm") * col("q_nrm")), lit(0.0)), 6))
+      .withColumn("sim", cosine(col("embedding"), col("q_vec"), col("nrm"), col("q_nrm")))
     topK(scored, k)
   }
 
@@ -926,7 +907,7 @@ object Similarity {
               norm2(col("embedding")).as("q_nrm"),
               explode(probeBuckets(col("embedding"), nPlanes, nProbes)).as("q_bkt"))
     val scored = e.join(broadcast(q), col("bkt") === col("q_bkt") && col("vec_id") =!= col("q_id"))
-      .withColumn("sim", round(dot(col("embedding"), col("q_vec")) / nullif(sqrt(col("nrm") * col("q_nrm")), lit(0.0)), 6))
+      .withColumn("sim", cosine(col("embedding"), col("q_vec"), col("nrm"), col("q_nrm")))
     topK(scored, k)
   }
 

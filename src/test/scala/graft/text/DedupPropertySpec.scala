@@ -125,7 +125,7 @@ class DedupPropertySpec extends SparkSpec {
       ngram <- Seq(1, 2)
     } {
       val docs = corpus(seed, nDocs, vocab)
-      val withKey = Dedup.keyedTokenSets(docs, ngram, threshold = 0.0, actions = 1)
+      val withKey = Dedup.keyedTokenSets(docs, ngram)
       def norm(df: DataFrame): Map[(Long, Long), Double] =
         df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
       val co = norm(Dedup.coCountSetPairs(withKey, t))
@@ -158,7 +158,7 @@ class DedupPropertySpec extends SparkSpec {
         (i.toLong, "en", text, text.length.toLong)
       }
       val docs = (randomDocs ++ crafted).toDF("doc_id", "lang", "text", "n_chars")
-      val withKey = Dedup.keyedTokenSets(docs, ngram = 1, threshold = 0.0, actions = 1)
+      val withKey = Dedup.keyedTokenSets(docs, ngram = 1)
       def norm(df: DataFrame): Map[(Long, Long), Double] =
         df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
       def docPairs(t: Double): Map[(Long, Long), Double] =
@@ -703,10 +703,17 @@ class DedupPropertySpec extends SparkSpec {
     // signature/fingerprint caches: single-action registrations …
     Dedup.simhashNearDupPairs(spark, docs).count()
     Dedup.minhashLshPairs(spark, docs).count()
-    // … and the actions=2 component registrations (edge
-    // materialization inside connectedComponents + this action)
-    Dedup.simhashComponents(spark, docs).count()
-    Dedup.minhashComponents(spark, docs).count()
+    // … and the component registrations, whose lifetime is derived
+    // (edge materialization inside connectedComponents + this action,
+    // + the guard's count when guarded) — every component operator,
+    // both jaccard plans, unguarded and guarded
+    for (mc <- Seq(None, Some(Long.MaxValue))) {
+      Dedup.simhashComponents(spark, docs, maxCandidates = mc).count()
+      Dedup.minhashComponents(spark, docs, maxCandidates = mc).count()
+      Dedup.jaccardComponents(docs, 0.8, maxCandidates = mc).count()
+      Dedup.jaccardComponents(docs, 0.3, ngram = 2, maxCandidates = mc).count()
+      Dedup.keepBestPerCluster(docs, 0.8, maxCandidates = mc).count()
+    }
     assert(bm >= 0)
     // the QueryExecutionListener fires on the listener-bus thread
     // after the action returns — poll briefly instead of racing it
