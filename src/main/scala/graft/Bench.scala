@@ -125,7 +125,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     // SPARK_GRAFT_BENCH_FLOOR=1: measure the suite's fixed per-query
     // floor — every declared query name runs through the IDENTICAL
-    // harness loop (build closure, count action, releaseCaches, GC)
+    // harness loop (build closure, count action, releaseAll, GC)
     // but computes a trivial one-stage job with a per-query literal
     // (distinct generated code, so codegen is paid per query like the
     // real suite). total(floor sweep) is then the scheduling/planning/
@@ -143,7 +143,7 @@ object Bench {
       }
     selected.foreach { case (_, fn) =>
       try { fn(spark, warmDir).count(); () } catch { case _: Throwable => () }
-      graft.text.Dedup.releaseCaches()
+      graft.core.ScopedCache.releaseAll()
     }
     Seq("lineitem", "orders", "documents", "embeddings").foreach { t =>
       try graft.core.Tables.table(spark, sfDir, t).count()
@@ -236,7 +236,7 @@ object Bench {
         val elapsed = (System.nanoTime() - t0) / 1e9
         // release library-persisted tables so timed queries never run
         // under cache pressure accumulated by earlier ones
-        graft.text.Dedup.releaseCaches()
+        graft.core.ScopedCache.releaseAll()
         // settle the heap between reps: garbage from query N must
         // not bill its collection pause to query N+1 (observed as a
         // rare 15×+ spike on whichever heavy query a major GC landed

@@ -13,13 +13,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * Installs:
-  *  - the native vector functions (`dot_f`, `norm2_f`) into the SQL
-  *    function registry (what `FunctionBridge.registerAll` does for
-  *    an already-built session),
-  *  - [[graft.functions.VectorFoldRewrite]], which transparently
-  *    upgrades the portable `aggregate(zip_with(...))` fold
-  *    formulation to those codegen'd expressions.
+  * Installs the native functions (`dot_f`, `norm2_f`,
+  * `jaro_winkler`, `nfc_normalize`) into the SQL function registry —
+  * what `FunctionBridge.registerAll` does for an already-built
+  * session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -45,6 +42,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[graft.functions.TextNormalize.NfcNormalize].getName,
         "nfc_normalize"),
       (exprs: Seq[Expression]) => org.apache.spark.sql.graft.Registration.nfcNormalize(exprs)))
-    ext.injectOptimizerRule(_ => graft.functions.VectorFoldRewrite)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.core.Validate
+import graft.core.{ScopedCache, Validate}
 import graft.streaming.StreamingOps
 import graft.echem._
 import graft.echem.ProcessRunner.{Exec, Run}
@@ -55,10 +55,7 @@ object Pipeline {
                      maxDriverIds: Int = 1000000): Dataset[Slab] = {
     import slabs.sparkSession.implicits._
     // ONE action, not count-then-collect: take(gate+1) both fetches
-    // the ids and proves the gate in a single job — and, load-bearing
-    // for full()'s scoped caches, burns ONE cache-consumption slot
-    // instead of two (the count gate added later silently exhausted
-    // the actions=2 budgets before the downstream consumer ran)
+    // the ids and proves the gate in a single job
     val ids0 = slabs.select(col("mpKey")).as[String].take(maxDriverIds + 1)
     require(ids0.length <= maxDriverIds,
       s"seededSamplePy collects ids driver-side (CPython-parity semantics); " +
@@ -99,25 +96,21 @@ object Pipeline {
       nShifts: Int,
       charges: Seq[Double],
       exec: Exec,
-      existing: DataFrame): DataFrame = {
+      existing: DataFrame): DataFrame = ScopedCache.scope {
     import spark.implicits._
 
     // extract + sample before the expensive fan-out (§4: manual
     // plan ordering across the UDF barrier). CPython-bit-exact draws
     // — the reference's own seed/sample pairs (27 → bulk subset,
     // 20 → pick-1), dags/my_dag.py:55-57,109-111.
-    // Scope-CACHED with budgets counted against EVERY action whose
-    // plan contains the frame (sameResult containment): bulkAll is
-    // read by its own draw's key take, by the slab draw's key take
-    // (the slab plan contains the bulk subtree), and by the final
-    // sink action = 3; slabs by its draw's take and the final action
-    // = 2. Without the caches the POSCAR parse and the whole SlabGen
-    // fan-out would re-execute once per stage.
+    // Scope-cached: without the caches the POSCAR parse and the whole
+    // SlabGen fan-out would re-execute once per draw and once more
+    // in the caller's action.
     val bulkAll = PoscarCodec.read(spark, bulkPoscarDir)
-    graft.text.Dedup.registerCache(bulkAll.toDF(), actions = 3)
+    ScopedCache.register(bulkAll.toDF())
     val bulks = seededSamplePy(bulkAll, nBulkSample, seed = 27L)
     val slabs = SlabGen.generate(bulks, facets, nShifts)
-    graft.text.Dedup.registerCache(slabs.toDF(), actions = 2)
+    ScopedCache.register(slabs.toDF())
     // reference picks one slab per run (`dags/my_dag.py:109-111`)
     val picked = seededSamplePy(slabs, 1, seed = 20L)
 

@@ -51,7 +51,7 @@ object PlanDump {
       } catch {
         case e: Throwable =>
           System.err.println(s"[plandump] $name FAILED: $e")
-      } finally graft.text.Dedup.releaseCaches()
+      } finally graft.core.ScopedCache.releaseAll()
     }
     spark.stop()
   }

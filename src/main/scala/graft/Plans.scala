@@ -118,7 +118,7 @@ object Plans {
       // query's explain, making the dumped skeleton depend on dump
       // ORDER (bit PlansDocSpec in r16 when the size-derived spread
       // made documentsSpread ≡ documents at sf0.01)
-      graft.text.Dedup.releaseCaches()
+      graft.core.ScopedCache.releaseAll()
     }
 
     // Appendix (NOT a declared-query section — the store must be

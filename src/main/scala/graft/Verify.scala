@@ -38,7 +38,7 @@ object Verify {
         rm(new java.io.File(outDir, name)) // no partial dump either
       }
       // release library-persisted tables (jaccard set-key) per query
-      graft.text.Dedup.releaseCaches()
+      graft.core.ScopedCache.releaseAll()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

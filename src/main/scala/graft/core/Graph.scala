@@ -419,13 +419,10 @@ object Graph {
     * lazily that re-runs the whole sizes/adjacency/mass pipeline —
     * including the caller's cluster-pair derivation, typically an LSH
     * band join — per reference (r16, found in the q_degree_hist bench
-    * regression). `cacheDeg` lets a lifecycle-owning caller persist
-    * exactly that frame (two longs × |positive clusters| rows — never
-    * corpus-sized) for the duration of its one consuming action;
-    * default identity keeps the function self-contained. */
+    * regression). That frame is therefore scope-cached (two longs ×
+    * |positive clusters| rows — never corpus-sized). */
   def clusterDegreeHistogram(members: DataFrame, clusterPairs: DataFrame,
-                             nodes: DataFrame, nodeCol: String,
-                             cacheDeg: DataFrame => DataFrame = identity): DataFrame = {
+                             nodes: DataFrame, nodeCol: String): DataFrame = ScopedCache.scope {
     val sizes = members.groupBy(col("ckey")).agg(count(lit(1)).as("csize"))
     // endpoints unpivot via explode, not a self-union — the same
     // rule [[degreeHistogram]] documents: a union of two projections
@@ -443,7 +440,7 @@ object Graph {
     // (degree, csize) of POSITIVE-degree clusters only — both
     // consumers below filtered identically, so the filter rides
     // inside the (cacheable) shared frame
-    val deg = cacheDeg(sizes.join(mass, Seq("ckey"), "left")
+    val deg = ScopedCache.register(sizes.join(mass, Seq("ckey"), "left")
       .select((coalesce(col("cross_deg"), lit(0L)) + col("csize") - 1L).as("degree"),
         col("csize"))
       .filter(col("degree") > 0))

@@ -34,9 +34,8 @@ object VectorExpressions {
 
   /** Σ a(i)·b(i) accumulated in double; NULL when the lengths differ
     * — exactly the higher-order fold's semantics (`zip_with` pads the
-    * short side with nulls, which null the whole sum), so the
-    * [[VectorFoldRewrite]] substitution cannot change results on
-    * ragged inputs. */
+    * short side with nulls, which null the whole sum), so the native
+    * and fold formulations agree on ragged inputs. */
   // deliberately NOT ImplicitCastInputTypes: implicit function-arg
   // coercion would accept array<double> and silently DOWNCAST every
   // element to float — a precision loss the strict check surfaces

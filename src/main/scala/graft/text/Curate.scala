@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.core.ScopedCache
+
 /** The composed curation run — the flagship "switch your pipeline to
   * this library" query: Gopher quality gate → exact dedup → language
   * ID → per-(language, source) corpus accounting, each stage the
@@ -30,7 +32,7 @@ object Curate {
     * dedup drops rows before language scoring — each stage shrinks
     * the data the next one pays for. */
   def curationPipeline(documents: DataFrame, minWords: Int = 50,
-                       minStopwords: Int = 2): DataFrame = {
+                       minStopwords: Int = 2): DataFrame = ScopedCache.scope {
     require(minStopwords >= 0, s"need minStopwords >= 0, got $minStopwords")
     // n_stopwords is a DISTINCT-stopword count, capped by the list
     // length (8): a floor above it can never pass and would return a
@@ -55,14 +57,14 @@ object Curate {
     // re-running the Gopher token fold up to 4×). The caches hold the
     // already-gated (then already-deduped) slices — the smallest
     // frames in the chain — and release on the query's own action.
-    val kept = Dedup.registerCache(documents.join(gate, "doc_id"))
+    val kept = ScopedCache.register(documents.join(gate, "doc_id"))
     // THE library's exact-dedup operator, not an inline re-spelling
     // (the docstring's "each stage the library's own operator" is a
     // real dependency: Dedup.exactDedup's canonical-survivor rule and
     // NULL-text group semantics are pinned in NullInputSpec, and an
     // inline copy would silently drift if they ever change)
     val reps = Dedup.exactDedup(kept).select(col("keep_id").as("doc_id"))
-    val uniq = Dedup.registerCache(kept.join(reps, "doc_id"))
+    val uniq = ScopedCache.register(kept.join(reps, "doc_id"))
     val lang = TextOps.langId(uniq).select(col("doc_id"), col("predicted"))
     uniq.join(lang, "doc_id")
       .groupBy(col("predicted").as("lang_pred"), col("source"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.ScopedCache
+
 /** Deduplication operators for training-data pipelines: exact
   * (hash-groupBy), MinHash+LSH, SimHash, and blocked n-gram Jaccard.
   *
@@ -15,161 +17,6 @@ import org.apache.spark.sql.types._
   * a bucket; AQE's skew-join split covers the moderate cases.
   */
 object Dedup {
-
-  /** Scoped-cache registry — SELF-RELEASING. The near-dup operators
-    * in this object persist nothing: their multi-referenced subtrees
-    * are consumed through structurally identical shuffles, so
-    * `ReuseExchange` shares the shuffle files (measured ~25% faster
-    * than a persist on the jaccard path — the cache round-trip of the
-    * token-set arrays cost more than the branch recomputes it saved,
-    * and at 100 TB a persisted token table is a second full write of
-    * the corpus). The registry exists for the one legitimate case: a
-    * NARROW derived frame referenced by branches with no common
-    * exchange (BM25's per-doc tf row — a few doubles per document —
-    * feeds both a broadcast stats aggregate and the probe side;
-    * without a persist the whole corpus tokenizes twice).
-    *
-    * Lifecycle: a registered cache lives for exactly ONE consuming
-    * action. A per-session [[QueryExecutionListener]] fires after
-    * every action (success or failure) and unpersists each registered
-    * frame whose analyzed plan occurs in the completed query — the
-    * same `sameResult` containment Spark's own cache manager uses for
-    * lookup — so a library user who never heard of the registry leaks
-    * nothing. Until first consumption `persist` is only a lazy marker
-    * (no storage blocks exist), so an abandoned query leaks nothing
-    * either — with TWO exceptions, both operators that must run an
-    * eager action before the returned plan exists:
-    * [[bloomContamination]] consumes its probe-gram cache's first
-    * action eagerly (the sketch build), and [[PairMode.Bounded]]'s
-    * guard eagerly fills the cluster-pair/input caches with one
-    * consuming action (the caller's) still pending — so abandoning
-    * either's RETURNED frame leaves materialized cache(s) until
-    * [[releaseCaches]] or session cleanup. Re-running a returned frame after its first action
-    * recomputes without the cache — correct, just unaccelerated;
-    * rebuild the operator for repeated runs (Bench does). The
-    * explicit [[releaseCaches]] remains for lifecycle-owning callers
-    * and is idempotent with the listener.
-    *
-    * Interleaved operators over the SAME input: two registrations
-    * whose plans are `sameResult` share ONE physical cache entry
-    * (Spark's CacheManager dedupes by sameResult), so an action that
-    * consumes either decrements both registry entries and may
-    * unpersist before the second operator's own action runs. That is
-    * deliberate — unpersisting one registration would drop the
-    * shared blocks anyway; the cost is a recompute, never a wrong
-    * result. Lifecycle-owning callers that interleave same-input
-    * operators should run each to its action before building the
-    * next (Bench/Verify do). */
-  private[text] val scopedCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[(DataFrame, java.util.concurrent.atomic.AtomicInteger)]()
-  // weak keys: a stopped SparkSession must be collectable — a strong
-  // set would pin every session this JVM ever cycled through (test
-  // harnesses, notebook servers) for the process lifetime. add() on
-  // the synchronized set stays the atomic register-once gate.
-  private val listenerSessions =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** @param actions how many CONSUMING actions the cache survives —
-    *        1 (default) for operators whose single output plan holds
-    *        every reference; the component operators derive theirs in
-    *        [[componentActions]]. */
-  private[graft] def registerCache(df: DataFrame, actions: Int = 1): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scopedCaches.add((df, new java.util.concurrent.atomic.AtomicInteger(actions)))
-    // visible to a releasingOnBudgetError bracket on this thread, if
-    // one is active — its throw-path cleanup releases exactly these
-    val bracket = callRegistrations.get()
-    if (bracket != null) bracket += df
-    val spark = df.sparkSession
-    if (listenerSessions.add(spark)) {
-      spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-                               qe: org.apache.spark.sql.execution.QueryExecution,
-                               durationNs: Long): Unit = releaseConsumed(qe)
-        override def onFailure(funcName: String,
-                               qe: org.apache.spark.sql.execution.QueryExecution,
-                               exception: Exception): Unit = releaseConsumed(qe)
-      })
-    }
-    df
-  }
-
-  /** Unpersist every registered cache the completed query actually
-    * read (listener thread; queue is concurrent, unpersist is
-    * idempotent, so racing [[releaseCaches]] is harmless). */
-  private def releaseConsumed(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
-    val it = scopedCaches.iterator()
-    while (it.hasNext) {
-      val (df, remaining) = it.next()
-      val consumed =
-        try qe.analyzed.exists(_.sameResult(df.queryExecution.analyzed))
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (consumed && remaining.decrementAndGet() <= 0) {
-        df.unpersist(blocking = false); it.remove()
-      }
-    }
-  }
-
-  def releaseCaches(): Unit = {
-    var d = scopedCaches.poll()
-    while (d != null) { d._1.unpersist(blocking = false); d = scopedCaches.poll() }
-  }
-
-  /** Registrations made by the pair-operator call currently running
-    * on this thread — so [[releasingOnBudgetError]] can release
-    * exactly ITS caches on a throw. Thread-local, not a registry
-    * snapshot: a before/after identity diff cannot distinguish "this
-    * call's registrations" from "registrations another thread made
-    * concurrently", and freeing those would silently de-cache a live
-    * operator. Operator construction is single-threaded, so the
-    * thread-local sees every registerCache in the call. */
-  private val callRegistrations =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]
-
-  /** Run an operator construction that may register scoped caches and
-    * then fail — [[PairMode.Bounded]]'s guard, or any error in its
-    * eager count action (the ANSI overflow the prediction documents,
-    * a task failure). On ANY throw, release every registration THIS
-    * call created: the caller's consuming action will never come, and
-    * the family's fail-fast convention (nothing left persisted after
-    * a failed call, suite-asserted) must hold for the guard exactly
-    * as it does for argument validation. */
-  private[text] def releasingOnBudgetError[T](body: => T): T = {
-    val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val prev = callRegistrations.get()
-    callRegistrations.set(mine)
-    try body
-    catch {
-      case e: Throwable =>
-        val it = scopedCaches.iterator()
-        while (it.hasNext) {
-          val entry = it.next()
-          if (mine.exists(_ eq entry._1)) {
-            entry._1.unpersist(blocking = false); it.remove()
-          }
-        }
-        // the registrations were just released and removed from
-        // scopedCaches — clear them so the finally below never hands
-        // dead DataFrame refs up to an enclosing bracket (r14
-        // advisor: the outer scan tolerated them, but the outer
-        // bracket retained the already-released frames until it
-        // closed)
-        mine.clear()
-        throw e
-    } finally {
-      // propagate this call's registrations to an ENCLOSING bracket
-      // (r13 advisor): a nested bracketed operator call used to
-      // restore `prev` without handing its registrations up, so an
-      // outer-operator throw after an inner success stranded the
-      // inner call's still-pending caches. On the throw path `mine`
-      // was cleared after its cleanup above, so only live
-      // registrations ever propagate.
-      if (prev != null) prev ++= mine
-      callRegistrations.set(prev)
-    }
-  }
 
   /** The shared `maxCandidates` guard of the component/cluster
     * operators: computes the EXACT number of candidate pairs the
@@ -203,14 +50,6 @@ object Dedup {
       throw new CandidateBudgetExceededException(predicted, maxCandidates, family)
   }
 
-  /** How many consuming actions a component operator's scoped caches
-    * live for: the eager edge materialization inside
-    * `connectedComponents`, the caller's action on the returned frame,
-    * and — when guarded — the guard's count. Every frame such an
-    * operator caches is read by exactly these actions. */
-  private def componentActions(maxCandidates: Option[Long]): Int =
-    if (maxCandidates.isDefined) 3 else 2
-
   /** `df` with one row per (row, band): every input column passes
     * through, plus `band` (the band index) and `bkey` (that band's
     * bucket key from `bandKeys`). Carrying the payload here, BEFORE
@@ -242,7 +81,7 @@ object Dedup {
   private[text] def bandedComponents(members: DataFrame, reps: DataFrame,
                                      band: DataFrame => DataFrame, confirm: Column,
                                      maxCandidates: Option[Long], family: String): DataFrame =
-    repComponents(members, reps, maxCandidates) {
+    repComponents(members, reps) {
       val banded = band(reps)
       maxCandidates.foreach(guardCandidates(banded.select(col("band"), col("bkey")),
         Seq("band", "bkey"), _, family))
@@ -254,17 +93,16 @@ object Dedup {
 
   /** The second half of [[bandedComponents]], shared with the jaccard
     * plans that build their rep pairs their own way. Scope-caches
-    * `reps` for [[componentActions]] actions, then evaluates
-    * `repPairs` — (rep_a, rep_b) edges over rep ids — so an eager
-    * guard inside it reads the cache it fills. The component search
-    * runs on the rep graph only; members join their rep's component
-    * back through `componentJoinSide` (broadcast when the local solve
-    * ran, shuffled-hash over the distributed closure). A rep with no
-    * edge is its own component. */
-  private def repComponents(members: DataFrame, reps: DataFrame,
-                            maxCandidates: Option[Long])(repPairs: => DataFrame): DataFrame = {
+    * `reps`, then evaluates `repPairs` — (rep_a, rep_b) edges over
+    * rep ids — so an eager guard inside it reads the cache it fills.
+    * The component search runs on the rep graph only; members join
+    * their rep's component back through `componentJoinSide`
+    * (broadcast when the local solve ran, shuffled-hash over the
+    * distributed closure). A rep with no edge is its own component. */
+  private def repComponents(members: DataFrame, reps: DataFrame)
+                           (repPairs: => DataFrame): DataFrame = {
     val Array(idCol, keyCol) = members.columns
-    registerCache(reps, componentActions(maxCandidates))
+    ScopedCache.register(reps)
     val comp = graft.core.Graph.connectedComponents(repPairs, "rep_a", "rep_b")
     members.join(reps.select(col(keyCol), col("rep_id")).hint("shuffle_hash"), keyCol)
       .join(graft.core.Graph.componentJoinSide(comp), col("rep_id") === col("node"), "left")
@@ -598,7 +436,7 @@ object Dedup {
   private[graft] def incrementalLshPairsAgainstStoreSigs(
       spark: SparkSession, bandStore: DataFrame, corpusMembers: DataFrame,
       fSig: DataFrame, rowsPerBand: Int = 4,
-      mode: PairMode = PairMode.Full): DataFrame = releasingOnBudgetError {
+      mode: PairMode = PairMode.Full): DataFrame = ScopedCache.scope {
     val freshBanded = sigBandKeys(fSig.select(col("sig_key"), col("mhs")).distinct(), rowsPerBand)
     // fresh-vs-corpus probe: NO hint — when the store side is
     // bucketed on (band, bkey) the planner proves its distribution
@@ -616,7 +454,7 @@ object Dedup {
     // twice; the one-action modes keep the family's measured
     // no-cache default (r12: caching this shape was 80% slower)
     val sigPairs = mode match {
-      case PairMode.Bounded(_) => registerCache(sigPairs0, actions = 2)
+      case PairMode.Bounded(_) => ScopedCache.register(sigPairs0)
       case _ => sigPairs0
     }
     // Per-batch cost, stated exactly (r12 — an earlier draft semi-join-
@@ -785,10 +623,10 @@ object Dedup {
         // expansion would re-run the whole candidate/verify join a
         // second time — the r13 review finding on the co-count path,
         // where the re-run doubled the family's dominant Σdf² term.
-        // An over-budget guard materializes then releases it
-        // (releasingOnBudgetError); that storage transient is the
+        // An over-budget guard materializes then releases it (the
+        // scope's throw path); that storage transient is the
         // price of not recomputing an accepted run.
-        val cp = registerCache(clusterPairs, actions = 2)
+        val cp = ScopedCache.register(clusterPairs)
         val sizes = members.groupBy(col("ckey")).agg(count(lit(1)).as("n"))
         val intraCnt = sizes.select(shiftright(col("n") * (col("n") - 1L), 1).as("c"))
         val crossCnt = cp.select(col("ck_a"), col("ck_b"))
@@ -806,7 +644,7 @@ object Dedup {
   }
 
   def minhashLshPairs(spark: SparkSession, documents: DataFrame, rowsPerBand: Int = 4,
-                      mode: PairMode = PairMode.Full): DataFrame = releasingOnBudgetError {
+                      mode: PairMode = PairMode.Full): DataFrame = ScopedCache.scope {
     // NOT cached in the one-action modes: all references live in ONE
     // output plan, and a clean sf0.1 A/B (medians of 3) put the
     // cached variant 19% SLOWER (1.68 s → 2.00 s) — the array-bearing
@@ -817,7 +655,7 @@ object Dedup {
     // two-action cache.
     val base = signatureClusters(documents)
     val full = mode match {
-      case PairMode.Bounded(_) => registerCache(base, actions = 2)
+      case PairMode.Bounded(_) => ScopedCache.register(base)
       case _ => base
     }
     val members = full.select(col("doc_id"), col("sig_key").as("ckey"))
@@ -856,13 +694,13 @@ object Dedup {
   def minhashComponents(spark: SparkSession, documents: DataFrame,
                         minAgree: Int = 12, rowsPerBand: Int = 4,
                         maxCandidates: Option[Long] = None): DataFrame =
-      releasingOnBudgetError {
+      ScopedCache.scope {
     require(minAgree >= 1 && minAgree <= MinhashFuncs,
       s"need minAgree in [1, $MinhashFuncs], got $minAgree")
     // the signature fold feeds both the rep collapse and the member
     // side, in actions no plan-level branch sharing can bridge —
     // uncached, each would repeat the tokenize+16-hash corpus pass
-    val full = registerCache(signatureClusters(documents), componentActions(maxCandidates))
+    val full = ScopedCache.register(signatureClusters(documents))
     val agree = aggregate(
       zip_with(col("x.mhs"), col("y.mhs"), (a, b) => when(a === b, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v)
@@ -937,22 +775,17 @@ object Dedup {
     *
     * `expectedProbeGrams`/`fpp` size the sketch
     * (`BloomFilter.optimalNumOfBits`); undersizing degrades fpp —
-    * more confirm-join traffic — never correctness.
-    *
-    * Lifecycle note: the sketch build below is an EAGER action that
-    * materializes the probe-gram cache (its first of two scoped
-    * actions). A caller that then abandons the returned frame holds
-    * that cache until [[releaseCaches]]/session cleanup — the one
-    * registry operator where "abandoned leaks nothing" does not hold
-    * (see the registry scaladoc). */
+    * more confirm-join traffic — never correctness. The sketch build
+    * is an eager action over the probe-gram cache (see
+    * [[graft.core.ScopedCache]] for an abandoned output). */
   def bloomContamination(documents: DataFrame, probes: DataFrame, ngram: Int = 3,
                          expectedProbeGrams: Long = 1L << 20,
-                         fpp: Double = 0.01): DataFrame = {
+                         fpp: Double = 0.01): DataFrame = ScopedCache.scope {
     require(expectedProbeGrams > 0, s"need expectedProbeGrams > 0, got $expectedProbeGrams")
     require(fpp > 0.0 && fpp < 1.0, s"need fpp in (0, 1), got $fpp")
     // the probe-gram table feeds two actions: the sketch build
     // (collects one numBits-sized row) and the confirm join
-    val probeGrams = registerCache(docGrams(probes, "probe_id", ngram), actions = 2)
+    val probeGrams = ScopedCache.register(docGrams(probes, "probe_id", ngram))
     val bits = sketchOf(probeGrams, expectedProbeGrams, fpp)
     docGrams(documents, "doc_id", ngram)
       .filter(org.apache.spark.sql.graft.BloomBridge
@@ -1005,8 +838,8 @@ object Dedup {
     * a stopword-gram's entire posting list in one row at corpus
     * scale; the join streams it. The per-doc rollup is the second
     * and last shuffle. */
-  def crossDupFraction(documents: DataFrame, ngram: Int = 3): DataFrame = {
-    val grams = registerCache(docGrams(documents, "doc_id", ngram))
+  def crossDupFraction(documents: DataFrame, ngram: Int = 3): DataFrame = ScopedCache.scope {
+    val grams = ScopedCache.register(docGrams(documents, "doc_id", ngram))
     val docFreq = grams.groupBy("gram").agg(count(lit(1)).as("df"))
     grams.join(docFreq.hint("shuffle_hash"), "gram")
       .groupBy("doc_id")
@@ -1089,19 +922,13 @@ object Dedup {
     * nothing next to the join. */
   def simhashNearDupPairs(spark: SparkSession, documents: DataFrame,
                           maxHamming: Int = 1,
-                          mode: PairMode = PairMode.Full): DataFrame = releasingOnBudgetError {
-    requireMaxHamming(maxHamming) // before registerCache: an invalid
+                          mode: PairMode = PairMode.Full): DataFrame = ScopedCache.scope {
+    requireMaxHamming(maxHamming) // before register: an invalid
     // argument must not leave a persisted frame behind
     // (doc_id, simhash): two longs per doc, three references in the
     // output plan, and each recompute re-runs the md5-per-token fold
     // — the narrow-expensive shape the scoped cache exists for.
-    // Bounded adds the guard action before the caller's — two
-    // consuming actions, so its cache scope widens to match.
-    val cacheActions = mode match {
-      case PairMode.Bounded(_) => 2
-      case _ => 1
-    }
-    val sh = registerCache(simhash(spark, documents), actions = cacheActions)
+    val sh = ScopedCache.register(simhash(spark, documents))
     val members = sh.select(col("doc_id"), col("simhash").as("ckey"))
     val fpPairs = simhashFpPairs(sh, maxHamming)
       .select(col("fp_a").as("ck_a"), col("fp_b").as("ck_b"), col("hamming"))
@@ -1123,23 +950,16 @@ object Dedup {
     * usage passes the corpus's own doc_id column). */
   def simhashDegreeHistogram(spark: SparkSession, documents: DataFrame,
                              maxHamming: Int, nodes: DataFrame,
-                             nodeCol: String): DataFrame = {
+                             nodeCol: String): DataFrame = ScopedCache.scope {
     requireMaxHamming(maxHamming)
     // (doc_id, simhash) scope-cached exactly as simhashNearDupPairs
     // does: the fingerprint fold feeds both the size aggregate and
     // the banded pair search
-    val sh = registerCache(simhash(spark, documents), actions = 1)
+    val sh = ScopedCache.register(simhash(spark, documents))
     val members = sh.select(col("doc_id"), col("simhash").as("ckey"))
     val fpPairs = simhashFpPairs(sh, maxHamming)
       .select(col("fp_a").as("ck_a"), col("fp_b").as("ck_b"))
-    // the per-cluster degree frame is read twice (histogram + n_pos
-    // total); scope-cache it so the banding/confirm pipeline above it
-    // runs ONCE — without this the fused form re-ran the whole band
-    // join per reference and benched 2× the composed form (r16).
-    // Two longs × |positive-degree fingerprints| rows, never
-    // corpus-sized; released by the query's own action.
-    graft.core.Graph.clusterDegreeHistogram(members, fpPairs, nodes, nodeCol,
-      cacheDeg = registerCache(_, actions = 1))
+    graft.core.Graph.clusterDegreeHistogram(members, fpPairs, nodes, nodeCol)
   }
 
   /** (fp_a, fp_b, hamming): near-dup edges between DISTINCT
@@ -1203,11 +1023,11 @@ object Dedup {
   def simhashComponents(spark: SparkSession, documents: DataFrame,
                         maxHamming: Int = 1,
                         maxCandidates: Option[Long] = None): DataFrame =
-      releasingOnBudgetError {
-    requireMaxHamming(maxHamming) // before registerCache: fail fast with nothing persisted
+      ScopedCache.scope {
+    requireMaxHamming(maxHamming) // before register: fail fast with nothing persisted
     // the fingerprint fold feeds both the rep collapse and the member
     // side, across actions — cached so the md5-per-token fold runs once
-    val sh = registerCache(simhash(spark, documents), componentActions(maxCandidates))
+    val sh = ScopedCache.register(simhash(spark, documents))
     bandedComponents(sh, sh.groupBy(col("simhash")).agg(min(col("doc_id")).as("rep_id")),
       simhashBanded, bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))) <= maxHamming,
       maxCandidates, "simhashComponents")
@@ -1373,7 +1193,7 @@ object Dedup {
     // cache round-trip, not a second tokenize+explode+distinct pass.
     // Unguarded keeps the uncached plan, whose references share
     // exchanges.
-    val tok = if (maxCandidates.isDefined) registerCache(tok0, actions = 2) else tok0
+    val tok = if (maxCandidates.isDefined) ScopedCache.register(tok0) else tok0
     maxCandidates.foreach(guardCandidates(tok, Seq("lang", "bkt", "tok"), _,
       "jaccardComponents (co-count plan)"))
     // shuffled-hash, not sort-merge: this is a many-to-many join
@@ -1403,9 +1223,10 @@ object Dedup {
     * read it under DIFFERENT exchange keys (band key vs set_a vs
     * set_b), so ReuseExchange cannot dedupe them — uncached, each
     * would re-run the tokenize map over the whole corpus. */
-  private[text] def prefixSetPairs(withKey: DataFrame, threshold: Double): DataFrame = {
+  private[text] def prefixSetPairs(withKey: DataFrame, threshold: Double): DataFrame =
+      ScopedCache.scope {
     require(usesPrefixPlan(threshold), s"prefix plan requires threshold >= 0.5, got $threshold")
-    prefixPairsOfSets(registerCache(withKey
+    prefixPairsOfSets(ScopedCache.register(withKey
       .select(col("set_key"), col("lang"), col("bkt"), col("toks"), size(col("toks")).as("sz"))
       .dropDuplicates("set_key")), threshold)
   }
@@ -1507,29 +1328,22 @@ object Dedup {
 
   /** Near-duplicate document pairs above a Jaccard threshold. */
   def jaccardNearDupPairs(documents: DataFrame, threshold: Double, ngram: Int = 1,
-                          mode: PairMode = PairMode.Full): DataFrame = releasingOnBudgetError {
+                          mode: PairMode = PairMode.Full): DataFrame = ScopedCache.scope {
     requireThreshold(threshold)
     // collapse identical token sets (same trick as the LSH path):
     // J(identical sets) = 1.0 with no arithmetic, and the quadratic
     // verification stage only sees DISTINCT sets per block; 8-byte
     // xxhash64 cluster keys keep the joins narrow. Caching follows
-    // the plan (see usesPrefixPlan); Bounded changes the action
-    // shape: the guard consumes the keyed frame once more (so its
-    // scope widens), consumes setPairs' internals exactly ONCE (the
-    // cached cluster-pair frame then serves the caller's action, so
-    // the internal sets scope must NOT widen or it lingers
-    // unconsumed), and makes the keyed frame cache-worthy on the
-    // co-count plan too (two actions; single-action co-count stays
-    // uncached).
+    // the plan (see usesPrefixPlan); Bounded's guard reads the keyed
+    // frame in an action of its own, which makes it cache-worthy on
+    // the co-count plan too (single-action co-count stays uncached).
     val isBounded = mode match {
       case PairMode.Bounded(_) => true
       case _ => false
     }
     val keyed = keyedTokenSets(documents, ngram)
     val withKey =
-      if (isBounded) registerCache(keyed, actions = 2)
-      else if (usesPrefixPlan(threshold)) registerCache(keyed)
-      else keyed
+      if (isBounded || usesPrefixPlan(threshold)) ScopedCache.register(keyed) else keyed
     val members = withKey.select(col("doc_id"), col("set_key").as("ckey"))
     val repPairs = setPairs(withKey, threshold)
       .select(col("set_a").as("ck_a"), col("set_b").as("ck_b"), col("jaccard"))
@@ -1619,7 +1433,7 @@ object Dedup {
     * cost ~70 µs/pair × the clique — 200 s at 3× (SCALING.md). */
   def editDistancePairs(documents: DataFrame, maxDist: Int, prefixLen: Int = 64,
                         blockChars: Int = 8,
-                        mode: PairMode = PairMode.Full): DataFrame = releasingOnBudgetError {
+                        mode: PairMode = PairMode.Full): DataFrame = ScopedCache.scope {
     require(maxDist >= 0, s"need maxDist >= 0, got $maxDist")
     mode match {
       case PairMode.Full =>
@@ -1656,7 +1470,7 @@ object Dedup {
     * thresholding belongs to the caller, on the rounded value. */
   def jaroWinklerPairs(documents: DataFrame, prefixLen: Int = 64,
                        blockChars: Int = 8,
-                       mode: PairMode = PairMode.Full): DataFrame = releasingOnBudgetError {
+                       mode: PairMode = PairMode.Full): DataFrame = ScopedCache.scope {
     mode match {
       case PairMode.Full =>
         blockedPrefixPairs(documents, prefixLen, blockChars)
@@ -1707,11 +1521,11 @@ object Dedup {
     *        path, bit-identical. */
   def jaccardComponents(documents: DataFrame, threshold: Double, ngram: Int = 1,
                         maxCandidates: Option[Long] = None): DataFrame =
-      releasingOnBudgetError {
+      ScopedCache.scope {
     requireThreshold(threshold)
     // the token map feeds the sets collapse and the member side, in
     // actions exchange reuse never crosses — cached on BOTH plans
-    val withKey = registerCache(keyedTokenSets(documents, ngram), componentActions(maxCandidates))
+    val withKey = ScopedCache.register(keyedTokenSets(documents, ngram))
     // one row per set with its rep: rep_id = min(doc_id) rides the
     // collapse aggregate (one more partial-aggregable function)
     val sets = withKey
@@ -1720,7 +1534,7 @@ object Dedup {
       .groupBy(col("set_key"))
       .agg(min(col("doc_id")).as("rep_id"), first(col("lang")).as("lang"),
         first(col("bkt")).as("bkt"), first(col("toks")).as("toks"), first(col("sz")).as("sz"))
-    repComponents(withKey.select(col("doc_id"), col("set_key")), sets, maxCandidates) {
+    repComponents(withKey.select(col("doc_id"), col("set_key")), sets) {
       val pairs =
         if (usesPrefixPlan(threshold)) prefixPairsOfSets(sets, threshold, maxCandidates)
         else {

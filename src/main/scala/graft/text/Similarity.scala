@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.ScopedCache
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`).
   *
@@ -284,7 +286,7 @@ object Similarity {
   def embeddingNearDupPairs(embeddings: DataFrame, threshold: Double,
                             nPlanes: Int = 4, nBands: Int = 4,
                             mode: PairMode = PairMode.Full): DataFrame =
-      Dedup.releasingOnBudgetError {
+      ScopedCache.scope {
     requireBanding(threshold, nBands)
     mode match {
       case PairMode.Full => bandedCosinePairs(embeddings, threshold, nPlanes, nBands)
@@ -316,7 +318,7 @@ object Similarity {
         // shape (minhashLshPairs' Bounded rationale); the one-action
         // modes keep Spark's own branch sharing instead.
         val reps = mode match {
-          case PairMode.Bounded(_) => Dedup.registerCache(reps0, actions = 2)
+          case PairMode.Bounded(_) => ScopedCache.register(reps0)
           case _ => reps0
         }
         val members = e.join(reps.hint("shuffle_hash"), "embedding")
@@ -614,7 +616,7 @@ object Similarity {
   def embeddingComponents(embeddings: DataFrame, threshold: Double,
                           nPlanes: Int = 4, nBands: Int = 4,
                           maxCandidates: Option[Long] = None): DataFrame =
-      Dedup.releasingOnBudgetError {
+      ScopedCache.scope {
     requireBanding(threshold, nBands)
     // NULL embeddings are excluded EXPLICITLY (family convention:
     // tokenless docs drop) — a null-safe join would instead merge all

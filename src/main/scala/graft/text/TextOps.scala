@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Ops
+import graft.core.{Ops, ScopedCache}
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, language-ID, quality scoring, token counting,
@@ -394,14 +394,14 @@ object TextOps {
     * Output: (doc_id, score) for the top `k` by (score desc, doc_id).
     */
   def bm25TopK(documents: DataFrame, terms: Seq[String], k: Int,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+               k1: Double = 1.2, b: Double = 0.75): DataFrame = ScopedCache.scope {
     require(terms.nonEmpty && k >= 1, s"need terms and k >= 1, got ($terms, $k)")
     val toks = col("toks")
-    // persisted (scoped, released by Dedup.releaseCaches): this
+    // scope-cached (graft.core.ScopedCache): this
     // narrow frame — a few doubles per document — feeds both the
     // broadcast stats aggregate and the probe side, which share no
     // exchange; without the persist the corpus tokenizes twice
-    val f = Dedup.registerCache(tokenized(documents).select(
+    val f = ScopedCache.register(tokenized(documents).select(
       col("doc_id") +: size(toks).cast(DoubleType).as("dl") +:
         terms.zipWithIndex.map { case (t, i) =>
           size(filter(toks, x => x === t)).cast(DoubleType).as(s"tf$i")
@@ -449,7 +449,7 @@ object TextOps {
     val documents = documents0.filter(col("doc_id").isNotNull)
     // NOT scope-cached (r15, measured): `tf` feeds both the df
     // aggregate and the scoring join, so the tokenize flatMap runs
-    // twice — but a registerCache(tf) A/B'd +12–16% SLOWER at sf0.1
+    // twice — but a scope-cached tf A/B'd +12–16% SLOWER at sf0.1
     // in three same-session captures (the persist write/read of the
     // corpus-expansion-sized (doc,term) table costs more than the
     // second streaming pass), and at 100 TB persisting a near-corpus-
@@ -501,14 +501,13 @@ object TextOps {
     *    final `round(…, 6)` sits Spark's HALF_UP against DuckDB's
     *    float rounding on exact .5 boundaries (observed: 2/5000 docs
     *    off by 1e-6 at sf0.1). */
-  def ngramLmScore(documents0: DataFrame): DataFrame = {
+  def ngramLmScore(documents0: DataFrame): DataFrame = ScopedCache.scope {
     import documents0.sparkSession.implicits._
     // null-id rows drop from the bigram table AND the vocabulary —
     // the pmiCollocations denominator-symmetry rule (r12 review)
     val documents = documents0.filter(col("doc_id").isNotNull)
-    // persisted (scoped, one consuming action — the bm25TopK
-    // pattern): the token table feeds the model's count aggregate,
-    // the vocabulary count AND the scoring join, branches that share
+    // scope-cached (the bm25TopK pattern): the token table feeds the
+    // model's count aggregate, the vocabulary count AND the scoring join, branches that share
     // no exchange — uncached, the corpus tokenize flatMap, THE
     // dominant cost at corpus scale, runs once per branch.
     // The bigram rows plus ONE tail row per non-empty doc (its last
@@ -520,7 +519,7 @@ object TextOps {
     // corpus re-tokenize — it could not read the bigram cache because
     // bigrams lose last tokens and single-token docs) into the same
     // cached pass (r15, guide §1.2 step 1: 2 tokenize passes → 1).
-    val tk = Dedup.registerCache(
+    val tk = ScopedCache.register(
       docIdText(documents)
         .flatMap { case (id, text) =>
           val ts = tokensOf(text)
@@ -688,7 +687,7 @@ object TextOps {
     * construction and broadcasts.
     * Returns (doc_id, n_feats, logw) for docs with ≥ 1 bigram. */
   def dsirWeight(documents0: DataFrame, targetLang: String = "en",
-                 nBuckets: Int = 256): DataFrame = {
+                 nBuckets: Int = 256): DataFrame = ScopedCache.scope {
     require(nBuckets >= 1, s"need nBuckets >= 1, got $nBuckets")
     import documents0.sparkSession.implicits._
     // null-id rows drop from features AND totals together — the
@@ -712,7 +711,7 @@ object TextOps {
     // runs once instead of twice, and the stats aggregate collapses
     // map-side to ≤ nBuckets rows per task over the already-rolled-up
     // γ table instead of the raw feature stream.
-    val g = Dedup.registerCache(
+    val g = ScopedCache.register(
       feats.groupBy("doc_id", "bucket")
         .agg(count(lit(1)).as("gamma"),
              max(when(col("lang") === targetLang, 1L).otherwise(0L)).as("is_tgt")))
@@ -1153,9 +1152,9 @@ object TextOps {
     * colossal duplicated span is a hot key — same rationale as the
     * LSH expansion joins; a window over the hash would buffer that
     * whole group in one task). */
-  def dupSpans(documents: DataFrame, width: Int = 16): DataFrame = {
+  def dupSpans(documents: DataFrame, width: Int = 16): DataFrame = ScopedCache.scope {
     require(width >= 1, s"need width >= 1, got $width")
-    val spans = Dedup.registerCache(
+    val spans = ScopedCache.register(
       chunk(documents, width, 0)
         .select(col("doc_id"), md5(col("chunk_text")).as("h")))
     val counts = spans.groupBy("h").agg(count(lit(1)).as("cnt"))

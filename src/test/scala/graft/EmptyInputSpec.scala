@@ -21,6 +21,8 @@ class EmptyInputSpec extends SparkSpec {
     Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
 
   test("dedup/text operators are empty-safe") {
+    graft.core.ScopedCache.releaseAll()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     assert(Dedup.exactDedup(emptyDocs).count() == 0)
     assert(Dedup.minhashLshPairs(spark, emptyDocs).count() == 0)
     assert(Dedup.minhashComponents(spark, emptyDocs).count() == 0)
@@ -68,7 +70,8 @@ class EmptyInputSpec extends SparkSpec {
     assert(TextOps.sourceCap(emptyDocs.withColumn("source", $"lang"), 5).count() == 0)
     assert(TextOps.bpePairStats(emptyDocs, 1L).count() == 0)
     assert(TextOps.bpeTrain(emptyDocs, 3, 1L).isEmpty)
-    Dedup.releaseCaches()
+    // every operator above is consumed by its own count()
+    assertNoCachesLeft("an empty-input operator left caches behind")
   }
 
   test("temporal/analytics operators are empty-safe") {

@@ -49,7 +49,7 @@ class NullInputSpec extends SparkSpec {
         (r.getAs[Long]("n_tokens"), r.getAs[String]("clean_text"))).toMap
     assert(stripped.keySet == Set(1L, 2L, 3L))
     assert(stripped(2L) == (0L, ""))
-    Dedup.releaseCaches()
+    graft.core.ScopedCache.releaseAll()
   }
 
   test("typed-map signature folds drop a null doc_id, not the job") {

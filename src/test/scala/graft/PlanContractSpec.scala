@@ -114,7 +114,7 @@ class PlanContractSpec extends SparkSpec {
         bad += s"$opName:$modeName(udf)"
       if (qe.sparkPlan.collectFirst { case x: CartesianProductExec => x }.nonEmpty)
         bad += s"$opName:$modeName(cartesian)"
-      Dedup.releaseCaches()
+      graft.core.ScopedCache.releaseAll()
     }
     assert(bad.isEmpty,
       s"non-Full PairMode contract violations: ${bad.toSeq.sorted.mkString(", ")}")

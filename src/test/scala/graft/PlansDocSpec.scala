@@ -64,7 +64,7 @@ class PlansDocSpec extends SparkSpec {
       // generator does — a prior query's persisted frame would
       // otherwise substitute (sameResult) into this explain and make
       // the comparison depend on iteration order
-      graft.text.Dedup.releaseCaches()
+      graft.core.ScopedCache.releaseAll()
       val (want, got) = (skeleton(dumped), skeleton(live))
       if (want == got) None
       else Some(s"$name:\n  committed: ${want.mkString(" | ")}\n  live:      ${got.mkString(" | ")}")

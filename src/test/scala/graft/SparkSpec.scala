@@ -29,6 +29,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
+  /** Assert that no scoped cache is registered and nothing is
+    * persisted, polling first: the release listener runs on the
+    * listener-bus thread after the consuming action returns. */
+  def assertNoCachesLeft(clue: String): Unit = {
+    def registered = graft.core.ScopedCache.registered
+    def persisted = spark.sparkContext.getPersistentRDDs
+    val deadline = System.currentTimeMillis() + 15000
+    while ((registered.nonEmpty || persisted.nonEmpty) &&
+           System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(registered.isEmpty && persisted.isEmpty,
+      s"$clue: ${registered.size} registered, persisted ${persisted.values.map(_.name)}")
+  }
+
   def fixturePath(rel: String): String =
     getClass.getResource(s"/fixtures/$rel").getPath
 }

@@ -662,7 +662,7 @@ class OpsSpec extends SparkSpec {
     val got = TextOps.dupSpans(docs, 2).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("n_spans"), r.getAs[Long]("n_dup_spans"), r.getAs[Double]("dup_ratio")))).toMap
-    graft.text.Dedup.releaseCaches()
+    graft.core.ScopedCache.releaseAll()
     assert(got(1L) == ((2L, 2L, 1.0)))
     assert(got(2L) == ((2L, 1L, 0.5)))
   }

@@ -187,7 +187,7 @@ class DedupPropertySpec extends SparkSpec {
       // expanding identical-set clusters is covered by p499 == naive
       // elsewhere; here assert the J = 0.5 set pair survived)
       assert(coBelow.values.exists(_ == 0.5), s"seed=$seed: no J=0.5 set pair below the line")
-      Dedup.releaseCaches()
+      graft.core.ScopedCache.releaseAll()
     }
   }
 
@@ -295,7 +295,7 @@ class DedupPropertySpec extends SparkSpec {
     assert(got.head._1 == 1L && !got.map(_._1).contains(3L))
     // the scoped tf-frame persist is released through the shared hook
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    Dedup.releaseCaches()
+    graft.core.ScopedCache.releaseAll()
     assert(spark.sparkContext.getPersistentRDDs.keySet.size <= before.size)
   }
 
@@ -335,7 +335,7 @@ class DedupPropertySpec extends SparkSpec {
     assert(Dedup.bloomContamination(corpus, probes.filter(col("doc_id") < 0), 3, 16L)
       .collect().isEmpty)
     intercept[IllegalArgumentException](Dedup.bloomContamination(corpus, probes, 3, 0L))
-    Dedup.releaseCaches()
+    graft.core.ScopedCache.releaseAll()
   }
 
   strictTest("crossDupFraction: shared trigrams counted once per doc, short docs dropped") {
@@ -358,7 +358,7 @@ class DedupPropertySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     // distinct grams of "x y z x y z": xyz, yzx, zxy — none shared with another doc
     assert(s.toSeq == Seq((9L, 3L, 0L, 0.0)))
-    Dedup.releaseCaches()
+    graft.core.ScopedCache.releaseAll()
   }
 
   strictTest("repetitionScore: known ratios on crafted docs, short docs dropped") {
@@ -669,14 +669,14 @@ class DedupPropertySpec extends SparkSpec {
   }
 
   strictTest("invalid maxHamming fails fast with nothing left persisted") {
-    Dedup.releaseCaches()
+    graft.core.ScopedCache.releaseAll()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     val docs = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
-    // the require must fire BEFORE registerCache — an invalid argument
+    // the require must fire BEFORE register — an invalid argument
     // must not leave a persisted frame waiting for an unrelated action
     intercept[IllegalArgumentException](Dedup.simhashNearDupPairs(spark, docs, maxHamming = 9))
     intercept[IllegalArgumentException](Dedup.simhashComponents(spark, docs, maxHamming = -1))
-    assert(Dedup.scopedCaches.isEmpty,
+    assert(graft.core.ScopedCache.registered.isEmpty,
       "failed validation must not leave an entry in the scoped-cache registry")
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "failed validation must not leak persisted tables")
@@ -688,7 +688,7 @@ class DedupPropertySpec extends SparkSpec {
     Dedup.jaccardNearDupPairs(docs, 0.5).count()
     Dedup.jaccardNearDupPairs(docs, 0.4, ngram = 2).count()
     Dedup.minhashLshPairs(spark, docs).count()
-    Dedup.releaseCaches()
+    graft.core.ScopedCache.releaseAll()
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
       "dedup operators must not leak persisted tables into the session")
   }
@@ -722,6 +722,32 @@ class DedupPropertySpec extends SparkSpec {
            System.currentTimeMillis() < deadline) Thread.sleep(50)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       s"caches not self-released: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+  }
+
+  strictTest("scoped caches outlive the operator's own eager jobs and end with the caller's first action") {
+    import org.apache.spark.sql.graft.TestBridge
+    graft.core.ScopedCache.releaseAll()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val docs = corpus(seed = 35, nDocs = 60, vocab = 10)
+    val probes = docs.filter(col("doc_id") % 5 === 0)
+    // both have run their eager jobs before returning: the guard's
+    // count and the connectedComponents edge job; the sketch build
+    val comps = Dedup.minhashComponents(spark, docs, maxCandidates = Some(Long.MaxValue))
+    val hits = Dedup.bloomContamination(docs, probes)
+    TestBridge.drainListenerBus(spark)
+    val held = graft.core.ScopedCache.registered
+    assert(held.size >= 3, s"expected the signature, rep and probe-gram caches, got ${held.size}")
+    assert(held.forall(TestBridge.cacheLoaded),
+      "an operator's own eager jobs must leave its caches registered and materialized")
+    assert(comps.count() > 0 && hits.count() >= 0)
+    assertNoCachesLeft("the caller's first action on each output must release its caches")
+  }
+
+  strictTest("ScopedCache.register outside a scope throws") {
+    val e = intercept[IllegalStateException](
+      graft.core.ScopedCache.register(spark.range(3).toDF("x")))
+    assert(e.getMessage.contains("outside ScopedCache.scope"))
+    assert(graft.core.ScopedCache.registered.isEmpty)
   }
 
   strictTest("round-5 curation ops are invariant under repartitioning") {
@@ -769,23 +795,21 @@ class DedupPropertySpec extends SparkSpec {
     TestClosure.componentsOf(edges, nodes)
 
   strictTest("nested cache brackets: an outer-operator throw after an inner success releases the inner call's registrations") {
-    // the r13 advisor's theoretical strand (no operator nests another
-    // today, but the bracket is private[text] API future operators
-    // will compose): inner bracket registers + succeeds, outer throws
-    // AFTER — the propagated registrations must be released by the
-    // outer bracket's cleanup, not stranded until session teardown.
+    // inner scope registers + succeeds, outer throws AFTER — the
+    // handed-up registrations must be released by the outer scope's
+    // cleanup, not stranded until session teardown.
     val df = spark.range(10).toDF("x")
     val boom = intercept[RuntimeException] {
-      Dedup.releasingOnBudgetError {
-        val inner = Dedup.releasingOnBudgetError {
-          Dedup.registerCache(df, actions = 1)
+      graft.core.ScopedCache.scope {
+        val inner = graft.core.ScopedCache.scope {
+          graft.core.ScopedCache.register(df)
         }
         assert(inner != null)
         throw new RuntimeException("outer failure after inner success")
       }
     }
     assert(boom.getMessage.contains("outer failure"))
-    assert(Dedup.scopedCaches.isEmpty,
+    assert(graft.core.ScopedCache.registered.isEmpty,
       "outer-bracket throw must release the inner call's propagated registrations")
     val deadline = System.currentTimeMillis() + 10000
     while (spark.sparkContext.getPersistentRDDs.nonEmpty &&
@@ -872,15 +896,15 @@ class DedupPropertySpec extends SparkSpec {
       Dedup.jaccardNearDupPairs(docs, 0.3, ngram = 2, mode = PairMode.Bounded(10L))
     }
     // the throwing guard path must strand nothing (the family's
-    // fail-fast convention): the guard action consumed one cache
-    // scope, and the operator releases the rest itself — no
-    // releaseCaches() here, emptiness is the assertion. Poll: the
-    // release listener fires on the bus thread.
+    // fail-fast convention): the operator's scope releases its
+    // registrations on the throw — no releaseAll() here, emptiness
+    // is the assertion. Poll: the guard's own queries finish on the
+    // listener-bus thread.
     val deadline = System.currentTimeMillis() + 15000
-    while ((!Dedup.scopedCaches.isEmpty ||
+    while ((!graft.core.ScopedCache.registered.isEmpty ||
             spark.sparkContext.getPersistentRDDs.nonEmpty) &&
            System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(Dedup.scopedCaches.isEmpty,
+    assert(graft.core.ScopedCache.registered.isEmpty,
       "budget-guard throw left scoped-cache registrations behind")
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "budget-guard throw left persisted tables behind")
@@ -934,10 +958,10 @@ class DedupPropertySpec extends SparkSpec {
 
     // failed guard must strand nothing (family fail-fast convention)
     val deadline = System.currentTimeMillis() + 15000
-    while ((!Dedup.scopedCaches.isEmpty ||
+    while ((!graft.core.ScopedCache.registered.isEmpty ||
             spark.sparkContext.getPersistentRDDs.nonEmpty) &&
            System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(Dedup.scopedCaches.isEmpty && spark.sparkContext.getPersistentRDDs.isEmpty,
+    assert(graft.core.ScopedCache.registered.isEmpty && spark.sparkContext.getPersistentRDDs.isEmpty,
       "blocked-family budget guard left caches behind")
   }
 
@@ -1063,10 +1087,10 @@ class DedupPropertySpec extends SparkSpec {
     // refused calls must strand nothing (the family's fail-fast
     // convention — poll: the release listener fires on the bus thread)
     val deadline = System.currentTimeMillis() + 15000
-    while ((!Dedup.scopedCaches.isEmpty ||
+    while ((!graft.core.ScopedCache.registered.isEmpty ||
             spark.sparkContext.getPersistentRDDs.nonEmpty) &&
            System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(Dedup.scopedCaches.isEmpty && spark.sparkContext.getPersistentRDDs.isEmpty,
+    assert(graft.core.ScopedCache.registered.isEmpty && spark.sparkContext.getPersistentRDDs.isEmpty,
       "maxCandidates guard left caches behind")
   }
 

@@ -294,10 +294,10 @@ class SimilaritySpec extends SparkSpec {
 
     // failed guard must strand nothing (family fail-fast convention)
     val deadline = System.currentTimeMillis() + 15000
-    while ((!graft.text.Dedup.scopedCaches.isEmpty ||
+    while ((!graft.core.ScopedCache.registered.isEmpty ||
             spark.sparkContext.getPersistentRDDs.nonEmpty) &&
            System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(graft.text.Dedup.scopedCaches.isEmpty &&
+    assert(graft.core.ScopedCache.registered.isEmpty &&
       spark.sparkContext.getPersistentRDDs.isEmpty,
       "embedding budget guard left caches behind")
   }
@@ -329,10 +329,10 @@ class SimilaritySpec extends SparkSpec {
       s"prediction $p exceeds the distinct-vector bound (nReps=$nReps)")
 
     val deadline = System.currentTimeMillis() + 15000
-    while ((!graft.text.Dedup.scopedCaches.isEmpty ||
+    while ((!graft.core.ScopedCache.registered.isEmpty ||
             spark.sparkContext.getPersistentRDDs.nonEmpty) &&
            System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(graft.text.Dedup.scopedCaches.isEmpty &&
+    assert(graft.core.ScopedCache.registered.isEmpty &&
       spark.sparkContext.getPersistentRDDs.isEmpty,
       "embeddingComponents maxCandidates guard left caches behind")
   }
@@ -474,8 +474,8 @@ class SimilaritySpec extends SparkSpec {
   test("embeddingComponents rep cache self-releases after the consuming action") {
     // same contract DedupPropertySpec pins for the lexical component
     // operators: a library user who runs one terminal action and
-    // never calls releaseCaches() must leak no persisted blocks
-    graft.text.Dedup.releaseCaches()
+    // never calls ScopedCache.releaseAll() must leak no persisted blocks
+    graft.core.ScopedCache.releaseAll()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     val emb = clustered(seed = 41, nClusters = 4, perCluster = 6, dim = 8)
     Similarity.embeddingComponents(emb, 0.9).count()

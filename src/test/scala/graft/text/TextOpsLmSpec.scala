@@ -97,7 +97,7 @@ class TextOpsLmSpec extends SparkSpec {
     }
     assert(typedMaps.isEmpty,
       "the corpus flatMap must live inside the cached γ plan, not re-run in the consumer")
-    Dedup.releaseCaches()
+    graft.core.ScopedCache.releaseAll()
   }
 
   test("invertedIndex: per-doc-distinct df, minDf filter, capped sorted postings head") {
