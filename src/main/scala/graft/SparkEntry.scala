@@ -258,31 +258,13 @@ object SparkEntry {
       val ord = Tables.orders(s, d)
       val dir = Demo.tmpPath("merge_orders", d)
       graft.core.Demo.once(s, s"merge|$d") {
-        // guard the assumeUniqueKeys proof ONCE per table (r12): the
-        // +1e8 shift below is disjoint from unshifted keys only while
-        // max(o_orderkey) < 1e8 — TPC-H orderkeys reach ~6M×SF, so
-        // the proof silently breaks near SF 17. A bigger table must
-        // fail loudly here, not commit duplicate keys. Inside the
-        // once-block so the steady-state timed region pays nothing.
-        val maxRow = ord.agg(org.apache.spark.sql.functions.max("o_orderkey")).head()
-        require(!maxRow.isNullAt(0),
-          s"orders table at $d is empty — the merge demo has nothing to merge")
-        val maxKey = maxRow.getLong(0)
-        require(maxKey < 100000000L,
-          s"merge demo key-shift disjointness broken: max o_orderkey=$maxKey >= 1e8")
         graft.core.Warehouse.writeZoneMapped(ord, dir, "o_orderkey", 16)
       }
       val updates = ord.filter(col("o_orderkey") % 97 === 0)
         .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
         .unionByName(ord.filter(col("o_orderkey") % 101 === 0)
           .withColumn("o_orderkey", col("o_orderkey") + 100000000L))
-      // assumeUniqueKeys: provable by construction — o_orderkey is the
-      // orders PK, the %97 branch keeps original keys, and the %101
-      // branch shifts by +1e8 (disjointness ASSERTED against the
-      // observed max key in the once-block above), so the union
-      // cannot carry an intra-batch dup
-      graft.core.Warehouse.mergeZoneMapped(s, dir, "o_orderkey", updates,
-        assumeUniqueKeys = true)
+      graft.core.Warehouse.mergeZoneMapped(s, dir, "o_orderkey", updates)
       s.read.parquet(s"$dir/data")
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"), Ops.moneySum(col("o_totalprice"), 2).as("price_sum"))
@@ -301,9 +283,8 @@ object SparkEntry {
         graft.core.Warehouse.writeZoneMapped(ord, dir, "o_orderkey", 16)
         val updates = ord.filter(col("o_orderkey") % 97 === 0)
           .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
-        // assumeUniqueKeys: the batch is a PK-filter (%97) of orders
         graft.core.Warehouse.mergeZoneMapped(s, dir, "o_orderkey", updates,
-          retainForTimeTravel = true, assumeUniqueKeys = true)
+          retainForTimeTravel = true)
       }
       graft.core.Warehouse.readZoneMapVersion(s, dir, 1)
         .groupBy("o_orderpriority")

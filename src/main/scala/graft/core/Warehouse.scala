@@ -33,7 +33,7 @@ object Warehouse {
     * ever saw a local file: warehouse, so on hdfs/s3 the
     * surviving-location guards below silently passed and the opaque
     * CTAS "location is not empty" error they exist to preempt
-    * returned (r13 advisor finding). */
+    * returned. */
   private def managedTableLocation(spark: SparkSession, table: String)
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
     val wh = new org.apache.hadoop.fs.Path(
@@ -277,20 +277,54 @@ object Warehouse {
     } finally ch.close()
   }
 
+  /** The manifest rows (file, mn, mx, n_rows) of the committed
+    * `versions` — the one reader of `_zonemap_history`. */
+  private def manifest(spark: SparkSession, dir: String, versions: Seq[Int]): DataFrame =
+    spark.read.parquet(versions.map(v => s"$dir/_zonemap_history/v$v"): _*)
+
   /** The live manifest: per-file (file, mn, mx, n_rows), resolved
     * through the `_current` pointer. */
-  def zoneMapManifest(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/_zonemap_history/v${zoneMapCurrentVersion(dir)}")
+  def zoneMapManifest(spark: SparkSession, dir: String): DataFrame =
+    manifest(spark, dir, Seq(zoneMapCurrentVersion(dir)))
+
+  /** The data files a manifest names, each once. A manifest is
+    * file-count-sized, so the dedup runs on the driver — a Spark
+    * `distinct()` here would cost a shuffle job per call. */
+  private def filesIn(man: DataFrame): Seq[String] =
+    man.select("file").collect().map(_.getString(0)).distinct.toSeq
 
   /** Manifest `file` strings are percent-ENCODED URIs (the
     * input_file_name() form). Spark's path-string reader does NOT
     * decode them (`new Path(str)` keeps "%20" literal), so every
-    * consumer that re-READS a manifest-listed file must go through
-    * this decode — otherwise a table dir containing a space/%/# reads
-    * back a nonexistent literal path (r16, the ADVICE URI finding's
-    * consumer side). */
-  private def pathOfManifestUri(f: String): String =
-    new org.apache.hadoop.fs.Path(new java.net.URI(f)).toString
+    * consumer that reads, compares or deletes a manifest-listed file
+    * goes through this one decode — otherwise a table dir containing
+    * a space/%/# names a nonexistent literal path. */
+  private def fileOf(uri: String): java.io.File = new java.io.File(new java.net.URI(uri))
+
+  /** Read a manifest's file set. An empty set — a pruned read no zone
+    * matches, or a table written from an empty frame — still carries
+    * the table's schema: it reads `data/` (which keeps its zero-row
+    * schema part, see [[vacuumZoneMapped]]) with every row filtered
+    * away, a plan that runs no job. */
+  private def readFiles(spark: SparkSession, dir: String, uris: Seq[String]): DataFrame =
+    if (uris.isEmpty) spark.read.parquet(s"$dir/data").filter(lit(false))
+    else spark.read.parquet(uris.map(fileOf(_).getPath): _*)
+
+  /** The parquet part files directly under `dir`, absolute, by name.
+    * java.io like the rest of the table: `_current`, `_commit.lock`,
+    * the ATOMIC_MOVE commit and vacuum's deletes all need a local
+    * filesystem. */
+  private def parquetParts(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.getAbsoluteFile.listFiles).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isFile && f.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+
+  /** A parquet file's row count from its footer — no data read. */
+  private def recordCount(hconf: org.apache.hadoop.conf.Configuration, f: java.io.File): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getPath), hconf))
+    try r.getRecordCount finally r.close()
+  }
 
   /** Signals [[footerZoneStats]] cannot serve a table — falls back to
     * the scan-derived stats job. Control flow only, never escapes. */
@@ -298,10 +332,10 @@ object Warehouse {
     extends Exception with scala.util.control.NoStackTrace
 
   /** Per-file zone stats (file, mn, mx, n_rows) read from the parquet
-    * FOOTERS instead of re-scanning the written data (r15, guide §6):
-    * row-group statistics for an INT32/INT64 column are the exact
-    * min/max of its non-null values, and the record count is footer
-    * metadata — so the post-write stats pass needs zero data reads.
+    * FOOTERS instead of re-scanning the written data: row-group
+    * statistics for an INT32/INT64 column are the exact min/max of
+    * its non-null values, and the record count is footer metadata —
+    * so the post-write stats pass needs zero data reads.
     * Binary/floating columns fall back to the scan job (None):
     * parquet binary stats may be truncated by writers, and double
     * stats are dropped when NaN is present — only the integral types
@@ -322,7 +356,7 @@ object Warehouse {
     import scala.jdk.CollectionConverters._
     // an empty file list is a broken LISTING, not an empty table — a
     // Some(empty manifest) here would commit a zone map that prunes
-    // every read to nothing (r15 verdict); fail loudly instead
+    // every read to nothing; fail loudly instead
     require(files.nonEmpty,
       "footerZoneStats: empty file list — the caller's data-dir listing " +
         "found no parquet files; refusing to derive an empty manifest")
@@ -371,11 +405,10 @@ object Warehouse {
               if (statType == LongType) v.map(java.lang.Long.valueOf).orNull
               else v.map(l => java.lang.Integer.valueOf(l.toInt)).orNull
             // percent-ENCODED URI, exactly the string input_file_name()
-            // produces for the same file — raw "file://" + path broke
-            // on paths with a space/%/# (ADVICE r15): the consumers
-            // (vacuum's pathOf, merge cleanup's `new URI(f)`) parse
-            // these strings as URIs, so footer- and scan-derived rows
-            // must stay interchangeable for ANY path. Hadoop Path
+            // produces for the same file — a raw "file://" + path is
+            // no URI on paths with a space/%/#, and [[fileOf]] parses
+            // every manifest string as one, so footer- and scan-derived
+            // rows must stay interchangeable for ANY path. Hadoop Path
             // encodes on construction; makeQualified pins the
             // file:/// spelling the scan job emits. (WarehouseSpec
             // asserts footer==scan row-for-row under a space-dir.)
@@ -399,6 +432,20 @@ object Warehouse {
         StructField("n_rows", LongType, nullable = true)))
       Some(spark.createDataFrame(rows.asJava, schema))
     } catch { case FooterStatsUnavailable => None }
+  }
+
+  /** Zone stats of freshly written `parts`: from their footers when
+    * [[footerZoneStats]] can serve the stat column, otherwise one
+    * re-scan job over just those parts. */
+  private def zoneStats(spark: SparkSession, parts: Seq[java.io.File], statCol: String,
+                        statType: org.apache.spark.sql.types.DataType): DataFrame = {
+    val paths = parts.map(_.getPath)
+    footerZoneStats(spark, paths, statCol, statType).getOrElse(
+      spark.read.parquet(paths: _*)
+        .select(input_file_name().as("file"), col(statCol))
+        .groupBy("file")
+        .agg(min(col(statCol)).as("mn"), max(col(statCol)).as("mx"),
+             count(lit(1)).as("n_rows")))
   }
 
   /** Range-clustered parquet layout + a zone-map MANIFEST (the
@@ -440,37 +487,9 @@ object Warehouse {
     df.repartitionByRange(nFiles, col(statCol))
       .sortWithinPartitions(col(statCol))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/data")
-    // stats from the FOOTERS when the stat column is integral (r15,
-    // guide §6): exact row-group min/max + record counts, zero data
-    // re-read. Non-integral stat columns keep the scan job. Listing
-    // via Hadoop FS, not java.io.File (r16, the eventsFromLongTs
-    // discipline): the footer reads below already go through
-    // HadoopInputFile, so the listing must survive the same
-    // non-local warehouse dirs. An EMPTY listing (a zero-row df can
-    // legitimately write no part files) keeps the scan job — the
-    // only exact source for "what did the write produce".
-    val written: Seq[String] = {
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      val dataPath = new org.apache.hadoop.fs.Path(s"$dir/data")
-      val fs = dataPath.getFileSystem(conf)
-      if (!fs.exists(dataPath)) Seq.empty
-      // Path.toString, NOT Path.toUri.toString: the uri form is
-      // percent-encoded and `new Path(encodedString)` does not
-      // decode, so a "%20" would be searched for literally on disk
-      else fs.listStatus(dataPath).toIndexedSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).sorted
-    }
-    val stats = (if (written.nonEmpty)
-        footerZoneStats(df.sparkSession, written, statCol,
-          df.schema(statCol).dataType)
-      else None)
-      .getOrElse(df.sparkSession.read.parquet(s"$dir/data")
-        .select(input_file_name().as("file"), col(statCol))
-        .groupBy("file")
-        .agg(min(col(statCol)).as("mn"), max(col(statCol)).as("mx"),
-             count(lit(1)).as("n_rows")))
-    stats.coalesce(1).write.parquet(s"$dir/_zonemap_history/v1")
+    zoneStats(df.sparkSession, parquetParts(new java.io.File(dir, "data")), statCol,
+        df.schema(statCol).dataType)
+      .coalesce(1).write.parquet(s"$dir/_zonemap_history/v1")
     commitZoneMapVersion(dir, 1)
   }
 
@@ -497,15 +516,12 @@ object Warehouse {
     * are immutable, versions differ only in which files are
     * members). Requires the merges since then to have run with
     * `retainForTimeTravel = true`; [[vacuumZoneMapped]] reclaims. */
-  def readZoneMapVersion(spark: org.apache.spark.sql.SparkSession, dir: String,
-                         version: Int): DataFrame = {
-    val man = new java.io.File(dir, s"_zonemap_history/v$version")
-    require(man.exists() && version <= zoneMapCurrentVersion(dir),
+  def readZoneMapVersion(spark: SparkSession, dir: String, version: Int): DataFrame = {
+    require(new java.io.File(dir, s"_zonemap_history/v$version").exists() &&
+        version <= zoneMapCurrentVersion(dir),
       s"no committed manifest version v$version under $dir " +
       s"(have: ${zoneMapVersions(dir).mkString(", ")})")
-    val files = spark.read.parquet(man.getPath)
-      .select("file").collect().map(_.getString(0))
-    spark.read.parquet(files.toIndexedSeq.map(pathOfManifestUri): _*)
+    readFiles(spark, dir, filesIn(manifest(spark, dir, Seq(version))))
   }
 
   /** Reclaim storage: drop manifest versions older than `keepFrom`,
@@ -518,31 +534,27 @@ object Warehouse {
     * need an age threshold so it cannot eat another writer's
     * in-flight staging (Iceberg's remove-orphan-files caveat).
     *
+    * Zero-row parts are never orphans: no manifest lists them (the
+    * stats omit empty files), yet a table written from an empty frame
+    * has nothing else carrying its schema for [[readFiles]].
+    *
     * Crash ordering: the dropped manifest DIRS go first, the dead
     * data files second — a vacuum that dies mid-way then leaves
     * orphan data files (harmless, re-vacuumable) instead of
     * committed versions advertising files that are gone. */
-  def vacuumZoneMapped(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       keepFrom: Int): (Int, Int) = {
+  def vacuumZoneMapped(spark: SparkSession, dir: String, keepFrom: Int): (Int, Int) = {
     val cur = zoneMapCurrentVersion(dir)
     require(keepFrom <= cur, s"vacuum keepFrom=v$keepFrom would drop the live v$cur")
-    val versions = zoneMapVersions(dir)
-    val (drop, keep) = versions.partition(_ < keepFrom)
+    val (drop, keep) = zoneMapVersions(dir).partition(_ < keepFrom)
     require(keep.nonEmpty, s"vacuum would drop every version under $dir")
-    def filesOf(vs: Seq[Int]): Set[String] =
-      if (vs.isEmpty) Set.empty
-      else spark.read.parquet(vs.map(v => s"$dir/_zonemap_history/v$v"): _*)
-        .select("file").distinct().collect().map(_.getString(0)).toSet
-    // compare on FILESYSTEM paths, not URI strings — input_file_name's
-    // scheme spelling (file:/ vs file:///) must not desync the sets
-    def pathOf(u: String): String = new java.net.URI(u).getPath
-    val keptPaths = filesOf(keep).map(pathOf)
-    val dropPaths = filesOf(drop).map(pathOf)
-    val dead = dropPaths -- keptPaths
-    val onDisk = Option(new java.io.File(dir, "data").listFiles).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(_.getAbsolutePath).toSet
-    val orphans = onDisk -- keptPaths -- dropPaths
+    def filesOf(vs: Seq[Int]): Set[java.io.File] =
+      if (vs.isEmpty) Set.empty else filesIn(manifest(spark, dir, vs)).map(fileOf).toSet
+    val kept = filesOf(keep)
+    val dropped = filesOf(drop)
+    val dead = dropped -- kept
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val orphans = (parquetParts(new java.io.File(dir, "data")).toSet -- kept -- dropped)
+      .filter(recordCount(hconf, _) > 0)
     drop.foreach(v => deleteRecursively(new java.io.File(dir, s"_zonemap_history/v$v")))
     // crashed/conflicted merge attempts leave `_staging-*` manifest
     // dirs behind — uncommitted by construction, reclaim them too.
@@ -559,10 +571,7 @@ object Warehouse {
       .filter(f => f.isDirectory && f.getName.startsWith("_merge-tmp-"))
       .foreach(deleteRecursively)
     crashHook("vacuum:post-manifest-drop")
-    (dead ++ orphans).foreach { p =>
-      val f = new java.io.File(p)
-      if (f.exists) f.delete()
-    }
+    (dead ++ orphans).foreach(_.delete())
     (drop.size, dead.size + orphans.size)
   }
 
@@ -573,15 +582,11 @@ object Warehouse {
     * optimization, never a semantics change — the same contract as the
     * DSv2 pushdowns). Empty survivor set → empty result with the
     * table's schema, no job. */
-  def readZoneMapPruned(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def readZoneMapPruned(spark: SparkSession, dir: String,
                         statCol: String, lo: Any, hi: Any): DataFrame = {
-    val kept = zoneMapManifest(spark, dir)
-      .filter(col("mx") >= lit(lo) && col("mn") <= lit(hi))
-      .select("file").collect().map(_.getString(0))
-    val data =
-      if (kept.isEmpty) spark.read.parquet(s"$dir/data").filter(lit(false))
-      else spark.read.parquet(kept.toIndexedSeq.map(pathOfManifestUri): _*)
-    data.filter(col(statCol) >= lit(lo) && col(statCol) <= lit(hi))
+    val kept = filesIn(zoneMapManifest(spark, dir)
+      .filter(col("mx") >= lit(lo) && col("mn") <= lit(hi)))
+    readFiles(spark, dir, kept).filter(col(statCol) >= lit(lo) && col(statCol) <= lit(hi))
   }
 
   /** Copy-on-write MERGE (upsert) into a [[writeZoneMapped]] table:
@@ -620,58 +625,34 @@ object Warehouse {
     *      files. With retention both survive for
     *      [[readZoneMapVersion]]; [[vacuumZoneMapped]] reclaims.
     *
-    * Update keys must be non-null: a null key matches no zone and
-    * would silently become a permanent insert-only row; fail
-    * instead.
-    *
-    * Update keys must also be UNIQUE within the batch: the merge
-    * contract is REPLACE-by-key, and a batch carrying two different
-    * values for one key has no well-defined survivor — committing an
-    * arbitrary one would make table content nondeterministic, so the
-    * default is to fail loudly (the Delta-style multiple-source-
-    * matches error). Callers whose upstream genuinely produces
-    * redundant rows opt in with `dedupBatch = true`, accepting an
-    * UNSPECIFIED survivor per key. BEHAVIOR CHANGE vs pre-r9
-    * releases (see CHANGELOG.md): duplicate batches previously
-    * deduped silently.
-    *
-    * `assumeUniqueKeys = true` skips the distinct-count admission
-    * aggregate for callers that can PROVE uniqueness upstream (e.g. a
-    * batch that is itself the output of a groupBy on `statCol`) — the
-    * null-key check still runs. A violated promise is strictly worse
-    * than `dedupBatch`: both duplicate rows survive the rewrite and
-    * the table itself ends up with duplicate keys. */
-  def mergeZoneMapped(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      statCol: String, updates0: DataFrame,
-                      retainForTimeTravel: Boolean = false,
-                      dedupBatch: Boolean = false,
-                      assumeUniqueKeys: Boolean = false): (Int, Int) = {
+    * Update keys must be non-null and UNIQUE within the batch, and
+    * every merge checks both before touching the table. A null key
+    * matches no zone and would silently become a permanent
+    * insert-only row. The merge contract is REPLACE-by-key, and a
+    * batch carrying two different values for one key has no
+    * well-defined survivor — committing an arbitrary one would make
+    * table content nondeterministic (the Delta-style
+    * multiple-source-matches error). A caller whose upstream
+    * produces redundant rows collapses the batch first, e.g.
+    * `updates.dropDuplicates(statCol)`. */
+  def mergeZoneMapped(spark: SparkSession, dir: String, statCol: String,
+                      updates0: DataFrame, retainForTimeTravel: Boolean = false): (Int, Int) = {
     // Persisted for the merge's lifetime: the plan is otherwise
     // re-executed by the key checks, the touched-file probe, the
     // anti-join, and the rewrite union.
-    val updates = (if (dedupBatch) updates0.dropDuplicates(statCol) else updates0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val updates = updates0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    // one pass for all admission stats: total rows, null keys, and —
-    // only when the dup check is live — distinct keys (count_distinct
-    // skips nulls, but the null check fires first so the dup check
-    // only ever sees a null-free batch). dedupBatch already collapsed
-    // duplicates above and assumeUniqueKeys is the caller's proof, so
-    // neither pays the per-partition distinct hash build.
-    val needDupCheck = !dedupBatch && !assumeUniqueKeys
-    val admissionAggs = Seq(count(lit(1)).as("n"),
-      sum(when(col(statCol).isNull, 1L).otherwise(0L)).as("n_null")) ++
-      (if (needDupCheck) Seq(count_distinct(col(statCol)).as("n_keys")) else Nil)
-    val firstRow = updates.agg(admissionAggs.head, admissionAggs.tail: _*).collect()(0)
-    val (nUpd, nNull) = (firstRow.getLong(0), if (firstRow.isNullAt(1)) 0L else firstRow.getLong(1))
+    // one pass for all admission stats: total rows, null keys and
+    // distinct keys (count_distinct skips nulls, but the null check
+    // fires first, so the dup check only ever sees a null-free batch)
+    val adm = updates.agg(count(lit(1)), count(when(col(statCol).isNull, 1)),
+      count_distinct(col(statCol))).collect()(0)
+    val (nUpd, nNull, nKeys) = (adm.getLong(0), adm.getLong(1), adm.getLong(2))
     require(nNull == 0L, s"mergeZoneMapped: $nNull update row(s) carry a null '$statCol' key")
-    if (needDupCheck) {
-      val nKeys = firstRow.getLong(2)
-      require(nKeys == nUpd,
-        s"mergeZoneMapped: update batch carries ${nUpd - nKeys} duplicate '$statCol' key(s) — " +
-          "REPLACE-by-key has no defined survivor for an intra-batch duplicate; " +
-          "pre-collapse the batch, or pass dedupBatch = true to accept an unspecified one")
-    }
+    require(nKeys == nUpd,
+      s"mergeZoneMapped: update batch carries ${nUpd - nKeys} duplicate '$statCol' key(s) — " +
+        "REPLACE-by-key has no defined survivor for an intra-batch duplicate; " +
+        s"collapse the batch first, e.g. updates.dropDuplicates(\"$statCol\")")
     val curVersion = zoneMapCurrentVersion(dir)
     // any Spark failure below, when the table version has moved
     // meanwhile, IS a concurrency casualty (the winner deleted files
@@ -702,7 +683,7 @@ object Warehouse {
       spark.createDataFrame(
         java.util.Arrays.asList(manPlan.collect(): _*), manPlan.schema)
     }
-    val before = man.select("file").collect().map(_.getString(0)).toSet
+    val before = filesIn(man)
     if (nUpd == 0L) return (0, before.size)
     classifyConflict {
     val touched = updates.select(col(statCol).as("k")).distinct()
@@ -725,7 +706,7 @@ object Warehouse {
         // Footer-only metadata cost, |before| small by construction.
         if (before.nonEmpty) {
           val stored = spark.read.option("mergeSchema", "true")
-            .parquet(before.toSeq.map(pathOfManifestUri): _*).schema
+            .parquet(before.map(fileOf(_).getPath): _*).schema
           val a = stored.fields.map(f => (f.name, f.dataType)).toSet
           val b = updates.schema.fields.map(f => (f.name, f.dataType)).toSet
           require(a == b,
@@ -734,45 +715,34 @@ object Warehouse {
         }
         updates.limit(0)
       }
-      else spark.read.parquet(touched.toSeq.map(pathOfManifestUri): _*)
+      else readFiles(spark, dir, touched.toSeq)
         .join(updates.select(col(statCol)).distinct(), Seq(statCol), "left_anti")
     // fresh = files this merge creates, identified DETERMINISTICALLY:
     // write to a merge-private staging dir, then move each part file
     // into data/ (parquet part names carry a write-UUID, so moves
-    // never collide). The previous before/after listing DIFF of
-    // data/ raced a concurrent merge — its freshly appended files
-    // landed in the diff window and were absorbed into THIS merge's
-    // manifest, committing the loser's rows alongside the winner's
-    // (duplicate keys) despite the CAS. A crash between moves leaves
-    // orphan files in data/ (never referenced by a committed
-    // manifest) and possibly a _merge-tmp dir; vacuum reclaims both.
+    // never collide). A before/after listing DIFF of data/ would race
+    // a concurrent merge — its freshly appended files would land in
+    // the diff window and be absorbed into THIS merge's manifest,
+    // committing the loser's rows alongside the winner's (duplicate
+    // keys) despite the CAS. A crash between moves leaves orphan
+    // files in data/ (never referenced by a committed manifest) and
+    // possibly a _merge-tmp dir; vacuum reclaims both.
     val mergeTmp = new java.io.File(dir,
       s"_merge-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
     keep.unionByName(updates)
       .repartitionByRange(math.max(1, touched.size), col(statCol))
       .sortWithinPartitions(col(statCol))
       .write.mode(SaveMode.Overwrite).parquet(mergeTmp.getPath)
-    val dataDir = new java.io.File(dir, "data")
-    val fresh = Option(mergeTmp.listFiles).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map { f =>
-        val dest = new java.io.File(dataDir, f.getName)
-        java.nio.file.Files.move(f.toPath, dest.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        dest.getAbsolutePath
-      }.toSeq
+    val dataDir = new java.io.File(dir, "data").getAbsoluteFile
+    val fresh = parquetParts(mergeTmp).map { f =>
+      val dest = new java.io.File(dataDir, f.getName)
+      java.nio.file.Files.move(f.toPath, dest.toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      dest
+    }
     deleteRecursively(mergeTmp)
-    // manifest delta: stats from the NEW files only — read from the
-    // parquet footers when the key is integral (r15, guide §6: exact
-    // row-group min/max, zero re-read of the rewritten data), scan
-    // job otherwise
-    val freshStats = footerZoneStats(spark, fresh, statCol,
-        updates.schema(statCol).dataType)
-      .getOrElse(spark.read.parquet(fresh: _*)
-        .select(input_file_name().as("file"), col(statCol))
-        .groupBy("file")
-        .agg(min(col(statCol)).as("mn"), max(col(statCol)).as("mx"),
-             count(lit(1)).as("n_rows")))
+    // manifest delta: stats from the NEW files only
+    val freshStats = zoneStats(spark, fresh, statCol, updates.schema(statCol).dataType)
     // stage to an attempt-unique dir: two concurrent merges must
     // never overwrite each other's staged manifest — the commit CAS
     // below decides which one claims the version number
@@ -796,10 +766,7 @@ object Warehouse {
         if (d.exists()) deleteRecursively(d)
       }
       crashHook("merge:post-history-drop")
-      touched.foreach { f =>
-        val p = new java.io.File(new java.net.URI(f))
-        if (p.exists) p.delete()
-      }
+      touched.foreach(fileOf(_).delete())
     }
     (touched.size, before.size)
     }
@@ -874,10 +841,10 @@ object Warehouse {
     * output is ITSELF an aggState — (groups, n, val_dec) — so states
     * are CLOSED under merging, which is the whole point of the IVM
     * loop: a materialized base state absorbs the next cycle's delta
-    * state by another merge (the r12 review caught the old double
-    * cast here — it made round 2 of the loop a schema mismatch and
-    * silently surrendered the exact-decimal guarantee). Cast to a
-    * presentation value at the edge with [[finishAggState]]. */
+    * state by another merge (a double cast here would make round 2
+    * of the loop a schema mismatch and silently surrender the
+    * exact-decimal guarantee). Cast to a presentation value at the
+    * edge with [[finishAggState]]. */
   def mergeAggStates(states: Seq[DataFrame], groupCols: Seq[String]): DataFrame = {
     require(states.nonEmpty, "mergeAggStates needs at least one state")
     states.reduce(_ unionByName _)
@@ -914,9 +881,6 @@ object Warehouse {
   def compactFiles(spark: org.apache.spark.sql.SparkSession, dir: String,
                    targetFileRows: Long): (Int, Int) = {
     require(targetFileRows >= 1, s"need targetFileRows >= 1, got $targetFileRows")
-    def parquetFiles(d: java.io.File): Array[java.io.File] =
-      Option(d.listFiles).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
     val dirFile = new java.io.File(dir)
     val old = new java.io.File(dirFile.getParentFile, dirFile.getName + "__old")
     // crash recovery: a previous run that died between the two swap
@@ -927,9 +891,8 @@ object Warehouse {
     // a manifest-committed table's data/ directory passes the foreign
     // check below (only parquet inside) but MUST NOT be compacted:
     // the rewrite renames every file and strands the committed
-    // manifest's URIs, breaking all subsequent pruned/versioned reads
-    // (the old refusal message even ADVISED this corruption — r12
-    // review). Detect the sibling metadata and refuse loudly.
+    // manifest's URIs, breaking all subsequent pruned/versioned reads.
+    // Detect the sibling metadata and refuse loudly.
     val parentMeta = Option(dirFile.getParentFile)
       .map(p => new java.io.File(p, "_zonemap_history"))
     require(!parentMeta.exists(_.exists()),
@@ -947,26 +910,21 @@ object Warehouse {
     require(foreign.isEmpty,
       s"compactFiles compacts plain parquet directories only; $dir contains " +
         s"${foreign.map(_.getName).mkString(", ")}")
-    val before = parquetFiles(dirFile)
+    val before = parquetParts(dirFile)
     // nothing to compact (e.g. a sink dir holding only marker files):
     // a no-op, not a schema-inference failure from reading zero files
     if (before.isEmpty) return (0, 0)
     val hconf = spark.sparkContext.hadoopConfiguration
     // footers in parallel: a many-small-files dir is exactly the case
-    // where a serial driver loop over file opens becomes the wall
-    // (guide §7.3 — driver-side listing/metadata bottlenecks); the
+    // where a serial driver loop over file opens becomes the wall; the
     // sum is order-independent
-    val nRows = java.util.Arrays.stream(before).parallel().mapToLong { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getPath), hconf))
-      try r.getRecordCount finally r.close()
-    }.sum
+    val nRows = java.util.Arrays.stream(before.toArray).parallel()
+      .mapToLong(recordCount(hconf, _)).sum
     val nOut = math.max(1L, (nRows + targetFileRows - 1) / targetFileRows).toInt
     val tmp = new java.io.File(dirFile.getParentFile, dirFile.getName + "__compacting")
     spark.read.parquet(dir)
       .repartition(nOut).write.mode(SaveMode.Overwrite).parquet(tmp.getPath)
-    val nAfter = parquetFiles(tmp).length
+    val nAfter = parquetParts(tmp).length
     // swap: dir aside, compacted in, old deleted. A crash between the
     // renames leaves no live dir — the recovery block above restores
     // __old on the next invocation (and a reader meanwhile fails fast
@@ -991,7 +949,7 @@ object Warehouse {
     // (null never equi-joins) and sequence(0, -1) on the small side
     // — a silently EMPTY join instead of an error
     require(nSalts >= 1, s"need nSalts >= 1, got $nSalts")
-    // salt from the row's POSITION, not its content (r12 review): a
+    // salt from the row's POSITION, not its content: a
     // content hash (xxhash64 of all columns) gives every byte-
     // identical duplicate of the hot key the SAME salt, so the exact
     // degenerate case this function exists for — millions of

@@ -96,7 +96,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(touched < nonEmpty, s"box touched all $nonEmpty files")
   }
 
-  test("merge rejects intra-batch duplicate keys by default; dedupBatch opts in") {
+  test("merge rejects intra-batch duplicate keys; a collapsed batch commits") {
     val dir = java.nio.file.Files.createTempDirectory("graft-mgdup").toString + "/t"
     Warehouse.writeZoneMapped((1L to 100L).map(k => (k, s"v$k")).toDF("k", "v"),
       dir, "k", 4)
@@ -108,8 +108,8 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Warehouse.mergeZoneMapped(spark, dir, "k", dup))
     assert(e.getMessage.contains("duplicate"), e.getMessage)
     assert(Warehouse.zoneMapCurrentVersion(dir) == 1, "failed merge must not commit")
-    // explicit opt-in: one (unspecified) row per key survives
-    Warehouse.mergeZoneMapped(spark, dir, "k", dup, dedupBatch = true)
+    // the caller collapses the batch: one (unspecified) row per key survives
+    Warehouse.mergeZoneMapped(spark, dir, "k", dup.dropDuplicates("k"))
     val got = spark.read.parquet(s"$dir/data").groupBy("k").count()
       .filter(col("count") > 1).count()
     assert(got == 0L, "duplicate keys committed by a duplicated update batch")
@@ -117,19 +117,16 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(all.size == 101 && Set("X", "Y").contains(all(50L)) &&
       Set("I", "J").contains(all(200L)))
-    // assumeUniqueKeys skips the distinct-count admission aggregate
-    // for a caller-proven-unique batch; the merge itself is unchanged
     Warehouse.mergeZoneMapped(spark, dir, "k",
-      Seq((50L, "Z"), (300L, "N")).toDF("k", "v"), assumeUniqueKeys = true)
+      Seq((50L, "Z"), (300L, "N")).toDF("k", "v"))
     val after = spark.read.parquet(s"$dir/data").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(after.size == 102 && after(50L) == "Z" && after(300L) == "N")
-    // ...and the null-key check still runs on that path
+    // ...and the null-key check runs on every merge
     val eNull = intercept[IllegalArgumentException](
       Warehouse.mergeZoneMapped(spark, dir, "k",
         Seq((java.lang.Long.valueOf(1L), "a"),
-          (null.asInstanceOf[java.lang.Long], "b")).toDF("k", "v"),
-        assumeUniqueKeys = true))
+          (null.asInstanceOf[java.lang.Long], "b")).toDF("k", "v")))
     assert(eNull.getMessage.contains("null"), eNull.getMessage)
   }
 
@@ -450,6 +447,21 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Warehouse.vacuumZoneMapped(spark, dir, keepFrom = 99))
   }
 
+  test("a table written from an empty frame reads, vacuums and merges") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString + "/t"
+    Warehouse.writeZoneMapped(Seq.empty[(Long, String)].toDF("k", "v"), dir, "k", 4)
+    assert(Warehouse.readZoneMapVersion(spark, dir, 1).count() == 0L)
+    assert(Warehouse.readZoneMapPruned(spark, dir, "k", 1L, 10L).count() == 0L)
+    // no manifest lists the zero-row part, yet it is the only file
+    // carrying the table's schema: vacuum must not sweep it
+    assert(Warehouse.vacuumZoneMapped(spark, dir, keepFrom = 1) == ((0, 0)))
+    assert(Warehouse.readZoneMapPruned(spark, dir, "k", 1L, 10L).count() == 0L)
+    Warehouse.mergeZoneMapped(spark, dir, "k", Seq((5L, "a")).toDF("k", "v"))
+    assert(Warehouse.readZoneMapPruned(spark, dir, "k", 1L, 10L).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((5L, "a")))
+    assert(Warehouse.readZoneMapVersion(spark, dir, 2).count() == 1L)
+  }
+
   test("non-retained merge drops history instead of advertising dead snapshots") {
     val dir = new java.io.File(sys.props("java.io.tmpdir"), "graft_tt_drop_spec").getPath
     val base = (1L to 500L).map(k => (k, s"V$k")).toDF("k", "v")
@@ -681,7 +693,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "footer stats must refuse a string stat column")
     // merge delta: the freshStats footer path must agree too
     val updates = (1 to 50).map(i => (Some(i.toLong * 3), s"u$i")).toDF("k", "s")
-    Warehouse.mergeZoneMapped(spark, dir, "k", updates, assumeUniqueKeys = true)
+    Warehouse.mergeZoneMapped(spark, dir, "k", updates)
     assert(manifest() == scanStats(), "post-merge manifest diverges from scan-derived stats")
     // non-integral stat column: falls back to the scan job and the
     // committed manifest still prunes correctly end to end
@@ -720,8 +732,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(new java.io.File(new java.net.URI(f)).isFile, s"unparseable manifest URI $f")
     }
     Warehouse.mergeZoneMapped(spark, dirSp, "k",
-      (1 to 30).map(i => (Some(i.toLong * 3), s"u$i")).toDF("k", "s"),
-      assumeUniqueKeys = true)
+      (1 to 30).map(i => (Some(i.toLong * 3), s"u$i")).toDF("k", "s"))
     assert(manifestAt(dirSp) == scanStatsAt(dirSp),
       "space-dir post-merge manifest diverges from scan-derived stats")
     // an EMPTY file list is a broken listing, never an empty manifest

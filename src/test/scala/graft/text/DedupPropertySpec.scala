@@ -38,6 +38,17 @@ class DedupPropertySpec extends SparkSpec {
   private def strictTest(name: String)(body: => Unit): Unit =
     test(name)(withStrict(body))
 
+  /** A cache-hygiene test starts from an empty scoped-cache registry
+    * and no persisted RDDs (polled: releases finish asynchronously),
+    * so a cache one test leaks fails that test only, and each test's
+    * end-of-test emptiness assertions see just its own operators. */
+  private def hygieneTest(name: String)(body: => Unit): Unit = strictTest(name) {
+    graft.core.ScopedCache.releaseAll()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    assertNoCachesLeft("caches left by an earlier test")
+    body
+  }
+
   /** Random corpus: vocab small enough to force heavy duplication
     * (the regime that broke the naive plans). */
   private def corpus(seed: Int, nDocs: Int, vocab: Int): DataFrame = {
@@ -668,9 +679,7 @@ class DedupPropertySpec extends SparkSpec {
     assert(got == expected)
   }
 
-  strictTest("invalid maxHamming fails fast with nothing left persisted") {
-    graft.core.ScopedCache.releaseAll()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+  hygieneTest("invalid maxHamming fails fast with nothing left persisted") {
     val docs = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
     // the require must fire BEFORE register — an invalid argument
     // must not leave a persisted frame waiting for an unrelated action
@@ -682,7 +691,7 @@ class DedupPropertySpec extends SparkSpec {
       "failed validation must not leak persisted tables")
   }
 
-  strictTest("near-dup operators leave no cached tables behind") {
+  hygieneTest("near-dup operators leave no cached tables behind") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val docs = corpus(seed = 21, nDocs = 80, vocab = 12)
     Dedup.jaccardNearDupPairs(docs, 0.5).count()
@@ -693,8 +702,7 @@ class DedupPropertySpec extends SparkSpec {
       "dedup operators must not leak persisted tables into the session")
   }
 
-  strictTest("scoped caches self-release after the consuming action, WITHOUT releaseCaches()") {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+  hygieneTest("scoped caches self-release after the consuming action, WITHOUT releaseCaches()") {
     val docs = corpus(seed = 33, nDocs = 60, vocab = 10)
     // both registry users, consumed by plain actions a library user
     // would run; no explicit release anywhere in this test
@@ -724,10 +732,8 @@ class DedupPropertySpec extends SparkSpec {
       s"caches not self-released: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
   }
 
-  strictTest("scoped caches outlive the operator's own eager jobs and end with the caller's first action") {
+  hygieneTest("scoped caches outlive the operator's own eager jobs and end with the caller's first action") {
     import org.apache.spark.sql.graft.TestBridge
-    graft.core.ScopedCache.releaseAll()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     val docs = corpus(seed = 35, nDocs = 60, vocab = 10)
     val probes = docs.filter(col("doc_id") % 5 === 0)
     // both have run their eager jobs before returning: the guard's
@@ -743,7 +749,7 @@ class DedupPropertySpec extends SparkSpec {
     assertNoCachesLeft("the caller's first action on each output must release its caches")
   }
 
-  strictTest("ScopedCache.register outside a scope throws") {
+  hygieneTest("ScopedCache.register outside a scope throws") {
     val e = intercept[IllegalStateException](
       graft.core.ScopedCache.register(spark.range(3).toDF("x")))
     assert(e.getMessage.contains("outside ScopedCache.scope"))
@@ -794,7 +800,7 @@ class DedupPropertySpec extends SparkSpec {
   private def componentsOf(edges: Set[(Long, Long)], nodes: Set[Long]): Map[Long, Long] =
     TestClosure.componentsOf(edges, nodes)
 
-  strictTest("nested cache brackets: an outer-operator throw after an inner success releases the inner call's registrations") {
+  hygieneTest("nested cache brackets: an outer-operator throw after an inner success releases the inner call's registrations") {
     // inner scope registers + succeeds, outer throws AFTER — the
     // handed-up registrations must be released by the outer scope's
     // cleanup, not stranded until session teardown.
@@ -841,7 +847,7 @@ class DedupPropertySpec extends SparkSpec {
     }
   }
 
-  strictTest("PairMode on a colossal cluster: Star is O(n), Bounded throws the documented guard, under-budget is bit-identical") {
+  hygieneTest("PairMode on a colossal cluster: Star is O(n), Bounded throws the documented guard, under-budget is bit-identical") {
     // 400 identical docs (one exact-dup cluster) + 5 strangers: Full
     // must emit the 400·399/2 clique; Star must emit the 399-edge star
     val big = (0 until 400).map(i => (i.toLong, "en", "w1 w2 w3 w4 w5 w6", 17L))
@@ -910,7 +916,7 @@ class DedupPropertySpec extends SparkSpec {
       "budget-guard throw left persisted tables behind")
   }
 
-  strictTest("PairMode on the blocked prefix families (edit/jw): Star spanning subset + same closure, Bounded exact guard, under-budget bit-identical") {
+  hygieneTest("PairMode on the blocked prefix families (edit/jw): Star spanning subset + same closure, Bounded exact guard, under-budget bit-identical") {
     // small vocab → heavy text duplication → identical-prefix clusters;
     // distinct texts sharing the first 8 chars give cross-cluster pairs
     val docs = corpus(seed = 77, nDocs = 150, vocab = 6)
@@ -1035,7 +1041,7 @@ class DedupPropertySpec extends SparkSpec {
     assert(flag2(star2) == flag2(full2))
   }
 
-  strictTest("maxCandidates guard on the component/cluster operators: boundary-exact prediction, accepted run identical, throw strands nothing") {
+  hygieneTest("maxCandidates guard on the component/cluster operators: boundary-exact prediction, accepted run identical, throw strands nothing") {
     // small vocab → heavy duplication → hot banding buckets, the
     // regime the guard exists for
     val docs = corpus(seed = 21, nDocs = 150, vocab = 8)

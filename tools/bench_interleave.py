@@ -1,24 +1,29 @@
 #!/usr/bin/env python3
-"""Interleaved subset A/B: alternating old-tree / new-tree bench
-processes, the decision protocol OPTIMIZATION_r15/r16 use.
+"""Interleaved A/B: alternating old-tree / new-tree bench processes.
 
-Why not bench_ab.py: that tool runs old once then new once, so a slow
-box-regime drift between the two captures reads as a code delta. This
-one alternates N pairs of short subset captures (old,new,new,old,...)
-so every regime phase samples both sides, and reports paired deltas
-plus an untouched CONTROL query whose |delta| bounds the capture's
-noise.
+Running old once and then new once lets a slow box-regime drift
+between the two captures read as a code delta. This tool alternates N
+pairs of captures (old,new,new,old,...) so every regime phase samples
+both sides, and reports paired deltas plus an untouched CONTROL query
+whose |delta| bounds the capture's noise.
 
 Usage:
     python3 tools/bench_interleave.py --old <commit> \
-        --only q_degree_hist,q_shingle_jaccard --control q_shingle_jaccard \
+        [--only q_degree_hist,q_shingle_jaccard --control q_shingle_jaccard] \
         [--pairs 4] [--runs 3] [--cpus 32] [--sf-dir /root/testdata/sf0.1] \
-        [--out report.md]
+        [--out report.md] [--emit-anchored bench_full.json]
 
 The old side runs in a throwaway worktree at --old; the new side is
 the current working tree (committed or dirty). Order alternates per
 pair. Per side and query the summary gives min and median over the
-pair processes' own min-of-runs values.
+pair processes' own min-of-runs values. Without --only every process
+runs the full bench.
+
+--emit-anchored PATH writes the new side's fastest full capture to
+PATH with its own drift anchor embedded (anchor_commit, anchor_total,
+anchor_runs, head_runs, paired_delta_pct, captured_at, head_commit) --
+the self-adjudicating committed bench_full.json -- and prints the
+SCALING.md closing-control table generated from those fields.
 """
 
 import argparse
@@ -61,13 +66,15 @@ def compile_tree(tree, label):
 def bench_once(tree, label, args, out_path):
     env = dict(os.environ)
     env.pop("SPARK_GRAFT_BENCH_FLOOR", None)
+    env.pop("SPARK_GRAFT_ONLY", None)
     env.update({
         "SPARK_GRAFT_SF_DIR": args.sf_dir,
         "SPARK_GRAFT_CPUS": str(args.cpus),
         "SPARK_GRAFT_RUNS": str(args.runs),
-        "SPARK_GRAFT_ONLY": args.only,
         "SPARK_GRAFT_BENCH_OUT": out_path,
     })
+    if args.only:
+        env["SPARK_GRAFT_ONLY"] = args.only
     wait_idle()
     r = subprocess.run(["sbt", "-batch", "runMain graft.Bench"], cwd=tree,
                        env=env, stdout=subprocess.PIPE,
@@ -82,14 +89,36 @@ def bench_once(tree, label, args, out_path):
                  "SPARK_GRAFT_BENCH_FLOOR")
     if art.get("n_errors", 0) > 0:
         sys.exit(f"[iab] {label}: query errors in capture: {art.get('errors')}")
-    return art["queries"]
+    return art
+
+
+def closing_control_md(a):
+    """SCALING.md closing-control table, generated from an anchored
+    capture's own fields."""
+    def totals(ts):
+        return ", ".join(f"{t:.2f}" for t in ts)
+    return "\n".join([
+        "**Closing control (generated from bench_full.json anchor fields):**",
+        "",
+        "| capture | at | min-total (s) | per-process totals |",
+        "|---|---|---|---|",
+        f"| old {a['anchor_commit'][:9]} | {a['captured_at']} | "
+        f"{a['anchor_total']:.2f} | {totals(a['anchor_runs'])} |",
+        f"| new {a['head_commit'][:9]} | {a['captured_at']} | "
+        f"{a['value']:.2f} | {totals(a['head_runs'])} |",
+        "",
+        f"Paired delta (median of per-process totals): {a['paired_delta_pct']:+.1f}% "
+        "— same box, interleaved; anything a round-over-round artifact diff "
+        "reports beyond this is box regime, not code.",
+    ])
 
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--old", required=True, help="commit for the OLD side")
-    ap.add_argument("--only", required=True,
-                    help="comma list of queries (include the control)")
+    ap.add_argument("--only", default=None,
+                    help="comma list of queries (include the control); "
+                         "default: the full bench")
     ap.add_argument("--control", default=None,
                     help="untouched query whose delta bounds capture noise")
     ap.add_argument("--pairs", type=int, default=4)
@@ -97,7 +126,15 @@ def main():
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--out", default=None)
+    ap.add_argument("--emit-anchored", default=None, metavar="PATH",
+                    help="write the new side's fastest full capture to PATH "
+                         "with its drift anchor embedded")
     args = ap.parse_args()
+    if args.emit_anchored and args.only:
+        sys.exit("[iab] --emit-anchored needs full captures; drop --only")
+
+    import datetime
+    started = datetime.datetime.now().strftime("%Y-%m-%d %H:%M")
 
     old_commit = sh(["git", "rev-parse", args.old]).stdout.strip()
     head = sh(["git", "rev-parse", "HEAD"]).stdout.strip()
@@ -106,8 +143,7 @@ def main():
     tmp = tempfile.mkdtemp(prefix="graft-iab-")
     wt = os.path.join(tmp, "old")
     sh(["git", "worktree", "add", "--detach", wt, old_commit])
-    queries = [q.strip() for q in args.only.split(",") if q.strip()]
-    samples = {"old": {q: [] for q in queries}, "new": {q: [] for q in queries}}
+    arts = {"old": [], "new": []}
     try:
         compile_tree(wt, f"OLD {old_commit[:9]}")
         compile_tree(REPO, f"NEW {head[:9]}{'+dirty' if dirty else ''}")
@@ -116,16 +152,18 @@ def main():
                 else [("new", REPO), ("old", wt)]
             for side, tree in order:
                 out = os.path.join(tmp, f"{side}_{p}.json")
-                qmap = bench_once(tree, f"pair {p + 1}/{args.pairs} {side}",
-                                  args, out)
-                for q in queries:
-                    if q in qmap:
-                        samples[side][q].append(qmap[q])
-                print(f"[iab] pair {p + 1} {side}: " +
-                      " ".join(f"{q}={qmap.get(q, float('nan')):.3f}"
-                               for q in queries), flush=True)
+                art = bench_once(tree, f"pair {p + 1}/{args.pairs} {side}",
+                                 args, out)
+                arts[side].append(art)
+                print(f"[iab] pair {p + 1} {side}: total={art['value']:.3f}",
+                      flush=True)
     finally:
         subprocess.run(["git", "worktree", "remove", "--force", wt], cwd=REPO)
+
+    queries = [q.strip() for q in args.only.split(",") if q.strip()] \
+        if args.only else sorted(arts["new"][0]["queries"])
+    samples = {side: {q: [a["queries"][q] for a in arts[side] if q in a["queries"]]
+                      for q in queries} for side in arts}
 
     lines = [f"# Interleaved A/B — {old_commit[:9]} vs "
              f"{head[:9]}{' (+uncommitted)' if dirty else ''}",
@@ -159,6 +197,25 @@ def main():
     if args.out:
         with open(args.out, "w") as f:
             f.write(report + "\n")
+    if args.emit_anchored:
+        o_tot = [a["value"] for a in arts["old"]]
+        n_tot = [a["value"] for a in arts["new"]]
+        o_med, n_med = statistics.median(o_tot), statistics.median(n_tot)
+        anchored = dict(min(arts["new"], key=lambda a: a["value"]))
+        anchored.update({
+            "anchor_commit": old_commit,
+            "anchor_total": min(o_tot),
+            "anchor_runs": o_tot,
+            "head_runs": n_tot,
+            "paired_delta_pct": round((n_med - o_med) / o_med * 100.0, 2),
+            "captured_at": started + " to " +
+                           datetime.datetime.now().strftime("%H:%M"),
+            "head_commit": head + ("+dirty" if dirty else ""),
+        })
+        with open(args.emit_anchored, "w") as f:
+            json.dump(anchored, f)
+        print(f"[iab] anchored capture written to {args.emit_anchored}\n")
+        print(closing_control_md(anchored))
 
 
 if __name__ == "__main__":
