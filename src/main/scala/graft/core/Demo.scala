@@ -66,19 +66,20 @@ object Demo {
     new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_$name-${dirTag(sourceDir)}").getPath
 
-  /** Replace `dst` with a flat file-level copy of `src` — the reset
-    * step for demo operators that CONSUME their input layout (e.g.
-    * compaction): the once-built source layout stays pristine, each
-    * run works on a fresh copy. Local-filesystem copy of a
-    * file-count-bounded demo directory — not a data-path operation. */
-  /** Recursive local delete (no-op on a missing path) — shared by the
-    * demo reset and Verify's stale-dump cleanup so any future
-    * symlink- or error-handling fix lands once, in one place. */
+  /** Recursive local delete (no-op on a missing path) — the ONE copy,
+    * shared by the demo reset, Verify's stale-dump cleanup and
+    * [[Warehouse]]'s zone-map staging, history and vacuum deletes, so
+    * any future symlink- or error-handling fix lands once. */
   def recursiveDelete(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(recursiveDelete)
     f.delete(); ()
   }
 
+  /** Replace `dst` with a flat file-level copy of `src` — the reset
+    * step for demo operators that CONSUME their input layout (e.g.
+    * compaction): the once-built source layout stays pristine, each
+    * run works on a fresh copy. Local-filesystem copy of a
+    * file-count-bounded demo directory — not a data-path operation. */
   def refreshCopy(src: String, dst: String): Unit = {
     val d = new java.io.File(dst)
     recursiveDelete(d)

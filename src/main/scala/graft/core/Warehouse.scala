@@ -10,11 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Warehouse {
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
-
   /** Persist a table bucketed + sorted by the join key. Two tables
     * bucketed the same way join with NO shuffle exchange on either
     * side — at 100 TB this converts the nightly fact-fact join from
@@ -24,9 +19,6 @@ object Warehouse {
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
     writeBucketed(df, table, Seq(key), buckets)
 
-  /** Composite-key form — a join keyed on ALL bucket columns (e.g.
-    * the LSH band store's `(band, bkey)`) reads this side
-    * exchange-free the same way. */
   /** Managed-table location of a simple table name in the current
     * database, resolved through the Hadoop [[FileSystem]] OF THE
     * WAREHOUSE URI — a java.io.File resolution of URI.getPath only
@@ -44,6 +36,9 @@ object Warehouse {
     (fs, new org.apache.hadoop.fs.Path(dbDir, table.toLowerCase(java.util.Locale.ROOT)))
   }
 
+  /** Composite-key form — a join keyed on ALL bucket columns (e.g.
+    * the LSH band store's `(band, bkey)`) reads this side
+    * exchange-free the same way. */
   def writeBucketed(df: DataFrame, table: String, keys: Seq[String], buckets: Int): Unit = {
     require(keys.nonEmpty, "writeBucketed needs at least one bucket key")
     // simple (unqualified) names only: the backticked DROP below
@@ -261,14 +256,14 @@ object Warehouse {
       try {
         val found = zoneMapCurrentVersion(dir)
         if (found != expected) {
-          deleteRecursively(staged)
+          Demo.recursiveDelete(staged)
           throw new ZoneMapConflictException(dir, expected, found)
         }
         val next = expected + 1
         val vDir = new java.io.File(dir, s"_zonemap_history/v$next")
         // a v$next left by a CRASHED attempt is uncommitted (its
         // pointer rename never ran) — replacing it keeps retries safe
-        if (vDir.exists()) deleteRecursively(vDir)
+        if (vDir.exists()) Demo.recursiveDelete(vDir)
         java.nio.file.Files.move(staged.toPath, vDir.toPath,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         commitZoneMapVersion(dir, next)
@@ -483,7 +478,7 @@ object Warehouse {
     val ptr = new java.io.File(dir, "_current")
     if (ptr.exists()) ptr.delete()
     val hist = new java.io.File(dir, "_zonemap_history")
-    if (hist.exists()) deleteRecursively(hist)
+    if (hist.exists()) Demo.recursiveDelete(hist)
     df.repartitionByRange(nFiles, col(statCol))
       .sortWithinPartitions(col(statCol))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/data")
@@ -555,7 +550,7 @@ object Warehouse {
     val hconf = spark.sparkContext.hadoopConfiguration
     val orphans = (parquetParts(new java.io.File(dir, "data")).toSet -- kept -- dropped)
       .filter(recordCount(hconf, _) > 0)
-    drop.foreach(v => deleteRecursively(new java.io.File(dir, s"_zonemap_history/v$v")))
+    drop.foreach(v => Demo.recursiveDelete(new java.io.File(dir, s"_zonemap_history/v$v")))
     // crashed/conflicted merge attempts leave `_staging-*` manifest
     // dirs behind — uncommitted by construction, reclaim them too.
     // (Don't vacuum concurrently with an in-flight merge: its staging
@@ -563,13 +558,13 @@ object Warehouse {
     Option(new java.io.File(dir, "_zonemap_history").listFiles)
       .getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("_staging-"))
-      .foreach(deleteRecursively)
+      .foreach(Demo.recursiveDelete)
     // ...as do crashed merges' data-staging dirs under the table root
     // (files not yet moved into data/, referenced by no manifest)
     Option(new java.io.File(dir).listFiles)
       .getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("_merge-tmp-"))
-      .foreach(deleteRecursively)
+      .foreach(Demo.recursiveDelete)
     crashHook("vacuum:post-manifest-drop")
     (dead ++ orphans).foreach(_.delete())
     (drop.size, dead.size + orphans.size)
@@ -740,7 +735,7 @@ object Warehouse {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       dest
     }
-    deleteRecursively(mergeTmp)
+    Demo.recursiveDelete(mergeTmp)
     // manifest delta: stats from the NEW files only
     val freshStats = zoneStats(spark, fresh, statCol, updates.schema(statCol).dataType)
     // stage to an attempt-unique dir: two concurrent merges must
@@ -763,7 +758,7 @@ object Warehouse {
     if (!retainForTimeTravel && touched.nonEmpty) {
       (1 until next).foreach { v =>
         val d = new java.io.File(dir, s"_zonemap_history/v$v")
-        if (d.exists()) deleteRecursively(d)
+        if (d.exists()) Demo.recursiveDelete(d)
       }
       crashHook("merge:post-history-drop")
       touched.foreach(fileOf(_).delete())
@@ -929,10 +924,10 @@ object Warehouse {
     // renames leaves no live dir — the recovery block above restores
     // __old on the next invocation (and a reader meanwhile fails fast
     // on a missing path rather than silently double-reading)
-    if (old.exists()) deleteRecursively(old)
+    if (old.exists()) Demo.recursiveDelete(old)
     require(dirFile.renameTo(old), s"compactFiles: could not move $dir aside")
     require(tmp.renameTo(dirFile), s"compactFiles: could not move compacted dir into $dir")
-    deleteRecursively(old)
+    Demo.recursiveDelete(old)
     (before.length, nAfter)
   }
 

@@ -75,9 +75,7 @@ object Dedup {
     * The guard counts over the same banded frame the join reads, so it
     * predicts exactly the rows the confirm evaluates. The join
     * strategy is the family's: a band function may pin one with a
-    * hint on the banded frame. A pair colliding in several bands is
-    * confirmed once per band and merged after the filter, when
-    * survivors are few. */
+    * hint on the banded frame. */
   private[text] def bandedComponents(members: DataFrame, reps: DataFrame,
                                      band: DataFrame => DataFrame, confirm: Column,
                                      maxCandidates: Option[Long], family: String): DataFrame =
@@ -85,15 +83,30 @@ object Dedup {
       val banded = band(reps)
       maxCandidates.foreach(guardCandidates(banded.select(col("band"), col("bkey")),
         Seq("band", "bkey"), _, family))
-      banded.as("x").join(banded.as("y"), Seq("band", "bkey"))
-        .filter(col("x.rep_id") < col("y.rep_id") && confirm)
-        .select(col("x.rep_id").as("rep_a"), col("y.rep_id").as("rep_b"))
-        .distinct()
+      bandedPairs(banded, "rep_id", confirm)
     }
+
+  /** The ONE symmetric (band, bkey) self-join of the LSH families:
+    * (id_a, id_b, carry…) for every two rows of `banded`
+    * ([[withBands]]) that share a bucket, ordered `x.id < y.id` and
+    * passing `confirm`, an edge predicate over the `x.*`/`y.*` sides.
+    * A pair colliding in several bands is confirmed once per band and
+    * merged by the `distinct` AFTER the filter: filtering first
+    * commutes exactly with the distinct while shrinking its map-side
+    * hash state from every banded collision to the confirmed edges —
+    * at cluster scale that per-task hash table is the memory hazard.
+    * `carry` columns must be functions of the pair, so the distinct
+    * stays a pure dedup. */
+  private[text] def bandedPairs(banded: DataFrame, id: String, confirm: Column,
+                                carry: Column*): DataFrame =
+    banded.as("x").join(banded.as("y"), Seq("band", "bkey"))
+      .filter(col(s"x.$id") < col(s"y.$id") && confirm)
+      .select(col(s"x.$id").as("id_a") +: col(s"y.$id").as("id_b") +: carry: _*)
+      .distinct()
 
   /** The second half of [[bandedComponents]], shared with the jaccard
     * plans that build their rep pairs their own way. Scope-caches
-    * `reps`, then evaluates `repPairs` — (rep_a, rep_b) edges over
+    * `reps`, then evaluates `repPairs` — (id_a, id_b) edges over
     * rep ids — so an eager guard inside it reads the cache it fills.
     * The component search runs on the rep graph only; members join
     * their rep's component back through `componentJoinSide`
@@ -103,7 +116,7 @@ object Dedup {
                            (repPairs: => DataFrame): DataFrame = {
     val Array(idCol, keyCol) = members.columns
     ScopedCache.register(reps)
-    val comp = graft.core.Graph.connectedComponents(repPairs, "rep_a", "rep_b")
+    val comp = graft.core.Graph.connectedComponents(repPairs, "id_a", "id_b")
     members.join(reps.select(col(keyCol), col("rep_id")).hint("shuffle_hash"), keyCol)
       .join(graft.core.Graph.componentJoinSide(comp), col("rep_id") === col("node"), "left")
       .select(col(idCol), coalesce(col("comp"), col("rep_id")).as("component"))
@@ -248,25 +261,6 @@ object Dedup {
       .select(col("doc_id"), col("rep_id"), col("cluster_size"))
   }
 
-  /** Candidate pairs of DISTINCT signatures out of the banding:
-    * (sig_a, sig_b), each emitted once — the shared candidate stage of
-    * the pair expansion and the component builder.
-    *
-    * Band keys are derived WITHOUT a first(mhs) collapse: an
-    * array-valued aggregation buffer cannot hash-aggregate, so
-    * groupBy(sig_key).agg(first(mhs)) plans two SortAggregates per
-    * reference. Exploding the band keys first and distinct-ing the
-    * (sig_key, band, bkey) primitive triple is the same set —
-    * identical-signature docs collapse per band — in one
-    * hash-aggregable shuffle of narrow rows. */
-  private def sigBandPairs(full: DataFrame, rowsPerBand: Int): DataFrame = {
-    val sigBands = sigBandKeys(full, rowsPerBand)
-    sigBands.as("x").join(sigBands.as("y"), Seq("band", "bkey"))
-      .filter(col("x.sig_key") < col("y.sig_key"))
-      .select(col("x.sig_key").as("sig_a"), col("y.sig_key").as("sig_b"))
-      .distinct()
-  }
-
   /** Band-key columns for one signature row (shared by every banding
     * shape). Also the central banding guard: a non-divisor would
     * silently band only part of the signature (changing the
@@ -290,7 +284,15 @@ object Dedup {
 
   /** Distinct (sig_key, band, bkey) band keys of a signature frame —
     * the probe/build primitive shared by the full self-join and the
-    * incremental (fresh-probes-corpus) banding. */
+    * incremental (fresh-probes-corpus) banding.
+    *
+    * Band keys are derived WITHOUT a first(mhs) collapse: an
+    * array-valued aggregation buffer cannot hash-aggregate, so
+    * groupBy(sig_key).agg(first(mhs)) plans two SortAggregates per
+    * reference. Exploding the band keys first and distinct-ing the
+    * (sig_key, band, bkey) primitive triple is the same set —
+    * identical-signature docs collapse per band — in one
+    * hash-aggregable shuffle of narrow rows. */
   private def sigBandKeys(sigs: DataFrame, rowsPerBand: Int): DataFrame =
     bandedSigs(sigs.select(col("sig_key"), col("mhs")), rowsPerBand)
       .select(col("sig_key"), col("band"), col("bkey")).distinct()
@@ -544,7 +546,7 @@ object Dedup {
   /** Cluster→doc pair expansion shared by the three pair-emitting
     * families, dispatching on [[PairMode]]. `members` is
     * (doc_id, ckey) — doc to identical-content cluster key;
-    * `clusterPairs` is (ck_a, ck_b, payload…) — one row per
+    * `clusterPairs` is (id_a, id_b, payload…) — one row per
     * qualifying DISTINCT-cluster pair, `payloadCols` carried through
     * unchanged; `intraPayload` supplies the (aliased) literal payload
     * for identical-cluster pairs (J = 1.0 / hamming 0 by
@@ -579,8 +581,8 @@ object Dedup {
         .select(col("ma.doc_id").as("doc_a") +: col("mb.doc_id").as("doc_b") +:
           intraPayload: _*)
       val cross = cp
-        .join(members.as("ma").hint("shuffle_hash"), col("ck_a") === col("ma.ckey"))
-        .join(members.as("mb").hint("shuffle_hash"), col("ck_b") === col("mb.ckey"))
+        .join(members.as("ma").hint("shuffle_hash"), col("id_a") === col("ma.ckey"))
+        .join(members.as("mb").hint("shuffle_hash"), col("id_b") === col("mb.ckey"))
         .select(least(col("ma.doc_id"), col("mb.doc_id")).as("doc_a") +:
           greatest(col("ma.doc_id"), col("mb.doc_id")).as("doc_b") +: payload: _*)
       intra.unionByName(cross)
@@ -599,10 +601,10 @@ object Dedup {
           .select(col("rep_id").as("doc_a") +: col("doc_id").as("doc_b") +:
             intraPayload: _*)
         val cross = clusterPairs
-          .join(reps.select(col("ckey").as("ck_a"), col("rep_id").as("rep_a"))
-            .hint("shuffle_hash"), "ck_a")
-          .join(reps.select(col("ckey").as("ck_b"), col("rep_id").as("rep_b"))
-            .hint("shuffle_hash"), "ck_b")
+          .join(reps.select(col("ckey").as("id_a"), col("rep_id").as("rep_a"))
+            .hint("shuffle_hash"), "id_a")
+          .join(reps.select(col("ckey").as("id_b"), col("rep_id").as("rep_b"))
+            .hint("shuffle_hash"), "id_b")
           .select(least(col("rep_a"), col("rep_b")).as("doc_a") +:
             greatest(col("rep_a"), col("rep_b")).as("doc_b") +: payload: _*)
         intra.unionByName(cross)
@@ -629,11 +631,11 @@ object Dedup {
         val cp = ScopedCache.register(clusterPairs)
         val sizes = members.groupBy(col("ckey")).agg(count(lit(1)).as("n"))
         val intraCnt = sizes.select(shiftright(col("n") * (col("n") - 1L), 1).as("c"))
-        val crossCnt = cp.select(col("ck_a"), col("ck_b"))
-          .join(sizes.select(col("ckey").as("ck_a"), col("n").as("na"))
-            .hint("shuffle_hash"), "ck_a")
-          .join(sizes.select(col("ckey").as("ck_b"), col("n").as("nb"))
-            .hint("shuffle_hash"), "ck_b")
+        val crossCnt = cp.select(col("id_a"), col("id_b"))
+          .join(sizes.select(col("ckey").as("id_a"), col("n").as("na"))
+            .hint("shuffle_hash"), "id_a")
+          .join(sizes.select(col("ckey").as("id_b"), col("n").as("nb"))
+            .hint("shuffle_hash"), "id_b")
           .select((col("na") * col("nb")).as("c"))
         val predicted = intraCnt.unionByName(crossCnt)
           .agg(coalesce(sum(col("c")), lit(0L))).head().getLong(0)
@@ -659,8 +661,8 @@ object Dedup {
       case _ => base
     }
     val members = full.select(col("doc_id"), col("sig_key").as("ckey"))
-    val sigPairs = sigBandPairs(full, rowsPerBand)
-      .select(col("sig_a").as("ck_a"), col("sig_b").as("ck_b"))
+    // distinct signatures, unconfirmed: the pair list IS the candidate set
+    val sigPairs = bandedPairs(sigBandKeys(full, rowsPerBand), "sig_key", lit(true))
     expandDocPairs(members, sigPairs, Nil, Nil, mode, "minhashLshPairs")
   }
 
@@ -930,10 +932,8 @@ object Dedup {
     // — the narrow-expensive shape the scoped cache exists for.
     val sh = ScopedCache.register(simhash(spark, documents))
     val members = sh.select(col("doc_id"), col("simhash").as("ckey"))
-    val fpPairs = simhashFpPairs(sh, maxHamming)
-      .select(col("fp_a").as("ck_a"), col("fp_b").as("ck_b"), col("hamming"))
-    expandDocPairs(members, fpPairs, Seq("hamming"), Seq(lit(0L).as("hamming")),
-      mode, "simhashNearDupPairs")
+    expandDocPairs(members, simhashFpPairs(sh, maxHamming), Seq("hamming"),
+      Seq(lit(0L).as("hamming")), mode, "simhashNearDupPairs")
   }
 
   /** Degree histogram of the SimHash near-dup graph, computed on the
@@ -958,15 +958,12 @@ object Dedup {
     val sh = ScopedCache.register(simhash(spark, documents))
     val members = sh.select(col("doc_id"), col("simhash").as("ckey"))
     val fpPairs = simhashFpPairs(sh, maxHamming)
-      .select(col("fp_a").as("ck_a"), col("fp_b").as("ck_b"))
+      .select(col("id_a").as("ck_a"), col("id_b").as("ck_b"))
     graft.core.Graph.clusterDegreeHistogram(members, fpPairs, nodes, nodeCol)
   }
 
-  /** (fp_a, fp_b, hamming): near-dup edges between DISTINCT
-    * fingerprints — the 8-bit banded candidate join plus the
-    * `bit_count(xor)` confirm, shared by the pair and component
-    * views of the SimHash family. The band guarantee (a pair within
-    * Hamming h agrees on ≥ 4−h of the 4 bands) holds for h ≤ 3. */
+  /** The band guarantee (a pair within Hamming h agrees on ≥ 4−h of
+    * the 4 bands) holds for h ≤ 3. */
   private def requireMaxHamming(maxHamming: Int): Unit =
     require(maxHamming >= 0 && maxHamming <= 3,
       s"band recall guarantee holds for maxHamming in [0, 3], got $maxHamming")
@@ -979,24 +976,21 @@ object Dedup {
   private def simhashBanded(fps: DataFrame): DataFrame =
     withBands(fps, (0 until 4).map(b => shiftright(col("simhash"), b * 8).bitwiseAND(lit(255L))))
 
-  private def simhashFpPairs(sh: DataFrame, maxHamming: Int): DataFrame = {
-    requireMaxHamming(maxHamming)
-    val banded = simhashBanded(sh.select(col("simhash")).distinct())
-    // hamming confirm BEFORE the pair-dedup distinct: bit_count(xor)
-    // is one codegen'd instruction pair, and filtering first commutes
-    // exactly with distinct while shrinking the distinct's map-side
-    // hash state from ALL banded collisions to the confirmed edges —
-    // at cluster scale that per-task hash table is the memory hazard
-    banded.as("x").join(banded.as("y"), Seq("band", "bkey"))
-      .filter(col("x.simhash") < col("y.simhash"))
-      .select(col("x.simhash").as("fp_a"), col("y.simhash").as("fp_b"))
-      .filter(bit_count(col("fp_a").bitwiseXOR(col("fp_b"))) <= maxHamming)
-      .distinct()
+  /** The ONE simhash confirm over a [[simhashBanded]] pair's x/y sides,
+    * shared by the pair and component views: `bit_count(xor)` is one
+    * codegen'd instruction pair, nothing next to the join. */
+  private def withinHamming(maxHamming: Int): Column =
+    bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))) <= maxHamming
+
+  /** (id_a, id_b, hamming): near-dup edges between DISTINCT
+    * fingerprints ([[bandedPairs]] over [[simhashBanded]]). Callers
+    * check `maxHamming` first ([[requireMaxHamming]]). */
+  private def simhashFpPairs(sh: DataFrame, maxHamming: Int): DataFrame =
+    bandedPairs(simhashBanded(sh.select(col("simhash")).distinct()), "simhash",
+        withinHamming(maxHamming))
       // hamming recomputed on the distinct survivors only — keeping it
       // OUT of the distinct keeps the dedup key at the 16-byte pair
-      .withColumn("hamming",
-        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast(LongType))
-  }
+      .withColumn("hamming", bit_count(col("id_a").bitwiseXOR(col("id_b"))).cast(LongType))
 
   /** SimHash transitive near-dup clusters: connected components of
     * the Hamming-≤`maxHamming` fingerprint graph, every document
@@ -1029,8 +1023,7 @@ object Dedup {
     // side, across actions — cached so the md5-per-token fold runs once
     val sh = ScopedCache.register(simhash(spark, documents))
     bandedComponents(sh, sh.groupBy(col("simhash")).agg(min(col("doc_id")).as("rep_id")),
-      simhashBanded, bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))) <= maxHamming,
-      maxCandidates, "simhashComponents")
+      simhashBanded, withinHamming(maxHamming), maxCandidates, "simhashComponents")
   }
 
   /** Blocked n-gram Jaccard near-dup pairs: block on
@@ -1346,7 +1339,7 @@ object Dedup {
       if (isBounded || usesPrefixPlan(threshold)) ScopedCache.register(keyed) else keyed
     val members = withKey.select(col("doc_id"), col("set_key").as("ckey"))
     val repPairs = setPairs(withKey, threshold)
-      .select(col("set_a").as("ck_a"), col("set_b").as("ck_b"), col("jaccard"))
+      .select(col("set_a").as("id_a"), col("set_b").as("id_b"), col("jaccard"))
     // expand rep pairs to doc pairs; intra-cluster pairs are exact
     // duplicates (J = 1.0)
     expandDocPairs(members, repPairs, Seq("jaccard"), Seq(lit(1.0).as("jaccard")),
@@ -1367,13 +1360,14 @@ object Dedup {
       .withColumn("pfx", substring(col("p"), 1, blockChars))
   }
 
-  private def blockedPrefixPairs(documents: DataFrame, prefixLen: Int,
-                                 blockChars: Int): DataFrame = {
-    val t = blockedTable(documents, prefixLen, blockChars)
+  /** The ONE blocked self-join of the edit-distance and Jaro-Winkler
+    * families, over a [[blockedTable]]-shaped frame `t` (docs, or the
+    * identical-prefix clusters of [[blockedClusterView]]): rows
+    * sharing (lang, length bucket, `pfx`), ordered `a.id < b.id`. */
+  private def blockedJoin(t: DataFrame, id: String): DataFrame =
     t.as("a").join(t.as("b"),
-        col("a.lang") === col("b.lang") && col("a.bkt") === col("b.bkt") &&
-        col("a.pfx") === col("b.pfx") && col("a.doc_id") < col("b.doc_id"))
-  }
+      col("a.lang") === col("b.lang") && col("a.bkt") === col("b.bkt") &&
+      col("a.pfx") === col("b.pfx") && col(s"a.$id") < col(s"b.$id"))
 
   /** Identical-prefix cluster view of the blocked families for the
     * non-Full [[PairMode]]s: docs sharing (lang, length-bucket,
@@ -1399,15 +1393,6 @@ object Dedup {
     (t.select(col("doc_id"), col("ckey"), col("p")),
      t.select(col("ckey"), col("lang"), col("bkt"), col("pfx"), col("p")).distinct())
   }
-
-  /** One row per qualifying DISTINCT-prefix cluster pair within a
-    * block — the `clusterPairs` side of [[expandDocPairs]] for the
-    * blocked families. Same join predicate as the Full doc-level
-    * join, on clusters instead of docs. */
-  private def blockedClusterPairs(clusters: DataFrame): DataFrame =
-    clusters.as("a").join(clusters.as("b"),
-      col("a.lang") === col("b.lang") && col("a.bkt") === col("b.bkt") &&
-      col("a.pfx") === col("b.pfx") && col("a.ckey") < col("b.ckey"))
 
   /** Edit-distance (Levenshtein) near-dup pairs — the fuzzy-dedup
     * complement to set-based Jaccard: order-sensitive, catches small
@@ -1435,11 +1420,11 @@ object Dedup {
                         blockChars: Int = 8,
                         mode: PairMode = PairMode.Full): DataFrame = ScopedCache.scope {
     require(maxDist >= 0, s"need maxDist >= 0, got $maxDist")
+    val dist = levenshtein(col("a.p"), col("b.p"), maxDist).cast(LongType).as("dist")
     mode match {
       case PairMode.Full =>
-        blockedPrefixPairs(documents, prefixLen, blockChars)
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            levenshtein(col("a.p"), col("b.p"), maxDist).cast(LongType).as("dist"))
+        blockedJoin(blockedTable(documents, prefixLen, blockChars), "doc_id")
+          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"), dist)
           .filter(col("dist") >= 0L)
       case _ =>
         // intra pairs are identical prefixes: dist = levenshtein(p,p)
@@ -1449,9 +1434,8 @@ object Dedup {
         // prefixes, identical across members), so under budget the
         // expansion is bit-identical to Full.
         val (members, clusters) = blockedClusterView(documents, prefixLen, blockChars)
-        val cp = blockedClusterPairs(clusters)
-          .select(col("a.ckey").as("ck_a"), col("b.ckey").as("ck_b"),
-            levenshtein(col("a.p"), col("b.p"), maxDist).cast(LongType).as("dist"))
+        val cp = blockedJoin(clusters, "ckey")
+          .select(col("a.ckey").as("id_a"), col("b.ckey").as("id_b"), dist)
           .filter(col("dist") >= 0L)
         expandDocPairs(members, cp, Seq("dist"), Seq(lit(0L).as("dist")),
           mode, "editDistancePairs")
@@ -1471,12 +1455,12 @@ object Dedup {
   def jaroWinklerPairs(documents: DataFrame, prefixLen: Int = 64,
                        blockChars: Int = 8,
                        mode: PairMode = PairMode.Full): DataFrame = ScopedCache.scope {
+    val jw = round(graft.functions.StringSimilarity.jaro_winkler(col("a.p"), col("b.p")), 6)
+      .as("jw")
     mode match {
       case PairMode.Full =>
-        blockedPrefixPairs(documents, prefixLen, blockChars)
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            round(graft.functions.StringSimilarity.jaro_winkler(col("a.p"), col("b.p")), 6)
-              .as("jw"))
+        blockedJoin(blockedTable(documents, prefixLen, blockChars), "doc_id")
+          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"), jw)
       case _ =>
         // the intra payload is PER-CLUSTER, not a constant:
         // jw(p, p) = 1.0 exactly for non-empty p (m = |p|, t = 0 —
@@ -1488,10 +1472,8 @@ object Dedup {
         val (members0, clusters) = blockedClusterView(documents, prefixLen, blockChars)
         val members = members0.withColumn("ip",
           when(length(col("p")) === 0, lit(0.0)).otherwise(lit(1.0)))
-        val cp = blockedClusterPairs(clusters)
-          .select(col("a.ckey").as("ck_a"), col("b.ckey").as("ck_b"),
-            round(graft.functions.StringSimilarity.jaro_winkler(col("a.p"), col("b.p")), 6)
-              .as("jw"))
+        val cp = blockedJoin(clusters, "ckey")
+          .select(col("a.ckey").as("id_a"), col("b.ckey").as("id_b"), jw)
         expandDocPairs(members, cp, Seq("jw"), Seq(col("ma.ip").as("jw")),
           mode, "jaroWinklerPairs")
     }
@@ -1544,8 +1526,8 @@ object Dedup {
             .join(reps.toDF("set_a", "rep_a"), "set_a")
             .join(reps.toDF("set_b", "rep_b"), "set_b")
         }
-      pairs.select(least(col("rep_a"), col("rep_b")).as("rep_a"),
-                   greatest(col("rep_a"), col("rep_b")).as("rep_b"))
+      pairs.select(least(col("rep_a"), col("rep_b")).as("id_a"),
+                   greatest(col("rep_a"), col("rep_b")).as("id_b"))
     }
   }
 

@@ -135,14 +135,8 @@ object Similarity {
   }
 
   /** Sign-LSH bucket id from `nPlanes` hyperplanes (bucket = bit
-    * pattern of projection signs). */
-  def lshBucket(vec: Column, nPlanes: Int): Column = {
-    require(nPlanes >= 1 && nPlanes <= 63,
-      s"nPlanes must be in [1, 63] (bucket bits live in one long), got $nPlanes")
-    (0 until nPlanes).map { p =>
-      when(planeProjection(vec, p) > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
+    * pattern of projection signs): band 0 of [[lshBandBucket]]. */
+  def lshBucket(vec: Column, nPlanes: Int): Column = lshBandBucket(vec, 0, nPlanes)
 
   /** Multi-probe bucket list: the vector's own bucket first, then
     * `nProbes − 1` neighbors obtained by flipping the sign bit of the
@@ -180,13 +174,13 @@ object Similarity {
       })
   }
 
-  /** Sign-LSH bucket id for band `b` of a multi-band family: same
-    * integer mix as [[lshBucket]] but over plane indices
-    * `b·nPlanes … b·nPlanes+nPlanes−1`, so each band is an
+  /** Sign-LSH bucket id for band `b` of a multi-band family: plane
+    * indices `b·nPlanes … b·nPlanes+nPlanes−1`, so each band is an
     * independent set of hyperplanes. */
   def lshBandBucket(vec: Column, band: Int, nPlanes: Int): Column = {
     require(band >= 0 && nPlanes >= 1 && nPlanes <= 63,
-      s"need band >= 0 and nPlanes in [1, 63], got ($band, $nPlanes)")
+      s"need band >= 0 and nPlanes in [1, 63] (bucket bits live in one long), " +
+        s"got ($band, $nPlanes)")
     (0 until nPlanes).map { p =>
       when(planeProjection(vec, band * nPlanes + p) > 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
@@ -275,9 +269,9 @@ object Similarity {
     * far below all-pairs.
     *
     * Scale shape: the corpus is exploded ×nBands (a constant), each
-    * (band, bucket) group self-joins — a single shuffle on the
-    * composite key, never a cross join. The terminal
-    * `dropDuplicates` is bounded by the *output* pair count (a pair
+    * (band, bucket) group self-joins ([[Dedup.bandedPairs]]) — a
+    * single shuffle on the composite key, never a cross join. The
+    * terminal distinct is bounded by the *output* pair count (a pair
     * can match in ≤ nBands bands), not the candidate count, because
     * the threshold filter runs before it. Near-dup output is
     * linear-ish in corpus size by construction (few true near-dups),
@@ -289,7 +283,7 @@ object Similarity {
       ScopedCache.scope {
     requireBanding(threshold, nBands)
     mode match {
-      case PairMode.Full => bandedCosinePairs(embeddings, threshold, nPlanes, nBands)
+      case PairMode.Full => cosinePairs(embeddings, "vec_id", threshold, nPlanes, nBands)
       case _ =>
         // identical-vector clusters: byte-identical embeddings share
         // every band bucket, and any member pair's cosine equals the
@@ -323,10 +317,7 @@ object Similarity {
         }
         val members = e.join(reps.hint("shuffle_hash"), "embedding")
           .select(col("vec_id").as("doc_id"), col("rep_id").as("ckey"))
-        val cp = bandedCosinePairs(
-            reps.select(col("rep_id").as("vec_id"), col("embedding")),
-            threshold, nPlanes, nBands)
-          .select(col("id_a").as("ck_a"), col("id_b").as("ck_b"), col("sim"))
+        val cp = cosinePairs(reps, "rep_id", threshold, nPlanes, nBands)
         // ckey IS the rep id for this family — hand the rep frame to
         // the expansion so Star reuses the existing rep subtree
         // instead of re-aggregating the membership corpus-wide
@@ -346,27 +337,30 @@ object Similarity {
     require(threshold <= 1.0, s"cosine threshold above 1 excludes everything, got $threshold")
   }
 
-  /** The Full pair search ([[embeddingNearDupPairs]]'s historical
-    * body, bit-compatible): banded sign-LSH candidates, exact-cosine
-    * confirm, output-bounded distinct. */
-  private def bandedCosinePairs(embeddings: DataFrame, threshold: Double,
-                                nPlanes: Int, nBands: Int): DataFrame = {
-    val e = embeddings.select(col("vec_id"), col("embedding"),
-      norm2(col("embedding")).as("nrm"),
-      explode(array((0 until nBands).map(b =>
-        struct(lit(b).as("band"), lshBandBucket(col("embedding"), b, nPlanes).as("bkt"))): _*)).as("bb"))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("bb.band").as("band"), col("bb.bkt").as("bkt"))
-    val a = e.select(col("band"), col("bkt"), col("vec_id").as("id_a"),
-      col("embedding").as("vec_a"), col("nrm").as("nrm_a"))
-    val b = e.select(col("band"), col("bkt"), col("vec_id").as("id_b"),
-      col("embedding").as("vec_b"), col("nrm").as("nrm_b"))
-    a.join(b, Seq("band", "bkt")).filter(col("id_a") < col("id_b"))
-      .withColumn("sim", cosine(col("vec_a"), col("vec_b"), col("nrm_a"), col("nrm_b")))
-      .filter(simDefined(col("sim")) && col("sim") >= threshold)
-      .select("id_a", "id_b", "sim")
-      .dropDuplicates("id_a", "id_b")
-  }
+  /** `vecs` (carrying `embedding`) with its squared norm `nrm` and
+    * one row per sign-LSH band ([[Dedup.withBands]]) — the ONE banding
+    * of the cosine family, shared by the pair and component views.
+    * Each rep's vector and norm ride its band rows to the confirm. */
+  private def cosineBanded(vecs: DataFrame, nPlanes: Int, nBands: Int): DataFrame =
+    Dedup.withBands(vecs.withColumn("nrm", norm2(col("embedding"))),
+      (0 until nBands).map(b => lshBandBucket(col("embedding"), b, nPlanes)))
+
+  /** Exact cosine of a [[cosineBanded]] pair's x/y sides. */
+  private def bandSim: Column =
+    cosine(col("x.embedding"), col("y.embedding"), col("x.nrm"), col("y.nrm"))
+
+  /** The ONE cosine confirm of the pair and component views. */
+  private def cosineEdge(threshold: Double): Column =
+    simDefined(bandSim) && bandSim >= threshold
+
+  /** (id_a, id_b, sim): the cosine-confirmed banded pairs of `vecs`
+    * keyed by `id` ([[Dedup.bandedPairs]]) — the pair search of
+    * [[embeddingNearDupPairs]], over every vector (Full) or over the
+    * identical-vector reps. */
+  private def cosinePairs(vecs: DataFrame, id: String, threshold: Double,
+                          nPlanes: Int, nBands: Int): DataFrame =
+    Dedup.bandedPairs(cosineBanded(vecs.select(col(id), col("embedding")), nPlanes, nBands),
+      id, cosineEdge(threshold), bandSim.as("sim"))
 
   /** Uncentered second-moment (Gram) matrix of the embedding corpus:
     * G[i][j] = Σ_rows v[i]·v[j], upper triangle (i ≤ j) only. THE
@@ -625,12 +619,10 @@ object Similarity {
       .select(col("vec_id"), col("embedding"))
     // zero-norm reps are banded too (their sims drop at the confirm),
     // so the guard counts every pair the join evaluates
-    val sim = cosine(col("x.embedding"), col("y.embedding"), col("x.nrm"), col("y.nrm"))
     Dedup.bandedComponents(keyed,
       keyed.groupBy(col("embedding")).agg(min(col("vec_id")).as("rep_id")),
-      reps => Dedup.withBands(reps.withColumn("nrm", norm2(col("embedding"))),
-        (0 until nBands).map(b => lshBandBucket(col("embedding"), b, nPlanes))),
-      simDefined(sim) && sim >= threshold, maxCandidates, "embeddingComponents")
+      cosineBanded(_, nPlanes, nBands), cosineEdge(threshold), maxCandidates,
+      "embeddingComponents")
   }
 
   /** IVF (inverted-file) top-k: coarse-quantize the corpus into

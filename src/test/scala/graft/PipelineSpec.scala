@@ -56,6 +56,21 @@ class PipelineSpec extends SparkSpec {
     assert(second.count() == 0) // ON CONFLICT DO NOTHING semantics
   }
 
+  test("seededSample: exactly min(n, count) rows, same keys under any partitioning") {
+    val atom = graft.echem.Schemas.Atom(0.0, 0.0, 0.0, "V")
+    val slabs = (0 until 40).map(i => graft.echem.Schemas.Slab(f"mp-$i%03d", "t", 1.0,
+      Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0), Seq(0.0, 0.0, 1.0)),
+      Seq("V"), Seq(1), Seq(atom), Nil)).toDS()
+    for (n <- Seq(0, 1, 10, 40, 100)) {
+      def keys(parts: Int): Seq[String] =
+        Pipeline.seededSample(slabs.repartition(parts), n, seed = 20).collect().map(_.mpKey).toSeq
+      val one = keys(1)
+      assert(one.length == math.min(n, 40), s"n=$n")
+      assert(one.distinct.length == one.length, s"n=$n: duplicate rows")
+      assert(keys(7).sorted == one.sorted, s"n=$n: keys depend on the partitioning")
+    }
+  }
+
   test("ProcessRunner.BinaryExec pipes a real process with timeout") {
     val runs = Seq(ProcessRunner.Run("k1", "hello-deck")).toDS()
     val out = ProcessRunner.run(runs, ProcessRunner.BinaryExec(Seq("cat"), timeoutSec = 60))

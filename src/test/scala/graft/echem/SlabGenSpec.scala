@@ -2,6 +2,7 @@ package graft.echem
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.Dataset
 
 /** Miller-oriented slab geometry: golden comparison against a slab the
   * reference pipeline actually produced (pymatgen SlabGenerator,
@@ -227,6 +228,34 @@ class SlabGenSpec extends SparkSpec {
     // the polar V-O fixture NEEDS repair: at least one slab lost atoms
     assert(slabs.exists(_.positions.length < stackAtoms),
       "no slab was eroded — repair did nothing on a polar surface")
+  }
+
+  // ---- distributed fan-outs: each must equal the driver-side flatMap
+  // of its per-bulk cut, whatever the partitioning ----
+
+  private lazy val fanOutBulks = Seq("mp-755394", "mp-1393040").map(id => readSlab(s"$id.poscar"))
+  private val fanOutFacets = Seq("111", "100")
+
+  private def onExecutors(f: Dataset[Schemas.Slab] => Dataset[Schemas.Slab]): Seq[Schemas.Slab] = {
+    import spark.implicits._
+    f(fanOutBulks.toDS().repartition(2)).collect().toSeq.sortBy(_.mpKey)
+  }
+
+  test("generateTerminations equals the driver-side flatMap of cutTerminations") {
+    for (sym <- Seq(false, true)) {
+      val want = fanOutBulks.flatMap(b =>
+        fanOutFacets.flatMap(f => SlabGen.cutTerminations(b, f, sym))).sortBy(_.mpKey)
+      if (!sym) assert(want.nonEmpty, "the fixtures must yield terminations")
+      assert(onExecutors(SlabGen.generateTerminations(_, fanOutFacets, sym)) == want,
+        s"symmetricOnly=$sym")
+    }
+  }
+
+  test("generateSymmetrized equals the driver-side flatMap of cutSymmetrized") {
+    val want = fanOutBulks.flatMap(b =>
+      fanOutFacets.flatMap(f => SlabGen.cutSymmetrized(b, f))).sortBy(_.mpKey)
+    assert(want.nonEmpty)
+    assert(onExecutors(SlabGen.generateSymmetrized(_, fanOutFacets)) == want)
   }
 
   // ---- primitiveReduce (the reference's primitive=True flag) ----

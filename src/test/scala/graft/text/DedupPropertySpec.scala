@@ -679,6 +679,29 @@ class DedupPropertySpec extends SparkSpec {
     assert(got == expected)
   }
 
+  strictTest("simhashNearDupPairs == brute-force Hamming pairs (3 random corpora, h = 0..3)") {
+    // independent reference for the banded join: every doc pair whose
+    // fingerprints differ in <= h bits, found without any banding —
+    // the 4 x 8-bit bands must recall each of them exactly
+    var nonIdentical = 0
+    for (seed <- Seq(11, 12, 13)) {
+      val docs = corpus(seed, nDocs = 150, vocab = 15)
+      val fps = Dedup.simhash(spark, docs).collect().map(r => r.getLong(0) -> r.getLong(1))
+      for (h <- 0 to 3) {
+        val want = (for {
+          (a, fa) <- fps; (b, fb) <- fps if a < b
+          d = java.lang.Long.bitCount(fa ^ fb) if d <= h
+        } yield (a, b, d.toLong)).toSet
+        val got = Dedup.simhashNearDupPairs(spark, docs, maxHamming = h)
+          .select("doc_a", "doc_b", "hamming").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        assert(got == want, s"seed=$seed h=$h: got ${got.size} pairs, brute force ${want.size}")
+        nonIdentical += want.count(_._3 > 0)
+      }
+    }
+    assert(nonIdentical > 0, "the corpora must exercise non-identical fingerprint pairs")
+  }
+
   hygieneTest("invalid maxHamming fails fast with nothing left persisted") {
     val docs = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
     // the require must fire BEFORE register — an invalid argument
