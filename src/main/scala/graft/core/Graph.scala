@@ -17,6 +17,30 @@ import org.apache.spark.storage.StorageLevel
   */
 object Graph {
 
+  /** LongType id cast that NULLs — instead of truncating — a
+    * FRACTIONAL value: an id column stored as double/decimal with
+    * value 41.7 must fail the null validation loudly, not silently
+    * merge into node 41 and collapse two unrelated documents into
+    * one cluster. try_cast, not cast: under Spark 4's default ANSI
+    * mode a plain cast ABORTS the task on a non-numeric string or a
+    * NaN/Infinity/overflowing double (SparkNumberFormatException /
+    * SparkArithmeticException mid-job, skipping the designed loud
+    * badIds validation below and leaking the materialized RDD);
+    * try_cast nulls those rows so every malformed id reaches the one
+    * IllegalArgumentException with the fix-or-filter message.
+    * (Integral types cast exactly; ANSI's double→long cast truncates
+    * fractions LEGALLY, hence the round-trip compare — exact for
+    * |id| < 2^53, far past any real id space.) */
+  private def strictLongId(df: DataFrame, name: String): Column = {
+    val c = col(name)
+    df.schema(df.schema.fieldIndex(name)).dataType match {
+      case DoubleType | FloatType | (_: DecimalType) =>
+        when(c.try_cast(LongType).cast(DoubleType) === c.cast(DoubleType),
+          c.try_cast(LongType))
+      case _ => c.try_cast(LongType)
+    }
+  }
+
   /** Materialize an iteration result in ONE Spark job and RESET its
     * logical lineage, returning the frame, the checkpointed RDD
     * handle (so a later round can free its blocks), and the number of
@@ -49,30 +73,6 @@ object Graph {
     * to MEMORY_AND_DISK first so the checkpoint-write job reads the
     * cached blocks (no recompute — which would double-fire the delta
     * accumulator), then write to fault-tolerant storage. */
-  /** LongType id cast that NULLs — instead of truncating — a
-    * FRACTIONAL value: an id column stored as double/decimal with
-    * value 41.7 must fail the null validation loudly, not silently
-    * merge into node 41 and collapse two unrelated documents into
-    * one cluster. try_cast, not cast: under Spark 4's default ANSI
-    * mode a plain cast ABORTS the task on a non-numeric string or a
-    * NaN/Infinity/overflowing double (SparkNumberFormatException /
-    * SparkArithmeticException mid-job, skipping the designed loud
-    * badIds validation below and leaking the materialized RDD);
-    * try_cast nulls those rows so every malformed id reaches the one
-    * IllegalArgumentException with the fix-or-filter message.
-    * (Integral types cast exactly; ANSI's double→long cast truncates
-    * fractions LEGALLY, hence the round-trip compare — exact for
-    * |id| < 2^53, far past any real id space.) */
-  private def strictLongId(df: DataFrame, name: String): Column = {
-    val c = col(name)
-    df.schema(df.schema.fieldIndex(name)).dataType match {
-      case DoubleType | FloatType | (_: DecimalType) =>
-        when(c.try_cast(LongType).cast(DoubleType) === c.cast(DoubleType),
-          c.try_cast(LongType))
-      case _ => c.try_cast(LongType)
-    }
-  }
-
   private def materializeCount(df: DataFrame, deltaWhen: Row => Boolean,
                                reliableDir: Option[String])
       : (DataFrame, RDD[Row], Long, Long) = {
@@ -127,6 +127,32 @@ object Graph {
     }
   }
 
+  /** Broadcast cap for [[componentJoinSide]] (rows, not bytes — a
+    * LocalRelation row here is exactly two longs). The broadcast
+    * hint BYPASSES autoBroadcastJoinThreshold, so without a cap a
+    * caller that raises `localSolveMaxEdges` (the only way the
+    * LocalRelation grows) would force an unbounded broadcast of up
+    * to 2×gate node rows into every executor. 4M rows ≈ ~200 MB as
+    * a built hash relation — comfortably inside executor memory;
+    * the default gate (1M edges → ≤2M rows) always broadcasts. */
+  val ComponentBroadcastMaxRows: Int = 4000000
+
+  /** The member-join side for a component map returned by
+    * [[connectedComponents]] — the hint follows the regime CC already
+    * decided. The LOCAL-SOLVE regime returns a LocalRelation whose
+    * size is exactly known and gate-bounded (≤ 2·localSolveMaxEdges
+    * node rows): broadcast it, so the member join runs exchange-free
+    * on the (corpus-sized) member side. The DISTRIBUTED regime's
+    * iterative closure is stat-less: pin shuffled-hash so the join
+    * never falls back to a sort-merge (no sort, streamed probe). */
+  def componentJoinSide(comp: DataFrame): DataFrame =
+    comp.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if lr.data.length <= ComponentBroadcastMaxRows =>
+        broadcast(comp)
+      case _ => comp.hint("shuffle_hash")
+    }
+
   /** Connected components by min-label propagation with pointer
     * jumping: (node, component) where `component` is the smallest
     * node id reachable from `node`.
@@ -169,8 +195,9 @@ object Graph {
     * Storage hygiene: each round unpersists the previous round's
     * checkpoint blocks once the new round is materialized, and the
     * edge list is released on exit; only the returned label table
-    * stays cached for the caller to consume. */
-  /** @param localSolveMaxEdges size gate for the driver-side solve:
+    * stays cached for the caller to consume.
+    *
+    * @param localSolveMaxEdges size gate for the driver-side solve:
     *        once the (deduplicated) edge count is at or under it, the
     *        component search runs as union-find on the driver instead
     *        of the iterative join loop. This is the graph analogue of
@@ -184,8 +211,9 @@ object Graph {
     *        force the distributed path. The near-dup inputs are
     *        rep-collapsed before they get here, but a 100 TB corpus
     *        can still exceed any driver — the iterative path is the
-    *        scale path, the gate only short-circuits the tail. */
-  /** @param reliableCheckpointDir fault-tolerant checkpoint root for
+    *        scale path, the gate only short-circuits the tail.
+    *
+    * @param reliableCheckpointDir fault-tolerant checkpoint root for
     *        the per-round materializations. None (default) uses
     *        `localCheckpoint` — fastest, right for interactive jobs;
     *        a long-lived pipeline stage passes a durable path (HDFS/
@@ -197,32 +225,6 @@ object Graph {
     *        checkpoints its own RDDs elsewhere, or runs concurrent
     *        graph ops with different dirs, must coordinate (use one
     *        shared root). */
-  /** The member-join side for a component map returned by
-    * [[connectedComponents]] — the hint follows the regime CC already
-    * decided. The LOCAL-SOLVE regime returns a LocalRelation whose
-    * size is exactly known and gate-bounded (≤ 2·localSolveMaxEdges
-    * node rows): broadcast it, so the member join runs exchange-free
-    * on the (corpus-sized) member side. The DISTRIBUTED regime's
-    * iterative closure is stat-less: pin shuffled-hash so the join
-    * never falls back to a sort-merge (no sort, streamed probe). */
-  /** Broadcast cap for [[componentJoinSide]] (rows, not bytes — a
-    * LocalRelation row here is exactly two longs). The broadcast
-    * hint BYPASSES autoBroadcastJoinThreshold, so without a cap a
-    * caller that raises `localSolveMaxEdges` (the only way the
-    * LocalRelation grows) would force an unbounded broadcast of up
-    * to 2×gate node rows into every executor. 4M rows ≈ ~200 MB as
-    * a built hash relation — comfortably inside executor memory;
-    * the default gate (1M edges → ≤2M rows) always broadcasts. */
-  val ComponentBroadcastMaxRows: Int = 4000000
-
-  def componentJoinSide(comp: DataFrame): DataFrame =
-    comp.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if lr.data.length <= ComponentBroadcastMaxRows =>
-        broadcast(comp)
-      case _ => comp.hint("shuffle_hash")
-    }
-
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 50,
                           localSolveMaxEdges: Long = 1000000L,

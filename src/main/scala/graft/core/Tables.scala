@@ -51,6 +51,59 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     cached(spark, dir, name)(spark.read.parquet(s"$dir/$name.parquet"))
 
+  /** Spread target derived from INPUT SIZE, capped at the cluster
+    * parallelism (r16, guide §2.2/§2.5): an unconditional
+    * `defaultParallelism` target made every KB-sized local scan fan
+    * out to 32 map partitions, and each downstream exchange then paid
+    * the per-(map task × reduce partition) shuffle-stream setup —
+    * measured ~5 ms CPU per stream on this box, i.e. ~5 s of pure
+    * stream-setup CPU across a dedup query's ~10 shuffles at 32×32
+    * (the whole "components family anti-scales 8→32 cores" anomaly in
+    * PERF_r15: cores were never the problem, M×R block count was; at
+    * a fixed partition count 32 cores ≥ 8 cores on every family
+    * query). Deriving M from scan bytes keeps the fold parallel
+    * enough to matter while bounding stream-setup waste; at cluster
+    * scale `bytes/minBytesPerTask` exceeds any parallelism and the
+    * cap returns exactly the old behavior, so this is scale-inert.
+    * The bytes-per-task floor is PER TABLE, because what the spread
+    * parallelizes is per-ROW compute and rows-per-byte differ by an
+    * order of magnitude between the two spread tables: a documents
+    * row is ~120 B of text whose fold cost amortizes ~256 KiB/task
+    * (measured best across 1 B–256 KiB on the 9-query dedup family,
+    * −25 to −53% vs the old unconditional fan-out), while an
+    * embeddings row is ~400 B of dense doubles whose distance
+    * kernels are CPU-bound enough that q_embed_neardup LOSES 15–70%
+    * below ~32 map partitions — so embeddings keep a floor small
+    * enough to reproduce the old full fan-out at bench scale.
+    * `spark.graft.spread.minBytesPerTask` overrides both (probe
+    * knob / denser deployments). One entry per spread table: its
+    * unique id column (the hash-spread key) and its floor. */
+  private val spreadSpec =
+    Map("documents" -> ("doc_id", 262144L), "embeddings" -> ("vec_id", 16384L))
+
+  /** Hash-repartition on the table's unique id, NOT round-robin
+    * `repartition(n)` (r15): a keyless repartition pays a LOCAL SORT
+    * of its whole input inside the (single) scan task
+    * (`spark.sql.execution.sortBeforeRepartition`, on by default so
+    * retried tasks reproduce their row→partition assignment), i.e. a
+    * serial corpus sort per spread consumer. Hashing the unique id is
+    * retry-deterministic BY CONSTRUCTION — the guide's recommended
+    * form for synthetic spread keys — spreads evenly (ids are
+    * unique), and skips the sort entirely: measured 5 × solo at
+    * sf0.1/local[32], repartition(32) 218–248 ms vs
+    * repartition(32, id) 152–194 ms on the same count, ≈ −50 ms per
+    * consuming query. */
+  private def spread(df: DataFrame, idCol: String, minBytesPerTask: Long): DataFrame = {
+    val spark = df.sparkSession
+    val max = spark.sparkContext.defaultParallelism.toLong
+    val perTask = spark.conf.getOption("spark.graft.spread.minBytesPerTask")
+      .map(_.toLong).getOrElse(minBytesPerTask)
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val target = ((bytes + perTask - 1) / perTask)
+      .min(BigInt(max)).max(BigInt(1)).toInt
+    if (df.rdd.getNumPartitions < target) df.repartition(target, col(idCol)) else df
+  }
+
   /** Small-scan parallelizer for the FACT tables, self-disabling at
     * scale. The driver testdata ships each table as ONE parquet file
     * with ONE row group; parquet row groups are the split unit, so
@@ -96,59 +149,6 @@ object Tables {
     * q_simhash 1.41×, q_incremental_dedup 1.20×, q_jaccard_clusters
     * 1.34×, q_embed_components 1.11× WITH spread) — tiny inputs
     * amortize an exchange worse than they amortize a 1-core scan. */
-  /** Hash-repartition on the table's unique id, NOT round-robin
-    * `repartition(n)` (r15): a keyless repartition pays a LOCAL SORT
-    * of its whole input inside the (single) scan task
-    * (`spark.sql.execution.sortBeforeRepartition`, on by default so
-    * retried tasks reproduce their row→partition assignment), i.e. a
-    * serial corpus sort per spread consumer. Hashing the unique id is
-    * retry-deterministic BY CONSTRUCTION — the guide's recommended
-    * form for synthetic spread keys — spreads evenly (ids are
-    * unique), and skips the sort entirely: measured 5 × solo at
-    * sf0.1/local[32], repartition(32) 218–248 ms vs
-    * repartition(32, id) 152–194 ms on the same count, ≈ −50 ms per
-    * consuming query. */
-  /** Spread target derived from INPUT SIZE, capped at the cluster
-    * parallelism (r16, guide §2.2/§2.5): an unconditional
-    * `defaultParallelism` target made every KB-sized local scan fan
-    * out to 32 map partitions, and each downstream exchange then paid
-    * the per-(map task × reduce partition) shuffle-stream setup —
-    * measured ~5 ms CPU per stream on this box, i.e. ~5 s of pure
-    * stream-setup CPU across a dedup query's ~10 shuffles at 32×32
-    * (the whole "components family anti-scales 8→32 cores" anomaly in
-    * PERF_r15: cores were never the problem, M×R block count was; at
-    * a fixed partition count 32 cores ≥ 8 cores on every family
-    * query). Deriving M from scan bytes keeps the fold parallel
-    * enough to matter while bounding stream-setup waste; at cluster
-    * scale `bytes/minBytesPerTask` exceeds any parallelism and the
-    * cap returns exactly the old behavior, so this is scale-inert.
-    * The bytes-per-task floor is PER TABLE, because what the spread
-    * parallelizes is per-ROW compute and rows-per-byte differ by an
-    * order of magnitude between the two spread tables: a documents
-    * row is ~120 B of text whose fold cost amortizes ~256 KiB/task
-    * (measured best across 1 B–256 KiB on the 9-query dedup family,
-    * −25 to −53% vs the old unconditional fan-out), while an
-    * embeddings row is ~400 B of dense doubles whose distance
-    * kernels are CPU-bound enough that q_embed_neardup LOSES 15–70%
-    * below ~32 map partitions — so embeddings keep a floor small
-    * enough to reproduce the old full fan-out at bench scale.
-    * `spark.graft.spread.minBytesPerTask` overrides both (probe
-    * knob / denser deployments). One entry per spread table: its
-    * unique id column (the hash-spread key) and its floor. */
-  private val spreadSpec =
-    Map("documents" -> ("doc_id", 262144L), "embeddings" -> ("vec_id", 16384L))
-
-  private def spread(df: DataFrame, idCol: String, minBytesPerTask: Long): DataFrame = {
-    val spark = df.sparkSession
-    val max = spark.sparkContext.defaultParallelism.toLong
-    val perTask = spark.conf.getOption("spark.graft.spread.minBytesPerTask")
-      .map(_.toLong).getOrElse(minBytesPerTask)
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = ((bytes + perTask - 1) / perTask)
-      .min(BigInt(max)).max(BigInt(1)).toInt
-    if (df.rdd.getNumPartitions < target) df.repartition(target, col(idCol)) else df
-  }
-
   private def spreadTable(spark: SparkSession, dir: String, name: String): DataFrame = {
     val (idCol, minBytesPerTask) = spreadSpec.getOrElse(name,
       sys.error(s"no spread id column registered for table '$name' — " +

@@ -456,19 +456,6 @@ object Validate {
     ksAgainstReference(winCounts, refDense, nBins)
   }
 
-  /** Shared first-half/second-half equi-width binning behind
-    * [[psiDrift]] and [[ksDrift]]: split rows at the LONG-exact
-    * midpoint of the timestamp range, bin values into `nBins`
-    * fixed-width buckets over the global value range, and return
-    * the DENSE (group × bin) count scaffold — (grp, bin, a, b,
-    * n_first, m_second) with every bin present (empty bins matter:
-    * PSI smooths them, KS's cumulative gap must step past them).
-    *
-    * Scale shape: one narrow pass for the 3 global scalars
-    * (broadcast back), one partial-agg shuffle on (group, bin), and
-    * a |groups|·nBins scaffold from the group totals — no windows
-    * over data rows, no self-joins, post-shuffle size independent
-    * of table size. */
   /** Working/output column names the drift family mints ALONGSIDE
     * the re-aliased group column. A groupCol with one of these names
     * would coexist with the internal column of the same name in one
@@ -514,6 +501,19 @@ object Validate {
       .na.fill(0L, valueTotals.map(_._1))
   }
 
+  /** Shared first-half/second-half equi-width binning behind
+    * [[psiDrift]] and [[ksDrift]]: split rows at the LONG-exact
+    * midpoint of the timestamp range, bin values into `nBins`
+    * fixed-width buckets over the global value range, and return
+    * the DENSE (group × bin) count scaffold — (grp, bin, a, b,
+    * n_first, m_second) with every bin present (empty bins matter:
+    * PSI smooths them, KS's cumulative gap must step past them).
+    *
+    * Scale shape: one narrow pass for the 3 global scalars
+    * (broadcast back), one partial-agg shuffle on (group, bin), and
+    * a |groups|·nBins scaffold from the group totals — no windows
+    * over data rows, no self-joins, post-shuffle size independent
+    * of table size. */
   private def halfSplitBinCounts(df0: DataFrame, groupCol: String,
                                  valueCol: String, tsUsCol: String,
                                  nBins: Int): DataFrame = {

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetBridge
 
 /** Physical-layout helpers for the 100 TB design point (SCALING.md):
   * bucketing for exchange-free co-located joins, salting for skewed
@@ -207,17 +208,6 @@ object Warehouse {
       s"zone-map commit conflict under $dir: snapshot was v$expected " +
         s"but _current is now v$found — re-read and retry the merge")
 
-  /** Compare-and-swap commit of a STAGED manifest dir: under an
-    * exclusive `_commit.lock` file lock (advisory, works across
-    * JVMs on a shared filesystem — the local stand-in for a catalog
-    * service's conditional swap), verify `_current` still names the
-    * version the merge planned against, claim the next version
-    * number by renaming the staging dir to `v{expected+1}`, and move
-    * the pointer. Two concurrent merges from the same snapshot thus
-    * serialize: the first commits, the second observes the moved
-    * pointer and throws [[ZoneMapConflictException]] instead of
-    * silently last-write-winning a version whose manifest resurrects
-    * files the winner deleted. Returns the committed version. */
   /** Per-table JVM-level monitors: java.nio file locks are held
     * per-JVM, so two threads of the SAME driver attempting the file
     * lock concurrently would throw OverlappingFileLockException — an
@@ -239,6 +229,17 @@ object Warehouse {
     try f.getCanonicalPath catch { case _: java.io.IOException => f.getAbsolutePath }
   }
 
+  /** Compare-and-swap commit of a STAGED manifest dir: under an
+    * exclusive `_commit.lock` file lock (advisory, works across
+    * JVMs on a shared filesystem — the local stand-in for a catalog
+    * service's conditional swap), verify `_current` still names the
+    * version the merge planned against, claim the next version
+    * number by renaming the staging dir to `v{expected+1}`, and move
+    * the pointer. Two concurrent merges from the same snapshot thus
+    * serialize: the first commits, the second observes the moved
+    * pointer and throws [[ZoneMapConflictException]] instead of
+    * silently last-write-winning a version whose manifest resurrects
+    * files the winner deleted. Returns the committed version. */
   private def commitStagedZoneMapVersion(dir: String, expected: Int,
                                          staged: java.io.File): Int =
     commitMonitors.computeIfAbsent(canonicalKey(dir), _ => new Object).synchronized {
@@ -273,12 +274,23 @@ object Warehouse {
   }
 
   /** The manifest rows (file, mn, mx, n_rows) of the committed
-    * `versions` — the one reader of `_zonemap_history`. */
+    * `versions` — the one reader of `_zonemap_history`. A manifest is
+    * file-count-sized, so its parts are read on the driver into a
+    * local relation ([[ParquetBridge.readLocal]]): the read runs no
+    * Spark job, and filters and collects over it fold on the driver.
+    * The frame is a snapshot — later commits and cleanups cannot
+    * change it. A missing version dir, like a part deleted mid-read,
+    * throws `FileNotFoundException`: the shape a concurrent merge's
+    * cleanup leaves behind. */
   private def manifest(spark: SparkSession, dir: String, versions: Seq[Int]): DataFrame =
-    spark.read.parquet(versions.map(v => s"$dir/_zonemap_history/v$v"): _*)
+    ParquetBridge.readLocal(spark, versions.flatMap { v =>
+      val d = new java.io.File(dir, s"_zonemap_history/v$v")
+      if (!d.isDirectory) throw new java.io.FileNotFoundException(s"no manifest dir $d")
+      parquetParts(d)
+    })
 
   /** The live manifest: per-file (file, mn, mx, n_rows), resolved
-    * through the `_current` pointer. */
+    * through the `_current` pointer and read on the driver. */
   def zoneMapManifest(spark: SparkSession, dir: String): DataFrame =
     manifest(spark, dir, Seq(zoneMapCurrentVersion(dir)))
 
@@ -296,14 +308,21 @@ object Warehouse {
     * a space/%/# names a nonexistent literal path. */
   private def fileOf(uri: String): java.io.File = new java.io.File(new java.net.URI(uri))
 
-  /** Read a manifest's file set. An empty set — a pruned read no zone
-    * matches, or a table written from an empty frame — still carries
-    * the table's schema: it reads `data/` (which keeps its zero-row
-    * schema part, see [[vacuumZoneMapped]]) with every row filtered
-    * away, a plan that runs no job. */
-  private def readFiles(spark: SparkSession, dir: String, uris: Seq[String]): DataFrame =
-    if (uris.isEmpty) spark.read.parquet(s"$dir/data").filter(lit(false))
-    else spark.read.parquet(uris.map(fileOf(_).getPath): _*)
+  /** Read a manifest's file set under the schema Spark's inference
+    * would give it, taken from one footer on the driver
+    * ([[ParquetBridge.footerSchema]]) — inference itself is a job per
+    * read. An empty set — a pruned read no zone matches, or a table
+    * written from an empty frame — is an empty local relation under
+    * the footer schema of a `data/` part (which keeps its zero-row
+    * schema part, see [[vacuumZoneMapped]]): a plan that runs no job. */
+  private def readFiles(spark: SparkSession, dir: String, uris: Seq[String]): DataFrame = {
+    val files = uris.map(fileOf)
+    val schema = ParquetBridge.footerSchema(spark,
+      files.headOption.orElse(parquetParts(new java.io.File(dir, "data")).headOption)
+        .getOrElse(throw new java.io.FileNotFoundException(s"no parquet part under $dir/data")))
+    if (files.isEmpty) ParquetBridge.ofLocalRelation(spark, schema, Nil)
+    else spark.read.schema(schema).parquet(files.map(_.getPath): _*)
+  }
 
   /** The parquet part files directly under `dir`, absolute, by name.
     * java.io like the rest of the table: `_current`, `_commit.lock`,
@@ -649,35 +668,30 @@ object Warehouse {
         "REPLACE-by-key has no defined survivor for an intra-batch duplicate; " +
         s"collapse the batch first, e.g. updates.dropDuplicates(\"$statCol\")")
     val curVersion = zoneMapCurrentVersion(dir)
-    // any Spark failure below, when the table version has moved
+    // any read failure below, when the table version has moved
     // meanwhile, IS a concurrency casualty (the winner deleted files
     // this merge's plans referenced) — classify it as the documented
-    // retryable conflict instead of leaking the raw error. Both
-    // runtime (SparkException: FAILED_READ_FILE) and plan-time
+    // retryable conflict instead of leaking the raw error. Runtime
+    // (SparkException: FAILED_READ_FILE), plan-time
     // (AnalysisException: PATH_NOT_FOUND when a whole touched file
-    // vanished before the read was even planned) shapes occur.
+    // vanished before the read was even planned) and driver-side
+    // (IOException: a manifest or footer gone mid-read) shapes occur.
     def classifyConflict[A](body: => A): A =
       try body catch {
         case e @ (_: org.apache.spark.SparkException |
-                  _: org.apache.spark.sql.AnalysisException) =>
+                  _: org.apache.spark.sql.AnalysisException |
+                  _: java.io.IOException) =>
           val now = try zoneMapCurrentVersion(dir) catch { case _: Exception => -1 }
           if (now != curVersion) throw new ZoneMapConflictException(dir, curVersion, now)
           else throw e
       }
-    // SNAPSHOT the manifest eagerly (it is file-count-sized metadata
-    // by design): the merge body references it twice, and a lazy plan
-    // re-reading the versioned manifest files mid-merge races a
-    // concurrent winner's post-commit cleanup — FAILED_READ_FILE
-    // instead of the documented conflict. One consistent snapshot
-    // also pins `touched` and the staged manifest to the SAME
-    // version the CAS below verifies. The collect itself races the
-    // same cleanup (the winner may drop _zonemap_history/v{cur}
-    // mid-read), so it runs classified too.
-    val man = classifyConflict {
-      val manPlan = zoneMapManifest(spark, dir)
-      spark.createDataFrame(
-        java.util.Arrays.asList(manPlan.collect(): _*), manPlan.schema)
-    }
+    // the manifest of the version this merge planned against, read
+    // once on the driver: a snapshot, so the two uses below cannot
+    // race a concurrent winner's post-commit cleanup, and `touched`
+    // and the staged manifest are pinned to the version the CAS
+    // verifies. The read itself races that cleanup (the winner may
+    // drop _zonemap_history/v{cur} mid-read), so it runs classified.
+    val man = classifyConflict(manifest(spark, dir, Seq(curVersion)))
     val before = filesIn(man)
     if (nUpd == 0L) return (0, before.size)
     classifyConflict {

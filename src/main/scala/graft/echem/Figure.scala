@@ -41,14 +41,6 @@ object Figure {
   private def esc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
-  /** σₑ-vs-φ figure for one material.
-    *
-    * @param title       material key (the reference's filename title)
-    * @param points      (pot, rhoe) series, any order; ≥ 2 distinct pots
-    * @param pzc         annotated PZC, V vs SHE
-    * @param capacitance annotated + drawn fit slope, µF/cm²
-    * @return complete standalone SVG document
-    */
   /** Shared scale/tick layout — ONE source of geometry for the SVG
     * and PNG twins. */
   private final case class Layout(xLo: Double, xHi: Double, yLo: Double, yHi: Double,
@@ -109,6 +101,14 @@ object Figure {
     Layout(xLo, xHi, yLo, yHi, b, xT, yT, tickDigits(xT), tickDigits(yT))
   }
 
+  /** σₑ-vs-φ figure for one material.
+    *
+    * @param title       material key (the reference's filename title)
+    * @param points      (pot, rhoe) series, any order; ≥ 2 distinct pots
+    * @param pzc         annotated PZC, V vs SHE
+    * @param capacitance annotated + drawn fit slope, µF/cm²
+    * @return complete standalone SVG document
+    */
   def echemSvg(title: String, points: Seq[(Double, Double)],
                pzc: Double, capacitance: Double): String = {
     val l = layoutOf(points, capacitance)

@@ -527,8 +527,9 @@ object StreamingOps {
     * entirely in the stores (no Spark streaming state), so the query
     * restarts cold for free. The exact-hash in-flight complement is
     * [[dedupStream]]; this screen catches the NEAR-duplicates that
-    * content hashing cannot. */
-  /** @param mode pair-emission contract for the screen (see
+    * content hashing cannot.
+    *
+    * @param mode pair-emission contract for the screen (see
     *        [[graft.text.Dedup.incrementalLshPairsAgainstStoreSigs]]):
     *        [[graft.text.PairMode.Star]] makes a batch that hits one
     *        colossal stored cluster emit O(fresh) edges (each to the

@@ -203,26 +203,6 @@ object Dedup {
       .select(col("doc_id"), posexplode(col("mhs")))
       .select(col("doc_id"), col("pos").cast(LongType).as("hid"), col("col").as("mh"))
 
-  /** LSH banding over the signatures (bands of 4 → collision prob
-    * ≈ J⁴ per band) + same-bucket collision → candidate near-dup
-    * pairs.
-    *
-    * Scale structure — a naive per-(doc, band) self-join is
-    * catastrophic on duplicate-heavy corpora: documents with the
-    * SAME full signature collide in every band, so each such pair is
-    * produced `bands` times and a giant distinct has to un-duplicate
-    * a quadratic blow-up. Instead:
-    *
-    *  1. collapse documents to their full-signature cluster
-    *     (`sig_key` = md5 of all 16 minhashes — exact-duplicate sets
-    *     share it),
-    *  2. band-join only the DISTINCT signatures (buckets shrink from
-    *     cluster size to 1),
-    *  3. expand: intra-cluster pairs via one self-join on `sig_key`,
-    *     cross-cluster pairs via the deduped signature-pair list.
-    *
-    * Each candidate pair is emitted exactly once — no distinct over
-    * the expansion. Output is identical to the naive banding. */
   /** (doc_id, mhs, sig_key): every document keyed by its FULL MinHash
     * signature — exact-duplicate sets share a `sig_key`. Internal
     * keys are xxhash64 (8-byte join/shuffle keys, not 32-char md5
@@ -408,8 +388,9 @@ object Dedup {
   /** [[incrementalLshPairsAgainstStore]] with the fresh side already
     * signature-folded — the streaming screen persists ONE signature
     * frame per micro-batch and derives screen + band-store + members
-    * from it (three actions, one tokenize+hash pass). */
-  /** @param mode pair-emission contract for the ADMISSION decision
+    * from it (three actions, one tokenize+hash pass).
+    *
+    * @param mode pair-emission contract for the ADMISSION decision
     *        (the 100-TB blind-caller site the batch families' guard
     *        exists for: ONE colossal corpus-side cluster turns a
     *        small fresh batch into fresh×|cluster| pairs at admit
@@ -557,8 +538,9 @@ object Dedup {
     * key), and a sort-merge plan buffers every matched group —
     * observed as multi-10s spill stalls when the planner drifts
     * there. A hash build streams the fan-out, and unlike broadcast
-    * it also holds at corpus scale. */
-  /** `intraPayload` columns may reference member attributes through
+    * it also holds at corpus scale.
+    *
+    * `intraPayload` columns may reference member attributes through
     * the `ma` alias (e.g. `col("ma.ip")` for a per-cluster payload
     * carried on the members frame — the jaro-winkler empty-prefix
     * case); every intra branch binds the members side as `ma`.
@@ -645,6 +627,26 @@ object Dedup {
     }
   }
 
+  /** LSH banding over the signatures (bands of 4 → collision prob
+    * ≈ J⁴ per band) + same-bucket collision → candidate near-dup
+    * pairs.
+    *
+    * Scale structure — a naive per-(doc, band) self-join is
+    * catastrophic on duplicate-heavy corpora: documents with the
+    * SAME full signature collide in every band, so each such pair is
+    * produced `bands` times and a giant distinct has to un-duplicate
+    * a quadratic blow-up. Instead:
+    *
+    *  1. collapse documents to their full-signature cluster
+    *     (`sig_key` = md5 of all 16 minhashes — exact-duplicate sets
+    *     share it),
+    *  2. band-join only the DISTINCT signatures (buckets shrink from
+    *     cluster size to 1),
+    *  3. expand: intra-cluster pairs via one self-join on `sig_key`,
+    *     cross-cluster pairs via the deduped signature-pair list.
+    *
+    * Each candidate pair is emitted exactly once — no distinct over
+    * the expansion. Output is identical to the naive banding. */
   def minhashLshPairs(spark: SparkSession, documents: DataFrame, rowsPerBand: Int = 4,
                       mode: PairMode = PairMode.Full): DataFrame = ScopedCache.scope {
     // NOT cached in the one-action modes: all references live in ONE
@@ -686,8 +688,9 @@ object Dedup {
     * identical signatures collapse to their min-doc rep before the
     * graph exists, the 16-int signature rides each band row so the
     * agreement confirm evaluates in the join output, and members
-    * rejoin their rep's component. */
-  /** @param maxCandidates optional budget on the internal banded
+    * rejoin their rep's component.
+    *
+    * @param maxCandidates optional budget on the internal banded
     *        candidate join (Σ_bucket n·(n−1)/2 over distinct
     *        signatures — see [[guardCandidates]]); breach throws
     *        [[CandidateBudgetExceededException]] before the join
@@ -718,17 +721,6 @@ object Dedup {
       "minhashComponents")
   }
 
-  /** Contamination screen: which corpus documents share word n-grams
-    * with a probe set (benchmark/eval texts) — the decontamination
-    * step of a training-data pipeline. Returns (doc_id, probe_id,
-    * n_shared) = count of DISTINCT n-grams in common, for pairs
-    * sharing at least one.
-    *
-    * Scale shape: both sides explode to distinct (id, gram) rows; the
-    * probe side is a benchmark — small by nature — so it broadcasts
-    * and the corpus never shuffles; the per-pair count is a
-    * partial-aggregable groupBy bounded by |docs| × |probes|. A
-    * corpus-sized probe set degrades to one hash join on the gram. */
   /** (id, gram) rows of the DISTINCT word n-grams of each document —
     * the ONE gram extractor of the whole decontamination family.
     * [[contamination]], [[bloomContamination]], [[probeSketch]] and
@@ -749,6 +741,17 @@ object Dedup {
       .toDF(idCol, "gram")
   }
 
+  /** Contamination screen: which corpus documents share word n-grams
+    * with a probe set (benchmark/eval texts) — the decontamination
+    * step of a training-data pipeline. Returns (doc_id, probe_id,
+    * n_shared) = count of DISTINCT n-grams in common, for pairs
+    * sharing at least one.
+    *
+    * Scale shape: both sides explode to distinct (id, gram) rows; the
+    * probe side is a benchmark — small by nature — so it broadcasts
+    * and the corpus never shuffles; the per-pair count is a
+    * partial-aggregable groupBy bounded by |docs| × |probes|. A
+    * corpus-sized probe set degrades to one hash join on the gram. */
   def contamination(documents: DataFrame, probes: DataFrame, ngram: Int = 3): DataFrame = {
     docGrams(documents, "doc_id", ngram)
       .join(broadcast(docGrams(probes, "probe_id", ngram)), "gram")
@@ -1008,8 +1011,9 @@ object Dedup {
     * Scale shape: [[bandedComponents]] over the distinct fingerprints
     * — a colossal exact-dup cluster is ONE vertex, the component
     * search runs on the distinct-fingerprint graph, and members join
-    * their rep's component back. */
-  /** @param maxCandidates optional budget on the internal banded
+    * their rep's component back.
+    *
+    * @param maxCandidates optional budget on the internal banded
     *        candidate join (Σ_bucket n·(n−1)/2 over distinct
     *        fingerprints — [[guardCandidates]]); breach throws
     *        [[CandidateBudgetExceededException]] before the join
@@ -1026,22 +1030,6 @@ object Dedup {
       simhashBanded, withinHamming(maxHamming), maxCandidates, "simhashComponents")
   }
 
-  /** Blocked n-gram Jaccard near-dup pairs: block on
-    * (lang, n_chars div 64), exact Jaccard over distinct token sets,
-    * keep pairs ≥ threshold. Blocking keys bound the quadratic term;
-    * at scale, block width trades recall for cost (near-dups of very
-    * different length are missed — by design, mirroring
-    * length-bucketed MinHash practice).
-    *
-    * Computed as a token co-count join, not per-pair array set ops:
-    * |A∩B| falls out of a (block, token) equi-join + count, and
-    * |A∪B| = |A| + |B| − |A∩B|. Everything is codegen'd
-    * join/aggregate — no per-pair hash-set building — and the
-    * intermediate is bounded by Σ_token df(token)² within each
-    * block, the standard sparse-similarity-join shape. Pairs with
-    * zero common tokens never materialize (they cannot pass any
-    * threshold > 0).
-    */
   /** (doc_id, lang, bkt, toks): blocked, SORTED-ASCENDING-distinct
     * token/shingle CODE sets (`array<bigint>`,
     * [[TextOps.tokenHash64Of]]). Tokenize + shingle + hash + distinct
@@ -1319,7 +1307,22 @@ object Dedup {
       .dropDuplicates("set_a", "set_b")
   }
 
-  /** Near-duplicate document pairs above a Jaccard threshold. */
+  /** Blocked n-gram Jaccard near-dup pairs: block on
+    * (lang, n_chars div 64), exact Jaccard over distinct token sets,
+    * keep pairs ≥ threshold. Blocking keys bound the quadratic term;
+    * at scale, block width trades recall for cost (near-dups of very
+    * different length are missed — by design, mirroring
+    * length-bucketed MinHash practice).
+    *
+    * Computed as a token co-count join, not per-pair array set ops:
+    * |A∩B| falls out of a (block, token) equi-join + count, and
+    * |A∪B| = |A| + |B| − |A∩B|. Everything is codegen'd
+    * join/aggregate — no per-pair hash-set building — and the
+    * intermediate is bounded by Σ_token df(token)² within each
+    * block, the standard sparse-similarity-join shape. Pairs with
+    * zero common tokens never materialize (they cannot pass any
+    * threshold > 0).
+    */
   def jaccardNearDupPairs(documents: DataFrame, threshold: Double, ngram: Int = 1,
                           mode: PairMode = PairMode.Full): DataFrame = ScopedCache.scope {
     requireThreshold(threshold)
@@ -1493,8 +1496,9 @@ object Dedup {
     * search over the rep graph only. The prefix plan fetches the token
     * arrays onto the candidate stream AFTER the candidate join (the
     * carried payload would be O(|S|) per prefix row), so this family
-    * shares only that second half of [[bandedComponents]]. */
-  /** @param maxCandidates optional budget on the internal candidate
+    * shares only that second half of [[bandedComponents]].
+    *
+    * @param maxCandidates optional budget on the internal candidate
     *        join's matched-pair volume ([[guardCandidates]]: prefix
     *        plan — equi-matched prefix-token pairs; co-count plan —
     *        token co-occurrence rows, the plan's Σ df² term); breach

@@ -58,11 +58,6 @@ object Similarity {
     aggregate(transform(a, x => x.cast(DoubleType) * x.cast(DoubleType)),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Shared ranking tail of every top-k search: rank `scored`
-    * (q_id, vec_id, sim) per query by (sim desc, vec_id) — the
-    * vec_id tiebreak keeps ranks deterministic under float noise —
-    * and keep the first `k`. One place defines the ranking contract
-    * for the exact, IVF, and ANN paths. */
   /** Defined-similarity guard, shared by every ranking/threshold
     * site: a sim is usable iff non-NULL AND non-NaN. NULL is the
     * zero-norm case (the nullif guards); NaN means a NaN/∞ component
@@ -73,6 +68,11 @@ object Similarity {
     * trap Learn/Validate/Warehouse each guard on their own columns). */
   private def simDefined(sim: Column): Column = sim.isNotNull && !isnan(sim)
 
+  /** Shared ranking tail of every top-k search: rank `scored`
+    * (q_id, vec_id, sim) per query by (sim desc, vec_id) — the
+    * vec_id tiebreak keeps ranks deterministic under float noise —
+    * and keep the first `k`. One place defines the ranking contract
+    * for the exact, IVF, and ANN paths. */
   private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
     // an undefined sim is excluded from the ranking entirely so it
@@ -601,8 +601,9 @@ object Similarity {
     * vector bytes rather than shuffling the arrays themselves; the
     * array key keeps the declared form exactly oracle-mirrorable),
     * each rep's vector and norm ride its band rows to the exact-cosine
-    * confirm, and members rejoin their rep's component. */
-  /** @param maxCandidates optional budget on the internal banded
+    * confirm, and members rejoin their rep's component.
+    *
+    * @param maxCandidates optional budget on the internal banded
     *        candidate join (Σ_(band,bkt) n·(n−1)/2 over rep vectors
     *        — [[Dedup.guardCandidates]]); breach throws
     *        [[CandidateBudgetExceededException]] before the join
@@ -649,8 +650,8 @@ object Similarity {
     * rows. A *persisted* inverted file is the same assignment column
     * written `repartition/bucketBy(cell)` so repeated query batches
     * prune partitions instead of rescanning.
-    */
-  /** @param trainSampleFraction fraction of the corpus each Lloyd
+    *
+    * @param trainSampleFraction fraction of the corpus each Lloyd
     *        round scans during quantizer training (seeds always come
     *        from the full corpus). 1.0 trains on everything; a 100-TB
     *        corpus passes e.g. 0.01 so training costs a sample pass,

@@ -1520,6 +1520,24 @@ object TextOps {
   def bpeRanks(merges: Seq[(String, String)]): Map[(String, String), Int] =
     merges.zipWithIndex.toMap
 
+  /** Whether every merge's inputs are base symbols or outputs of
+    * EARLIER merges — the property that makes the greedy fast path
+    * exactly equal the fold. Base symbols are CODEPOINTS
+    * ([[bpeBaseSymbols]]): a supplementary-plane char is a LENGTH-2
+    * string, so a length==1 test would misclassify emoji-bearing
+    * trained models as not training-ordered and silently fall back
+    * to the O(|merges|·len) fold (dispatch pinned in BpeEncodeSpec). */
+  private[text] def trainingOrderedOf(merges: Seq[(String, String)]): Boolean = {
+    val produced = scala.collection.mutable.HashSet[String]()
+    def isBase(s: String): Boolean =
+      s.nonEmpty && s.codePointCount(0, s.length) == 1
+    merges.forall { case (a, b) =>
+      val ok = (isBase(a) || produced(a)) && (isBase(b) || produced(b))
+      produced += (a + b)
+      ok
+    }
+  }
+
   /** ENCODE path of a trained BPE model over the corpus: apply the
     * ordered merge list to every token of every document and report
     * per-doc token accounting — (doc_id, n_words, n_subwords). This
@@ -1549,24 +1567,6 @@ object TextOps {
     * identical output for the training-ordered lists real models
     * are (property-tested), and at the declared-model sizes the
     * fold stays the simpler reference. */
-  /** Whether every merge's inputs are base symbols or outputs of
-    * EARLIER merges — the property that makes the greedy fast path
-    * exactly equal the fold. Base symbols are CODEPOINTS
-    * ([[bpeBaseSymbols]]): a supplementary-plane char is a LENGTH-2
-    * string, so a length==1 test would misclassify emoji-bearing
-    * trained models as not training-ordered and silently fall back
-    * to the O(|merges|·len) fold (dispatch pinned in BpeEncodeSpec). */
-  private[text] def trainingOrderedOf(merges: Seq[(String, String)]): Boolean = {
-    val produced = scala.collection.mutable.HashSet[String]()
-    def isBase(s: String): Boolean =
-      s.nonEmpty && s.codePointCount(0, s.length) == 1
-    merges.forall { case (a, b) =>
-      val ok = (isBase(a) || produced(a)) && (isBase(b) || produced(b))
-      produced += (a + b)
-      ok
-    }
-  }
-
   def bpeEncode(documents: DataFrame, merges: Seq[(String, String)],
                 memoCap: Int = 1 << 20, greedyFrom: Int = 64): DataFrame = {
     require(memoCap >= 0, s"need memoCap >= 0, got $memoCap")

@@ -230,7 +230,7 @@ class GraphSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node", org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField("comp", org.apache.spark.sql.types.LongType, nullable = false)))
-    val big = org.apache.spark.sql.graft.TestBridge.ofLocalRelation(spark, schema, rows)
+    val big = org.apache.spark.sql.graft.ParquetBridge.ofLocalRelation(spark, schema, rows)
     assert(big.queryExecution.optimizedPlan
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
     assert(!hintOf(big).contains("broadcast"),

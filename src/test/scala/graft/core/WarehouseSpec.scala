@@ -11,6 +11,22 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
+  /** `body`'s result and the number of Spark jobs it launched. */
+  private def jobsIn[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.TestBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.sql.graft.TestBridge.drainListenerBus(spark)
+      (a, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("bucketed fact-fact join plans with zero shuffle exchanges") {
     val d = "/root/testdata/sf0.001"
     Warehouse.writeBucketed(Tables.lineitem(spark, d), "li_b", "l_orderkey", 8)
@@ -452,6 +468,9 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     Warehouse.writeZoneMapped(Seq.empty[(Long, String)].toDF("k", "v"), dir, "k", 4)
     assert(Warehouse.readZoneMapVersion(spark, dir, 1).count() == 0L)
     assert(Warehouse.readZoneMapPruned(spark, dir, "k", 1L, 10L).count() == 0L)
+    // the empty-set read takes its schema from a data/ footer: no job
+    val (none, noneJobs) = jobsIn(Warehouse.readZoneMapPruned(spark, dir, "k", 1L, 10L))
+    assert(noneJobs == 0 && none.columns.toSeq == Seq("k", "v"), s"$noneJobs job(s)")
     // no manifest lists the zero-row part, yet it is the only file
     // carrying the table's schema: vacuum must not sweep it
     assert(Warehouse.vacuumZoneMapped(spark, dir, keepFrom = 1) == ((0, 0)))
@@ -460,6 +479,64 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(Warehouse.readZoneMapPruned(spark, dir, "k", 1L, 10L).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((5L, "a")))
     assert(Warehouse.readZoneMapVersion(spark, dir, 2).count() == 1L)
+  }
+
+  test("manifest, pruned, versioned reads and vacuum launch no Spark job before the caller's action") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-zm-jobs").toString + "/t"
+    Warehouse.writeZoneMapped((0 until 2000).map(i => (i.toLong, s"v$i")).toDF("k", "v"),
+      dir, "k", nFiles = 8)
+    Warehouse.mergeZoneMapped(spark, dir, "k",
+      (100 until 110).map(i => (i.toLong, s"u$i")).toDF("k", "v"), retainForTimeTravel = true)
+    val (man, manJobs) = jobsIn(Warehouse.zoneMapManifest(spark, dir))
+    val (hit, hitJobs) = jobsIn(Warehouse.readZoneMapPruned(spark, dir, "k", 100L, 199L))
+    val (miss, missJobs) = jobsIn(Warehouse.readZoneMapPruned(spark, dir, "k", 5000L, 6000L))
+    val (v1, v1Jobs) = jobsIn(Warehouse.readZoneMapVersion(spark, dir, 1))
+    assert((manJobs, hitJobs, missJobs, v1Jobs) == ((0, 0, 0, 0)),
+      "(manifest, pruned hit, pruned miss, version) jobs")
+    // the manifest frame is local: collecting it runs no job either
+    val (manRows, collectJobs) = jobsIn(man.collect())
+    assert(collectJobs == 0 && manRows.map(_.getAs[Long]("n_rows")).sum == 2000L)
+    // the caller's own action is where the jobs are (so the counts
+    // above are not a deaf listener), and it reads the same rows
+    val (hitRows, actionJobs) = jobsIn(hit.collect())
+    assert(actionJobs > 0)
+    assert(hitRows.map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ==
+      (100 until 200).map(i => (i.toLong, if (i < 110) s"u$i" else s"v$i")))
+    assert(miss.count() == 0L && miss.columns.toSeq == Seq("k", "v"))
+    assert(v1.count() == 2000L && v1.filter(col("v").startsWith("u")).count() == 0L)
+    val ((dropped, deleted), vacuumJobs) =
+      jobsIn(Warehouse.vacuumZoneMapped(spark, dir, keepFrom = 2))
+    assert(vacuumJobs == 0 && dropped == 1 && deleted > 0, s"$vacuumJobs job(s)")
+    assert(Warehouse.readZoneMapVersion(spark, dir, 2).count() == 2000L)
+  }
+
+  test("driver-read manifests and footer-schema reads equal spark.read.parquet for every stat type") {
+    // int/long stats come from footers, the other five from the scan
+    // fallback, so every manifest column type goes through the reader
+    val base = spark.range(0, 300).select(
+      col("id").cast("int").as("i"), col("id").as("l"),
+      format_string("s%05d", col("id")).as("s"), (col("id") / 7.0).as("d"),
+      date_add(lit("2020-01-01").cast("date"), col("id").cast("int")).as("dt"),
+      timestamp_seconds(col("id") * 3601).as("ts"),
+      (col("id") / 3).cast("decimal(12,3)").as("dec"),
+      when(col("id") % 11 =!= 0, concat(lit("p"), col("id"))).as("payload"))
+    Seq("i", "l", "s", "d", "dt", "ts", "dec").foreach { c =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-zm-type-$c").toString + "/t"
+      Warehouse.writeZoneMapped(base, dir, c, nFiles = 4)
+      val man = Warehouse.zoneMapManifest(spark, dir)
+      val ref = spark.read.parquet(s"$dir/_zonemap_history/v1")
+      assert(man.schema == ref.schema, s"$c: manifest schema")
+      assert(man.schema("mn").dataType == base.schema(c).dataType, s"$c: stat type")
+      assert(man.collect().sortBy(_.getString(0)).toSeq ==
+        ref.collect().sortBy(_.getString(0)).toSeq, s"$c: manifest rows")
+      val files = man.select("file").collect()
+        .map(r => new java.io.File(new java.net.URI(r.getString(0))).getPath)
+      val version = Warehouse.readZoneMapVersion(spark, dir, 1)
+      val scan = spark.read.parquet(files.toIndexedSeq: _*)
+      assert(version.schema == scan.schema, s"$c: data schema")
+      assert(version.collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Long]).toSeq ==
+        scan.collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Long]).toSeq, s"$c: data rows")
+    }
   }
 
   test("non-retained merge drops history instead of advertising dead snapshots") {

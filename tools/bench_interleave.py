@@ -13,8 +13,9 @@ Usage:
         [--pairs 4] [--runs 3] [--cpus 32] [--sf-dir /root/testdata/sf0.1] \
         [--out report.md] [--emit-anchored bench_full.json]
 
-The old side runs in a throwaway worktree at --old; the new side is
-the current working tree (committed or dirty). Order alternates per
+The old side runs in a throwaway `git archive` export of --old (under
+$TMPDIR, removed afterwards); the new side is the current working tree
+(committed or dirty). Order alternates per
 pair. Per side and query the summary gives min and median over the
 pair processes' own min-of-runs values. Without --only every process
 runs the full bench.
@@ -29,6 +30,8 @@ SCALING.md closing-control table generated from those fields.
 import argparse
 import json
 import os
+import shlex
+import shutil
 import statistics
 import subprocess
 import sys
@@ -142,7 +145,11 @@ def main():
 
     tmp = tempfile.mkdtemp(prefix="graft-iab-")
     wt = os.path.join(tmp, "old")
-    sh(["git", "worktree", "add", "--detach", wt, old_commit])
+    # an export, not a worktree: an interrupted run leaves no worktree
+    # registered in the repository, only a temp directory
+    os.makedirs(wt)
+    subprocess.run(f"git archive {old_commit} | tar -x -C {shlex.quote(wt)}",
+                   shell=True, cwd=REPO, check=True)
     arts = {"old": [], "new": []}
     try:
         compile_tree(wt, f"OLD {old_commit[:9]}")
@@ -158,7 +165,7 @@ def main():
                 print(f"[iab] pair {p + 1} {side}: total={art['value']:.3f}",
                       flush=True)
     finally:
-        subprocess.run(["git", "worktree", "remove", "--force", wt], cwd=REPO)
+        shutil.rmtree(tmp, ignore_errors=True)
 
     queries = [q.strip() for q in args.only.split(",") if q.strip()] \
         if args.only else sorted(arts["new"][0]["queries"])
