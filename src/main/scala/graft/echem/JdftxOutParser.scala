@@ -1,6 +1,6 @@
 package graft.echem
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -49,33 +49,26 @@ object JdftxOutParser {
       .drop(textCol)
   }
 
-  /** Directory scan form: one row per `.out` file, key + charge from
-    * the filename (`{mp_key}_{charge}.out`, `dags/my_dag.py:131,153`). */
+  /** (mp_key, charge) parsed from `src` by a `(key)_(charge)` regex —
+    * the ONE key parser of the filename form (`FileRe`) and the
+    * run-key form ([[KeyRe]]). A source that does not parse yields a
+    * NULL key and/or charge, never a failure: nullif maps the empty
+    * extraction to NULL, and try_cast covers a charge group
+    * ([0-9.]+) that captured a non-castable shape like "0..5" (under
+    * default ANSI a plain cast would abort the scan). */
+  private def parsedKey(src: Column, re: String): Seq[Column] = Seq(
+    nullif(regexp_extract(src, re, 1), lit("")).as("mp_key"),
+    nullif(regexp_extract(src, re, 2), lit("")).try_cast(DoubleType).as("charge"))
+
+  private val keyParsed: Column = col("mp_key").isNotNull && col("charge").isNotNull
+
+  /** Directory scan form: one row per `.out` file whose name parses
+    * as `{mp_key}_{charge}.out` (`dags/my_dag.py:131,153`) — the
+    * [[metricsQuarantine]] scan with unparsed names dropped, and its
+    * `file` and `ok` columns dropped. A parsed file with no final
+    * FillingsUpdate keeps its row with NULL metrics. */
   def metrics(spark: SparkSession, dir: String): DataFrame =
-    metricsFromText(
-      // pathGlobFilter prunes at LISTING time: a real run directory
-      // holds multi-GB binary siblings (wavefunctions, densities)
-      // beside the logs, and a post-read filter on input_file_name
-      // would wholetext-materialize each one as a single row first
-      // (r13 review). The endsWith filter stays as the semantic
-      // contract the glob implements.
-      spark.read.option("wholetext", "true").option("pathGlobFilter", "*.out")
-        .text(dir)
-        .select(input_file_name().as("file"), col("value"))
-        .filter(col("file").endsWith(".out"))
-        // nullif + try_cast: a .out file whose name does not match
-        // {mp_key}_{charge}.out extracts "", and the charge group
-        // ([0-9.]+) can also capture a non-castable shape like
-        // "0..5" — under default ANSI a plain cast of either aborts
-        // the scan; such files carry a null charge/empty key and are
-        // dropped, not job-fatal
-        .select(
-          regexp_extract(col("file"), FileRe, 1).as("mp_key"),
-          nullif(regexp_extract(col("file"), FileRe, 2), lit(""))
-            .try_cast(DoubleType).as("charge"),
-          col("value"))
-        .filter(col("mp_key") =!= "" && col("charge").isNotNull),
-      "value")
+    metricsQuarantine(spark, dir).filter(keyParsed).drop("file", "ok")
 
   /** Quarantine-style ingest twin of [[metrics]] (the
     * `MediaOps.decodeQuarantine` pattern applied to `.out` scans): one
@@ -87,40 +80,33 @@ object JdftxOutParser {
     * domain (semi-structured text from an external binary), and the
     * production posture is quarantine-and-continue: `filter(ok)` is
     * the metrics feed, `filter(!ok)` the reprocess/alert feed with
-    * the file path naming the culprit. Same codegen'd expressions as
-    * the strict scan — zero shuffle, one row per file. */
+    * the file path naming the culprit. Codegen'd expressions only —
+    * zero shuffle, one row per file. */
   def metricsQuarantine(spark: SparkSession, dir: String): DataFrame =
     metricsFromText(
-      // pathGlobFilter — the metrics() listing-time rationale
+      // pathGlobFilter prunes at LISTING time: a real run directory
+      // holds multi-GB binary siblings (wavefunctions, densities)
+      // beside the logs, and a post-read filter on input_file_name
+      // would wholetext-materialize each one as a single row first.
+      // The endsWith filter stays as the semantic contract the glob
+      // implements.
       spark.read.option("wholetext", "true").option("pathGlobFilter", "*.out")
         .text(dir)
         .select(input_file_name().as("file"), col("value"))
         .filter(col("file").endsWith(".out"))
-        .select(
-          col("file"),
-          nullif(regexp_extract(col("file"), FileRe, 1), lit("")).as("mp_key"),
-          nullif(regexp_extract(col("file"), FileRe, 2), lit(""))
-            .try_cast(DoubleType).as("charge"),
-          col("value")),
+        .select(col("file") +: parsedKey(col("file"), FileRe) :+ col("value"): _*),
       "value")
-      .withColumn("ok",
-        col("mp_key").isNotNull && col("charge").isNotNull &&
-          col("mu").isNotNull && col("nelectrons").isNotNull)
+      .withColumn("ok", keyParsed && col("mu").isNotNull && col("nelectrons").isNotNull)
 
   /** Run-key form for in-flight outputs keyed `{mp_key}_{charge}`.
     * Rows whose key does not parse DROP, the [[metrics]] convention
-    * (r13 review — previously they sailed through with mp_key = ""
-    * and a null charge, then vanished untraceably at the downstream
-    * geometry join; a caller that must see every row uses the
-    * quarantine twin's ok-flag pattern instead). */
+    * (previously they sailed through with mp_key = "" and a null
+    * charge, then vanished untraceably at the downstream geometry
+    * join; a caller that must see every row uses the quarantine
+    * twin's ok-flag pattern instead). */
   val KeyRe = "(.+)_(-?[0-9.]+)$"
   def metricsFromRuns(runs: DataFrame): DataFrame =
     metricsFromText(
-      runs.select(
-        regexp_extract(col("key"), KeyRe, 1).as("mp_key"),
-        nullif(regexp_extract(col("key"), KeyRe, 2), lit(""))
-          .try_cast(DoubleType).as("charge"),
-        col("output"))
-        .filter(col("mp_key") =!= "" && col("charge").isNotNull),
+      runs.select(parsedKey(col("key"), KeyRe) :+ col("output"): _*).filter(keyParsed),
       "output")
 }

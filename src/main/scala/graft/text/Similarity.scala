@@ -7,19 +7,38 @@ import org.apache.spark.sql.types._
 
 import graft.core.ScopedCache
 
-/** Approximate-nearest-neighbor search over an embedding column
-  * (`Array[Float]`).
+/** Nearest-neighbor search and near-duplicate detection over an
+  * embedding column (`Array[Float]`).
   *
-  * Two paths:
-  *  - `cosineTopK`: brute-force baseline — broadcast the (small)
-  *    query set against the full corpus; exact, O(|corpus|·|queries|).
-  *  - `cosineTopKBucketed`: sign-LSH scale path — hash every vector
-  *    into a 2^h hyperplane-sign bucket and only score same-bucket
-  *    pairs; the corpus is shuffled once on the bucket key, so cost
-  *    is O(|corpus|) + per-bucket products instead of a cross join.
+  * Five search paths, each returning (q_id, vec_id, sim or adist, rk):
+  *  - exact, `cosineTopK`: broadcast the (small) query set against
+  *    the full corpus; O(|corpus|·|queries|), the recall yardstick.
+  *  - LSH, `cosineTopKBucketed`: hash every vector into a 2^h
+  *    hyperplane-sign bucket and score only same-bucket pairs (plus
+  *    multi-probe neighbors); the corpus shuffles once on the bucket
+  *    key. The near-dup views (`embeddingNearDupPairs`,
+  *    `embeddingComponents`) band the same hyperplanes.
+  *  - IVF, `ivfTopK` / `writeInvertedFile` + `ivfTopKIndexed`: assign
+  *    every vector to its nearest coarse-quantizer cell and score only
+  *    the `nProbe` cells nearest each query.
+  *  - PQ, `pqTopK` (`pqEncode`, `pqTrainBooks`): rank by asymmetric
+  *    distance to each vector's product-quantized reconstruction.
+  *  - IVF-PQ, `ivfPqTopK` / `writePqIndex` + `ivfPqTopKIndexed`: IVF
+  *    cells with PQ codes as the stored payload.
+  *
+  * One index path: each IVF index kind is built in one place and
+  * searched in one place, and the in-memory search (`ivfTopK`,
+  * `ivfPqTopK`) IS the indexed search run over the frame the writer
+  * would persist, left unwritten. Every quantizer and codebook is seeded by one rule
+  * ([[seedBooks]]) and trained by one Lloyd loop ([[lloyd]]), every
+  * vector is assigned to its cell by one projection
+  * ([[assignCells]]), and every search ends in one ranking tail
+  * ([[topK]]).
   *
   * All arithmetic is codegen'd column expressions (`zip_with` +
-  * ordered `aggregate` fold) — no UDFs, no driver collect.
+  * ordered `aggregate` fold, native dot/norm) — no UDFs; the corpus
+  * is never collected (quantizer training collects only the
+  * `nCells × dim` centroids).
   */
 object Similarity {
   // Every cosine division guards its denominator with nullif: a
@@ -64,23 +83,28 @@ object Similarity {
     * reached the dot product — and Spark ORDERS NaN greater than
     * every value and evaluates `NaN >= t` as TRUE, so one poisoned
     * vector would otherwise outrank every real neighbor in top-k and
-    * pass every near-dup threshold (r12 review; same NaN-is-not-null
-    * trap Learn/Validate/Warehouse each guard on their own columns). */
+    * pass every near-dup threshold (the same NaN-is-not-null trap
+    * Learn/Validate/Warehouse each guard on their own columns). */
   private def simDefined(sim: Column): Column = sim.isNotNull && !isnan(sim)
 
-  /** Shared ranking tail of every top-k search: rank `scored`
-    * (q_id, vec_id, sim) per query by (sim desc, vec_id) — the
-    * vec_id tiebreak keeps ranks deterministic under float noise —
-    * and keep the first `k`. One place defines the ranking contract
-    * for the exact, IVF, and ANN paths. */
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
-    // an undefined sim is excluded from the ranking entirely so it
-    // can never fill a top-k slot when candidates are scarce
-    scored.filter(simDefined(col("sim")))
+  /** The ONE ranking tail of every top-k search: rank `scored`
+    * (q_id, vec_id, `score`) per query — a similarity descending, a
+    * distance (`ascending`) ascending — with a vec_id tiebreak that
+    * keeps ranks deterministic under float noise, and keep the first
+    * `k`. */
+  private def topK(scored: DataFrame, k: Int, score: String = "sim",
+                   ascending: Boolean = false): DataFrame = {
+    val order = if (ascending) col(score).asc else col(score).desc
+    val w = Window.partitionBy(col("q_id")).orderBy(order, col("vec_id"))
+    // an undefined score is excluded from the ranking entirely so it
+    // can never fill a top-k slot when candidates are scarce: Spark
+    // orders NaN above every value and NULL first ascending, so
+    // either would otherwise take slots (a null embedding element, a
+    // length-mismatched reconstruction, a NaN component)
+    scored.filter(simDefined(col(score)))
       .withColumn("rk", row_number().over(w).cast(LongType))
       .filter(col("rk") <= k)
-      .select("q_id", "vec_id", "sim", "rk")
+      .select("q_id", "vec_id", score, "rk")
   }
 
   /** Exact cosine top-k: queries = vec_id < nQueries (broadcast),
@@ -110,8 +134,7 @@ object Similarity {
     * two base patterns, collapsing 2^h buckets to ~2–4 and silently
     * turning the ANN path into a half-corpus scan. Bit 16 of
     * `j·2654435761 + p·40503 + 12345` (Knuth multiplicative constant)
-    * mixes via carries; measured on the test embeddings it yields all
-    * 2^4 buckets with near-uniform occupancy. */
+    * mixes via carries, so the 2^h buckets fill near-uniformly. */
   private def planeSign(p: Int, j: Column): Column =
     when(shiftright(j.cast(LongType) * lit(2654435761L) + lit(p * 40503L + 12345L), 16)
            .bitwiseAND(lit(1L)) === 0, 1.0).otherwise(-1.0)
@@ -232,10 +255,7 @@ object Similarity {
     // exchange
     val re = reps.select(col("rep_id").as("vec_id"),
       col("r_emb").as("embedding"), norm2(col("r_emb")).as("nrm"))
-    val cent = quantizer(e, nCells, 0)
-    val assigned = re.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        bestCellExpr(col("embedding"), col("nrm")).as("cell"))
+    val assigned = assignCells(re, quantizer(e, nCells, 0, 1.0))
     val earlier = assigned.select(col("cell"), col("vec_id").as("id_b"),
       col("embedding").as("vec_b"), col("nrm").as("nrm_b"))
     val pairSim = cosine(col("embedding"), col("vec_b"), col("nrm"), col("nrm_b"))
@@ -626,265 +646,6 @@ object Similarity {
       "embeddingComponents")
   }
 
-  /** IVF (inverted-file) top-k: coarse-quantize the corpus into
-    * `nCells` cells, search only the `nProbe` cells nearest each
-    * query.
-    *
-    * Centroids: `lloydIters = 0` (the declared, oracle-mirrored form)
-    * uses the first `nCells` corpus vectors as a deterministic seed
-    * quantizer; `lloydIters > 0` runs that many k-means rounds from
-    * the same seeds ([[trainedQuantizer]]) and slots the trained
-    * centroids into the same broadcast seam — on clustered corpora
-    * this is what makes `nProbe` recall claims meaningful (unit-
-    * tested: recall@5 rises vs the seeded quantizer at equal nProbe).
-    * Assignment = argmax cosine(centroid), ties broken by lower cell
-    * id.
-    *
-    * Scale shape: the coarse quantizer collapses to ONE broadcast row
-    * (an nCells-element array of centroid structs), and assignment is
-    * a per-row argmax fold over it — pure map, zero corpus shuffle,
-    * no aggregate at all (the earlier groupBy-argmax formulation fell
-    * to SortAggregate: an array-bearing buffer cannot hash-aggregate).
-    * Queries fan out ×nProbe on the broadcast side only, so the only
-    * shuffle in the whole search is the final top-k over candidate
-    * rows. A *persisted* inverted file is the same assignment column
-    * written `repartition/bucketBy(cell)` so repeated query batches
-    * prune partitions instead of rescanning.
-    *
-    * @param trainSampleFraction fraction of the corpus each Lloyd
-    *        round scans during quantizer training (seeds always come
-    *        from the full corpus). 1.0 trains on everything; a 100-TB
-    *        corpus passes e.g. 0.01 so training costs a sample pass,
-    *        not `lloydIters` full scans — FAISS practice, where the
-    *        quantizer is always fit on a bounded sample. Deterministic
-    *        (fixed-seed Bernoulli sample). */
-  def ivfTopK(embeddings: DataFrame, nQueries: Int, k: Int,
-              nCells: Int = 16, nProbe: Int = 2, lloydIters: Int = 0,
-              trainSampleFraction: Double = 1.0): DataFrame = {
-    require(nCells >= 1 && nProbe >= 1 && nProbe <= nCells && k >= 1,
-      s"need 1 <= nProbe <= nCells and k >= 1, got (nCells=$nCells, nProbe=$nProbe, k=$k)")
-    require(lloydIters >= 0, s"need lloydIters >= 0, got $lloydIters")
-    val e = embeddings.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm"))
-    val cent = quantizer(e, nCells, lloydIters, trainSampleFraction)
-    val assigned = e.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        bestCellExpr(col("embedding"), col("nrm")).as("cell"))
-    // query side is tiny (nQueries × nCells rows): expand and rank
-    val qCells = probeCells(e.filter(col("vec_id") < nQueries), cent, nProbe)
-    val scored = assigned.join(broadcast(qCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", cosine(col("embedding"), col("q_vec"), col("nrm"), col("q_nrm")))
-    topK(scored, k)
-  }
-
-  /** Argmax cosine over the broadcast `cents` centroid array: strict
-    * > keeps the lowest cell id on ties (matches the oracle's c_sim
-    * DESC, cell ASC ranking). */
-  private def bestCellExpr(vec: Column, nrm: Column): Column =
-    aggregate(
-      col("cents"),
-      struct(lit(-2.0).as("best_sim"), lit(-1L).as("cell")),
-      (acc, c) => {
-        val sim = cosine(vec, c.getField("c_vec"), nrm, c.getField("c_nrm"))
-        // simDefined, not bare > (r13 review): Spark evaluates
-        // NaN > x as TRUE, so a NaN-component vector would win EVERY
-        // fold step and land in the LAST centroid's cell instead of
-        // the documented "no defined cosine ⇒ sentinel cell −1"
-        // (null sim already falls through via three-valued logic)
-        when(simDefined(sim) && sim > acc.getField("best_sim"),
-          struct(sim.as("best_sim"), c.getField("cell").as("cell")))
-          .otherwise(acc)
-      },
-      acc => acc.getField("cell"))
-
-  /** One-row quantizer frame (the broadcast side of assignment) from
-    * a (cell, c_vec) table. */
-  private def centsRow(cellVec: DataFrame): DataFrame =
-    cellVec.select(col("cell"), col("c_vec"), norm2(col("c_vec")).as("c_nrm"))
-      .agg(array_sort(collect_list(struct(col("cell"), col("c_vec"), col("c_nrm")))).as("cents"))
-
-  /** The query-side probe shared by every IVF search path: rank the
-    * broadcast centroids per query by ROUNDED cosine (round-6 before
-    * ordering — the cross-libm contract the DuckDB oracles mirror;
-    * ties → lowest cell) and keep the `nProbe` best cells. Input
-    * needs (vec_id, embedding, nrm); output is
-    * (q_id, q_vec, q_nrm, cell), one row per probed cell. ONE
-    * definition so a change to the probe contract cannot drift
-    * between the in-memory/indexed, flat/PQ variants. */
-  private def probeCells(q: DataFrame, cent: DataFrame, nProbe: Int): DataFrame =
-    q.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("nrm"), explode(col("cents")).as("c"))
-      .withColumn("c_sim", cosine(col("embedding"), col("c.c_vec"), col("nrm"), col("c.c_nrm")))
-      .withColumn("c_rk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("c_sim").desc, col("c.cell"))))
-      .filter(col("c_rk") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"),
-        col("nrm").as("q_nrm"), col("c.cell").as("cell"))
-
-  /** Store a quantizer next to its index — the reader must probe
-    * with exactly the centroids the assignment used. */
-  private def writeCentroids(cent: DataFrame, dir: String): Unit =
-    cent.select(explode(col("cents")).as("c"))
-      .select(col("c.cell").as("cell"), col("c.c_vec").as("c_vec"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-
-  /** Quantizer selection shared by the in-memory and persisted IVF
-    * paths: the deterministic first-`nCells` seed, optionally Lloyd-
-    * trained from those same seeds. */
-  private def quantizer(e: DataFrame, nCells: Int, lloydIters: Int,
-                        trainSampleFraction: Double = 1.0): DataFrame =
-    if (lloydIters == 0)
-      // dense 0..n-1 cell ids in vec_id order (the pqBooksFrame
-      // renumbering trick), NOT raw vec_ids: the trained path
-      // renumbers densely, so raw ids made cell labels inconsistent
-      // across lloydIters settings on sparse-id corpora (r12 review);
-      // on dense 0-based corpora (every fixture and oracle) the two
-      // labelings coincide. The assert_true rides the one-row frame:
-      // zero seed rows (no vec_id < nCells — e.g. a re-keyed shard)
-      // used to silently assign cell=-1 everywhere and read as "no
-      // neighbors"; now ANY consumer of the quantizer fails loudly,
-      // matching trainedQuantizer's require.
-      e.filter(col("vec_id") < nCells)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_vec"), col("nrm").as("c_nrm"))
-        .agg(array_sort(collect_list(struct(col("cell"), col("c_vec"), col("c_nrm")))).as("seeds"))
-        .select(when(
-            assert_true(size(col("seeds")) >= 1,
-              lit(s"IVF seed quantizer found no rows with vec_id < $nCells — " +
-                "re-key vec_ids to start at 0 or use lloydIters > 0 with a trained quantizer"))
-              .isNull,
-          transform(col("seeds"), (s, i) =>
-            struct(i.cast(LongType).as("cell"),
-              s.getField("c_vec").as("c_vec"), s.getField("c_nrm").as("c_nrm")))).as("cents"))
-    else
-      trainedQuantizer(e, nCells, lloydIters, trainSampleFraction)
-
-  /** Lloyd-trained coarse quantizer: k-means rounds over the corpus,
-    * seeded deterministically with the first `nCells` vectors (the
-    * same seeds the untrained path uses, so `lloydIters` only ever
-    * ADDS training).
-    *
-    * Per round: assignment is the usual zero-shuffle broadcast argmax
-    * over the corpus; the update aggregates per-(cell, dimension)
-    * component sums in ONE partial-aggregable shuffle of `nCells ×
-    * dim` narrow rows, summed as DECIMAL so the result is independent
-    * of partition order (bit-reproducible training). The per-round
-    * collect is the quantizer itself — `nCells × dim` values, driver
-    * metadata by nature (FAISS trains exactly this way, in memory, on
-    * at most a corpus sample); the corpus is never collected.
-    * `trainSampleFraction < 1` bounds each round's scan to a
-    * deterministic fixed-seed sample — the 100-TB path, where
-    * `iters` full corpus passes just to fit `nCells × dim` floats
-    * would dominate the whole index build. */
-  private def trainedQuantizer(e: DataFrame, nCells: Int, iters: Int,
-                               trainSampleFraction: Double = 1.0): DataFrame = {
-    require(trainSampleFraction > 0.0 && trainSampleFraction <= 1.0,
-      s"need trainSampleFraction in (0, 1], got $trainSampleFraction")
-    val spark = e.sparkSession
-    import spark.implicits._
-    var centroids: Array[(Long, Array[Float])] =
-      e.filter(col("vec_id") < nCells).orderBy(col("vec_id"))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect()
-        .zipWithIndex.map { case ((_, v), i) => (i.toLong, v) }
-    require(centroids.nonEmpty, s"corpus has no vectors with vec_id < $nCells to seed from")
-    // seeds come from the FULL corpus (deterministic first-nCells);
-    // only the per-round training scan is sampled
-    val trainSet =
-      if (trainSampleFraction >= 1.0) e
-      else e.sample(withReplacement = false, trainSampleFraction, seed = 27L)
-    for (_ <- 1 to iters) {
-      val centDf = centsRow(spark.createDataset(centroids.toIndexedSeq).toDF("cell", "c_vec"))
-      val assigned = trainSet.crossJoin(broadcast(centDf))
-        .select(col("embedding"), bestCellExpr(col("embedding"), col("nrm")).as("cell"))
-      val stats = assigned.select(col("cell"), posexplode(col("embedding")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("col").cast(DecimalType(30, 10))).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val byCell = stats.groupBy(_.getLong(0))
-      centroids = centroids.map { case (cell, old) =>
-        byCell.get(cell) match {
-          case Some(rows) =>
-            val v = old.clone()
-            rows.foreach { r =>
-              v(r.getInt(1)) = (r.getDecimal(2).doubleValue() / r.getLong(3)).toFloat
-            }
-            (cell, v)
-          case None => (cell, old) // empty cell keeps its centroid
-        }
-      }
-    }
-    centsRow(spark.createDataset(centroids.toIndexedSeq).toDF("cell", "c_vec"))
-  }
-
-  /** Persisted inverted file: the IVF assignment materialized as a
-    * hive-partitioned parquet layout (`index/cell=<id>/…`) plus the
-    * quantizer it was built with (`centroids/`). This is the index
-    * form of [[ivfTopK]] — build once, then every query batch reads
-    * ONLY its probed cells instead of rescanning the corpus
-    * ([[ivfTopKIndexed]]). The assignment itself is the same
-    * zero-shuffle broadcast-argmax map; the write's one shuffle is
-    * the partitioned layout (repartition on cell so each cell is a
-    * contiguous file set, not `nPartitions × nCells` fragments). */
-  def writeInvertedFile(embeddings: DataFrame, dir: String,
-                        nCells: Int = 16, lloydIters: Int = 0,
-                        trainSampleFraction: Double = 1.0): Unit = {
-    require(nCells >= 1, s"need nCells >= 1, got $nCells")
-    val e = embeddings.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm"))
-    val cent = quantizer(e, nCells, lloydIters, trainSampleFraction)
-    writeCentroids(cent, dir)
-    e.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        bestCellExpr(col("embedding"), col("nrm")).as("cell"))
-      .repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/index")
-  }
-
-  /** Query a persisted inverted file: rank the stored centroids per
-    * query, probe the `nProbe` best cells, and let DYNAMIC PARTITION
-    * PRUNING cut the index scan to exactly those `cell=` directories
-    * — the probe list is data-dependent, so the pruning is the
-    * runtime kind (a broadcast-join subquery on the partition
-    * column), not a static filter. Same semantics as [[ivfTopK]]
-    * over the same quantizer; plan-asserted in the spec. */
-  def ivfTopKIndexed(spark: SparkSession, dir: String, queries: DataFrame,
-                     k: Int, nProbe: Int = 2): DataFrame = {
-    require(k >= 1 && nProbe >= 1, s"need k >= 1 and nProbe >= 1, got ($k, $nProbe)")
-    val centStored = spark.read.parquet(s"$dir/centroids")
-    // loud dim guard (r13 review): a query frame whose embedding dim
-    // differs from the stored index makes every dot NULL (zip_with's
-    // length contract), so probes degrade to arbitrary cells and
-    // every scored sim drops at the simDefined filter — the result
-    // silently reads as "no neighbors". The PQ reader fails loudly
-    // on the same mismatch via the stored codebook; here the stored
-    // centroid dim (nCells rows, driver metadata) plus ONE bounded
-    // scan of the query frame — small by contract, it broadcasts —
-    // buys the flat reader the same contract.
-    val storedDims = centStored.select(size(col("c_vec")).as("d")).distinct()
-      .collect().map(_.getInt(0))
-    // empty is its own failure (r13 advisor): "mix dims []" would
-    // misname a missing/truncated index as a dim mismatch
-    require(storedDims.nonEmpty,
-      s"IVF index at $dir/centroids is empty — build it with writeInvertedFile")
-    require(storedDims.length == 1,
-      s"stored IVF centroids at $dir/centroids mix dims [${storedDims.mkString(",")}] " +
-        "— rebuild the index with writeInvertedFile")
-    val badQ = queries
-      .filter(col("embedding").isNotNull && size(col("embedding")) =!= storedDims.head)
-      .select(col("vec_id"), size(col("embedding")).as("d")).limit(1).collect()
-    require(badQ.isEmpty,
-      s"ivfTopKIndexed: query vec_id=${badQ.headOption.map(_.get(0)).getOrElse("")} has " +
-        s"dim ${badQ.headOption.map(_.get(1)).getOrElse("")} but the index at $dir " +
-        s"stores dim-${storedDims.head} vectors — query with matching embeddings or rebuild")
-    val cent = centsRow(centStored)
-    val q = probeCells(
-      queries.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm")),
-      cent, nProbe)
-    val index = spark.read.parquet(s"$dir/index")
-    val scored = index.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", cosine(col("embedding"), col("q_vec"), col("nrm"), col("q_nrm")))
-    topK(scored, k)
-  }
-
   /** ANN top-k: score only pairs sharing an LSH bucket. Recall is
     * approximate (cosine-close vectors agree on hyperplane signs with
     * high probability) and tunable: `nProbes > 1` additionally scores
@@ -906,6 +667,305 @@ object Similarity {
     topK(scored, k)
   }
 
+  // ---- IVF / PQ indexes: one build and one search per index kind ----
+
+  /** IVF (inverted-file) top-k: coarse-quantize the corpus into
+    * `nCells` cells, search only the `nProbe` cells nearest each
+    * query. This is [[ivfTopKIndexed]]'s search run over the inverted
+    * file [[writeInvertedFile]] would write, left unwritten — the two
+    * differ only by the write.
+    *
+    * Centroids: `lloydIters = 0` (the declared, oracle-mirrored form)
+    * uses the first `nCells` corpus vectors as a deterministic seed
+    * quantizer ([[seedBooks]]); `lloydIters > 0` runs that many
+    * k-means rounds from the same seeds ([[lloyd]]) — on clustered
+    * corpora this is what makes `nProbe` recall claims meaningful
+    * (unit-tested: recall@5 rises vs the seeded quantizer at equal
+    * nProbe). Assignment = argmax cosine(centroid), ties broken by
+    * lower cell id.
+    *
+    * Scale shape: the coarse quantizer collapses to ONE broadcast row
+    * (an nCells-element array of centroid structs), and assignment is
+    * a per-row argmax fold over it — pure map, zero corpus shuffle,
+    * no aggregate at all (the earlier groupBy-argmax formulation fell
+    * to SortAggregate: an array-bearing buffer cannot hash-aggregate).
+    * Queries fan out ×nProbe on the broadcast side only, so the only
+    * shuffle in the whole search is the final top-k over candidate
+    * rows.
+    *
+    * @param trainSampleFraction fraction of the corpus each Lloyd
+    *        round scans during quantizer training (seeds always come
+    *        from the full corpus). 1.0 trains on everything; a 100-TB
+    *        corpus passes e.g. 0.01 so training costs a sample pass,
+    *        not `lloydIters` full scans — FAISS practice, where the
+    *        quantizer is always fit on a bounded sample. Deterministic
+    *        (fixed-seed Bernoulli sample). */
+  def ivfTopK(embeddings: DataFrame, nQueries: Int, k: Int,
+              nCells: Int = 16, nProbe: Int = 2, lloydIters: Int = 0,
+              trainSampleFraction: Double = 1.0): DataFrame = {
+    requireCells(nCells, nProbe, k)
+    requireTraining(lloydIters, trainSampleFraction)
+    val (cent, index) = invertedFile(embeddings, nCells, lloydIters, trainSampleFraction)
+    ivfSearch(index, cent, embeddings.filter(col("vec_id") < nQueries), k, nProbe)
+  }
+
+  /** Argument rules of the IVF/PQ entry points. Every entry point that
+    * builds an index checks all of its arguments before it reads,
+    * trains or writes anything: a writer that failed midway (say in
+    * codebook training, after `centroids/` was written) would leave a
+    * half-built index. */
+  private def requireCells(nCells: Int, nProbe: Int = 1, k: Int = 1): Unit =
+    require(nCells >= 1 && nProbe >= 1 && nProbe <= nCells && k >= 1,
+      s"need 1 <= nProbe <= nCells and k >= 1, got (nCells=$nCells, nProbe=$nProbe, k=$k)")
+
+  private def requireTraining(lloydIters: Int, trainSampleFraction: Double): Unit = {
+    require(lloydIters >= 0, s"need lloydIters >= 0, got $lloydIters")
+    require(trainSampleFraction > 0.0 && trainSampleFraction <= 1.0,
+      s"need trainSampleFraction in (0, 1], got $trainSampleFraction")
+  }
+
+  private def requirePq(m: Int, nBooks: Int, dim: Int): Unit = {
+    require(m >= 1 && dim % m == 0, s"need dim divisible by m, got (dim=$dim, m=$m)")
+    require(nBooks >= 1, s"need nBooks >= 1, got $nBooks")
+  }
+
+  /** Argmax cosine over the broadcast `cents` centroid array: strict
+    * > keeps the lowest cell id on ties (matches the oracle's c_sim
+    * DESC, cell ASC ranking). */
+  private def bestCellExpr(vec: Column, nrm: Column): Column =
+    aggregate(
+      col("cents"),
+      struct(lit(-2.0).as("best_sim"), lit(-1L).as("cell")),
+      (acc, c) => {
+        val sim = cosine(vec, c.getField("c_vec"), nrm, c.getField("c_nrm"))
+        // simDefined, not bare >: Spark evaluates NaN > x as TRUE, so
+        // a NaN-component vector would win EVERY fold step and land in
+        // the LAST centroid's cell instead of the documented "no
+        // defined cosine ⇒ sentinel cell −1" (null sim already falls
+        // through via three-valued logic)
+        when(simDefined(sim) && sim > acc.getField("best_sim"),
+          struct(sim.as("best_sim"), c.getField("cell").as("cell")))
+          .otherwise(acc)
+      },
+      acc => acc.getField("cell"))
+
+  /** The ONE corpus-assignment projection: `e`'s columns plus `cell`,
+    * the [[bestCellExpr]] argmax over the broadcast `cent` frame. `e`
+    * needs (embedding, nrm). */
+  private def assignCells(e: DataFrame, cent: DataFrame): DataFrame =
+    e.crossJoin(broadcast(cent))
+      .select(e.columns.toSeq.map(col) :+ bestCellExpr(col("embedding"), col("nrm")).as("cell"): _*)
+
+  /** One-row `books` frame (array of (cid, c_vec) structs sorted by
+    * cid) from a (cid, c_vec) table. */
+  private def booksRow(table: DataFrame): DataFrame =
+    table.agg(array_sort(collect_list(struct(col("cid"), col("c_vec")))).as("books"))
+
+  /** The quantizer form of a books frame: one row `cents`, each
+    * centroid as (cell, c_vec, c_nrm) — the broadcast side of
+    * assignment and probing. */
+  private def centsOf(books: DataFrame): DataFrame =
+    books.select(transform(col("books"), b =>
+      struct(b.getField("cid").as("cell"), b.getField("c_vec").as("c_vec"),
+        norm2(b.getField("c_vec")).as("c_nrm"))).as("cents"))
+
+  /** The ONE seed rule of every quantizer and codebook: the first `n`
+    * vectors by vec_id, renumbered DENSELY 0..n-1 in vec_id order, as
+    * a one-row `books` frame. Dense labels are the invariant the rest
+    * relies on: [[pqReconExpr]] decodes by array position, and
+    * [[lloyd]] keeps the seeds' labels, so cells and codes written
+    * under one `lloydIters` setting read under another. On dense
+    * 0-based corpora (every fixture and oracle) cid == vec_id.
+    *
+    * The array position is the cid: sorting the collected seed
+    * structs avoids a partition-less row_number window, which planned
+    * a global sort even over `n` rows. Zero seed rows (no vec_id < n,
+    * e.g. a re-keyed shard) fail loudly from inside the plan: an empty
+    * quantizer would assign cell = -1 everywhere, and an empty
+    * codebook NULL codes, both reading as "no neighbors". */
+  private def seedBooks(e: DataFrame, n: Int, what: String): DataFrame =
+    e.filter(col("vec_id") < n)
+      .agg(array_sort(collect_list(struct(col("vec_id"), col("embedding").as("c_vec"))))
+        .as("seeds"))
+      .select(when(
+          assert_true(size(col("seeds")) >= 1,
+            lit(s"$what found no rows with vec_id < $n to seed from — " +
+              "re-key vec_ids to start at 0")).isNull,
+        transform(col("seeds"), (s, i) =>
+          struct(i.cast(LongType).as("cid"), s.getField("c_vec").as("c_vec")))).as("books"))
+
+  /** The ONE Lloyd loop of every quantizer and codebook: `iters`
+    * k-means rounds from the one-row `seeds` frame over `e`; 0 rounds
+    * returns the seeds themselves (lazy, the declared form).
+    *
+    * Per round, `members(train, books)` maps the training rows to
+    * (cid, pos, x): the centroid a component is assigned to under the
+    * current `books`, its position in that centroid's vector and its
+    * value. The update is the per-(cid, pos) mean, aggregated in ONE
+    * partial-aggregable shuffle of at most `n × dim` narrow keys and
+    * summed as DECIMAL so a round is independent of partition order
+    * (bit-reproducible training). An empty cell keeps its centroid.
+    * The per-round collect is the codebook itself — `n × dim` values,
+    * driver metadata by nature (FAISS trains exactly this way, in
+    * memory, on at most a corpus sample); the corpus is never
+    * collected. Seeds come from the full corpus; `frac < 1` bounds
+    * each round's scan to a deterministic fixed-seed sample — the
+    * 100-TB path, where `iters` full corpus passes just to fit
+    * `n × dim` floats would dominate the whole index build. */
+  private def lloyd(e: DataFrame, seeds: DataFrame, iters: Int, frac: Double)(
+      members: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    if (iters == 0) seeds
+    else {
+      val spark = e.sparkSession
+      import spark.implicits._
+      def frame(books: Array[(Long, Array[Float])]): DataFrame =
+        booksRow(spark.createDataset(books.toIndexedSeq).toDF("cid", "c_vec"))
+      val train = if (frac >= 1.0) e else e.sample(withReplacement = false, frac, seed = 27L)
+      val start = seeds.select(explode(col("books")).as("b"))
+        .select(col("b.cid"), col("b.c_vec")).as[(Long, Array[Float])].collect()
+      frame((1 to iters).foldLeft(start) { (books, _) =>
+        val stats = members(train, frame(books))
+          .groupBy(col("cid"), col("pos"))
+          .agg(sum(col("x").cast(DecimalType(30, 10))).as("s"), count(lit(1)).as("n"))
+          .collect().groupBy(_.getLong(0))
+        books.map { case (cid, old) =>
+          val v = old.clone()
+          stats.getOrElse(cid, Array.empty).foreach { r =>
+            v(r.getInt(1)) = (r.getDecimal(2).doubleValue() / r.getLong(3)).toFloat
+          }
+          (cid, v)
+        }
+      })
+    }
+
+  /** The IVF coarse quantizer of `e` (vec_id, embedding, nrm): the
+    * seeded `nCells` centroids, Lloyd-trained by cell membership. */
+  private def quantizer(e: DataFrame, nCells: Int, lloydIters: Int,
+                        trainSampleFraction: Double): DataFrame =
+    centsOf(lloyd(e, seedBooks(e, nCells, "IVF quantizer"), lloydIters, trainSampleFraction) {
+      (train, books) =>
+        assignCells(train, centsOf(books))
+          .select(col("cell").as("cid"), posexplode(col("embedding")).as(Seq("pos", "x")))
+    })
+
+  /** The inverted file [[writeInvertedFile]] persists, unwritten: the
+    * quantizer frame and the index rows (vec_id, embedding, nrm,
+    * cell). */
+  private def invertedFile(embeddings: DataFrame, nCells: Int, lloydIters: Int,
+                           trainSampleFraction: Double): (DataFrame, DataFrame) = {
+    val e = embeddings.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm"))
+    val cent = quantizer(e, nCells, lloydIters, trainSampleFraction)
+    (cent, assignCells(e, cent))
+  }
+
+  /** Store a quantizer (`cents`, ids as `cell`) or a codebook
+    * (`books`, ids as `cid`) next to its index as (id, c_vec) rows —
+    * a reader must probe with exactly the centroids the assignment
+    * used, and decode with the codebook the encoding used. */
+  private def writeBooks(frame: DataFrame, array: String, id: String, path: String): Unit =
+    frame.select(explode(col(array)).as("b"))
+      .select(col(s"b.$id").as(id), col("b.c_vec").as("c_vec"))
+      .coalesce(1).write.mode("overwrite").parquet(path)
+
+  /** A stored quantizer (`centroids/` as written by [[writeBooks]])
+    * as a quantizer frame. */
+  private def storedCents(stored: DataFrame): DataFrame =
+    centsOf(booksRow(stored.select(col("cell").as("cid"), col("c_vec"))))
+
+  /** Write index rows as the hive-partitioned `dir/index/cell=<id>/…`
+    * layout; repartitioning on cell first makes each cell a contiguous
+    * file set, not `nPartitions × nCells` fragments. */
+  private def writeCells(index: DataFrame, dir: String): Unit =
+    index.repartition(col("cell"))
+      .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/index")
+
+  /** Persisted inverted file: the IVF assignment materialized as a
+    * hive-partitioned parquet layout (`index/cell=<id>/…`) plus the
+    * quantizer it was built with (`centroids/`). This is the index
+    * form of [[ivfTopK]] — build once, then every query batch reads
+    * ONLY its probed cells instead of rescanning the corpus
+    * ([[ivfTopKIndexed]]). The assignment itself is the same
+    * zero-shuffle broadcast-argmax map; the write's one shuffle is
+    * the partitioned layout. */
+  def writeInvertedFile(embeddings: DataFrame, dir: String,
+                        nCells: Int = 16, lloydIters: Int = 0,
+                        trainSampleFraction: Double = 1.0): Unit = {
+    requireCells(nCells)
+    requireTraining(lloydIters, trainSampleFraction)
+    val (cent, index) = invertedFile(embeddings, nCells, lloydIters, trainSampleFraction)
+    writeBooks(cent, "cents", "cell", s"$dir/centroids")
+    writeCells(index, dir)
+  }
+
+  /** Query a persisted inverted file: rank the stored centroids per
+    * query, probe the `nProbe` best cells, and let DYNAMIC PARTITION
+    * PRUNING cut the index scan to exactly those `cell=` directories
+    * — the probe list is data-dependent, so the pruning is the
+    * runtime kind (a broadcast-join subquery on the partition
+    * column), not a static filter. Same search as [[ivfTopK]] over
+    * the same quantizer; plan-asserted in the spec. */
+  def ivfTopKIndexed(spark: SparkSession, dir: String, queries: DataFrame,
+                     k: Int, nProbe: Int = 2): DataFrame = {
+    require(k >= 1 && nProbe >= 1, s"need k >= 1 and nProbe >= 1, got ($k, $nProbe)")
+    // loud dim guard: a query frame whose embedding dim differs from
+    // the stored index makes every dot NULL (zip_with's length
+    // contract), so probes degrade to arbitrary cells and every
+    // scored sim drops at the simDefined filter — the result silently
+    // reads as "no neighbors". The PQ reader fails loudly on the same
+    // mismatch via the stored codebook; here the stored centroid dim
+    // (nCells rows, driver metadata) plus ONE bounded scan of the
+    // query frame — small by contract, it broadcasts — buys the flat
+    // reader the same contract.
+    val centStored = spark.read.parquet(s"$dir/centroids")
+    val storedDims = centStored.select(size(col("c_vec")).as("d")).distinct()
+      .collect().map(_.getInt(0))
+    // empty is its own failure: "mix dims []" would misname a
+    // missing/truncated index as a dim mismatch
+    require(storedDims.nonEmpty,
+      s"IVF index at $dir/centroids is empty — build it with writeInvertedFile")
+    require(storedDims.length == 1,
+      s"stored IVF centroids at $dir/centroids mix dims [${storedDims.mkString(",")}] " +
+        "— rebuild the index with writeInvertedFile")
+    val badQ = queries
+      .filter(col("embedding").isNotNull && size(col("embedding")) =!= storedDims.head)
+      .select(col("vec_id"), size(col("embedding")).as("d")).limit(1).collect()
+    require(badQ.isEmpty,
+      s"ivfTopKIndexed: query vec_id=${badQ.headOption.map(_.get(0)).getOrElse("")} has " +
+        s"dim ${badQ.headOption.map(_.get(1)).getOrElse("")} but the index at $dir " +
+        s"stores dim-${storedDims.head} vectors — query with matching embeddings or rebuild")
+    ivfSearch(spark.read.parquet(s"$dir/index"), storedCents(centStored), queries, k, nProbe)
+  }
+
+  /** The probe join of both IVF index kinds: rank the broadcast
+    * centroids per query by ROUNDED cosine (round-6 before ordering —
+    * the cross-libm contract the DuckDB oracles mirror; ties → lowest
+    * cell), keep the `nProbe` best cells, and join them to the
+    * `index` rows of those cells, self-pairs excluded. `queries` needs
+    * (vec_id, embedding); the join adds (q_id, q_vec, q_nrm). Over a
+    * written index the cell key is the partition column, so dynamic
+    * partition pruning cuts the scan to the probed directories. */
+  private def probeJoin(index: DataFrame, cent: DataFrame, queries: DataFrame,
+                        nProbe: Int): DataFrame = {
+    val probes = queries
+      .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm"))
+      .crossJoin(broadcast(cent))
+      .select(col("vec_id"), col("embedding"), col("nrm"), explode(col("cents")).as("c"))
+      .withColumn("c_sim", cosine(col("embedding"), col("c.c_vec"), col("nrm"), col("c.c_nrm")))
+      .withColumn("c_rk", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(col("c_sim").desc, col("c.cell"))))
+      .filter(col("c_rk") <= nProbe)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"),
+        col("nrm").as("q_nrm"), col("c.cell").as("cell"))
+    index.join(broadcast(probes), Seq("cell")).filter(col("vec_id") =!= col("q_id"))
+  }
+
+  /** The ONE flat IVF search: [[ivfTopKIndexed]] runs it over the
+    * written inverted file, [[ivfTopK]] over the unwritten one. */
+  private def ivfSearch(index: DataFrame, cent: DataFrame, queries: DataFrame,
+                        k: Int, nProbe: Int): DataFrame =
+    topK(probeJoin(index, cent, queries, nProbe)
+      .withColumn("sim", cosine(col("embedding"), col("q_vec"), col("nrm"), col("q_nrm"))), k)
+
   // ---- product quantization (the FAISS IVF-PQ compression half) ----
 
   /** Squared L2 between subspace `j` of `vec` and the same subspace
@@ -925,34 +985,6 @@ object Similarity {
       struct(pqSubDist2(vec, b.getField("c_vec"), j, sub).as("d"),
         b.getField("cid").as("cid")))).getField("cid")
 
-  /** One-row PQ codebook frame (the broadcast side of encoding):
-    * the deterministic first-`nBooks` seed vectors, with cids
-    * RENUMBERED DENSELY 0..n-1 in vec_id order. Dense labels are the
-    * invariant both downstream paths rely on: [[pqReconExpr]] does an
-    * O(1) positional `element_at`, and [[pqTrainBooks]] (which
-    * renumbers the same way) stays label-compatible, so codes written
-    * with one `lloydIters` setting decode under another. On the
-    * test corpora vec_id 0..nBooks-1 all exist, so dense cid ==
-    * vec_id and the DuckDB oracles may use vec_id directly. */
-  private def pqBooksFrame(e: DataFrame, nBooks: Int): DataFrame =
-    // dense renumbering WITHOUT a partition-less row_number window
-    // (even bounded to nBooks rows it planned a global sort): sort the
-    // collected seed structs by vec_id, then the array POSITION is the
-    // cid — same dense 0..n-1 labels in vec_id order, window-free
-    e.filter(col("vec_id") < nBooks)
-      .agg(array_sort(collect_list(struct(col("vec_id"), col("embedding").as("c_vec"))))
-        .as("seeds"))
-      // loud on zero seeds, like the IVF quantizer: an empty codebook
-      // used to yield NULL codes → NULL distances → a silently empty
-      // top-k (pqTrainBooks requires nonEmpty; the seeded path now
-      // fails the same way, from inside the plan)
-      .select(when(
-          assert_true(size(col("seeds")) >= 1,
-            lit(s"PQ seed codebook found no rows with vec_id < $nBooks — " +
-              "re-key vec_ids to start at 0 or train with lloydIters > 0")).isNull,
-        transform(col("seeds"), (s, i) =>
-          struct(i.cast(LongType).as("cid"), s.getField("c_vec").as("c_vec")))).as("books"))
-
   /** The `m` per-subspace code columns as one array expression
     * (requires a `books` column in scope). */
   private def pqCodesExpr(vec: Column, m: Int, sub: Int): Column =
@@ -961,7 +993,7 @@ object Similarity {
   /** ADC reconstruction from a `codes` array and an in-scope `books`
     * column: the chosen centroids' subvectors concatenated in
     * subspace order. O(1) positional lookup per code — cids are
-    * dense 0..n-1 and `books` is sorted by cid ([[pqBooksFrame]]
+    * dense 0..n-1 and `books` is sorted by cid ([[seedBooks]]
     * invariant), so code k sits at array position k+1. */
   private def pqReconExpr(codes: Column, sub: Int): Column =
     flatten(transform(codes, (code, j) =>
@@ -977,68 +1009,36 @@ object Similarity {
         (x.cast(DoubleType) - y.cast(DoubleType))),
       lit(0.0), (acc, v) => acc + v)
 
-  /** Lloyd-refined PQ codebook: per-(subspace, centroid) k-means
-    * rounds over the assignment the current books produce — the
-    * [[trainedQuantizer]] recipe applied jointly to ALL `m`
-    * subspaces in ONE partial-aggregated pass per round (keys are
-    * (j, cid, pos): at most m·nBooks·sub cells of driver metadata,
-    * FAISS-style). Sums are DECIMAL so rounds are bit-reproducible
-    * in any partition order; empty (j, cid) cells keep their
-    * subvector; seeds are the deterministic first-`nBooks` vectors
-    * and only the training scan is sampled. Returns the one-row
-    * books frame [[pqEncode]] consumes. */
+  /** (vec_id, embedding, nrm) of the `dim`-wide vectors — the rows
+    * every PQ path encodes, trains on and queries with. */
+  private def pqVectors(embeddings: DataFrame, dim: Int): DataFrame =
+    embeddings.filter(size(col("embedding")) === dim)
+      .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm"))
+
+  /** The PQ codebook of `e`: the seeded `nBooks` centroids, Lloyd-
+    * trained per (subspace, centroid) for ALL `m` subspaces in one
+    * pass per round — a component at position `pos` of subspace `j`
+    * updates position `j·sub + pos` of its subspace's centroid. */
+  private def pqBooks(e: DataFrame, m: Int, nBooks: Int, sub: Int, iters: Int,
+                      trainSampleFraction: Double): DataFrame =
+    lloyd(e, seedBooks(e, nBooks, "PQ codebook"), iters, trainSampleFraction) { (train, books) =>
+      train.crossJoin(broadcast(books))
+        .select(col("embedding"),
+          posexplode(pqCodesExpr(col("embedding"), m, sub)).as(Seq("j", "cid")))
+        .select(col("cid"), col("j"),
+          posexplode(slice(col("embedding"), col("j") * sub + 1, lit(sub))).as(Seq("p", "x")))
+        .select(col("cid"), (col("j") * sub + col("p")).as("pos"), col("x"))
+    }
+
+  /** Lloyd-refined PQ codebook ([[lloyd]] over [[seedBooks]]): the
+    * one-row books frame [[pqEncode]] consumes. */
   def pqTrainBooks(embeddings: DataFrame, m: Int = 4, nBooks: Int = 8,
                    dim: Int = 64, iters: Int = 1,
                    trainSampleFraction: Double = 1.0): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"need dim divisible by m, got (dim=$dim, m=$m)")
-    require(iters >= 0, s"need iters >= 0, got $iters")
-    require(trainSampleFraction > 0.0 && trainSampleFraction <= 1.0,
-      s"need trainSampleFraction in (0, 1], got $trainSampleFraction")
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val sub = dim / m
-    val e = embeddings.filter(size(col("embedding")) === dim)
-      .select(col("vec_id"), col("embedding"))
-    var books: Array[(Long, Array[Float])] =
-      e.filter(col("vec_id") < nBooks).orderBy(col("vec_id"))
-        .as[(Long, Array[Float])].collect()
-        .zipWithIndex.map { case ((_, v), i) => (i.toLong, v) }
-    require(books.nonEmpty, s"corpus has no vectors with vec_id < $nBooks to seed from")
-    val trainSet =
-      if (trainSampleFraction >= 1.0) e
-      else e.sample(withReplacement = false, trainSampleFraction, seed = 27L)
-    def booksRow(bs: Array[(Long, Array[Float])]): DataFrame =
-      spark.createDataset(bs.toIndexedSeq).toDF("cid", "c_vec")
-        .agg(array_sort(collect_list(struct(col("cid"), col("c_vec")))).as("books"))
-    for (_ <- 1 to iters) {
-      val stats = trainSet.crossJoin(broadcast(booksRow(books)))
-        .select(col("embedding"),
-          posexplode(pqCodesExpr(col("embedding"), m, sub)).as(Seq("j", "cid")))
-        .select(col("j"), col("cid"),
-          posexplode(slice(col("embedding"), col("j") * sub + 1, lit(sub))).as(Seq("pos", "x")))
-        .groupBy(col("j"), col("cid"), col("pos"))
-        .agg(sum(col("x").cast(DecimalType(30, 10))).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val byKey = stats.groupBy(r => (r.getInt(0), r.getLong(1)))
-      books = books.map { case (cid, old) =>
-        val v = old.clone()
-        for (j <- 0 until m) byKey.get((j, cid)).foreach(_.foreach { r =>
-          v(j * sub + r.getInt(2)) = (r.getDecimal(3).doubleValue() / r.getLong(4)).toFloat
-        })
-        (cid, v)
-      }
-    }
-    booksRow(books)
+    requirePq(m, nBooks, dim)
+    requireTraining(iters, trainSampleFraction)
+    pqBooks(pqVectors(embeddings, dim), m, nBooks, dim / m, iters, trainSampleFraction)
   }
-
-  /** Codebook for the requested training setting: the deterministic
-    * seed frame, or the Lloyd-refined one — the single switch every
-    * PQ entry point shares (both produce the same dense-cid labels,
-    * so codes from one setting decode under the other). */
-  private def pqBooksFor(embeddings: DataFrame, e: DataFrame, m: Int, nBooks: Int,
-                         dim: Int, lloydIters: Int, trainSampleFraction: Double): DataFrame =
-    if (lloydIters == 0) pqBooksFrame(e, nBooks)
-    else pqTrainBooks(embeddings, m, nBooks, dim, lloydIters, trainSampleFraction)
 
   /** Product-quantization codes: split each `dim`-vector into `m`
     * subspaces and store, per subspace, the dense id of the nearest
@@ -1056,16 +1056,12 @@ object Similarity {
   def pqEncode(embeddings: DataFrame, m: Int = 4, nBooks: Int = 8,
                dim: Int = 64, lloydIters: Int = 0,
                trainSampleFraction: Double = 1.0): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"need dim divisible by m, got (dim=$dim, m=$m)")
-    require(nBooks >= 1, s"need nBooks >= 1, got $nBooks")
-    val sub = dim / m
-    val e = embeddings.filter(size(col("embedding")) === dim)
-      .select(col("vec_id"), col("embedding"))
-    val books = pqBooksFor(embeddings, e, m, nBooks, dim, lloydIters, trainSampleFraction)
-    e.crossJoin(broadcast(books))
+    requirePq(m, nBooks, dim)
+    requireTraining(lloydIters, trainSampleFraction)
+    val e = pqVectors(embeddings, dim)
+    e.crossJoin(broadcast(pqBooks(e, m, nBooks, dim / m, lloydIters, trainSampleFraction)))
       .select(col("vec_id"), col("embedding"),
-        pqCodesExpr(col("embedding"), m, sub).as("codes"),
-        col("books"))
+        pqCodesExpr(col("embedding"), m, dim / m).as("codes"), col("books"))
   }
 
   /** PQ top-k by asymmetric distance (ADC): rank the corpus for each
@@ -1089,69 +1085,48 @@ object Similarity {
     val coded = pqEncode(embeddings, m, nBooks, dim, lloydIters, trainSampleFraction)
     // AFTER pqEncode's (m, dim) require — m = 0 would otherwise die
     // in this division as a bare ArithmeticException before the
-    // named message (the sibling entry points already order it so)
+    // named message
     val sub = dim / m
-    val q = embeddings.filter(size(col("embedding")) === dim)
-      .filter(col("vec_id") < nQueries)
+    val q = pqVectors(embeddings, dim).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val scored = coded
       .select(col("vec_id"), pqReconExpr(col("codes"), sub).as("recon"))
       .crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("adist", pqAdist(col("q_vec"), col("recon")))
-    pqRank(scored, k)
+    topK(scored, k, "adist", ascending = true)
   }
 
-  /** Ascending-distance twin of [[topK]]: rank per query by
-    * (adist asc, vec_id) and keep the first `k`. */
-  private def pqRank(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist").asc, col("vec_id"))
-    // [[topK]]'s null contract, mirrored for distances: an undefined
-    // adist (null embedding element, length-mismatched reconstruction
-    // — zip_with pads the shorter array with nulls) must be EXCLUDED,
-    // not ranked — ascending order puts NULL FIRST in Spark, so
-    // unfiltered it would fill every top-k slot. NaN too (the full
-    // simDefined contract): a NaN query/corpus component makes adist
-    // NaN, which is non-null and still ranks — rows with no defined
-    // distance must not occupy neighbor slots the cosine paths would
-    // leave empty.
-    scored.filter(simDefined(col("adist")))
-      .withColumn("rk", row_number().over(w).cast(LongType))
-      .filter(col("rk") <= k)
-      .select("q_id", "vec_id", "adist", "rk")
-  }
-
-  /** In-memory IVF-PQ search — the composition [[writePqIndex]] /
-    * [[ivfPqTopKIndexed]] persist, as one lazy plan: coarse-assign
-    * every vector to its best cell AND PQ-encode it in a single
-    * broadcast projection (corpus reads once, never shuffles), probe
-    * the `nProbe` best cells per query, ADC-rank the probed cells'
-    * reconstructions. Declared-query twin with a full DuckDB oracle:
-    * the cell stage reuses the [[ivfTopK]] rounded-cosine contract,
-    * the distance stage the [[pqTopK]] no-libm exact-fold contract. */
+  /** In-memory IVF-PQ search: [[ivfPqTopKIndexed]]'s search run over
+    * the index [[writePqIndex]] would write, left unwritten. The
+    * corpus is read once: every vector is cell-assigned AND PQ-encoded
+    * in one broadcast projection, and never shuffles. Declared-query
+    * twin with a full DuckDB oracle: the cell stage is the
+    * [[ivfTopK]] rounded-cosine contract, the distance stage the
+    * [[pqTopK]] no-libm exact-fold contract. */
   def ivfPqTopK(embeddings: DataFrame, nQueries: Int, k: Int,
                 nCells: Int = 16, nProbe: Int = 2, m: Int = 4,
                 nBooks: Int = 8, dim: Int = 64): DataFrame = {
     require(nQueries >= 1 && k >= 1, s"need nQueries, k >= 1, got ($nQueries, $k)")
-    require(nCells >= 1 && nProbe >= 1 && nProbe <= nCells,
-      s"need 1 <= nProbe <= nCells, got (nCells=$nCells, nProbe=$nProbe)")
-    require(m >= 1 && dim % m == 0, s"need dim divisible by m, got (dim=$dim, m=$m)")
-    require(nBooks >= 1, s"need nBooks >= 1, got $nBooks")
-    val sub = dim / m
-    val e = embeddings.filter(size(col("embedding")) === dim)
-      .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm"))
-    val cent = quantizer(e, nCells, lloydIters = 0)
-    val books = pqBooksFrame(e.select(col("vec_id"), col("embedding")), nBooks)
-    val corpus = e.crossJoin(broadcast(cent)).crossJoin(broadcast(books))
-      .select(col("vec_id"),
-        bestCellExpr(col("embedding"), col("nrm")).as("cell"),
-        pqReconExpr(pqCodesExpr(col("embedding"), m, sub), sub).as("recon"))
-    val qProbed = probeCells(e.filter(col("vec_id") < nQueries), cent, nProbe)
-      .drop("q_nrm")
-    val scored = corpus.join(broadcast(qProbed), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("adist", pqAdist(col("q_vec"), col("recon")))
-    pqRank(scored, k)
+    requireCells(nCells, nProbe)
+    requirePq(m, nBooks, dim)
+    val (cent, books, index) = pqIndex(embeddings, nCells, m, nBooks, dim, 0, 1.0)
+    ivfPqSearch(index, cent, books, embeddings.filter(col("vec_id") < nQueries),
+      k, nProbe, m, dim)
+  }
+
+  /** The IVF-PQ index [[writePqIndex]] persists, unwritten: the
+    * quantizer frame, the codebook frame and the index rows
+    * (vec_id, codes, cell). */
+  private def pqIndex(embeddings: DataFrame, nCells: Int, m: Int, nBooks: Int, dim: Int,
+                      lloydIters: Int, trainSampleFraction: Double)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val e = pqVectors(embeddings, dim)
+    val cent = quantizer(e, nCells, lloydIters, trainSampleFraction)
+    val books = pqBooks(e, m, nBooks, dim / m, lloydIters, trainSampleFraction)
+    val index = assignCells(e.crossJoin(broadcast(books)), cent)
+      .select(col("vec_id"), pqCodesExpr(col("embedding"), m, dim / m).as("codes"), col("cell"))
+    (cent, books, index)
   }
 
   /** Persist an IVF-PQ index: the [[writeInvertedFile]] cell layout
@@ -1160,29 +1135,18 @@ object Similarity {
     * full FAISS IVF-PQ composition. The stored index row is
     * (vec_id, codes): `m` small ints instead of `dim` floats, so the
     * per-cell scan a probe touches is ~32× smaller than the
-    * inverted-file one. Both quantizers ship with the index (a
-    * reader must probe with the centroids the assignment used, and
-    * decode with the codebook the encoding used). */
+    * inverted-file one. Both quantizers ship with the index. */
   def writePqIndex(embeddings: DataFrame, dir: String, nCells: Int = 16,
                    m: Int = 4, nBooks: Int = 8, dim: Int = 64,
                    lloydIters: Int = 0, trainSampleFraction: Double = 1.0): Unit = {
-    require(nCells >= 1, s"need nCells >= 1, got $nCells")
-    require(m >= 1 && dim % m == 0, s"need dim divisible by m, got (dim=$dim, m=$m)")
-    val sub = dim / m
-    val e = embeddings.filter(size(col("embedding")) === dim)
-      .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm"))
-    val cent = quantizer(e, nCells, lloydIters, trainSampleFraction)
-    writeCentroids(cent, dir)
-    val books = pqBooksFor(embeddings, e, m, nBooks, dim, lloydIters, trainSampleFraction)
-    books.select(explode(col("books")).as("b"))
-      .select(col("b.cid").as("cid"), col("b.c_vec").as("c_vec"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/books")
-    e.crossJoin(broadcast(cent)).crossJoin(broadcast(books))
-      .select(col("vec_id"),
-        pqCodesExpr(col("embedding"), m, sub).as("codes"),
-        bestCellExpr(col("embedding"), col("nrm")).as("cell"))
-      .repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/index")
+    requireCells(nCells)
+    requirePq(m, nBooks, dim)
+    requireTraining(lloydIters, trainSampleFraction)
+    val (cent, books, index) =
+      pqIndex(embeddings, nCells, m, nBooks, dim, lloydIters, trainSampleFraction)
+    writeBooks(cent, "cents", "cell", s"$dir/centroids")
+    writeBooks(books, "books", "cid", s"$dir/books")
+    writeCells(index, dir)
   }
 
   /** Query a persisted IVF-PQ index: rank the stored cells per query
@@ -1196,16 +1160,13 @@ object Similarity {
                        k: Int, nProbe: Int = 2, m: Int = 4, dim: Int = 64): DataFrame = {
     require(k >= 1 && nProbe >= 1, s"need k >= 1 and nProbe >= 1, got ($k, $nProbe)")
     require(m >= 1 && dim % m == 0, s"need dim divisible by m, got (dim=$dim, m=$m)")
-    val sub = dim / m
-    val cent = centsRow(spark.read.parquet(s"$dir/centroids"))
     val storedBooks = spark.read.parquet(s"$dir/books")
     // positional decode ([[pqReconExpr]]) requires the dense 0..n-1
     // labels writePqIndex stores; a stale index written under a
     // different labeling would silently mis-decode — fail loudly
-    // instead (the books table is nBooks rows, the check is free)
-    // one collect serves both validations (cid density + stored dim)
-    // — these were two separate driver jobs over the same nBooks-row
-    // table, i.e. two scheduling round-trips before the real query
+    // instead. One collect of the nBooks-row table serves both
+    // validations (cid density + stored dim): two separate driver
+    // jobs were two scheduling round-trips before the real query.
     val bookFacts = storedBooks.select(col("cid"), size(col("c_vec")).as("s"))
       .collect()
     val cids = bookFacts.map(_.getLong(0)).sorted
@@ -1223,24 +1184,24 @@ object Similarity {
       s"stored PQ codebook at $dir/books holds dim-${storedDim.mkString(",")} " +
         s"vectors but the query asked for dim=$dim — query with the index's " +
         "own parameters or rebuild")
-    val booksRow = storedBooks
-      .agg(array_sort(collect_list(struct(col("cid"), col("c_vec")))).as("books"))
-    val qProbed = probeCells(
-      queries.filter(size(col("embedding")) === dim)
-        .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm")),
-      cent, nProbe).drop("q_nrm")
     val index = spark.read.parquet(s"$dir/index")
-    // m lives in the stored code arrays — one-row probe, same
-    // fail-loudly contract as the dim/cid checks above
     index.select(size(col("codes")).as("s")).limit(1).collect()
       .headOption.map(_.getInt(0)).foreach(storedM =>
         require(storedM == m,
           s"stored PQ index at $dir/index holds $storedM-code rows but the " +
             s"query asked for m=$m — query with the index's own parameters or rebuild"))
-    val scored = index.join(broadcast(qProbed), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .crossJoin(broadcast(booksRow))
-      .withColumn("adist", pqAdist(col("q_vec"), pqReconExpr(col("codes"), sub)))
-    pqRank(scored, k)
+    ivfPqSearch(index, storedCents(spark.read.parquet(s"$dir/centroids")),
+      booksRow(storedBooks), queries, k, nProbe, m, dim)
   }
+
+  /** The ONE IVF-PQ search: [[ivfPqTopKIndexed]] runs it over the
+    * written index, [[ivfPqTopK]] over the unwritten one. The probed
+    * cells' codes are ADC-scored against the `dim`-wide queries. */
+  private def ivfPqSearch(index: DataFrame, cent: DataFrame, books: DataFrame,
+                          queries: DataFrame, k: Int, nProbe: Int, m: Int,
+                          dim: Int): DataFrame =
+    topK(probeJoin(index, cent, queries.filter(size(col("embedding")) === dim), nProbe)
+      .crossJoin(broadcast(books))
+      .withColumn("adist", pqAdist(col("q_vec"), pqReconExpr(col("codes"), dim / m))),
+      k, "adist", ascending = true)
 }

@@ -799,4 +799,58 @@ class SimilaritySpec extends SparkSpec {
     val pairs = Similarity.embeddingNearDupPairs(df, 0.1).collect()
     assert(!pairs.exists(r => r.getLong(0) == 1L || r.getLong(1) == 1L))
   }
+
+  test("ANN index writers reject bad arguments before writing anything") {
+    // a writer used to build part of the index before its arguments
+    // were checked: writePqIndex wrote centroids/ and then failed in
+    // codebook training, and writeInvertedFile read lloydIters = -1 as 0
+    val emb = spark.read.parquet(realEmbeddings)
+    def rejects(write: String => Unit): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-ann-args").toString
+      intercept[IllegalArgumentException](write(dir))
+      assert(new java.io.File(dir).list().isEmpty,
+        s"a rejected build left files behind: ${new java.io.File(dir).list().mkString(",")}")
+    }
+    rejects(Similarity.writeInvertedFile(emb, _, nCells = 8, lloydIters = -1))
+    rejects(Similarity.writePqIndex(emb, _, nCells = 8, lloydIters = -1))
+    rejects(Similarity.writePqIndex(emb, _, nCells = 8, nBooks = 0))
+    rejects(Similarity.writeInvertedFile(emb, _, nCells = 8, trainSampleFraction = 0.0))
+  }
+
+  test("Lloyd-trained indexes: in-memory search == indexed search over the written index") {
+    val emb = spark.read.parquet(realEmbeddings)
+    val (iters, frac) = (5, 0.5)
+    def rows(df: DataFrame, score: String) = df.collect()
+      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
+                 r.getAs[Double](score), r.getAs[Long]("rk"))).toSet
+    def stored(path: String, id: String) = spark.read.parquet(path).collect()
+      .map(r => r.getAs[Long](id) -> r.getAs[scala.collection.Seq[Float]]("c_vec").toSeq).toMap
+    val seeds = emb.filter(col("vec_id") < 8).collect()
+      .map(r => r.getAs[Long]("vec_id") -> r.getAs[scala.collection.Seq[Float]]("embedding").toSeq)
+      .toMap
+
+    val ivfDir = java.nio.file.Files.createTempDirectory("graft-ivf-trained").toString
+    Similarity.writeInvertedFile(emb, ivfDir, nCells = 8, lloydIters = iters,
+      trainSampleFraction = frac)
+    assert(stored(s"$ivfDir/centroids", "cell") != seeds, "training must move the centroids")
+    val ivfMem = Similarity.ivfTopK(emb, nQueries = 8, k = 5, nCells = 8, nProbe = 2,
+      lloydIters = iters, trainSampleFraction = frac)
+    val ivfIdx = Similarity.ivfTopKIndexed(spark, ivfDir, emb.filter(col("vec_id") < 8),
+      k = 5, nProbe = 2)
+    assert(rows(ivfMem, "sim").nonEmpty)
+    assert(rows(ivfIdx, "sim") == rows(ivfMem, "sim"),
+      "the written trained inverted file must search like the unwritten one")
+
+    val pqDir = java.nio.file.Files.createTempDirectory("graft-ivfpq-trained").toString
+    Similarity.writePqIndex(emb, pqDir, nCells = 8, m = 4, nBooks = 8, dim = 64,
+      lloydIters = iters, trainSampleFraction = frac)
+    assert(stored(s"$pqDir/books", "cid") != seeds, "training must move the codebook")
+    val pqMem = Similarity.pqTopK(emb, nQueries = 5, k = 5,
+      lloydIters = iters, trainSampleFraction = frac)
+    val pqIdx = Similarity.ivfPqTopKIndexed(spark, pqDir, emb.filter(col("vec_id") < 5),
+      k = 5, nProbe = 8)
+    assert(rows(pqMem, "adist").size == 25)
+    assert(rows(pqIdx, "adist") == rows(pqMem, "adist"),
+      "an all-cells probe of the trained IVF-PQ index must equal the trained PQ search")
+  }
 }

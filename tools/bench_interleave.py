@@ -36,6 +36,7 @@ import statistics
 import subprocess
 import sys
 import tempfile
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -45,17 +46,35 @@ def sh(args, cwd=REPO, check=True):
                           stderr=subprocess.STDOUT, text=True)
 
 
-def wait_idle(timeout_s=600, threshold=0.8):
-    import time
+def cpu_busy(window_s=2.0):
+    """Machine-wide CPU busy fraction over `window_s`, from two
+    /proc/stat samples (idle = idle + iowait jiffies)."""
+    def sample():
+        with open("/proc/stat") as f:
+            v = [int(x) for x in f.readline().split()[1:9]]
+        return v[3] + v[4], sum(v)
+    idle0, total0 = sample()
+    time.sleep(window_s)
+    idle1, total1 = sample()
+    return 1.0 - (idle1 - idle0) / max(total1 - total0, 1)
+
+
+def wait_idle(timeout_s=600, threshold=0.2):
+    """Wait until the CPUs are idle (busy fraction below `threshold`).
+
+    Gates on the busy fraction, not the load average: a finished bench
+    JVM leaves the 1-minute load average at 2-3 for a minute or more
+    after it exits, so a load gate waited 60-90 s before every run on
+    an idle box."""
     t0 = time.time()
-    while time.time() - t0 < timeout_s:
-        with open("/proc/loadavg") as f:
-            load = float(f.read().split()[0])
-        if load < threshold:
-            return load
-        print(f"[iab] waiting for idle box (load {load:.2f}) ...", flush=True)
-        time.sleep(15)
-    return load
+    while True:
+        busy = cpu_busy()
+        waited = time.time() - t0
+        if busy < threshold or waited >= timeout_s:
+            print(f"[iab] idle after {waited:.1f} s (cpu busy {busy:.0%})", flush=True)
+            return busy
+        print(f"[iab] waiting for idle box (cpu busy {busy:.0%}) ...", flush=True)
+        time.sleep(3)
 
 
 def compile_tree(tree, label):
