@@ -14,7 +14,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Scratch on tmpfs when available: shuffle blocks, spills, and
     // the lakehouse demo tables are ephemeral by definition, and on
     // this box /tmp is backed by the system disk while /dev/shm is
@@ -33,26 +32,6 @@ object Bench {
     // relocate java.io.tmpdir BEFORE the session exists so the
     // zone-map/compaction demo tables follow the scratch dir too
     scratch.foreach(s => sys.props("java.io.tmpdir") = s)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf, so it must ride the builder (Sessions.tune runs
-      // too late): the default 100-entry codegen class cache thrashes
-      // under 150 distinct plans — every run recompiled nearly every
-      // stage (measured −29% suite total; rationale on the constant)
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.core.Sessions.CodegenCacheEntries)
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-based AQE coalescing (default parallelismFirst=true
-      // keeps ~2×cores post-shuffle partitions for "parallelism",
-      // which at bench scale means 32-64 near-empty tasks per
-      // exchange — pure scheduling floor). Size-targeted coalescing
-      // is also the right cluster setting: partitions sized by
-      // advisoryPartitionSizeInBytes, not by a core-count heuristic.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-    scratch.foreach(s => builder.config("spark.local.dir", s))
     // Capture-environment guard: round 9 found two stale sbt daemons
     // from a prior session burning ~3 cores through several historical
     // captures — part of the "regime swings" was plain background load.
@@ -101,16 +80,8 @@ object Bench {
           s"is loaded (load_avg=$loadAvg, foreign sbt JVMs=$foreignJvms)")
       sys.exit(2)
     }
-    val spark = builder.getOrCreate()
-    // the −29% codegen-cache sizing is a builder-time static conf; a
-    // refactor that drops it would silently re-thrash the 100-entry
-    // default — refuse to measure without it (SessionsSpec pins the
-    // test builder the same way)
-    require(spark.conf.get("spark.sql.codegen.cache.maxEntries")
-        == graft.core.Sessions.CodegenCacheEntries,
-      "bench session lost the sized codegen class cache (static conf must ride the builder)")
+    val spark = graft.core.Sessions.local(confs = scratch.map("spark.local.dir" -> _).toMap)
     spark.sparkContext.setLogLevel("WARN")
-    graft.core.Sessions.tune(spark) // shared confs + SQL function registration
 
     // warm-up (untimed): codegen, shuffle machinery, parquet footers.
     // Each query runs once against the smallest SF so its generated

@@ -2,19 +2,19 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Per-query `explain("formatted")` dumps, one file per query — the
   * optimization-round evidence trail (`plans/rNN/<query>_before.txt`
   * / `..._after.txt`). Unlike [[Plans]] (curated headline plans, one
-  * markdown file, local[4]), this runs under the BENCH session shape
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus, AQE on) so
-  * the dumped plans are the ones the benchmark actually executes.
+  * markdown file, local[4]), this runs under the Bench session shape
+  * by construction — both build their session with
+  * `Sessions.local()` (local[$SPARK_GRAFT_CPUS], shuffle.partitions =
+  * cpus) — so the dumped plans are the ones the benchmark executes.
   *
   * Usage:
   * {{{
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.PlanDump /root/testdata/sf0.1 plans/r15 _before q_a,q_b"
+  *   SPARK_GRAFT_CPUS=4 sbt "runMain graft.PlanDump <sfDir> plans/r15 _before q_a,q_b"
   * }}}
   * The 4th arg (comma-separated query names) is optional — default is
   * every declared query.
@@ -25,19 +25,8 @@ object PlanDump {
     val outDir = args.lift(1).getOrElse("plans/r15")
     val suffix = args.lift(2).getOrElse("_before")
     val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.core.Sessions.CodegenCacheEntries)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Sessions.tune(spark)
     Files.createDirectories(Paths.get(outDir))
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

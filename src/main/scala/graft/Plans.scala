@@ -2,7 +2,6 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `explain("formatted")` for the headline queries to a
@@ -89,21 +88,11 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.core.Sessions.CodegenCacheEntries) // static conf; see Sessions
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // stable path for the appendix's bucketed store tables, so the
-      // dumped scan locations don't churn between regenerations
-      .config("spark.sql.warehouse.dir",
-        new java.io.File("target/plans-warehouse").getAbsoluteFile.toURI.toString)
-      .getOrCreate()
+    // stable path for the appendix's bucketed store tables, so the
+    // dumped scan locations don't churn between regenerations
+    val spark = graft.core.Sessions.local(4, Map("spark.sql.warehouse.dir" ->
+      new java.io.File("target/plans-warehouse").getAbsoluteFile.toURI.toString))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Sessions.tune(spark) // shared confs + SQL function registration
 
     val sb = new StringBuilder
     sb.append("# Physical plans (generated — do not edit)\n\n")

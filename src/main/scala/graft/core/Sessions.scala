@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Session configuration for the engine.
   *
-  * `tune` applies the runtime-settable confs every entry point needs
-  * (safe on sessions we did not build — the driver owns the builder
-  * in Verify/Bench); `local` builds a tuned local session for
-  * library users.
+  * `tune` applies the runtime-settable confs every session needs
+  * (safe on sessions we did not build); `local` is the one builder:
+  * every session this repo starts — Verify, Bench, PlanDump, Plans,
+  * the test session, the probes — comes from it, so the oracle is
+  * checked under the session shape the benchmark times.
   */
 object Sessions {
 
@@ -54,12 +55,31 @@ object Sessions {
     spark
   }
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+  /** A tuned `local[cores]` session: `shuffle.partitions = cores`,
+    * the sized codegen class cache, UI off, size-based AQE coalescing,
+    * plus `confs` (static ones included: a path such as
+    * `spark.local.dir` or `spark.sql.warehouse.dir`).
+    *
+    * `parallelismFirst=false`: Spark's default keeps ~2×cores
+    * post-shuffle partitions for "parallelism", which on small inputs
+    * means dozens of near-empty tasks per exchange — pure scheduling
+    * floor. Size-targeted coalescing (partitions sized by
+    * `advisoryPartitionSizeInBytes`, not by a core-count heuristic) is
+    * also the right cluster setting, and no answer may depend on it.
+    *
+    * `cores` defaults to `$SPARK_GRAFT_CPUS`, else the machine's
+    * processor count. */
+  def local(
+      cores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(
+        Runtime.getRuntime.availableProcessors())(_.trim.toInt),
+      confs: Map[String, String] = Map.empty): SparkSession =
     tune(SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config(confs)
       .getOrCreate())
 }

@@ -1,10 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Registers graft's native expressions in the session function
-  * registry so plain SQL can call them
+/** Registers graft's native expressions ([[Registration.all]]) in the
+  * session function registry so plain SQL can call them
   * (`SELECT dot_f(a.embedding, b.embedding) ...`). Same namespace
   * rationale as [[ColumnBridge]]: the registry lives behind
   * `private[sql]` session state in Spark 4.
@@ -14,19 +13,6 @@ object FunctionBridge {
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-    // arity-checked builders: wrong argument count → WRONG_NUM_ARGS
-    // analysis error, not an IndexOutOfBoundsException
-    registry.createOrReplaceTempFunction("dot_f",
-      (exprs: Seq[Expression]) => org.apache.spark.sql.graft.Registration.dotF(exprs),
-      "scala_udf")
-    registry.createOrReplaceTempFunction("norm2_f",
-      (exprs: Seq[Expression]) => org.apache.spark.sql.graft.Registration.norm2F(exprs),
-      "scala_udf")
-    registry.createOrReplaceTempFunction("jaro_winkler",
-      (exprs: Seq[Expression]) => org.apache.spark.sql.graft.Registration.jaroWinkler(exprs),
-      "scala_udf")
-    registry.createOrReplaceTempFunction("nfc_normalize",
-      (exprs: Seq[Expression]) => org.apache.spark.sql.graft.Registration.nfcNormalize(exprs),
-      "scala_udf")
+    Registration.all.foreach(f => registry.createOrReplaceTempFunction(f.name, f.build, "scala_udf"))
   }
 }

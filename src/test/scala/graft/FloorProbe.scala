@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway harness-floor probe (r16): quantify the fixed per-query
   * cost components of the bench loop — job scheduling round-trips,
   * AQE stage barriers, planning — under the exact bench session
@@ -9,19 +7,8 @@ import org.apache.spark.sql.SparkSession
   * lives in test scope so it never ships in the library jar. */
 object FloorProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.core.Sessions.CodegenCacheEntries)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Sessions.tune(spark)
     def tms(f: => Any): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6
     }
@@ -34,14 +21,14 @@ object FloorProbe {
     // raw job latency, no SQL: 1 task vs 32 tasks
     bench("rdd job, 1 task", 40)(_ => sc.parallelize(1 to 10, 1).count())
     bench("rdd job, 32 tasks", 40)(_ => sc.parallelize(1 to 320, 32).count())
-    // SQL, fresh plan each time (the bench-floor shape, 32-part range)
+    // SQL, fresh plan each time (the bench-floor shape, one range partition per core)
     bench("sql sum over range, fresh plan, AQE on", 40)(i =>
       spark.range(132L + i).selectExpr(s"sum(id + $i) as v$i").count())
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     bench("sql sum over range, fresh plan, AQE OFF", 40)(i =>
       spark.range(232L + i).selectExpr(s"sum(id + $i) as w$i").count())
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    // same but 1-partition range: isolates the 32-task stage cost
+    // same but 1-partition range: isolates the multi-task stage cost
     bench("sql sum over 1-part range, fresh plan, AQE on", 40)(i =>
       spark.range(0L, 132L + i, 1L, 1).selectExpr(s"sum(id + $i) as x$i").count())
     // plan-only (no action): analysis+optimize+physical

@@ -1,16 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-probe: nothing but back-to-back 1-task RDD jobs, so a
   * profiler window is 100% job-latency pipeline. r16 floor work. */
 object JobLatencyProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     val sc = spark.sparkContext
     val n = sys.env.getOrElse("PROBE_N", "400").toInt

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * For every headline query section in the committed PLANS.md, this
   * re-explains the query live (same session shape as `graft.Plans`:
-  * local[4], 4 shuffle partitions, tuned confs) and compares the
+  * `Sessions.local(4)`) and compares the
   * OPERATOR SKELETON — the tree's operator descriptors, including
   * join strategy and build side, with expression/plan ids stripped —
   * against the committed dump. A mismatch means `sbt "runMain
@@ -48,7 +48,6 @@ class PlansDocSpec extends SparkSpec {
 
   test("PLANS.md operator skeletons match live explain output") {
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir not present")
-    graft.core.Sessions.tune(spark)
     val committed = committedSections()
     assert(committed.nonEmpty, "PLANS.md has no query sections")
     // every dumped section must still be a declared query...

@@ -19,15 +19,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally super.afterAll()
   }
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.codegen.cache.maxEntries",
-      graft.core.Sessions.CodegenCacheEntries) // static conf; see Sessions
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Sessions.local(4)
 
   /** Assert that no scoped cache is registered and nothing is
     * persisted, polling first: the release listener runs on the

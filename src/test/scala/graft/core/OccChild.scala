@@ -3,8 +3,6 @@ package graft.core
 import java.io.File
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-JVM half of the cross-process OCC test (WarehouseSpec):
   * contends with the parent test JVM on ONE zone-mapped table,
   * round-barriered through files in a sync dir. This exercises the
@@ -30,13 +28,7 @@ object OccChild {
       Files.write(log, (s + "\n").getBytes("UTF-8"),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     try {
-      val spark = SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-occ-child")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+      val spark = Sessions.local(4)
       spark.sparkContext.setLogLevel("WARN")
       import spark.implicits._
       Files.write(Paths.get(syncDir, "child_ready"), Array.empty[Byte])

@@ -5,6 +5,19 @@ import graft.SparkSpec
 /** SQL-facing registration of the native expressions. */
 class SessionsSpec extends SparkSpec {
 
+  // first in the suite, so no tune() call in it has run yet: the
+  // shared session must be tuned by its constructor alone
+  test("the shared session is tuned by Sessions.local, without a tune() call") {
+    val r = spark.sql(
+      """SELECT dot_f(array(cast(1.0 as float), cast(2.0 as float)),
+        |             array(cast(3.0 as float), cast(4.0 as float))) AS d""".stripMargin)
+      .head()
+    assert(r.getDouble(0) == 11.0)
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
   test("dot_f / norm2_f are callable from SQL after tune()") {
     Sessions.tune(spark)
     val r = spark.sql(
@@ -23,11 +36,11 @@ class SessionsSpec extends SparkSpec {
 
   test("repo-built sessions carry the sized codegen class cache") {
     // The −29% suite-total finding (SCALING.md round-11) lives
-    // entirely in builder configs; nothing else fails if a refactor
+    // entirely in a builder config; nothing else fails if a refactor
     // drops the conf. This case turns that silent regression red:
-    // every session built by this repo's builders (SparkSpec here,
-    // Bench, Sessions.local — all set it at builder time, it is a
-    // STATIC conf) must carry the sized cache.
+    // every session this repo starts comes from Sessions.local (the
+    // shared test session here; the builder lint keeps it the only
+    // builder), which must set this STATIC conf at build time.
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries")
       == Sessions.CodegenCacheEntries)
   }
