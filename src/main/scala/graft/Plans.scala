@@ -85,6 +85,26 @@ object Plans {
     "q_connected_components", // gated driver union-find: LocalRelation comp side, broadcast member join
     "q_incremental_dedup")    // fresh-probes-corpus banding; ReuseExchange'd membership (store twin below)
 
+  /** Makes one plan's text independent of the run that printed it.
+    * JVM-wide counters are renumbered by order of first appearance:
+    * expression ids (`#123`, `#45L` keeps its type suffix), lambda
+    * variable suffixes (`lambda x_87`) and exchange plan ids
+    * (`[plan_id=68]`); any code change before a query shifts every
+    * later raw number. Lambda class names with their identity hash
+    * and the UUIDs in written file names differ per JVM and are
+    * blanked. A regenerated section then differs only where its plan
+    * differs. */
+  def canonicalize(plan: String): String = {
+    val blanked = plan
+      .replaceAll("\\$Lambda(\\$\\d+)?/0x[0-9a-f]+@[0-9a-f]+", "\\$Lambda")
+      .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
+    Seq("(?<=#)\\d+", "(?<=lambda [A-Za-z]{1,32}_)\\d+", "(?<=\\[plan_id=)\\d+")
+      .foldLeft(blanked) { (text, pattern) =>
+        val ids = scala.collection.mutable.Map.empty[String, Int]
+        pattern.r.replaceAllIn(text, m => ids.getOrElseUpdate(m.matched, ids.size).toString)
+      }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
@@ -100,7 +120,7 @@ object Plans {
     sb.append("explain of each headline query against the named testdata.\n")
     Headline.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val plan = canonicalize(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
       sb.append(s"\n## $name\n\n```\n$plan```\n")
       // release scoped caches between dumps: a prior query's persisted
       // frame would otherwise substitute (sameResult) into a LATER
@@ -138,7 +158,7 @@ object Plans {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         val probe = graft.text.Dedup.incrementalLshPairsAgainstStore(spark,
           spark.table("plans_band_store"), spark.table("plans_member_store"), fresh)
-        val plan = probe.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        val plan = canonicalize(probe.queryExecution.explainString(ExplainMode.fromString("formatted")))
         sb.append("\n## q_incremental_dedup against the persisted BUCKETED band store\n\n")
         sb.append("The ingest shape (`incrementalLshPairsAgainstStore` over\n" +
           "`Warehouse.writeBucketed` stores): the corpus is never re-read or\n" +

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Encoder, Encoders, TypedColumn}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed `Aggregator` UDAFs — the §2i fallback surface (SURVEY.md
@@ -80,7 +80,4 @@ object Aggregators {
     override def bufferEncoder: Encoder[RegrBuf] = Encoders.kryo[RegrBuf]
     override def outputEncoder: Encoder[RegrFit] = Encoders.product[RegrFit]
   }
-
-  /** The fit as a `TypedColumn` for `KeyValueGroupedDataset.agg`. */
-  def regrFitExactCol: TypedColumn[(Double, Double), RegrFit] = regrFitExact.toColumn
 }

@@ -527,22 +527,4 @@ object MediaOps {
       } else m
     }
   }
-
-  /** "Resize": re-bucket the stub feature vector to a new dimension —
-    * exercises the downstream reshape contract without a pixel codec. */
-  def resizeFeatures(features: Dataset[MediaFeatures], newDim: Int): Dataset[MediaFeatures] = {
-    // the resize/audioSegments fail-fast convention: newDim <= 0
-    // would silently emit empty feature vectors for every row
-    require(newDim >= 1, s"need newDim >= 1, got $newDim")
-    import features.sparkSession.implicits._
-    features.map { f =>
-      val src = f.features
-      val out = (0 until newDim).map { d =>
-        val from = src.size * d / newDim
-        val until = math.max(from + 1, src.size * (d + 1) / newDim)
-        src.slice(from, until).sum / (until - from)
-      }
-      f.copy(features = out)
-    }
-  }
 }

@@ -1,53 +1,46 @@
 package graft.sources
 
 import java.util
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder, Transform, Expression => V2Expression}
-import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector for a materials catalog — the engine's
-  * re-expression of the reference's REST scan with server-side
-  * filters (`mpr.materials.oxidation_states.search(chemsys=…,
-  * possible_species=…)`, `dags/my_dag.py:28-29`; SURVEY.md §2a #1,
-  * §4 "the only candidate extension").
+  * re-expression of the reference's extract step: a REST scan with
+  * server-side chemistry filters (`mpr.materials.oxidation_states.
+  * search(chemsys=…, possible_species=…)`, `dags/my_dag.py:19-45`;
+  * SURVEY.md §2a #1), fetched page by page.
   *
-  * What it demonstrates, Spark-internals-wise:
+  * It does three things:
   *  - `SupportsPushDownFilters`: `EqualTo`/`In` predicates on
   *    `material_id` / `chemsys` / `possible_species` become backend
-  *    query parameters (the "API" never ships non-matching rows —
-  *    exactly how the reference pushes chemistry filters to the
-  *    Materials Project server),
+  *    query parameters, so non-matching rows never cross the wire.
+  *    Every other predicate stays above the scan,
   *  - `SupportsPushDownRequiredColumns`: column pruning reaches the
-  *    READER (only requested fields are decoded into rows); the
-  *    backend wire format still ships full catalog rows — threading
-  *    the projection into `MaterialsBackend.fetch` is the remaining
-  *    bandwidth lever a production REST backend would add,
-  *  - partition planning: the key space is split into `pages`
-  *    input partitions, the DSv2 analogue of paginated API fetches —
-  *    each executor pulls its own page.
+  *    READER (only requested fields are decoded into rows); the wire
+  *    still ships full catalog rows,
+  *  - the key space is split into `pages` input partitions, the DSv2
+  *    analogue of paginated API fetches — each task pulls its own page.
   *
   * The backend is pluggable through [[MaterialsBackend]]:
   * `.option("path", file)` reads a local pipe-separated catalog
   * (zero-egress CI); `.option("url", endpoint)` speaks HTTP via
-  * [[HttpCatalogBackend]] — the pushed request becomes query
-  * parameters on the GET, so pushdown → wire translation is
-  * identical across backends (tests assert the same PushedFilters
-  * against a loopback server).
+  * [[HttpCatalogBackend]]. The pushed query is the same for both, so
+  * `PushedBackendQuery` in the scan description does not depend on
+  * the backend.
   *
   * Usage:
   * {{{
   *   spark.read.format("graft.sources.MaterialsSource")
   *     .option("path", catalog).option("pages", "4").load()
-  *     .filter($"chemsys" === "V-O")   // → PushedFilters
+  *     .filter($"chemsys" === "V-O")   // → PushedBackendQuery
   * }}}
   */
 class MaterialsSource extends TableProvider {
@@ -68,214 +61,118 @@ object MaterialsSource {
     StructField("nsites", IntegerType, nullable = false),
     StructField("energy_per_atom", DoubleType, nullable = false)))
 
-  /** Wire row codec (one pipe-separated row per line). A single-cell
-    * row holding only a blank — the no-group min/max aggregate of an
-    * EMPTY match set, whose contract is "exactly one row even when
-    * empty" — would serialize to an empty LINE, which the newline
-    * framing cannot carry (blank lines are stripped as padding); it
-    * rides as a one-byte 0x01 sentinel line instead. Both the HTTP client and
-    * the loopback test server use these, so the contract cannot
-    * drift. */
-  def encodeWireRow(f: Array[String]): String = {
-    val s = f.mkString("|")
-    if (s.isEmpty) "\u0001" else s
-  }
-  def decodeWireRow(line: String): Array[String] =
-    if (line == "\u0001") Array("") else line.split("\\|", -1)
-
-  /** Query predicates the "server" understands — the pushed subset.
-    * One shape only: per-column IN-lists (an EqualTo is a singleton
-    * IN — a separate equality map was dead wire surface the source
-    * never emitted, removed). */
+  /** Query predicates the "server" understands — the pushed subset:
+    * per-column IN-lists (an EqualTo is a singleton IN). An EMPTY
+    * list matches nothing. */
   case class BackendQuery(in: Map[String, Seq[String]]) {
     def matches(col: String, value: String): Boolean =
       in.get(col).forall(_.contains(value))
+
+    /** Whether a catalog row (fields in [[Schema]] order) passes every
+      * pushed column. */
+    def matchesRow(f: Array[String]): Boolean =
+      matches("material_id", f(0)) && matches("chemsys", f(1)) &&
+        matches("possible_species", f(3))
   }
 
-  /** One pushed aggregate function: `fn ∈ {count, min, max}`, `col`
-    * a catalog column or `"*"` (count only). The source never emits
-    * null values, so `count(col)` ≡ `count(*)` — documented, not a
-    * divergence. */
-  case class AggSpec(fn: String, col: String) {
-    def wire: String = s"$fn:$col"
-  }
-
-  /** The fully-translated pushed aggregation: GROUP BY columns, agg
-    * functions, and the scan output schema Spark expects (group
-    * columns first, then one column per aggregate — the DSv2
-    * contract). */
-  case class PushedAgg(groupBy: Seq[String], aggs: Seq[AggSpec], schema: StructType)
-
-  /** A fully-translated pushed join: the other (right) side's backend
-    * query, both sides' (catalogColumn → outputName) projections in
-    * Spark's requested order, the equi-key pair, and the joined
-    * output schema. Output names carry Spark's de-duplicating
-    * aliases, so a self-join's twin columns stay distinct. */
-  case class PushedJoin(rightQuery: BackendQuery,
-                        leftCols: Seq[(String, String)],
-                        rightCols: Seq[(String, String)],
-                        leftKey: String, rightKey: String) {
-    def schema: StructType = StructType(
-      leftCols.map { case (c, out) =>
-        val f = Schema(Schema.fieldIndex(c)); StructField(out, f.dataType, f.nullable) } ++
-      rightCols.map { case (c, out) =>
-        val f = Schema(Schema.fieldIndex(c)); StructField(out, f.dataType, f.nullable) })
-  }
+  /** Page of a key: Spark's murmur3 string hash (seed 42) pmod
+    * `nPages`, so every row of one id lands on exactly one page. Both
+    * backends' servers split pages with it. */
+  def pageOf(id: String, nPages: Int): Int =
+    math.floorMod(Murmur3HashFunction.hash(UTF8String.fromString(id), StringType, 42L),
+      nPages.toLong).toInt
 }
 
-/** The pluggable fetch seam of the source — everything below the
-  * pushdown machinery. A backend receives the FULLY pushed request
-  * (page split, filters, limit, top-n) and is trusted to honour the
+/** The pluggable fetch seam of the source. A backend receives the
+  * pushed query and the page split and is trusted to honour the
   * filters server-side: pushed conjuncts return no residual, so Spark
-  * never re-applies them (exactly the trust contract of a real REST
-  * API). Limit/top-n are optimizations only — Spark keeps the global
-  * cut above the scan either way.
+  * never re-applies them (the trust contract of a real REST API).
   *
   * Instances are created on the driver and shipped inside
   * [[MaterialsPage]] to executors, so implementations must be
   * Serializable value objects (hold a path/url, not a connection). */
 trait MaterialsBackend extends Serializable {
-  import MaterialsSource.BackendQuery
-  /** One page of pipe-separated catalog rows matching `query`.
-    * Application order: filters → `sample` (deterministic per-row
-    * keep, [[LocalCatalogBackend.sampleU]]) → top-n sort → skip
-    * `offset` rows → `limit` — SQL `… TABLESAMPLE … ORDER BY …
-    * LIMIT l OFFSET o` semantics. The builder only pushes an offset
-    * on single-page scans, where the page answer is the global
-    * answer. */
-  def fetch(page: Int, nPages: Int, query: BackendQuery, limit: Int,
-            topN: Option[(String, Boolean, Int)], offset: Int,
-            sample: Option[(Double, Double, Long)]): Iterator[Array[String]]
-  /** Server-side row count for the pushed query (drives scan stats). */
-  def count(query: BackendQuery): Long
-  /** Server-side aggregation of one page's matching rows: one row per
-    * group (groupBy values first, then one value per agg, in request
-    * order — min/max echo the catalog's original text so the
-    * round-trip is lossless). With no GROUP BY the page returns
-    * exactly one row even when empty (count 0, min/max blank→null),
-    * so Spark's merge always has a row per partition — the JDBC
-    * partial-pushdown convention. */
-  def aggregate(page: Int, nPages: Int, query: BackendQuery,
-                groupBy: Seq[String],
-                aggs: Seq[MaterialsSource.AggSpec]): Iterator[Array[String]]
+  /** Catalog rows of page `page` of `nPages` that match `query`,
+    * fields in [[MaterialsSource.Schema]] order. */
+  def fetch(page: Int, nPages: Int, query: MaterialsSource.BackendQuery): Iterator[Array[String]]
   /** Identifies the backend in plan/table descriptions. */
   def description: String
 }
 
-/** Local catalog-file backend (zero-egress CI stand-in). Pushed
-  * limit/top-n are applied here, after the page filter — the same
-  * point where [[HttpCatalogBackend]]'s server applies them. */
+/** Local pipe-separated catalog file: the zero-egress stand-in for
+  * the remote materials API. Rows filtered here never reach Spark,
+  * mirroring server-side filtering. */
 case class LocalBackend(path: String) extends MaterialsBackend {
-  import MaterialsSource.BackendQuery
-  override def fetch(page: Int, nPages: Int, query: BackendQuery, limit: Int,
-                     topN: Option[(String, Boolean, Int)], offset: Int,
-                     sample: Option[(Double, Double, Long)]): Iterator[Array[String]] = {
-    val matching0 = LocalCatalogBackend.fetch(path, page, nPages, query)
-    val matching = sample match {
-      case Some((lo, hi, seed)) => matching0.filter { f =>
-        val u = LocalCatalogBackend.sampleU(f(0), seed); u >= lo && u < hi
-      }
-      case None => matching0
-    }
-    topN match {
-      case Some((c, desc, n)) =>
-        // numeric-only by the builder's acceptance rule
-        val i = MaterialsSource.Schema.fieldIndex(c)
-        val ord = Ordering.Double.TotalOrdering
-        matching.toArray
-          .sortBy(f => f(i).toDouble)(if (desc) ord.reverse else ord)
-          .iterator.drop(offset).take(n)
-      case None =>
-        val after = matching.drop(offset)
-        if (limit >= 0) after.take(limit) else after
-    }
-  }
-  override def count(query: BackendQuery): Long = LocalCatalogBackend.count(path, query)
-  override def aggregate(page: Int, nPages: Int, query: BackendQuery,
-                         groupBy: Seq[String],
-                         aggs: Seq[MaterialsSource.AggSpec]): Iterator[Array[String]] =
-    LocalCatalogBackend.aggregateRows(
-      LocalCatalogBackend.fetch(path, page, nPages, query), groupBy, aggs)
+  override def fetch(page: Int, nPages: Int,
+                     query: MaterialsSource.BackendQuery): Iterator[Array[String]] =
+    LocalBackend.catalog(path).iterator.filter(f =>
+      MaterialsSource.pageOf(f(0), nPages) == page && query.matchesRow(f))
   override def description: String = s"path=$path"
 }
 
-/** HTTP backend: the pushed request becomes query parameters on a GET
-  * — the reference's `mpr.materials…search(chemsys=…)` call shape
+object LocalBackend {
+  /** Catalog parsed once per path per executor JVM, replaced when the
+    * file's mtime moves — one entry per path (a (path, mtime) key
+    * would pin every superseded parse forever in a long-lived JVM).
+    * Without it every page of every query re-read and re-split the
+    * whole file. */
+  private val parsed =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Array[Array[String]])]()
+
+  private def catalog(path: String): Array[Array[String]] = {
+    val mtime = new java.io.File(path).lastModified()
+    parsed.compute(path, (_, cur) =>
+      if (cur != null && cur._1 == mtime) cur
+      else {
+        // explicit UTF-8 (the HTTP backend's charset): the default
+        // codec is JVM-configurable, and a non-ASCII catalog must
+        // parse the same on either backend
+        val src = scala.io.Source.fromFile(path)(scala.io.Codec.UTF8)
+        try (mtime, src.getLines().filterNot(l => l.isEmpty || l.startsWith("#"))
+          .map(_.split("\\|", -1)).toArray)
+        finally src.close()
+      })._2
+  }
+}
+
+/** HTTP backend: the pushed query becomes parameters on a GET — the
+  * reference's `mpr.materials…search(chemsys=…)` call shape
   * (`dags/my_dag.py:28-29`), here against any server speaking the
   * same contract (tests run a loopback `com.sun.net.httpserver`
   * instance; zero egress).
   *
   * Wire contract (`text/plain`, one pipe-separated row per line):
-  *   GET url?page=i&pages=n[&in.<col>=v]*[&none.<col>=1]*[&sample=lo:hi:seed]
-  *                 [&offset=o][&limit=k][&sort=<col>&dir=asc|desc&topn=k]
-  *   GET url?count=1[&filters…]   → single line: matching row count
-  * Repeated `in.<col>` params form the IN-list (values may contain
-  * any catalog character — no in-value separator to collide with);
-  * `none.<col>=1` declares an EMPTY IN-list — the column matches no
-  * row (contradictory pushed conjuncts; required because "zero
-  * repeated params" is indistinguishable from "no filter"). */
+  *   GET url?page=i&pages=n[&in.<col>=v]*[&none.<col>=1]*
+  * The server returns the rows of page i (split by
+  * [[MaterialsSource.pageOf]]) that match every column. Repeated
+  * `in.<col>` params form the IN-list (values may contain any catalog
+  * character — no in-value separator to collide with); `none.<col>=1`
+  * declares an EMPTY IN-list — the column matches no row
+  * (contradictory pushed conjuncts; required because "zero repeated
+  * params" is indistinguishable from "no filter"). */
 case class HttpCatalogBackend(url: String) extends MaterialsBackend {
-  import MaterialsSource.BackendQuery
-
-  private def get(params: Seq[(String, String)]): Seq[String] = {
+  override def fetch(page: Int, nPages: Int,
+                     query: MaterialsSource.BackendQuery): Iterator[Array[String]] = {
+    val params = Seq("page" -> page.toString, "pages" -> nPages.toString) ++
+      query.in.toSeq.sortBy(_._1).flatMap {
+        // Spark never re-applies pushed conjuncts, so dropping an
+        // empty list would make the server match EVERYTHING on it
+        case (c, vs) if vs.isEmpty => Seq(s"none.$c" -> "1")
+        case (c, vs)               => vs.map(v => s"in.$c" -> v)
+      }
     val qs = params.map { case (k, v) =>
       k + "=" + java.net.URLEncoder.encode(v, "UTF-8") }.mkString("&")
     val conn = java.net.URI.create(s"$url?$qs").toURL
       .openConnection().asInstanceOf[java.net.HttpURLConnection]
     conn.setConnectTimeout(10000)
     conn.setReadTimeout(60000)
-    try {
+    val lines = try {
       require(conn.getResponseCode == 200,
         s"materials backend: HTTP ${conn.getResponseCode} for $url?$qs")
       val src = scala.io.Source.fromInputStream(conn.getInputStream, "UTF-8")
       try src.getLines().filter(_.nonEmpty).toList finally src.close()
     } finally conn.disconnect()
-  }
-
-  private def filterParams(q: BackendQuery): Seq[(String, String)] =
-    q.in.toSeq.sortBy(_._1).flatMap {
-      // an EMPTY intersected IN-list (contradictory pushed conjuncts,
-      // e.g. c = 'x' AND c = 'y') matches NOTHING — but "no values"
-      // is unrepresentable as repeated in.<col> params, and dropping
-      // the column entirely would make the server match EVERYTHING
-      // on it; Spark never re-applies pushed conjuncts, so the wire
-      // needs an explicit match-nothing marker (r12 review: the
-      // local backend returned 0 rows here, HTTP returned all)
-      case (c, vs) if vs.isEmpty => Seq(s"none.$c" -> "1")
-      case (c, vs)               => vs.map(v => s"in.$c" -> v)
-    }
-
-  override def fetch(page: Int, nPages: Int, query: BackendQuery, limit: Int,
-                     topN: Option[(String, Boolean, Int)], offset: Int,
-                     sample: Option[(Double, Double, Long)]): Iterator[Array[String]] = {
-    val params =
-      Seq("page" -> page.toString, "pages" -> nPages.toString) ++
-        filterParams(query) ++
-        sample.toSeq.map { case (lo, hi, seed) => "sample" -> s"$lo:$hi:$seed" } ++
-        (if (offset > 0) Seq("offset" -> offset.toString) else Nil) ++
-        (if (limit >= 0) Seq("limit" -> limit.toString) else Nil) ++
-        topN.toSeq.flatMap { case (c, desc, n) =>
-          Seq("sort" -> c, "dir" -> (if (desc) "desc" else "asc"), "topn" -> n.toString) }
-    get(params).iterator.map(MaterialsSource.decodeWireRow)
-  }
-
-  override def count(query: BackendQuery): Long =
-    get(Seq("count" -> "1") ++ filterParams(query)).headOption
-      .map(_.trim.toLong)
-      .getOrElse(throw new IllegalStateException(s"empty count response from $url"))
-
-  /** Aggregation rides the request as repeated `group=`/`agg=` params
-    * (`agg=<fn>:<col|*>`), so the server ships one row per group —
-    * the reference's `len(docs)` shape done on the server. */
-  override def aggregate(page: Int, nPages: Int, query: BackendQuery,
-                         groupBy: Seq[String],
-                         aggs: Seq[MaterialsSource.AggSpec]): Iterator[Array[String]] = {
-    val params =
-      Seq("page" -> page.toString, "pages" -> nPages.toString) ++
-        filterParams(query) ++
-        groupBy.map("group" -> _) ++
-        aggs.map(a => "agg" -> a.wire)
-    get(params).iterator.map(MaterialsSource.decodeWireRow)
+    lines.iterator.map(_.split("\\|", -1))
   }
 
   override def description: String = s"url=$url"
@@ -291,200 +188,34 @@ private[sources] class MaterialsTable(properties: Map[String, String])
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     def opt(k: String, default: String): String =
       options.getOrDefault(k, properties.getOrElse(k, default))
+    // fail fast at planning: an empty path otherwise surfaces as an
+    // executor-time FileNotFoundException('') with no hint at the
+    // cause, and pages <= 0 would plan ZERO input partitions, so
+    // every query over the source would silently return empty
     val backend: MaterialsBackend = opt("url", "") match {
       case "" =>
         val p = opt("path", "")
-        // fail fast at planning, like the pages check below — an
-        // empty path otherwise surfaces as an executor-time
-        // FileNotFoundException('') with no hint at the cause
         require(p.nonEmpty,
           "materials source needs option 'path' (local catalog) or 'url' (HTTP backend)")
         LocalBackend(p)
       case u  => HttpCatalogBackend(u)
     }
-    val pages = opt("pages", "4").toInt
-    // fail fast: pages <= 0 would plan ZERO input partitions and
-    // every query over the source would silently return empty
-    require(pages >= 1, s"option 'pages' must be >= 1, got $pages")
+    val rawPages = opt("pages", "4")
+    val pages = rawPages.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+      s"option 'pages' must be an integer >= 1, got $rawPages"))
     new MaterialsScanBuilder(backend, pages)
   }
 }
 
-private[sources] class MaterialsScanBuilder(val backend: MaterialsBackend, pages: Int)
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownLimit with SupportsPushDownTopN with SupportsPushDownAggregates
-    with SupportsPushDownOffset with SupportsPushDownTableSample
-    with SupportsPushDownJoin {
+private[sources] class MaterialsScanBuilder(backend: MaterialsBackend, pages: Int)
+    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
   import MaterialsSource._
 
   private val Pushable = Set("material_id", "chemsys", "possible_species")
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = Schema
-  private var limit: Int = -1
-  private var offset: Int = 0
-  private var sample: Option[(Double, Double, Long)] = None
-  private var aggPushed: Option[PushedAgg] = None
-  private var joinPushed: Option[PushedJoin] = None
-
-  /** No pushed operator that would have to compose with a later
-    * join: filters are fine (they stay per-side), everything
-    * order-sensitive (limit/top-n/offset/sample/agg/another join)
-    * declines the composition. */
-  private[sources] def joinPristine: Boolean =
-    aggPushed.isEmpty && joinPushed.isEmpty && limit < 0 && topN.isEmpty &&
-      offset == 0 && sample.isEmpty
-
-  private[sources] def inQuery: BackendQuery = {
-    val in = pushed.collect {
-        case EqualTo(a, v: String) => a -> Seq(v)
-        case In(a, vs) => a -> vs.map(_.asInstanceOf[String]).toSeq
-      }
-      .groupBy(_._1)
-      .map { case (colName, gs) => colName -> gs.map(_._2).reduce(_ intersect _) }
-    BackendQuery(in)
-  }
-
-  /** JOIN pushdown (DSv2, Spark 4.1): both sides of an INNER equi-
-    * join against the SAME catalog backend collapse into one scan
-    * that the backend answers — the "join runs on the server" shape
-    * a federated REST/JDBC source wants (for this catalog: the
-    * self-join enriching one projection of a material with another).
-    * Compatibility = same backend value; each side may carry pushed
-    * FILTERS (they become the per-side backend queries), anything
-    * order-sensitive declines. Only a single `=` on one column per
-    * side is accepted — the backend wire has no composite-key
-    * endpoint, and a declined push is just Spark's own join. */
-  override def isOtherSideCompatibleForJoin(other: SupportsPushDownJoin): Boolean =
-    other match {
-      case o: MaterialsScanBuilder => o.backend == backend && o.joinPristine && joinPristine
-      case _ => false
-    }
-
-  override def pushDownJoin(other: SupportsPushDownJoin,
-                            joinType: org.apache.spark.sql.connector.join.JoinType,
-                            leftRequired: Array[SupportsPushDownJoin.ColumnWithAlias],
-                            rightRequired: Array[SupportsPushDownJoin.ColumnWithAlias],
-                            condition: org.apache.spark.sql.connector.expressions.filter.Predicate): Boolean = {
-    if (joinType != org.apache.spark.sql.connector.join.JoinType.INNER_JOIN ||
-        condition == null || !isOtherSideCompatibleForJoin(other)) return false
-    val o = other.asInstanceOf[MaterialsScanBuilder]
-    def outName(c: SupportsPushDownJoin.ColumnWithAlias): String =
-      Option(c.alias).getOrElse(c.colName)
-    val leftCols = leftRequired.toSeq.map(c => c.colName -> outName(c))
-    val rightCols = rightRequired.toSeq.map(c => c.colName -> outName(c))
-    if (leftCols.exists(c => !Schema.fieldNames.contains(c._1)) ||
-        rightCols.exists(c => !Schema.fieldNames.contains(c._1))) return false
-    // single equi-condition over one output column per side
-    val refs = condition match {
-      case p if p.name() == "=" && p.children().length == 2 =>
-        p.children().toSeq.map {
-          case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames()(0))
-          case _ => None
-        }
-      case _ => Seq(None, None)
-    }
-    if (refs.exists(_.isEmpty)) return false
-    val names = refs.map(_.get)
-    val leftByOut = leftCols.map(_.swap).toMap
-    val rightByOut = rightCols.map(_.swap).toMap
-    (names.map(leftByOut.get), names.map(rightByOut.get)) match {
-      case (Seq(Some(lk), None), Seq(None, Some(rk))) => accept(o, leftCols, rightCols, lk, rk)
-      case (Seq(None, Some(lk)), Seq(Some(rk), None)) => accept(o, leftCols, rightCols, lk, rk)
-      case _ => false
-    }
-  }
-
-  private def accept(o: MaterialsScanBuilder, leftCols: Seq[(String, String)],
-                     rightCols: Seq[(String, String)], lk: String, rk: String): Boolean = {
-    // STRING join keys only (the pushTopN numeric-only rule, inverted):
-    // the pushed join matches raw catalog text, and raw text equality
-    // equals typed equality only for strings — a numeric key stored as
-    // "1.5" on one row and "1.50" on another parses to the same double
-    // (Spark's unpushed join matches them) but compares unequal as
-    // text, silently dropping the pair. Declining is just Spark's own
-    // join.
-    def isStringCol(c: String) =
-      Schema(Schema.fieldIndex(c)).dataType == StringType
-    if (!isStringCol(lk) || !isStringCol(rk)) return false
-    val pj = PushedJoin(o.inQuery, leftCols, rightCols, lk, rk)
-    joinPushed = Some(pj)
-    required = pj.schema
-    true
-  }
-
-  /** TABLESAMPLE pushdown — the "probe 1% of a petabyte catalog"
-    * shape. The backend keeps rows whose deterministic per-id sample
-    * coordinate lands in [lower, upper), so dropped rows never cross
-    * the wire and the SAME (seed, bounds) reproduces the SAME subset
-    * on any backend or rerun (Spark deletes the Sample operator on
-    * push, making the source's — deterministic — sampling the
-    * semantics). With-replacement cannot be expressed as a per-row
-    * keep → declined, Spark samples engine-side. Declined after an
-    * aggregate (sample-of-groups ≠ groups-of-sample) or an offset
-    * (the backend applies sample before offset; a plan that pushed
-    * offset first meant offset-then-sample). */
-  override def pushTableSample(lowerBound: Double, upperBound: Double,
-                               withReplacement: Boolean, seed: Long): Boolean =
-    if (withReplacement || aggPushed.isDefined || offset > 0 || joinPushed.isDefined) false
-    else { sample = Some((lowerBound, upperBound, seed)); true }
-
-  /** OFFSET pushdown — the pagination-cursor shape (`df.offset(o)`
-    * resuming a catalog sweep). Accepted ONLY on single-page scans:
-    * pushing an offset means Spark REMOVES the Offset operator, so
-    * the scan's answer must be globally exact, and a per-page skip
-    * on a multi-page scan would drop o rows from EVERY page. Also
-    * declined after an aggregation (skip-k-groups ≠ skip-k-rows) or
-    * a top-n (the sorted-skip composition is the backend's only
-    * sound order — kept engine-side rather than trusted). */
-  override def pushOffset(n: Int): Boolean =
-    if (pages == 1 && aggPushed.isEmpty && topN.isEmpty && joinPushed.isEmpty) { offset = n; true }
-    else false
-
-  /** LIMIT pushdown: each page reader stops after `n` matching rows
-    * (a real paginated backend would put it on the request), so a
-    * `df.limit(k)` probe of a petabyte catalog reads ≤ k·pages rows
-    * instead of scanning everything. Spark still applies the global
-    * limit above the scan — pushing is an optimization, never a
-    * semantics change. Declined once an aggregation is pushed: the
-    * backend applies limit BEFORE aggregation, but a post-agg LIMIT
-    * means "first k groups". */
-  override def pushLimit(n: Int): Boolean =
-    if (aggPushed.isDefined || joinPushed.isDefined) false else { limit = n; true }
-
-  private var topN: Option[(String, Boolean, Int)] = None // (col, descending, n)
-
-  /** ORDER BY … LIMIT n pushdown: each page returns only its own
-    * top n under the sort (a real backend would put `sort=` +
-    * `limit=` on the request). Partial by construction — pages are
-    * independent, so Spark keeps the global top-n merge above the
-    * scan; the wire cost still drops from |catalog| to n·pages.
-    * Only a single NUMERIC sort column is accepted: a partially
-    * pushed top-n must cut each page under EXACTLY Spark's global
-    * ordering, and for strings the JVM's UTF-16 comparison diverges
-    * from Spark's UTF-8 binary order on supplementary-plane
-    * characters — declined rather than silently wrong. (The catalog
-    * columns are non-nullable, so null ordering cannot diverge.)
-    * Anything richer is planned engine-side. */
-  override def pushTopN(orders: Array[SortOrder], n: Int): Boolean =
-    if (aggPushed.isDefined || joinPushed.isDefined) false // same pre-vs-post mismatch as pushLimit
-    else orders match {
-      case Array(o) =>
-        o.expression() match {
-          case ref: NamedReference if ref.fieldNames().length == 1 &&
-              numericField(ref.fieldNames()(0)) => // same acceptance as min/max pushdown
-            topN = Some((ref.fieldNames()(0), o.direction() == SortDirection.DESCENDING, n))
-            true
-          case _ => false
-        }
-      case _ => false
-    }
-  override def isPartiallyPushed: Boolean = true
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // post-join filters reference the JOINED (possibly aliased)
-    // schema — the per-side backend queries are already sealed, so
-    // everything stays engine-side
-    if (joinPushed.isDefined) return filters
     val (accepted, rejected) = filters.partition {
       case EqualTo(a, _: String) => Pushable(a)
       case In(a, vs) if vs.forall(_.isInstanceOf[String]) => Pushable(a)
@@ -495,447 +226,59 @@ private[sources] class MaterialsScanBuilder(val backend: MaterialsBackend, pages
   }
   override def pushedFilters(): Array[Filter] = pushed
 
-  /** Aggregate pushdown (COUNT / MIN / MAX, optional GROUP BY) — the
-    * reference's `len(docs)` count done server-side
-    * (`dags/my_dag.py:30`). With one page the backend's answer IS the
-    * final answer (complete pushdown — Spark plans no aggregate at
-    * all); with several, each page ships its partial per-group row
-    * and Spark merges (sum of counts, min of mins, max of maxes) —
-    * the partial-aggregable shape, n·groups rows on the wire instead
-    * of the corpus. MIN/MAX accept only NUMERIC columns for the same
-    * reason as pushTopN: JVM string ordering diverges from Spark's
-    * UTF-8 binary order on supplementary-plane text. */
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    // string group keys ONLY for the complete form: complete pushdown
-    // means Spark plans NO aggregate at all, trusting the backend's
-    // per-group rows — which group by RAW CELL TEXT. For a numeric
-    // group column, non-canonical text forms ("1.5" vs "1.50") would
-    // ship as distinct groups that nothing ever merges; the partial
-    // form is immune (Spark's merge re-groups by TYPED value) — the
-    // same raw-text-vs-typed-equality hazard the join-key push guards
-    // against.
-    pages == 1 && joinPushed.isEmpty &&
-      translateAgg(agg).exists(_.groupBy.forall(c =>
-        Schema(Schema.fieldIndex(c)).dataType == StringType))
-
-  override def pushAggregation(agg: Aggregation): Boolean =
-    // a pushed sample would have to apply BEFORE the aggregation; the
-    // aggregate wire path doesn't carry one — decline, Spark keeps
-    // the aggregate engine-side over the sampled scan (same for a
-    // pushed join: no post-join aggregation endpoint on the wire)
-    if (sample.isDefined || joinPushed.isDefined) false
-    else translateAgg(agg) match {
-      case some @ Some(_) => aggPushed = some; true
-      case None => false
-    }
-
-  private def fieldOf(e: V2Expression): Option[String] = e match {
-    case ref: NamedReference if ref.fieldNames().length == 1 &&
-        Schema.fieldNames.contains(ref.fieldNames()(0)) => Some(ref.fieldNames()(0))
-    case _ => None
-  }
-
-  private def numericField(c: String): Boolean =
-    Schema.fields.exists(f => f.name == c &&
-      (f.dataType == IntegerType || f.dataType == DoubleType))
-
-  private def translateAgg(agg: Aggregation): Option[PushedAgg] = {
-    val groupBy = agg.groupByExpressions.toSeq.map(fieldOf)
-    val specs = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some(AggSpec("count", "*"))
-      // the catalog never ships nulls, so count(col) == count(*)
-      case c: Count if !c.isDistinct => fieldOf(c.column).map(AggSpec("count", _))
-      case m: Min => fieldOf(m.column).filter(numericField).map(AggSpec("min", _))
-      case m: Max => fieldOf(m.column).filter(numericField).map(AggSpec("max", _))
-      case _ => None
-    }
-    if (groupBy.exists(_.isEmpty) || specs.isEmpty || specs.exists(_.isEmpty)) None
-    else {
-      val gb = groupBy.flatten
-      val aggs = specs.flatten
-      val gbFields = gb.map(c => Schema(Schema.fieldIndex(c)))
-      val aggFields = aggs.map {
-        case AggSpec("count", c) => StructField(s"count($c)", LongType, nullable = false)
-        case AggSpec(fn, c) =>
-          StructField(s"$fn($c)", Schema(Schema.fieldIndex(c)).dataType, nullable = true)
-      }
-      Some(PushedAgg(gb, aggs, StructType(gbFields ++ aggFields)))
-    }
-  }
-
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan =
-    // multiple accepted conjuncts can hit the SAME column (e.g. two
+  override def build(): Scan = {
+    // several accepted conjuncts can hit the SAME column (e.g. two
     // isin() filters); since pushFilters returned no residual for
     // them, Spark never re-applies them — a last-wins .toMap would
-    // silently widen the result, so inQuery intersects value sets
-    // (EqualTo folds in as a singleton In)
-    new MaterialsScan(backend, pages, inQuery, required,
-      pushed.map(_.toString), limit, topN, aggPushed, offset, sample, joinPushed)
+    // silently widen the result, so value sets intersect (EqualTo
+    // folds in as a singleton In)
+    val in = pushed.collect {
+        case EqualTo(a, v: String) => a -> Seq(v)
+        case In(a, vs) => a -> vs.map(_.asInstanceOf[String]).toSeq
+      }
+      .groupBy(_._1)
+      .map { case (colName, gs) => colName -> gs.map(_._2).reduce(_ intersect _) }
+    new MaterialsScan(backend, pages, BackendQuery(in), required, pushed.map(_.toString))
+  }
 }
 
 private[sources] class MaterialsScan(
     backend: MaterialsBackend, pages: Int, query: MaterialsSource.BackendQuery,
-    required: StructType, pushedDesc: Array[String], limit: Int = -1,
-    topN: Option[(String, Boolean, Int)] = None,
-    agg: Option[MaterialsSource.PushedAgg] = None,
-    offset: Int = 0,
-    sample: Option[(Double, Double, Long)] = None,
-    join: Option[MaterialsSource.PushedJoin] = None)
-    extends Scan with Batch
-    with SupportsReportPartitioning with SupportsReportStatistics
-    with SupportsRuntimeFiltering with SupportsReportOrdering {
-
-  /** Each page returns its rows sorted by the pushed top-n column —
-    * report that PARTITION-LOCAL ordering so Spark elides redundant
-    * per-partition sorts above the scan (the global merge, if one is
-    * needed, stays engine-side as always). No top-n pushed → no
-    * ordering claimed. */
-  override def outputOrdering(): Array[SortOrder] =
-    topN match {
-      case Some((c, desc, _)) if agg.isEmpty =>
-        Array(Expressions.sort(Expressions.column(c),
-          if (desc) SortDirection.DESCENDING else SortDirection.ASCENDING))
-      case _ => Array.empty
-    }
-  override def readSchema(): StructType = agg.map(_.schema).getOrElse(required)
+    required: StructType, pushedDesc: Array[String])
+    extends Scan with Batch {
+  override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"MaterialsScan ${backend.description} PushedBackendQuery=[${pushedDesc.mkString(", ")}]" +
-      join.map { j =>
-        s" PushedJoin=[${j.leftKey} = ${j.rightKey}," +
-          s" right=[${j.rightQuery.in.map { case (k, v) => s"$k IN ${v.mkString("(", ",", ")")}" }.mkString(", ")}]]"
-      }.getOrElse("") +
-      sample.map { case (lo, hi, seed) =>
-        s" PushedSample=[$lo, $hi, seed=$seed]" }.getOrElse("") +
-      (if (offset > 0) s" PushedOffset=$offset" else "") +
-      (if (limit >= 0) s" PushedLimit=$limit" else "") +
-      topN.map { case (c, desc, n) =>
-        s" PushedTopN=[$c ${if (desc) "DESC" else "ASC"} LIMIT $n]" }.getOrElse("") +
-      agg.map { p =>
-        s" PushedAggregates=[${p.aggs.map(_.wire).mkString(", ")}]" +
-          s" PushedGroupBy=[${p.groupBy.mkString(", ")}]" }.getOrElse("")
-
-  /** Runtime filters (DSv2 dynamic filtering): when this scan sits
-    * under a join, Spark hands the build side's key values here after
-    * they are known; In(material_id, …) merges into the backend query
-    * so filtered rows never cross the "wire". The 100 TB payoff of
-    * dynamic partition pruning, expressed at the source seam. */
-  private var runtime: MaterialsSource.BackendQuery = query
-  override def filterAttributes(): Array[NamedReference] =
-    // a pushed JOIN seals both per-side queries; a late runtime
-    // filter on the joined output cannot be routed to one side
-    // soundly (which side owns the key after aliasing?) — decline
-    if (join.isDefined) Array.empty
-    else
-    // after an aggregation is pushed, material_id is a valid runtime-
-    // filter target only if it is still in the output (i.e. grouped
-    // on) — filtering whole groups by key is sound, filtering by a
-    // column the output no longer carries is not plannable anyway.
-    // A pushed OFFSET forbids runtime filtering entirely: Spark has
-    // already deleted the Offset operator trusting "skip o rows of
-    // the scan AS PLANNED", but a late filter would change which rows
-    // the backend's skip removes (skip-of-filtered ≠ filter-of-
-    // skipped) — silently wrong results, so decline
-    if (offset > 0) Array.empty
-    else if (readSchema().fieldNames.contains("material_id"))
-      Array(Expressions.column("material_id"))
-    else Array.empty
-  override def filter(filters: Array[Filter]): Unit = {
-    // two runtime filters on the SAME attribute in one batch must
-    // INTERSECT like everywhere else (inQuery's rule for static
-    // pushed conjuncts) — a bare .toMap would keep the last one and
-    // silently widen the backend query (r13 review; correctness
-    // survives via the engine-side re-filter, the pruning does not)
-    val ins = filters.collect {
-      case In(a, vs) if vs.forall(_.isInstanceOf[String]) =>
-        a -> vs.map(_.asInstanceOf[String]).toSeq
-      case EqualTo(a, v: String) => a -> Seq(v)
-    }.groupBy(_._1).map { case (k, kvs) => k -> kvs.map(_._2).reduce(_ intersect _) }
-    if (ins.nonEmpty) {
-      val mergedIn = (runtime.in.keySet ++ ins.keySet).map { k =>
-        k -> ((runtime.in.get(k), ins.get(k)) match {
-          case (Some(x), Some(y)) => x.intersect(y)
-          case (x, y)             => x.orElse(y).get
-        })
-      }.toMap
-      runtime = runtime.copy(in = mergedIn)
-    }
-  }
-
-  /** Post-pushdown statistics: the backend counts matching rows so
-    * the planner sizes this side correctly (broadcast vs shuffle) —
-    * without this, a heavily-filtered scan is costed at table size. */
-  // one backend count() per scan per query, however many Statistics
-  // instances the planner asks for
-  private lazy val matchingCount: Long = backend.count(runtime)
-  private lazy val rightCount: Long =
-    join.map(pj => backend.count(pj.rightQuery)).getOrElse(0L)
-
-  override def estimateStatistics(): Statistics = new Statistics {
-    // the estimate must describe what the scan EMITS, not what the
-    // catalog matches — stats exist so the planner can e.g. broadcast
-    // a tiny aggregated side instead of shuffling it:
-    //  - global aggregate: exactly one row per page (wire contract),
-    //    and the count endpoint is never even queried;
-    //  - grouped aggregate: the matching-row count is the only
-    //    available upper bound (the wire has no group-count
-    //    endpoint); still far better than unestimated;
-    //  - plain scan: matching rows minus a pushed offset, capped by
-    //    a pushed per-page limit/top-n.
-    // memoized ON THE SCAN (not per-Statistics-instance): each count
-    // is a blocking backend round-trip (HTTP GET with 10s/60s
-    // timeouts) during driver-side planning — re-fetching a number
-    // the scan already knows on every estimateStatistics() call
-    // stalls planning on a slow catalog for nothing
-    private lazy val matching = matchingCount
-    private lazy val n: Long = (agg, join) match {
-      case (Some(a), _) => if (a.groupBy.isEmpty) pages.toLong else matching
-      case (None, Some(pj)) =>
-        // the scan EMITS joined rows: output = Σ_v L(v)·R(v), so a
-        // UNIQUE key bounds the output by the OTHER side's count
-        // (material_id is unique by catalog contract). A unique LEFT
-        // key bounds by the RIGHT count — the r12 review caught the
-        // old code returning `left` for either side, which could
-        // UNDERestimate a fan-out join (unique left key, hot right
-        // key) below the broadcast threshold and blow up the build
-        // side. No unique key → the safe upper bound left × right:
-        // overestimating can only forgo a broadcast.
-        val left = matching
-        if (pj.rightKey == "material_id") left
-        else if (pj.leftKey == "material_id") rightCount
-        else {
-          val right = rightCount
-          if (right != 0 && left > Long.MaxValue / right) Long.MaxValue
-          else left * right
-        }
-      case (None, None) =>
-        val sampled = sample match {
-          // ceil, not floor: (19 rows × 0.05).toLong = 0 would cost
-          // the scan as EMPTY while it can still emit a row
-          case Some((lo, hi, _)) => math.ceil(matching * (hi - lo)).toLong
-          case None => matching
-        }
-        val afterOffset = math.max(0L, sampled - offset)
-        val cap = (limit, topN) match {
-          case (l, _) if l >= 0 => pages.toLong * l
-          case (_, Some((_, _, k))) => pages.toLong * k
-          case _ => Long.MaxValue
-        }
-        math.min(afterOffset, cap)
-    }
-    // ~64 bytes per catalog row (measured on the stand-in format);
-    // a pushed join emits both sides' projections → double width.
-    // SATURATING multiply: the no-unique-key join bound deliberately
-    // clamps n to Long.MaxValue, and a plain n * rowBytes would wrap
-    // NEGATIVE — the planner would read a ~0-byte scan and broadcast
-    // the fan-out side, the exact blow-up the clamp exists to prevent
-    private val rowBytes = if (join.isDefined) 128L else 64L
-    override def sizeInBytes(): util.OptionalLong = util.OptionalLong.of(
-      if (n > Long.MaxValue / rowBytes) Long.MaxValue else n * rowBytes)
-    override def numRows(): util.OptionalLong = util.OptionalLong.of(n)
-  }
-
-  /** Pages are hash-buckets of `material_id` (every row of one id is
-    * on exactly one page), reported as KeyGroupedPartitioning over
-    * bucket(pages, material_id) with the page id as the partition
-    * key. A grouping/join on material_id can then reuse the scan's
-    * layout instead of shuffling (subject to the session's v2
-    * bucketing confs; format-based sources without a FunctionCatalog
-    * may still re-shuffle — the report is the honest contract either
-    * way). */
-  override def outputPartitioning(): Partitioning =
-    if (agg.isDefined || join.isDefined)
-      // aggregated pages group on arbitrary columns, and joined
-      // output columns are aliased — either way the bucket report
-      // would be a lie
-      new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(pages)
-    else
-      new KeyGroupedPartitioning(
-        Array(Expressions.bucket(pages, "material_id")), pages)
-
-  // one id per planned scan: all pages of THIS scan share it, so a
-  // per-executor right-side cache is exact within the scan and
-  // naturally invalidated by the next one (new Scan => new id)
-  private val scanId = java.util.UUID.randomUUID().toString
+    s"MaterialsScan ${backend.description} PushedBackendQuery=[${pushedDesc.mkString(", ")}]"
 
   /** Paginated partition planning: page i of n — each reader fetches
     * only its own page from the backend. */
   override def planInputPartitions(): Array[InputPartition] =
-    (0 until pages).map(i =>
-      MaterialsPage(backend, i, pages, runtime, limit, topN, agg, offset,
-        sample, join, scanId): InputPartition).toArray
+    (0 until pages).map(i => MaterialsPage(backend, i, pages, query): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     new MaterialsReaderFactory(required)
 }
 
 private[sources] case class MaterialsPage(
-    backend: MaterialsBackend, page: Int, nPages: Int, query: MaterialsSource.BackendQuery,
-    limit: Int = -1, topN: Option[(String, Boolean, Int)] = None,
-    agg: Option[MaterialsSource.PushedAgg] = None, offset: Int = 0,
-    sample: Option[(Double, Double, Long)] = None,
-    join: Option[MaterialsSource.PushedJoin] = None,
-    scanId: String = "")
-    extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow = InternalRow(page)
-}
+    backend: MaterialsBackend, page: Int, nPages: Int, query: MaterialsSource.BackendQuery)
+    extends InputPartition
 
 private[sources] class MaterialsReaderFactory(required: StructType)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[MaterialsPage]
-    (p.agg, p.join) match {
-      case (Some(a), _) => new MaterialsAggPageReader(p, a)
-      case (_, Some(j)) => new MaterialsJoinPageReader(p, j, required)
-      case _            => new MaterialsPageReader(p, p.query, required)
-    }
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new MaterialsPageReader(partition.asInstanceOf[MaterialsPage], required)
 }
 
-private[sources] object MaterialsJoinPageReader {
-  private type Right = Map[String, Seq[Array[String]]]
-  // per-executor-JVM, scan-scoped, LRU-bounded: at most 4 scans'
-  // dimension-sized right sides live at once; a re-planned query
-  // gets a fresh scanId and therefore a fresh fetch (no staleness).
-  // Entries are FutureTasks, not values: the slow HTTP fetch runs
-  // OUTSIDE the cache lock (the lock only installs the placeholder),
-  // so readers of a DIFFERENT concurrent scan hit their own cached
-  // entry immediately instead of queueing behind this scan's fetch —
-  // while readers of the SAME scan still block on one shared fetch.
-  private val cache =
-    new java.util.LinkedHashMap[String, java.util.concurrent.FutureTask[Right]](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, java.util.concurrent.FutureTask[Right]]): Boolean =
-        size() > 4
-    }
-  def rightSide(scanId: String, build: => Right): Right =
-    if (scanId.isEmpty) build
-    else {
-      val (task, owner) = cache.synchronized {
-        val hit = cache.get(scanId)
-        if (hit != null) (hit, false)
-        else {
-          val t = new java.util.concurrent.FutureTask[Right](() => build)
-          cache.put(scanId, t)
-          (t, true)
-        }
-      }
-      if (owner) task.run()
-      try task.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          // a failed fetch must not poison the scanId for the task
-          // RETRY Spark schedules — evict so the retry re-fetches
-          cache.synchronized { if (cache.get(scanId) eq task) cache.remove(scanId) }
-          throw Option(e.getCause).getOrElse(e)
-      }
-    }
-}
-
-/** Reads one LEFT page of a pushed join: the backend answers the
-  * left page and the (filtered) right side, the reader hash-joins
-  * them "server-side" — Spark receives finished join rows and plans
-  * no Join node at all. The right side builds once per page as an
-  * in-memory multimap keyed by the join column: the dimension-sized
-  * assumption of a source-side join (a fact×fact backend join would
-  * decline at the builder instead). Key equality compares the
-  * catalog's canonical text, which both sides share by construction
-  * (same backend). */
-private[sources] class MaterialsJoinPageReader(
-    page: MaterialsPage, join: MaterialsSource.PushedJoin, required: StructType)
-    extends PartitionReader[InternalRow] {
-  import MaterialsSource.Schema
-
-  private val lk = Schema.fieldIndex(join.leftKey)
-  private val rk = Schema.fieldIndex(join.rightKey)
-  // the right side is identical for EVERY left page of one scan —
-  // without the scan-scoped cache each of the N page readers
-  // re-fetched it (N full HTTP downloads for HttpCatalogBackend)
-  private val rightRows: Map[String, Seq[Array[String]]] =
-    MaterialsJoinPageReader.rightSide(page.scanId, {
-      page.backend.fetch(0, 1, join.rightQuery, -1, None, 0, None)
-        .toSeq.groupBy(_(rk))
-    })
-  private val leftRows: Iterator[Array[String]] =
-    page.backend.fetch(page.page, page.nPages, page.query, -1, None, 0, None)
-  // required ⊆ joined schema (Spark may prune after the push); each
-  // output field resolves to (fromLeft, catalog column index)
-  private val outIdx: Array[(Boolean, Int)] = required.fields.map { f =>
-    join.leftCols.find(_._2 == f.name)
-      .map(c => (true, Schema.fieldIndex(c._1)))
-      .orElse(join.rightCols.find(_._2 == f.name)
-        .map(c => (false, Schema.fieldIndex(c._1))))
-      .getOrElse(throw new IllegalStateException(
-        s"required column '${f.name}' not in the pushed join projection"))
-  }
-  private val joined: Iterator[(Array[String], Array[String])] =
-    leftRows.flatMap(l => rightRows.getOrElse(l(lk), Nil).map(r => (l, r)))
-  private var current: (Array[String], Array[String]) = _
-
-  override def next(): Boolean =
-    if (joined.hasNext) { current = joined.next(); true } else false
-
-  override def get(): InternalRow = {
-    val values = outIdx.map { case (fromLeft, i) =>
-      val raw = if (fromLeft) current._1(i) else current._2(i)
-      Schema.fields(i).dataType match {
-        case StringType  => UTF8String.fromString(raw)
-        case IntegerType => raw.toInt
-        case DoubleType  => raw.toDouble
-        case dt          => throw new IllegalStateException(s"unhandled $dt")
-      }
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
-  }
-  override def close(): Unit = ()
-}
-
-/** Reads one page of SERVER-AGGREGATED rows — the backend ships one
-  * row per group, not the underlying catalog rows. */
-private[sources] class MaterialsAggPageReader(
-    page: MaterialsPage, agg: MaterialsSource.PushedAgg)
+/** Reads one page from the catalog backend, which has already applied
+  * the pushed query; decodes only the `required` columns. */
+private[sources] class MaterialsPageReader(page: MaterialsPage, required: StructType)
     extends PartitionReader[InternalRow] {
 
   private val rows: Iterator[Array[String]] =
-    page.backend.aggregate(page.page, page.nPages, page.query, agg.groupBy, agg.aggs)
-  private var current: Array[String] = _
-
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true } else false
-
-  override def get(): InternalRow = {
-    val values = agg.schema.fields.zipWithIndex.map { case (f, i) =>
-      val raw = current(i)
-      // blank min/max from an empty page merges as null (ignored)
-      if (raw.isEmpty && f.nullable && f.dataType != StringType) null
-      else f.dataType match {
-        case StringType  => UTF8String.fromString(raw)
-        case IntegerType => raw.toInt
-        case LongType    => raw.toLong
-        case DoubleType  => raw.toDouble
-        case dt          => throw new IllegalStateException(s"unhandled $dt")
-      }
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
-  }
-  override def close(): Unit = ()
-}
-
-/** Reads one page from the catalog backend, applying the pushed
-  * query "server-side" (before any row reaches Spark). */
-private[sources] class MaterialsPageReader(
-    page: MaterialsPage, query: MaterialsSource.BackendQuery, required: StructType)
-    extends PartitionReader[InternalRow] {
-
-  // the backend applies the whole pushed request (filters, offset,
-  // limit, top-n) before any row reaches Spark — "server-side"
-  // execution
-  private val rows: Iterator[Array[String]] =
-    page.backend.fetch(page.page, page.nPages, query, page.limit, page.topN,
-      page.offset, page.sample)
+    page.backend.fetch(page.page, page.nPages, page.query)
   private var current: Array[String] = _
 
   override def next(): Boolean =
@@ -957,117 +300,4 @@ private[sources] class MaterialsPageReader(
     InternalRow.fromSeq(values.toIndexedSeq)
   }
   override def close(): Unit = ()
-}
-
-/** Zero-egress stand-in for the remote materials API: a local
-  * pipe-separated catalog file. `fetch` honours the pushed query and
-  * the page split — rows filtered here never cross the "wire",
-  * mirroring server-side filtering. */
-object LocalCatalogBackend {
-  import MaterialsSource.BackendQuery
-
-  /** Catalog parsed once per path per executor JVM, replaced when the
-    * file's mtime moves — one entry per path (a (path, mtime) key
-    * would pin every superseded parse forever in a long-lived JVM).
-    * A real paginated backend fetches each page over the wire; the
-    * stand-in otherwise re-read and re-split the whole file once per
-    * page per query. */
-  private val parsed =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Array[Array[String]])]()
-
-  private def catalog(path: String): Array[Array[String]] = {
-    val mtime = new java.io.File(path).lastModified()
-    parsed.compute(path, (_, cur) =>
-      if (cur != null && cur._1 == mtime) cur
-      else {
-        // explicit UTF-8 (the HTTP backend's charset): the default
-        // codec is JVM-configurable, and a non-ASCII catalog parsed
-        // differently per backend would break the determinism
-        // contract (same filter / same sample subset on any backend)
-        val src = scala.io.Source.fromFile(path)(scala.io.Codec.UTF8)
-        try (mtime, src.getLines().filterNot(l => l.isEmpty || l.startsWith("#"))
-          .map(_.split("\\|", -1)).toArray)
-        finally src.close()
-      })._2
-  }
-
-  /** Page of a key: Spark's own murmur3 string hash (the
-    * `hashpartitioning` function, seed 42) pmod nPages — so the page
-    * layout genuinely is the bucket layout the scan reports, not a
-    * lookalike under a different hash (a Java `hashCode` split would
-    * silently mis-pair partitions if a consumer ever trusts the
-    * report for a storage-partitioned join). */
-  def pageOf(id: String, nPages: Int): Int = {
-    import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    math.floorMod(Murmur3HashFunction.hash(UTF8String.fromString(id), StringType, 42L), nPages.toLong).toInt
-  }
-
-  def fetch(path: String, page: Int, nPages: Int, query: BackendQuery): Iterator[Array[String]] =
-    catalog(path).iterator.filter { f =>
-      pageOf(f(0), nPages) == page &&
-      query.matches("material_id", f(0)) &&
-      query.matches("chemsys", f(1)) &&
-      query.matches("possible_species", f(3))
-    }
-
-  /** Deterministic per-row sample coordinate u(id, seed) ∈ [0, 1) —
-    * a seeded 64-bit xxhash64 over the id's bytes (Spark's own
-    * `xxhash64` function), so the same (id, seed) keeps or drops the
-    * row on ANY backend, JVM, or rerun. A pushed TABLESAMPLE keeps
-    * rows with lower ≤ u < upper; per-row independence means sampling
-    * commutes with filters (including runtime filters) exactly.
-    * NOT Java `hashCode`-based: a 32-bit prefix caps u at 2³²
-    * distinct values and hashCode-colliding ids (guaranteed in a
-    * catalog of millions) would sample identically under EVERY seed
-    * — the seed enters the hash itself here, so no two ids are
-    * correlated across seeds. */
-  def sampleU(id: String, seed: Long): Double = {
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    val h = XxHash64Function.hash(UTF8String.fromString(id), StringType, seed)
-    (h >>> 11).toDouble / (1L << 53).toDouble
-  }
-
-  /** "Server-side" aggregation of already-filtered page rows — shared
-    * by [[LocalBackend]] and the loopback HTTP test server so the
-    * wire behavior is identical across backends. Group values lead,
-    * agg values follow (request order); min/max echo the ORIGINAL
-    * field text so parse-back is lossless. No GROUP BY → exactly one
-    * row even for an empty page (count 0, min/max blank), the JDBC
-    * partial-pushdown convention Spark's merge expects. */
-  def aggregateRows(rows: Iterator[Array[String]], groupBy: Seq[String],
-                    aggs: Seq[MaterialsSource.AggSpec]): Iterator[Array[String]] = {
-    import MaterialsSource.AggSpec
-    val schema = MaterialsSource.Schema
-    val gIdx = groupBy.map(schema.fieldIndex)
-    def cell(group: Array[Array[String]], a: AggSpec): String = a.fn match {
-      // the catalog never ships nulls: count(col) == count(*)
-      case "count" => group.length.toString
-      case fn =>
-        val i = schema.fieldIndex(a.col)
-        if (group.isEmpty) ""
-        else {
-          val ord = Ordering.by[Array[String], Double](f => f(i).toDouble)
-          (if (fn == "min") group.min(ord) else group.max(ord))(i)
-        }
-    }
-    val grouped = rows.toArray.groupBy(f => gIdx.map(f).toSeq)
-    if (grouped.isEmpty && groupBy.isEmpty)
-      Iterator(aggs.map(a => cell(Array.empty, a)).toArray)
-    else grouped.iterator.map { case (key, g) =>
-      (key ++ aggs.map(a => cell(g, a))).toArray
-    }
-  }
-
-  /** "Server-side" count for the pushed query — backs the scan's
-    * post-pushdown statistics report. */
-  def count(path: String, query: BackendQuery): Long =
-    catalog(path).count { f =>
-      query.matches("material_id", f(0)) &&
-      query.matches("chemsys", f(1)) &&
-      query.matches("possible_species", f(3))
-    }.toLong
 }

@@ -56,26 +56,15 @@ object Similarity {
 
   /** Dot product of two float-array columns accumulated in double.
     * Backed by the native codegen'd Catalyst expression
-    * (`graft.functions.VectorExpressions.DotProductF`) — identical
-    * results to the higher-order fold (left-to-right, per-term
-    * double cast), but it stays inside whole-stage codegen with no
-    * intermediate array per row. */
+    * (`graft.functions.VectorExpressions.DotProductF`) — bit-identical
+    * to the higher-order fold (left-to-right, per-term double cast)
+    * that VectorExpressionsSpec compares it against, but it stays
+    * inside whole-stage codegen with no intermediate array per row. */
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dot_f(a, b)
 
   def norm2(a: Column): Column =
     graft.functions.VectorExpressions.norm2_f(a)
-
-  /** Reference formulation via built-in higher-order functions — kept
-    * for the equivalence property test (and as the fallback shape on
-    * engines without the custom expression). */
-  def dotFold(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0), (acc, x) => acc + x)
-
-  def norm2Fold(a: Column): Column =
-    aggregate(transform(a, x => x.cast(DoubleType) * x.cast(DoubleType)),
-      lit(0.0), (acc, x) => acc + x)
 
   /** Defined-similarity guard, shared by every ranking/threshold
     * site: a sim is usable iff non-NULL AND non-NaN. NULL is the

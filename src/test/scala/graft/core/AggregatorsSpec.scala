@@ -37,8 +37,8 @@ class AggregatorsSpec extends SparkSpec {
       (x, 3.7 * x + 11.0 + rnd.nextGaussian())
     }
     val ds = pts.toDS()
-    val one = ds.repartition(1).select(Aggregators.regrFitExactCol).head()
-    val many = ds.repartition(17).select(Aggregators.regrFitExactCol).head()
+    val one = ds.repartition(1).select(Aggregators.regrFitExact.toColumn).head()
+    val many = ds.repartition(17).select(Aggregators.regrFitExact.toColumn).head()
     assert(one == many, "decimal partials must be partitioning-invariant")
     val (slope, icept) = fit(pts)
     assert(one.slope == slope && one.intercept == icept, "must equal the closed form")
@@ -55,13 +55,13 @@ class AggregatorsSpec extends SparkSpec {
     // |x| ~ 1e10: sxx ~ 1e20 — overflows a Decimal(38,18) product
     // encoder (the bug the kryo buffer fixes); exact y = 2x + 5
     val big = Seq((1.0e10, 2.0e10 + 5), (2.0e10, 4.0e10 + 5), (3.0e10, 6.0e10 + 5))
-    val r = big.toDS().repartition(3).select(Aggregators.regrFitExactCol).head()
+    val r = big.toDS().repartition(3).select(Aggregators.regrFitExact.toColumn).head()
     assert(r.slope == 2.0 && r.intercept == 5.0 && r.n == 3L)
     // non-finite pairs are skipped (the SQL null-pair convention),
     // never a job-killing NumberFormatException
     val dirty = Seq((1.0, 2.0), (Double.NaN, 9.0), (3.0, Double.PositiveInfinity),
       (2.0, 4.0), (3.0, 6.0))
-    val d = dirty.toDS().select(Aggregators.regrFitExactCol).head()
+    val d = dirty.toDS().select(Aggregators.regrFitExact.toColumn).head()
     assert(d.slope == 2.0 && d.intercept == 0.0 && d.n == 3L)
   }
 
@@ -73,7 +73,7 @@ class AggregatorsSpec extends SparkSpec {
     ).toDS()
     val got = ds.groupByKey(_._1)
       .mapValues(t => (t._2, t._3))
-      .agg(Aggregators.regrFitExactCol)
+      .agg(Aggregators.regrFitExact.toColumn)
       .collect().map(kv => kv._1 -> kv._2).toMap
     assert(got("a").slope == 2.0 && got("a").intercept == 0.0 && got("a").n == 3L)
     assert(got("b").slope.isNaN && got("b").n == 1L)

@@ -3,7 +3,9 @@ package graft.functions
 import scala.util.Random
 import graft.SparkSpec
 import graft.text.Similarity
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** The native codegen'd vector expressions must be bit-identical to
   * the higher-order-fold formulation (same accumulation order), and
@@ -11,6 +13,16 @@ import org.apache.spark.sql.functions._
   */
 class VectorExpressionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The reference formulation via built-in higher-order functions:
+    * left-to-right accumulation, per-term double cast. */
+  private def dotFold(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
+      lit(0.0), (acc, x) => acc + x)
+
+  private def norm2Fold(a: Column): Column =
+    aggregate(transform(a, x => x.cast(DoubleType) * x.cast(DoubleType)),
+      lit(0.0), (acc, x) => acc + x)
 
   private def randomVecs(n: Int, dim: Int, seed: Int) = {
     val rnd = new Random(seed)
@@ -23,9 +35,9 @@ class VectorExpressionsSpec extends SparkSpec {
     val paired = df.as("a").crossJoin(df.as("b")).filter(col("a.id") < col("b.id")).limit(2000)
     val cmp = paired.select(
       Similarity.dot(col("a.v"), col("b.v")).as("native"),
-      Similarity.dotFold(col("a.v"), col("b.v")).as("fold"),
+      dotFold(col("a.v"), col("b.v")).as("fold"),
       Similarity.norm2(col("a.v")).as("n_native"),
-      Similarity.norm2Fold(col("a.v")).as("n_fold"))
+      norm2Fold(col("a.v")).as("n_fold"))
     val bad = cmp.filter(col("native") =!= col("fold") || col("n_native") =!= col("n_fold")).count()
     assert(bad == 0)
   }
@@ -38,7 +50,7 @@ class VectorExpressionsSpec extends SparkSpec {
     ).toDF("a", "b")
     val rows = df.select(
       Similarity.dot(col("a"), col("b")).as("d"),
-      Similarity.dotFold(col("a"), col("b")).as("f")).collect()
+      dotFold(col("a"), col("b")).as("f")).collect()
     // ragged: the fold nulls the sum (zip_with pads with null) and
     // the native expression must agree, or the optimizer rewrite
     // would change results

@@ -6,9 +6,8 @@ import org.apache.spark.sql.SparkSession
 /** The native SQL functions must resolve like built-ins, both through
   * `FunctionBridge.registerAll` on a built session and through the
   * `GraftExtensions` session-extensions entry point. (The portable
-  * fold formulation they replace is kept as the reference in
-  * `Similarity.dotFold`/`norm2Fold`; VectorExpressionsSpec pins the
-  * parity.)
+  * fold formulation they replace lives in VectorExpressionsSpec as
+  * the reference its bit-parity test compares against.)
   */
 class VectorFoldRewriteSpec extends SparkSpec {
 

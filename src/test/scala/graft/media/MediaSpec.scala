@@ -84,12 +84,6 @@ class MediaSpec extends SparkSpec {
     assert(huge.length == 1 && huge.head.frame_idx == 0L)
   }
 
-  test("resizeFeatures reshapes to the requested dimension") {
-    val media = Seq(row(1, "blob", 4096, 0)).toDS()
-    val resized = resizeFeatures(featurize(media, StubDecoder, dim = 8), newDim = 4).collect().head
-    assert(resized.features.size == 4)
-  }
-
   test("resize: nearest-neighbor index mapping, identity resize is a no-op") {
     // 2x2 image with distinct pixels
     val img = ImageCodec.Image(2, 2, Array[Byte](

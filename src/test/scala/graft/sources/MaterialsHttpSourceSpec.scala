@@ -61,54 +61,12 @@ class MaterialsHttpSourceSpec extends SparkSpec with BeforeAndAfterAll {
       params.collect { case (k, vs) if k.startsWith("in.") => k.drop(3) -> vs } ++
       // none.<col>=1: an explicitly EMPTY IN-list — matches nothing
       params.collect { case (k, _) if k.startsWith("none.") => k.drop(5) -> Seq.empty[String] })
-    val matching = catalogRows.filter { f =>
-      query.matches("material_id", f(0)) &&
-      query.matches("chemsys", f(1)) &&
-      query.matches("possible_species", f(3))
-    }
-    val body =
-      if (params.contains("count")) matching.length.toString
-      else {
-        val nPages = params("pages").head.toInt
-        val pageNo = params("page").head.toInt
-        var page = matching.filter(f => LocalCatalogBackend.pageOf(f(0), nPages) == pageNo)
-        params.get("agg") match {
-          case Some(aggParams) =>
-            // server-side aggregation: one row per group crosses the
-            // wire (the pushed-aggregate contract)
-            val aggs = aggParams.map { s =>
-              val Array(fn, c) = s.split(":", 2); MaterialsSource.AggSpec(fn, c)
-            }
-            val out = LocalCatalogBackend
-              .aggregateRows(page.iterator, params.getOrElse("group", Seq.empty), aggs)
-              .toArray
-            rowsServed.addAndGet(out.length)
-            out.map(MaterialsSource.encodeWireRow).mkString("\n")
-          case None =>
-            // contract order (MaterialsBackend.fetch): sample, sort,
-            // THEN skip the offset, THEN cut top-n/limit — SQL
-            // `TABLESAMPLE … ORDER BY … LIMIT l OFFSET o` semantics,
-            // matching LocalBackend exactly
-            params.get("sample").foreach { case Seq(s) =>
-              val Array(lo, hi, seed) = s.split(":")
-              page = page.filter { f =>
-                val u = LocalCatalogBackend.sampleU(f(0), seed.toLong)
-                u >= lo.toDouble && u < hi.toDouble
-              }
-            }
-            params.get("sort").foreach { case Seq(c) =>
-              val i = MaterialsSource.Schema.fieldIndex(c)
-              val ord = Ordering.Double.TotalOrdering
-              page = page.sortBy(f => f(i).toDouble)(
-                if (params("dir").head == "desc") ord.reverse else ord)
-            }
-            params.get("offset").foreach { case Seq(o) => page = page.drop(o.toInt) }
-            params.get("topn").foreach { case Seq(n) => page = page.take(n.toInt) }
-            params.get("limit").foreach { case Seq(n) => page = page.take(n.toInt) }
-            rowsServed.addAndGet(page.length)
-            page.map(MaterialsSource.encodeWireRow).mkString("\n")
-        }
-      }
+    val nPages = params("pages").head.toInt
+    val pageNo = params("page").head.toInt
+    val page = catalogRows.filter(f =>
+      query.matchesRow(f) && MaterialsSource.pageOf(f(0), nPages) == pageNo)
+    rowsServed.addAndGet(page.length)
+    val body = page.map(_.mkString("|")).mkString("\n")
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     exchange.sendResponseHeaders(200, if (bytes.isEmpty) -1 else bytes.length.toLong)
     try if (bytes.nonEmpty) exchange.getResponseBody.write(bytes)
@@ -117,9 +75,9 @@ class MaterialsHttpSourceSpec extends SparkSpec with BeforeAndAfterAll {
 
   private def resetCounters(): Unit = { requests.clear(); rowsServed.set(0) }
 
-  private def loadHttp(pages: Int = 3) = spark.read
+  private def loadHttp() = spark.read
     .format("graft.sources.MaterialsSource")
-    .option("url", url).option("pages", pages.toString).load()
+    .option("url", url).option("pages", "3").load()
 
   private def loadLocal() = spark.read
     .format("graft.sources.MaterialsSource")
@@ -139,20 +97,13 @@ class MaterialsHttpSourceSpec extends SparkSpec with BeforeAndAfterAll {
   test("pushed EqualTo becomes a query param; only matching rows cross the wire") {
     resetCounters()
     val df = loadHttp().filter(col("chemsys") === "V-O")
-    // collect, not count: df.count() is itself a COUNT(*) the source
-    // now pushes, shipping one partial row per page instead of data
     assert(df.collect().length == 6)
     assert(scanDesc(df).contains("PushedBackendQuery=[EqualTo(chemsys,V-O)"))
     // the builder folds EqualTo into a singleton In before the wire
-    val fetches = requests.asScala.filterNot(_.contains("count=1"))
+    val fetches = requests.asScala
     assert(fetches.nonEmpty && fetches.forall(_.contains("in.chemsys=V-O")),
       s"filter param missing from requests: $fetches")
     assert(rowsServed.get() == 6, s"server shipped ${rowsServed.get()} rows, expected 6")
-    // and the count itself rides the agg pushdown: ≤ 1 row per page
-    resetCounters()
-    assert(df.count() == 6)
-    assert(rowsServed.get() <= 3,
-      s"pushed COUNT shipped ${rowsServed.get()} rows, expected ≤ 1 per page")
   }
 
   test("pushed In-list becomes repeated in. params; identical PushedFilters vs local") {
@@ -165,7 +116,7 @@ class MaterialsHttpSourceSpec extends SparkSpec with BeforeAndAfterAll {
     // the backend identifier prefix
     def pushedPart(d: String) = d.dropWhile(_ != 'P') // from "PushedBackendQuery…"
     assert(pushedPart(scanDesc(http)) == pushedPart(scanDesc(local)))
-    val fetches = requests.asScala.filterNot(_.contains("count=1"))
+    val fetches = requests.asScala
     assert(fetches.forall(q =>
       q.contains("in.material_id=mp-1002") && q.contains("in.material_id=mp-1005")),
       s"in-list params missing: $fetches")
@@ -185,51 +136,16 @@ class MaterialsHttpSourceSpec extends SparkSpec with BeforeAndAfterAll {
       col("material_id").isin("mp-1002", "mp-1005") &&
       col("material_id").isin("mp-1008", "mp-1009"))
     assert(df.collect().isEmpty, "contradictory pushed conjuncts must match nothing")
-    val fetches = requests.asScala.filterNot(_.contains("count=1"))
+    val fetches = requests.asScala
     assert(fetches.nonEmpty && fetches.forall(_.contains("none.material_id=1")),
       s"empty-IN marker missing from requests: $fetches")
     assert(rowsServed.get() == 0, s"server shipped ${rowsServed.get()} rows, expected 0")
   }
 
-  test("complete agg pushdown only for STRING group keys; numeric keys stay partial") {
-    // complete pushdown trusts the backend's raw-text grouping — fine
-    // for strings, wrong for numerics ("1.5" vs "1.50" would ship as
-    // two groups nothing merges). The partial form re-groups typed.
-    val byString = loadHttp(pages = 1).groupBy("chemsys").count()
-    val byNumeric = loadHttp(pages = 1).groupBy("nsites").count()
-    def hasAggExec(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.executedPlan.toString.contains("HashAggregate")
-    assert(!hasAggExec(byString), "string group key at pages=1 should push complete")
-    assert(hasAggExec(byNumeric), "numeric group key must keep Spark's merge aggregate")
-    // and both are RIGHT regardless of the pushdown depth
-    assert(byNumeric.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
-      loadLocal().groupBy("nsites").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
-  }
-
-  test("pushed limit rides the request and caps rows shipped per page") {
-    resetCounters()
-    assert(loadHttp().limit(3).collect().length == 3)
-    val fetches = requests.asScala.filterNot(_.contains("count=1"))
-    assert(fetches.forall(_.contains("limit=3")), s"limit param missing: $fetches")
-    assert(rowsServed.get() <= 9, // ≤ n per page, 3 pages
-      s"server shipped ${rowsServed.get()} rows for limit(3) over 3 pages")
-  }
-
-  test("pushed top-n rides the request; global order still exact") {
-    resetCounters()
-    val got = loadHttp().orderBy(col("energy_per_atom").desc).limit(2)
-      .collect().map(_.getAs[Double]("energy_per_atom")).toSeq
-    assert(got == Seq(-6.66, -6.91))
-    val fetches = requests.asScala.filterNot(_.contains("count=1"))
-    assert(fetches.forall(q => q.contains("sort=energy_per_atom") &&
-      q.contains("dir=desc") && q.contains("topn=2")), s"topn params missing: $fetches")
-  }
-
   test("unsupported predicate stays engine-side: full pages shipped, Spark filters") {
     resetCounters()
     assert(loadHttp().filter(col("nsites") > 10).count() == 4)
-    val fetches = requests.asScala.filterNot(_.contains("count=1"))
+    val fetches = requests.asScala
     assert(fetches.forall(q => !q.contains("nsites")), s"nsites must not be pushed: $fetches")
     assert(rowsServed.get() == 10) // no server-side cut — honest about the wire cost
   }
@@ -247,66 +163,5 @@ class MaterialsHttpSourceSpec extends SparkSpec with BeforeAndAfterAll {
       .map(t => Option(t.getMessage).getOrElse("")).toSeq
     assert(messages.exists(_.contains("HTTP 503")),
       s"unhelpful failure chain: $messages")
-  }
-
-  test("grouped aggregate ships one row per group per page; agg params on the wire") {
-    resetCounters()
-    val df = loadHttp().groupBy("chemsys")
-      .agg(count(lit(1)).as("n"), max(col("energy_per_atom")).as("mx"))
-    assert(df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet ==
-      Set(("V-O", 6L, -7.91), ("Ti-O", 2L, -9.12), ("Fe-O", 2L, -6.66)))
-    val fetches = requests.asScala.filterNot(_.contains("count=1"))
-    assert(fetches.nonEmpty && fetches.forall(q =>
-      q.contains("group=chemsys") && q.contains("agg=count%3A*") &&
-        q.contains("agg=max%3Aenergy_per_atom")),
-      s"aggregate params missing from requests: $fetches")
-    // wire cost is rows-per-group-per-page (≤ 3 groups × 3 pages),
-    // never the 10 catalog rows
-    assert(rowsServed.get() <= 9, s"server shipped ${rowsServed.get()} rows for a grouped agg")
-  }
-
-  test("completely-pushed global MIN over an EMPTY match set is one null row (wire sentinel)") {
-    // pages=1 makes the global aggregate COMPLETELY pushed: Spark
-    // plans no agg above the scan and relies on the one-row-even-
-    // when-empty contract. The blank min row serializes to an empty
-    // line, which newline framing can't carry — it rides the 0x01
-    // sentinel; pre-fix the HTTP backend returned ZERO rows here
-    // (diverging from SQL's single null row and from the local
-    // backend).
-    val one = spark.read.format("graft.sources.MaterialsSource")
-      .option("url", url).option("pages", "1").load()
-    val got = one.filter(col("chemsys") === "No-Such")
-      .agg(min(col("energy_per_atom")).as("mn")).collect()
-    assert(got.length == 1 && got.head.isNullAt(0),
-      s"empty-set global min must be one null row, got ${got.toSeq}")
-  }
-
-  test("pushed OFFSET rides the request; skipped rows never cross the wire") {
-    resetCounters()
-    val single = spark.read.format("graft.sources.MaterialsSource")
-      .option("url", url).option("pages", "1").load()
-    assert(single.offset(7).collect().length == 3)
-    val fetches = requests.asScala.filterNot(_.contains("count=1"))
-    assert(fetches.nonEmpty && fetches.forall(_.contains("offset=7")),
-      s"offset param missing from requests: $fetches")
-    assert(rowsServed.get() == 3, s"server shipped ${rowsServed.get()} rows, expected 3")
-  }
-
-  test("pushed TABLESAMPLE rides the request; dropped rows never cross the wire") {
-    resetCounters()
-    val kept = loadHttp().sample(withReplacement = false, 0.5, seed = 42L).collect()
-    assert(kept.nonEmpty && kept.length < 10, s"${kept.length} rows")
-    val fetches = requests.asScala.filterNot(_.contains("count=1"))
-    assert(fetches.nonEmpty && fetches.forall(_.contains("sample=0.0%3A0.5%3A42")),
-      s"sample param missing from requests: $fetches")
-    assert(rowsServed.get() == kept.length,
-      s"server shipped ${rowsServed.get()} rows for ${kept.length} sampled")
-  }
-
-  test("scan statistics come from the server-side count endpoint") {
-    val filtered = loadHttp().filter(col("chemsys") === "V-O")
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(filtered == BigInt(384), s"filtered-scan stats = $filtered") // 6 rows × 64 B
-    assert(requests.asScala.exists(q => q.contains("count=1") && q.contains("in.chemsys=V-O")))
   }
 }

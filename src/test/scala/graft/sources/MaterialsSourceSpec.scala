@@ -13,20 +13,20 @@ class MaterialsSourceSpec extends SparkSpec {
     .format("graft.sources.MaterialsSource")
     .option("path", catalog).option("pages", "3").load()
 
-  private def load1() = spark.read
-    .format("graft.sources.MaterialsSource")
-    .option("path", catalog).option("pages", "1").load()
-
   test("full scan reads all rows across pages") {
     assert(load().count() == 10)
   }
 
   test("pages <= 0 fails fast instead of planning an empty scan") {
-    val bad = spark.read.format("graft.sources.MaterialsSource")
-      .option("path", catalog).option("pages", "0").load()
-    val e = intercept[Exception] { bad.count() }
-    assert(e.getMessage != null && e.getMessage.contains("pages"),
-      s"expected a pages validation error, got: ${e.getMessage}")
+    // a non-numeric value gets the same named error, not a bare
+    // NumberFormatException
+    Seq("0", "four").foreach { pages =>
+      val bad = spark.read.format("graft.sources.MaterialsSource")
+        .option("path", catalog).option("pages", pages).load()
+      val e = intercept[Exception] { bad.count() }
+      assert(e.getMessage != null && e.getMessage.contains("pages"),
+        s"expected a pages validation error, got: ${e.getMessage}")
+    }
   }
 
   test("EqualTo filter on chemsys is pushed into the backend scan") {
@@ -75,32 +75,6 @@ class MaterialsSourceSpec extends SparkSpec {
     assert(disjoint.collect().isEmpty)
   }
 
-  test("LIMIT is pushed into the scan; the global limit still holds") {
-    val df = load().limit(3)
-    assert(df.collect().length == 3)
-    val scan = df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
-    assert(scan.scan.description().contains("PushedLimit=3"), scan.scan.description())
-    // pushed limit composes with a pushed filter: ≤ n rows per page,
-    // all matching the predicate
-    val filtered = load().filter(col("chemsys") === "V-O").limit(2)
-    assert(filtered.collect().map(_.getAs[String]("chemsys")).toSeq == Seq("V-O", "V-O"))
-  }
-
-  test("ORDER BY + LIMIT is pushed as per-page TopN; global order still exact") {
-    val df = load().orderBy(col("energy_per_atom").desc).limit(2)
-    val got = df.collect().map(_.getAs[Double]("energy_per_atom")).toSeq
-    val full = load().collect().map(_.getAs[Double]("energy_per_atom")).sorted.reverse.take(2).toSeq
-    assert(got == full, s"topN pushdown changed results: $got vs $full")
-    val scan = df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
-    assert(scan.scan.description().contains("PushedTopN=[energy_per_atom DESC LIMIT 2]"),
-      scan.scan.description())
-    // multi-column sorts are declined and stay engine-side
-    val multi = load().orderBy(col("chemsys"), col("nsites")).limit(2)
-    val mscan = multi.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
-    assert(!mscan.scan.description().contains("PushedTopN"))
-    assert(multi.collect().length == 2)
-  }
-
   test("unsupported predicates stay above the scan and still apply") {
     val df = load().filter(col("nsites") > 10) // not pushable → Spark-side filter
     assert(df.count() == 4) // nsites 14, 16, 22, 14
@@ -119,383 +93,9 @@ class MaterialsSourceSpec extends SparkSpec {
     assert(df.select("material_id").distinct().count() == 10)
   }
 
-  test("post-pushdown statistics shrink with the pushed filter") {
-    val full = load().queryExecution.optimizedPlan.stats.sizeInBytes
-    val filtered = load().filter(col("chemsys") === "V-O")
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-    // 10 rows × 64 B vs 6 rows × 64 B — the planner sees the backend
-    // filter, so a filtered scan can qualify for broadcast
-    assert(full == BigInt(640), s"full-scan stats = $full")
-    assert(filtered == BigInt(384), s"filtered-scan stats = $filtered")
-  }
-
-  test("scan reports key-grouped partitioning over bucket(pages, material_id)") {
-    import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    val table = new MaterialsTable(Map("path" -> catalog, "pages" -> "3"))
-    val scan = table.newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-    val part = scan.asInstanceOf[MaterialsScan].outputPartitioning()
-    val kg = part.asInstanceOf[KeyGroupedPartitioning]
-    assert(kg.numPartitions == 3)
-    assert(kg.keys.head.toString.toLowerCase.contains("bucket"))
-    // each input partition carries its page id as the partition key
-    val pages = scan.asInstanceOf[MaterialsScan].planInputPartitions()
-    assert(pages.map(_.asInstanceOf[MaterialsPage].partitionKey().getInt(0)).toSeq == Seq(0, 1, 2))
-  }
-
-  test("join runtime filter reaches the scan (DSv2 dynamic filtering)") {
-    // the dim must be file-backed: a filtered LocalRelation is
-    // constant-folded before PartitionPruning looks for a selective
-    // predicate, so DPP never triggers on in-memory test dims
-    val dimPath = java.nio.file.Files.createTempDirectory("dim").toString
-    import spark.implicits._
-    Seq(("mp-1001", "x"), ("mp-1002", "y")).toDF("material_id", "tag")
-      .write.mode("overwrite").parquet(dimPath)
-    withSQLConf(
-      "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
-      "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "1000000") {
-      val dim = spark.read.parquet(dimPath).filter(col("tag") === "x")
-      val j = load().join(dim, "material_id")
-      assert(j.collect().map(_.getAs[String]("material_id")).toSeq == Seq("mp-1001"))
-      val rf = j.queryExecution.executedPlan.toString
-      assert(rf.contains("dynamicpruningexpression(material_id"),
-        s"runtime filter missing from plan:\n$rf")
-    }
-  }
-
-  /** Final physical plan: aggregate plans are AQE-wrapped, so run the
-    * query and unwrap the adaptive plan before searching it. */
-  private def finalPlan(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.execution.SparkPlan = {
-    df.collect()
-    df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-  }
-
-  /** AQE materializes exchanges as [[QueryStageExec]] LEAF nodes, so a
-    * plain `collect` never sees the scan under a shuffle — recurse
-    * through stage boundaries explicitly. */
-  private def allScans(plan: org.apache.spark.sql.execution.SparkPlan): Seq[BatchScanExec] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    plan.collect {
-      case b: BatchScanExec => Seq(b)
-      case q: QueryStageExec => allScans(q.plan)
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-    }.flatten
-  }
-
-  private def scanDesc(df: org.apache.spark.sql.DataFrame): String =
-    allScans(finalPlan(df)).head.scan.description()
-
-  test("grouped COUNT/MIN/MAX push to the backend; pages merge engine-side") {
-    val df = load().groupBy("chemsys").agg(
-      count(lit(1)).as("n"),
-      min(col("energy_per_atom")).as("mn"),
-      max(col("energy_per_atom")).as("mx"))
-    val got = df.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
-    assert(got == Set(
-      ("V-O", 6L, -8.55, -7.91), ("Ti-O", 2L, -9.77, -9.12), ("Fe-O", 2L, -6.91, -6.66)))
-    val d = scanDesc(df)
-    assert(d.contains("PushedAggregates=[count:*, min:energy_per_atom, max:energy_per_atom]"), d)
-    assert(d.contains("PushedGroupBy=[chemsys]"), d)
-    // 3 pages are independent partial answers — Spark must keep the
-    // final merge (sum of counts, min of mins, max of maxes)
-    val plan = finalPlan(df).toString
-    assert(plan.contains("HashAggregate") || plan.contains("SortAggregate"), plan)
-  }
-
-  test("single-page aggregation pushes COMPLETELY: no engine-side aggregate node") {
-    val df = spark.read.format("graft.sources.MaterialsSource")
-      .option("path", catalog).option("pages", "1").load()
-      .groupBy("chemsys").agg(count(lit(1)).as("n"))
-    assert(df.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
-      Set(("V-O", 6L), ("Ti-O", 2L), ("Fe-O", 2L)))
-    val plan = finalPlan(df).toString
-    assert(!plan.contains("HashAggregate") && !plan.contains("SortAggregate"),
-      s"complete pushdown must remove the aggregate:\n$plan")
-    assert(scanDesc(df).contains("PushedAggregates=[count:*]"), scanDesc(df))
-  }
-
-  test("global aggregate composes with a pushed filter; empty match yields count 0") {
-    val df = load().filter(col("chemsys") === "V-O")
-      .agg(count(lit(1)).as("n"), max(col("nsites")).as("mx"))
-    assert(df.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq == Seq((6L, 22)))
-    val d = scanDesc(df)
-    assert(d.contains("EqualTo(chemsys,V-O)") && d.contains("PushedAggregates"), d)
-    // nothing matches: counts merge to 0, min merges over nulls to null
-    val none = load().filter(col("chemsys") === "Xx-O")
-      .agg(count(lit(1)).as("n"), min(col("nsites")).as("mn"))
-    val r = none.collect()(0)
-    assert(r.getLong(0) == 0L && r.isNullAt(1), r.toString)
-  }
-
-  test("MIN on a string column is declined (UTF-16 vs UTF-8 order), stays engine-side") {
-    val df = load().groupBy("chemsys").agg(min(col("formula")).as("mn"))
-    assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
-      Set(("V-O", "V2O3"), ("Ti-O", "Ti2O3"), ("Fe-O", "Fe2O3")))
-    assert(!scanDesc(df).contains("PushedAggregates"), scanDesc(df))
-  }
-
-  test("pushed top-n reports partition-local output ordering to the planner") {
-    val df = load().orderBy(col("energy_per_atom").desc).limit(4)
-    df.collect()
-    val exec = allScans(finalPlan(df)).head
-    // the scan node advertises the backend's sort, so a parent
-    // requiring partition-local order on the column plans no Sort
-    assert(exec.outputOrdering.nonEmpty &&
-      exec.outputOrdering.head.child.toString.contains("energy_per_atom"),
-      s"ordering not reported: ${exec.outputOrdering}")
-    // no ordering claimed without a pushed top-n (rows are page-order)
-    val plain = load()
-    plain.collect()
-    assert(allScans(finalPlan(plain)).head.outputOrdering.isEmpty)
-  }
-
-  test("TABLESAMPLE pushes: deterministic per-seed subset, Sample node removed") {
-    val df = load().sample(withReplacement = false, 0.5, seed = 42L)
-    val got = df.collect().map(_.getAs[String]("material_id")).sorted.toSeq
-    // the backend's keep rule is the declared semantics
-    val expect = load().collect().map(_.getAs[String]("material_id"))
-      .filter { id => val u = LocalCatalogBackend.sampleU(id, 42L); u >= 0.0 && u < 0.5 }
-      .sorted.toSeq
-    assert(got == expect && got.nonEmpty && got.length < 10, s"got $got")
-    assert(scanDesc(df).contains("PushedSample=[0.0, 0.5, seed=42]"), scanDesc(df))
-    // pushed => Spark plans no SampleExec above the scan
-    assert(finalPlan(df).collectFirst {
-      case s: org.apache.spark.sql.execution.SampleExec => s }.isEmpty,
-      finalPlan(df).toString)
-    // same seed reproduces the subset; a different seed moves it
-    assert(df.collect().map(_.getAs[String]("material_id")).sorted.toSeq == got)
-    val other = load().sample(withReplacement = false, 0.5, seed = 43L)
-      .collect().map(_.getAs[String]("material_id")).sorted.toSeq
-    assert(other != got, "distinct seeds should select distinct subsets on 10 rows")
-    // with a filter below the Sample, Spark's rule keeps the sample
-    // engine-side (it only pushes a Sample sitting directly on the
-    // scan) — the filter still pushes; document, don't fight it
-    val f = load().filter(col("chemsys") === "V-O").sample(false, 0.5, 42L)
-    f.collect()
-    assert(!scanDesc(f).contains("PushedSample") &&
-      scanDesc(f).contains("EqualTo(chemsys,V-O)"), scanDesc(f))
-    assert(finalPlan(f).collectFirst {
-      case s: org.apache.spark.sql.execution.SampleExec => s }.nonEmpty)
-  }
-
-  test("sampleU: hashCode-colliding ids stay independent across seeds") {
-    // "FB" and "Ea" share a Java String.hashCode — a 32-bit-prefix
-    // sampler would keep or drop them together under EVERY seed
-    assert("FB".hashCode == "Ea".hashCode)
-    val seeds = Seq(1L, 42L, 43L, 1234567L)
-    assert(seeds.exists(s =>
-      LocalCatalogBackend.sampleU("FB", s) != LocalCatalogBackend.sampleU("Ea", s)),
-      "colliding ids sample identically under all probed seeds")
-    // u is a coordinate in [0, 1) and is seed-sensitive per id
-    seeds.foreach { s =>
-      val u = LocalCatalogBackend.sampleU("mp-1", s)
-      assert(u >= 0.0 && u < 1.0)
-    }
-    assert(seeds.map(LocalCatalogBackend.sampleU("mp-1", _)).distinct.size == seeds.size)
-  }
-
-  test("with-replacement sampling is declined and stays engine-side") {
-    val df = load().sample(withReplacement = true, 0.5, seed = 7L)
-    df.collect()
-    assert(!scanDesc(df).contains("PushedSample"), scanDesc(df))
-    assert(finalPlan(df).collectFirst {
-      case s: org.apache.spark.sql.execution.SampleExec => s }.nonEmpty,
-      finalPlan(df).toString)
-  }
-
-  test("OFFSET pushes on a single-page scan and is exact") {
-    val all = load1().collect().map(_.getAs[String]("material_id")).toSeq
-    val df = load1().offset(2)
-    assert(df.collect().map(_.getAs[String]("material_id")).toSeq == all.drop(2))
-    assert(scanDesc(df).contains("PushedOffset=2"), scanDesc(df))
-    // offset composed with limit keeps SQL skip-then-take semantics
-    val ol = load1().offset(2).limit(3)
-    assert(ol.collect().map(_.getAs[String]("material_id")).toSeq == all.drop(2).take(3))
-    // offset composed with a pushed filter
-    val f = load1().filter(col("chemsys") === "V-O").offset(4)
-    assert(f.collect().length == 2, f.collect().mkString(","))
-    assert(scanDesc(f).contains("PushedOffset=4") &&
-      scanDesc(f).contains("EqualTo(chemsys,V-O)"), scanDesc(f))
-  }
-
-  test("OFFSET is declined on multi-page scans and after a top-n — results still exact") {
-    // multi-page: a per-page skip would drop rows from every page
-    val multi = load().offset(2)
-    assert(multi.collect().length == 8)
-    assert(!scanDesc(multi).contains("PushedOffset"), scanDesc(multi))
-    // after an ORDER BY ... LIMIT (pushed top-n), the sorted-skip
-    // composition stays engine-side
-    val sorted = load1().orderBy(col("energy_per_atom")).limit(5).offset(2)
-    val expect = load1().collect().map(_.getAs[Double]("energy_per_atom"))
-      .sorted.slice(2, 5).toSeq
-    assert(sorted.collect().map(_.getAs[Double]("energy_per_atom")).toSeq == expect)
-    assert(!scanDesc(sorted).contains("PushedOffset"), scanDesc(sorted))
-  }
-
-  test("COUNT DISTINCT is declined — distinct sets cannot merge from partial counts") {
-    val df = load().groupBy("chemsys").agg(countDistinct(col("possible_species")).as("n"))
-    assert(df.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
-      Set(("V-O", 4L), ("Ti-O", 2L), ("Fe-O", 1L)))
-    assert(!scanDesc(df).contains("PushedAggregates"), scanDesc(df))
-  }
-
-  // ---- DSv2 JOIN pushdown (Spark 4.1 SupportsPushDownJoin) ----
-
-  private val JoinConf = "spark.sql.optimizer.datasourceV2JoinPushdown"
-
-  private def selfJoin() = {
-    val l = load().select(col("material_id"), col("formula"))
-    val r = load().filter(col("chemsys") === "V-O")
-      .select(col("material_id"), col("energy_per_atom"))
-    l.join(r, "material_id")
-  }
-
-  test("INNER equi self-join collapses into ONE backend scan with no Join node") {
-    withSQLConf(JoinConf -> "true") {
-      val j = selfJoin()
-      val plan = j.queryExecution.executedPlan
-      val scans = plan.collect { case b: BatchScanExec => b }
-      assert(scans.length == 1, s"expected one scan, got ${scans.length}:\n$plan")
-      assert(scans.head.scan.description().contains("PushedJoin=[material_id = material_id"),
-        scans.head.scan.description())
-      assert(scans.head.scan.description().contains("chemsys IN (V-O)"))
-      val joins = plan.collect {
-        case jn: org.apache.spark.sql.execution.joins.BaseJoinExec => jn
-      }
-      assert(joins.isEmpty, s"engine Join survived:\n$plan")
-    }
-  }
-
-  test("pushed join result equals the engine join bit for bit") {
-    val engine = withSQLConfValue(JoinConf, "false")(selfJoin().collect().toSet)
-    val pushed = withSQLConfValue(JoinConf, "true")(selfJoin().collect().toSet)
-    assert(pushed == engine)
-    assert(pushed.nonEmpty)
-  }
-
-  test("pushed join carries BOTH sides' filters as per-side backend queries") {
-    // both filters must push with NO residual (a residual Filter —
-    // e.g. the IsNotNull conjunct a nullable column's EqualTo
-    // carries — keeps a node between holder and join, and the
-    // engine correctly declines the collapse)
-    withSQLConf(JoinConf -> "true") {
-      def sides() = {
-        val l = load().filter(col("chemsys").isin("V-O", "Ti-O"))
-          .select(col("material_id"), col("formula"))
-        val r = load().filter(col("chemsys") === "V-O")
-          .select(col("material_id"), col("energy_per_atom"))
-        l.join(r, "material_id")
-      }
-      val j = sides()
-      val desc = scanDesc(j)
-      assert(desc.contains("PushedJoin"), desc)
-      assert(desc.contains("In(chemsys"), desc)         // left query
-      assert(desc.contains("chemsys IN (V-O)"), desc)   // right query
-      val engine = withSQLConfValue(JoinConf, "false")(sides().collect().toSet)
-      assert(j.collect().toSet == engine)
-      assert(engine.nonEmpty)
-    }
-  }
-
-  test("a residual-bearing side (nullable-column filter) declines the join, results intact") {
-    withSQLConf(JoinConf -> "true") {
-      val l = load().filter(col("possible_species") === "V4+")
-        .select(col("material_id"), col("formula"))
-      val r = load().filter(col("chemsys") === "V-O")
-        .select(col("material_id"), col("energy_per_atom"))
-      val j = l.join(r, "material_id")
-      assert(!scanDesc(j).contains("PushedJoin"), scanDesc(j))
-      val engine = withSQLConfValue(JoinConf, "false")(
-        l.join(r, "material_id").collect().toSet)
-      assert(j.collect().toSet == engine && engine.nonEmpty)
-    }
-  }
-
-  test("a NUMERIC join key declines the push (raw-text matching), results intact") {
-    withSQLConf(JoinConf -> "true") {
-      // the pushed join compares raw catalog text; "1.5" vs "1.50"
-      // would silently drop typed-equal numeric pairs — string keys
-      // only, anything else is Spark's own join
-      val l = load().select(col("material_id").as("lid"), col("nsites"))
-      val r = load().select(col("material_id").as("rid"), col("nsites"))
-      val j = l.join(r, "nsites")
-      assert(!scanDesc(j).contains("PushedJoin"), scanDesc(j))
-      val engine = withSQLConfValue(JoinConf, "false")(
-        l.join(r, "nsites").collect().toSet)
-      assert(j.collect().toSet == engine && engine.nonEmpty)
-    }
-  }
-
   test("missing path/url option fails at planning with a clear message") {
     val e = intercept[IllegalArgumentException](
       spark.read.format("graft.sources.MaterialsSource").load().collect())
     assert(e.getMessage.contains("option 'path'"), e.getMessage)
-  }
-
-  test("non-unique-key pushed join reports positive (saturated-product) stats") {
-    withSQLConf(JoinConf -> "true") {
-      // chemsys is NOT a unique key → the stats bound is left × right
-      // (saturated) × rowBytes, which must SATURATE, never wrap
-      // negative — a wrapped size reads as a ~0-byte scan and invites
-      // exactly the broadcast blow-up the bound exists to prevent
-      val l = load().select(col("material_id").as("ida"), col("chemsys"))
-      val r = load().select(col("material_id").as("idb"), col("chemsys"))
-      val j = l.join(r, "chemsys")
-      val size = j.queryExecution.optimizedPlan.stats.sizeInBytes
-      assert(size > 0, s"stats must stay positive: $size")
-    }
-  }
-
-  test("non-inner and non-equi joins decline and stay engine-side, results intact") {
-    withSQLConf(JoinConf -> "true") {
-      val l = load().select(col("material_id"), col("formula"), col("nsites"))
-      val r = load().filter(col("chemsys") === "V-O")
-        .select(col("material_id").as("rid"), col("energy_per_atom"))
-      val outer = l.join(r, l("material_id") === r("rid"), "left_outer")
-      assert(!scanDesc(outer).contains("PushedJoin"), scanDesc(outer))
-      assert(outer.count() == 10L) // all left rows survive
-      val theta = l.join(r, l("nsites") > length(r("rid")), "inner")
-      assert(!scanDesc(theta).contains("PushedJoin"))
-      assert(theta.count() ==
-        withSQLConfValue(JoinConf, "false")(
-          l.join(r, l("nsites") > length(r("rid")), "inner").count()))
-    }
-  }
-
-  test("order-sensitive pushdowns and joins refuse to compose") {
-    withSQLConf(JoinConf -> "true") {
-      // limit under a join: the builder is not join-pristine → decline
-      val limited = load().select(col("material_id"), col("formula")).limit(3)
-      val j = limited.join(
-        load().select(col("material_id"), col("energy_per_atom")), "material_id")
-      assert(!scanDesc(j).contains("PushedJoin"), scanDesc(j))
-      assert(j.count() == 3L)
-      // aggregation ON TOP of a pushed join stays engine-side
-      val agg = selfJoin().groupBy().count()
-      assert(agg.collect().head.getLong(0) == selfJoin().count())
-    }
-  }
-
-  private def withSQLConfValue[T](k: String, v: String)(f: => T): T = {
-    val prev = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try f finally prev match {
-      case Some(p) => spark.conf.set(k, p)
-      case None    => spark.conf.unset(k)
-    }
-  }
-
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
   }
 }
